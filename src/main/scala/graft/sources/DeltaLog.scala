@@ -2591,29 +2591,40 @@ object DeltaLog {
       fromExclusive: Long, to: Long, startSchema: StructType): Unit = {
     val vs = versions(tableDir)
     vs.filter(v => v > fromExclusive && v <= to && v != vs.head)
-      .foreach { v =>
-        Files.readAllLines(commitFile(tableDir, v).toPath).asScala
-          .filter(_.nonEmpty).map(mapper.readTree)
-          .find(_.has("metaData")).foreach { n =>
-            val sch = DataType
-              .fromJson(n.get("metaData").get("schemaString").asText)
-              .asInstanceOf[StructType]
-            require(schemaShape(sch) == schemaShape(startSchema),
-              s"version $v of $tableDir CHANGES THE TABLE SCHEMA " +
-                "mid-stream — streaming on would silently drop the " +
-                "new columns under the query-start schema. Restart " +
-                "the query to pick up the evolved schema (files " +
-                "written before the change read NULL for new columns).")
-          }
-      }
+      .foreach(v => requireSameShape(tableDir, v, commitNodes(tableDir, v),
+        startSchema))
   }
 
+  private def commitNodes(tableDir: String, v: Long): Seq[JsonNode] =
+    Files.readAllLines(commitFile(tableDir, v).toPath).asScala
+      .filter(_.nonEmpty).map(mapper.readTree).toSeq
+
+  /** Throws when version `v` (its parsed `nodes`) carries a metaData
+    * whose [[schemaShape]] differs from `startSchema`. */
+  private def requireSameShape(tableDir: String, v: Long,
+      nodes: Seq[JsonNode], startSchema: StructType): Unit =
+    nodes.find(_.has("metaData")).foreach { n =>
+      val sch = DataType
+        .fromJson(n.get("metaData").get("schemaString").asText)
+        .asInstanceOf[StructType]
+      require(schemaShape(sch) == schemaShape(startSchema),
+        s"version $v of $tableDir CHANGES THE TABLE SCHEMA " +
+          "mid-stream — streaming on would silently drop the " +
+          "new columns under the query-start schema. Restart " +
+          "the query to pick up the evolved schema (files " +
+          "written before the change read NULL for new columns).")
+    }
+
   /** Files ADDED with dataChange=true by versions in
-    * (`fromExclusive`, `to`], GROUPED by version in commit order —
-    * the streaming-source batch planner's contract
-    * ([[graft.streaming.DeltaStreamSource]]): OPTIMIZE commits
-    * (dataChange=false) contribute nothing (an empty group); a
-    * remove with dataChange=true in the range means rows DISAPPEARED,
+    * (`fromExclusive`, `to`], GROUPED by version in commit order and
+    * LAZILY — each commit file is read and JSON-parsed only when the
+    * iterator advances to it, so the stream core's admission walk
+    * ([[graft.streaming.CommitLogStream]] file/byte caps) stops
+    * paying parse cost at the first version past its cap: draining
+    * an N-commit backlog is O(N) commit reads across all triggers,
+    * not O(N²). OPTIMIZE commits (dataChange=false) contribute
+    * nothing (an empty group); a remove with dataChange=true in the
+    * range means rows DISAPPEARED,
     * which an append stream cannot express — refused loudly unless
     * `skipChangeCommits` (Delta's own option of that name) skips the
     * whole commit. Partition columns live only in the LOG, so the
@@ -2630,41 +2641,15 @@ object DeltaLog {
     * commit is exempt: a stream starting over a table whose FIRST
     * schema predates one later evolution is the ordinary
     * null-filling backfill, not a mid-stream change. */
-  private[graft] def addedFilesByVersion(tableDir: String,
-      fromExclusive: Long, to: Long, skipChangeCommits: Boolean,
-      startSchema: Option[StructType] = None)
-      : Seq[(Long, Seq[StreamFile])] =
-    addedFilesIterator(tableDir, fromExclusive, to, skipChangeCommits,
-      startSchema).toSeq
-
-  /** [[addedFilesByVersion]] as a LAZY iterator — each commit file is
-    * read and JSON-parsed only when the iterator advances to it, so
-    * the admission-control walk ([[graft.streaming
-    * .DeltaStreamSource]] file/byte caps) stops paying driver-side
-    * parse cost at the first version past its cap: draining an
-    * N-commit backlog is O(N) total commit reads across all
-    * triggers, not O(N²). */
   private[graft] def addedFilesIterator(tableDir: String,
       fromExclusive: Long, to: Long, skipChangeCommits: Boolean,
       startSchema: Option[StructType] = None)
       : Iterator[(Long, Seq[StreamFile])] = {
     val vs = versions(tableDir)
     vs.filter(v => v > fromExclusive && v <= to).iterator.map { v =>
-      val nodes = Files.readAllLines(commitFile(tableDir, v).toPath)
-        .asScala.filter(_.nonEmpty).map(mapper.readTree).toSeq
-      startSchema.filter(_ => v != vs.head).foreach { ss =>
-        nodes.find(_.has("metaData")).foreach { n =>
-          val sch = DataType
-            .fromJson(n.get("metaData").get("schemaString").asText)
-            .asInstanceOf[StructType]
-          require(schemaShape(sch) == schemaShape(ss),
-            s"version $v of $tableDir CHANGES THE TABLE SCHEMA " +
-              "mid-stream — streaming on would silently drop the " +
-              "new columns under the query-start schema. Restart " +
-              "the query to pick up the evolved schema (files " +
-              "written before the change read NULL for new columns).")
-        }
-      }
+      val nodes = commitNodes(tableDir, v)
+      startSchema.filter(_ => v != vs.head)
+        .foreach(requireSameShape(tableDir, v, nodes, _))
       val changeRemove = nodes.exists(n => n.has("remove") && {
         val r = n.get("remove")
         !r.has("dataChange") || r.get("dataChange").asBoolean

@@ -3185,24 +3185,6 @@ object Iceberg {
         }
       }
 
-  private[graft] def addedFilesIn(tableDir: String, fromExclusive: Long,
-      to: Long, skipOverwriteSnapshots: Boolean)
-      : Seq[(String, Map[String, String])] =
-    addedFilesBySnapshot(tableDir, fromExclusive, to,
-      skipOverwriteSnapshots)
-      .flatMap(_._2).map(f => (f.path, f.partitionValues))
-
-  /** [[addedFilesIn]] GROUPED by snapshot with per-file byte sizes
-    * (from each manifest entry's `file_size_in_bytes`) — the
-    * admission-control planner's shape, mirroring
-    * [[DeltaLog.addedFilesByVersion]]. */
-  private[graft] def addedFilesBySnapshot(tableDir: String,
-      fromExclusive: Long, to: Long, skipOverwriteSnapshots: Boolean,
-      branch: Option[String] = None)
-      : Seq[(Long, Seq[DeltaLog.StreamFile])] =
-    addedFilesSnapshotIterator(tableDir, fromExclusive, to,
-      skipOverwriteSnapshots, branch).toSeq
-
   /** The streaming head: a branch ref's snapshot id, or the
     * PUBLISHED main head (`current-snapshot-id`) — deliberately NOT
     * the max snapshot id: WAP-staged branch snapshots carry ids
@@ -3228,9 +3210,13 @@ object Iceberg {
           .filter(_ > 0).getOrElse(0L)
     }
 
-  /** [[addedFilesBySnapshot]] as a LAZY iterator — manifests are read
-    * only when the iterator advances to their snapshot, so the
-    * admission-control walk ([[graft.streaming.IcebergStreamSource]]
+  /** The data files ADDED by the append snapshots in
+    * (`fromExclusive`, `to`] on the streamed lineage (published main,
+    * or `branch`), GROUPED by snapshot with per-file byte sizes (each
+    * manifest entry's `file_size_in_bytes`) — the
+    * [[DeltaLog.addedFilesIterator]] twin. LAZY: manifests are read
+    * only when the iterator advances to their snapshot, so the stream
+    * core's admission walk ([[graft.streaming.CommitLogStream]]
     * file/byte caps) stops paying manifest-read cost at the first
     * snapshot past its cap: draining an N-snapshot backlog is O(N)
     * total manifest reads across all triggers, not O(N²). */

@@ -631,7 +631,7 @@ private[streaming] abstract class OpenFormatBatchScan(
         Array(new GenericInternalRow(
           evals.map(_._2(files)).toArray))
       else files.groupBy(f => groupCols.map(f.pv(_)))
-        .toSeq.sortBy(_._1.mkString(" "))
+        .toSeq.sortBy(_._1.mkString("\u0000"))
         .map { case (keys, fs) =>
           val keyVals: Seq[Any] = groupCols.zip(keys).map {
             case (_, null) => null

@@ -2,12 +2,10 @@ package graft.streaming
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -66,9 +64,16 @@ class DeltaCdfStreamProvider extends TableProvider
       DeltaStreamSource.pathOf(options))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new DeltaCdfStreamTable(schema,
-      new CaseInsensitiveStringMap(properties))
+                        properties: util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    val path = DeltaStreamSource.pathOf(options)
+    new MicroBatchTable(s"graft-delta-cdf:$path", schema, () =>
+      new DeltaCdfMicroBatchStream(
+        DeltaCdfStreamSource.annotatedSchema(path), path,
+        Option(options.get("startingVersion")),
+        options.getLong("maxVersionsPerTrigger", Long.MaxValue),
+        options.getBoolean("vectorizedRead", true)))
+  }
 }
 
 private[streaming] object DeltaCdfStreamSource {
@@ -93,99 +98,26 @@ private[streaming] object DeltaCdfStreamSource {
       .asInstanceOf[StructType]
 }
 
-private class DeltaCdfStreamTable(schema: StructType,
-                                  options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String =
-    s"graft-delta-cdf:${DeltaStreamSource.pathOf(options)}"
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    schema.fields.map(f =>
-      org.apache.spark.sql.connector.catalog.Column.create(
-        f.name, f.dataType, f.nullable))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new DeltaCdfStreamScan(schema, options)
-    }
-}
-
-private class DeltaCdfStreamScan(schema: StructType,
-                                 options: CaseInsensitiveStringMap)
-    extends Scan {
-  override def readSchema(): StructType = schema
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream = {
-    val path = DeltaStreamSource.pathOf(options)
-    new DeltaCdfMicroBatchStream(
-      DeltaCdfStreamSource.annotatedSchema(path), path,
-      Option(options.get("startingVersion")),
-      options.getLong("maxVersionsPerTrigger", Long.MaxValue),
-      options.getBoolean("vectorizedRead", true))
-  }
-}
-
+/** `graft-delta-cdf`: the shared core over Delta's log, admitting
+  * WHOLE versions only (`maxVersionsPerTrigger`; no file/byte split)
+  * — CDF rows of one commit form one transactionally-meaningful unit
+  * (a MERGE sink applies per-key net effects). Same `startingVersion`
+  * spellings as the append source. */
 private class DeltaCdfMicroBatchStream(schema: StructType,
                                        tableDir: String,
                                        startingVersion: Option[String],
                                        maxVersionsPerTrigger: Long,
-                                       vectorizedRead: Boolean = true)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  @volatile private var availableNowCap: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(DeltaLog.versions(tableDir).last)
-
-  // same spellings as the sibling append source: a version number,
-  // or `latest` = stream only changes committed after query start
-  override def initialOffset(): Offset = startingVersion match {
-    case Some("latest") =>
-      VersionOffset(DeltaLog.versions(tableDir).last)
-    case Some(v) =>
-      // ^-?\d+$ — a lone leading minus only; '5-3' or '--' must hit
-      // the descriptive message, not a raw NumberFormatException —
-      // and so must a digit string wider than Long (the regex alone
-      // still lets toLong throw raw)
-      val parsed = scala.util.Try(v.toLong).toOption
-        .filter(_ => v.matches("-?\\d+"))
-      require(parsed.isDefined,
-        s"graft-delta-cdf: startingVersion must be a version number " +
-          s"or 'latest', got '$v'")
-      VersionOffset(parsed.get - 1)
-    case None => VersionOffset(-1L)
-  }
-
-  override def latestOffset(): Offset =
-    VersionOffset(availableNowCap
-      .getOrElse(DeltaLog.versions(tableDir).last))
-
-  // version-granular admission: CDF rows of one commit form one
-  // transactionally-meaningful unit (a MERGE sink applies per-key
-  // net effects), so the finer file-splitting of the append source
-  // is deliberately not offered here
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-      : Offset = {
-    val from = start.asInstanceOf[VersionOffset].version
-    val cap = latestOffset().asInstanceOf[VersionOffset].version
-    if (cap <= from) return start
-    val bounded =
-      if (maxVersionsPerTrigger >= cap - from) cap
-      else from + maxVersionsPerTrigger
-    VersionOffset(bounded)
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    VersionOffset.parse(json)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+                                       vectorizedRead: Boolean)
+    extends CommitLogStream(
+      new DeltaCommitLog(tableDir, skipChangeCommits = false,
+        StructType(schema.fields.dropRight(2))),
+      StreamSpelling.delta("graft-delta-cdf"), tableDir,
+      startingVersion, maxVersionsPerTrigger) {
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[VersionOffset].version
-    val to = end.asInstanceOf[VersionOffset].version
+    val from = start.asInstanceOf[CommitOffset].commitId
+    val to = end.asInstanceOf[CommitOffset].commitId
     val vs = DeltaLog.versions(tableDir)
     val fromV = vs.find(_ > from)
     if (fromV.isEmpty || fromV.get > to) return Array.empty

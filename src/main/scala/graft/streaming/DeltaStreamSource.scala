@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -31,10 +31,11 @@ import graft.sources.DeltaLog
   * Spark-first by construction: this is the DataSource V2
   * [[MicroBatchStream]] API — Spark's OWN streaming engine drives
   * the lifecycle (offset tracking in the query checkpoint, batch
-  * planning, task scheduling, recovery), and this class only answers
-  * the three questions a source must: what is the latest offset
+  * planning, task scheduling, recovery), and the shared
+  * [[CommitLogStream]] core only answers the three questions a
+  * source must: what is the latest offset
   * (the log's newest version), what files does a version range add
-  * ([[DeltaLog.addedFilesByVersion]] — dataChange=false OPTIMIZE
+  * ([[DeltaLog.addedFilesIterator]] — dataChange=false OPTIMIZE
   * commits contribute NOTHING, data-removing commits refuse loudly
   * unless `skipChangeCommits`), and how to read one file's rows on
   * an EXECUTOR (vectorized ColumnarBatch by default; one
@@ -225,177 +226,36 @@ private class DeltaStreamScan(schema: StructType,
   }
 }
 
-/** The offset is (log version, files consumed WITHIN it) — Delta's
-  * own streaming-source offset design: `index` counts how many of
-  * `version`'s added files are already landed, so admission control
-  * can SPLIT one huge backfill commit across micro-batches
-  * (exactly-once is preserved because a committed version's file
-  * list is immutable). A fully-consumed version is (v, nFiles(v)).
-  * Legacy checkpoints wrote the bare version long (whole-commit
-  * batches) — deserialized as (v, MaxValue) = fully consumed. */
-private case class VersionOffset(version: Long,
-                                 index: Long = Long.MaxValue)
-    extends Offset {
-  override def json(): String =
-    s"""{"version":$version,"index":$index}"""
+/** Delta's log as the [[CommitLogStream]] core reads it: versions
+  * are the commit ids, and [[DeltaLog.addedFilesIterator]] walks the
+  * added files (OPTIMIZE commits contribute nothing, data-removing
+  * commits refuse unless `skipChangeCommits`, a mid-stream schema
+  * change against `schema` fails loudly). */
+private class DeltaCommitLog(tableDir: String, skipChangeCommits: Boolean,
+                             schema: StructType) extends CommitLog {
+  override def head(): Long = DeltaLog.versions(tableDir).last
+  override def addedFiles(fromExclusive: Long, to: Long)
+      : Iterator[(Long, Seq[DeltaLog.StreamFile])] =
+    DeltaLog.addedFilesIterator(tableDir, fromExclusive, to,
+      skipChangeCommits, Some(schema))
 }
 
-private object VersionOffset {
-  private val Json =
-    """\{"version":(-?\d+),"index":(-?\d+)\}""".r
-  def parse(json: String): VersionOffset = json.trim match {
-    case Json(v, i) => VersionOffset(v.toLong, i.toLong)
-    case bare => VersionOffset(bare.toLong) // legacy: whole version
-  }
-}
-
+/** `graft-delta`: the shared core over [[DeltaCommitLog]] — offsets
+  * are (version, fileIndex), `startingVersion` is inclusive. */
 private class DeltaMicroBatchStream(schema: StructType, tableDir: String,
                                     skipChangeCommits: Boolean,
                                     startingVersion: Option[String],
                                     maxVersionsPerTrigger: Long,
                                     maxFilesPerTrigger: Long,
                                     maxBytesPerTrigger: Long,
-                                    vectorizedRead: Boolean = true,
-                                    filterSql: Option[String] = None)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  // the `filter` option's prune-safe decomposition, built once at
-  // query start (fails loudly on unparseable SQL)
-  private val pruner = StreamFilter.pruner(filterSql, schema)
-
-  // Trigger.AvailableNow: the engine asks the source to PIN the end
-  // of the stream up front, then drains to exactly that point — a
-  // commit racing the drain belongs to the next run
-  @volatile private var availableNowCap: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(DeltaLog.versions(tableDir).last)
-
-  // "latest" is the intended BIG-HISTORY path: backfill the existing
-  // table with one batch read, then stream only commits after query
-  // start — Delta's own startingVersion=latest contract
-  override def initialOffset(): Offset = startingVersion match {
-    case Some("latest") =>
-      VersionOffset(DeltaLog.versions(tableDir).last)
-    case Some(v) =>
-      // descriptive refusal for every malformed spelling, including
-      // digit strings wider than Long (the CDF source's discipline)
-      val parsed = scala.util.Try(v.toLong).toOption
-        .filter(_ => v.matches("-?\\d+"))
-      require(parsed.isDefined,
-        s"graft-delta: startingVersion must be a version number or " +
-          s"'latest', got '$v'")
-      VersionOffset(parsed.get - 1)
-    case None => VersionOffset(-1L)
-  }
-
-  override def latestOffset(): Offset =
-    VersionOffset(availableNowCap
-      .getOrElse(DeltaLog.versions(tableDir).last))
-
-  // SupportsAdmissionControl spelling: ADMISSION CONTROL — a stream
-  // catching up on a deep backlog must not plan its whole history as
-  // one batch (at 100 TB that is thousands of commits of files in a
-  // single task set, one sink transaction, no progress checkpoints).
-  // maxVersionsPerTrigger caps versions per batch;
-  // maxFilesPerTrigger / maxBytesPerTrigger go FINER and split
-  // WITHIN a version (the Kafka maxOffsetsPerTrigger analog — one
-  // 10k-file backfill commit drains in bounded batches, not one
-  // giant task set). At least one file is always admitted so the
-  // stream makes progress. AvailableNow still drains to the pinned
-  // cap, just in bounded batches.
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-      : Offset = {
-    val from = start.asInstanceOf[VersionOffset]
-    val cap = latestOffset().asInstanceOf[VersionOffset].version
-    // cap == from.version is NOT terminal: a file-capped batch can
-    // leave the cap version partially consumed (index < nFiles) —
-    // only a cap strictly behind the start version has nothing left
-    if (cap < from.version) return from
-    // addition-overflow guard: the default limit is Long.MaxValue
-    val bounded =
-      if (maxVersionsPerTrigger >= cap - from.version) cap
-      else from.version + maxVersionsPerTrigger
-    if (maxFilesPerTrigger == Long.MaxValue &&
-        maxBytesPerTrigger == Long.MaxValue)
-      return VersionOffset(bounded)
-    // file/byte admission: walk the range's per-version file lists
-    // LAZILY (the iterator reads+parses one commit file per step) and
-    // stop at the first file that would cross either cap — but never
-    // before admitting one. Stopping the iterator stops the commit
-    // parsing too, so a deep backlog costs O(admitted commits) per
-    // trigger, O(backlog) across the whole drain — not O(backlog²).
-    val byV = DeltaLog.addedFilesIterator(tableDir,
-      from.version - 1, bounded, skipChangeCommits, Some(schema))
-    var endV = from.version
-    var endI = from.index
-    var nFiles = 0L
-    var nBytes = 0L
-    var stop = false
-    while (!stop && byV.hasNext) {
-      val (v, fs) = byV.next()
-      var i =
-        if (v == from.version)
-          math.min(from.index, fs.size.toLong).toInt
-        else 0
-      endV = v
-      endI = i.toLong
-      while (i < fs.size && !stop) {
-        if (nFiles > 0 && (nFiles + 1 > maxFilesPerTrigger ||
-            nBytes + fs(i).size > maxBytesPerTrigger)) stop = true
-        else {
-          nFiles += 1
-          nBytes += fs(i).size
-          i += 1
-          endI = i.toLong
-        }
-      }
-    }
-    if (nFiles == 0) from else VersionOffset(endV, endI)
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    VersionOffset.parse(json)
-
-  override def commit(end: Offset): Unit = ()
-
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset,
-                                   end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[VersionOffset]
-    val e = end.asInstanceOf[VersionOffset]
-    // one partition PER FILE: a commit that added 1000 files fans
-    // out as 1000 tasks — the driver never touches row data. Each
-    // partition carries the file's log-recorded partitionValues so
-    // the reader reconstructs partition columns as constants. The
-    // boundary versions honor the offsets' in-version file indexes
-    // (a split backfill commit reads each file exactly once).
-    val planned = DeltaLog.addedFilesByVersion(tableDir,
-        s.version - 1, e.version, skipChangeCommits, Some(schema))
-      .flatMap { case (v, fs) =>
-        val lo =
-          if (v == s.version) math.min(s.index, fs.size.toLong).toInt
-          else 0
-        val hi =
-          if (v == e.version) math.min(e.index, fs.size.toLong).toInt
-          else fs.size
-        fs.slice(lo, hi)
-      }
-    // the `filter` option's per-file pruning — partition values +
-    // stats bounds, AFTER the offsets are fixed (pruning changes what
-    // is read, never the (version, index) bookkeeping, so replay is
-    // identical with or without it)
-    val kept = pruner match {
-      case Some(p) => planned.filter(f => p.keep(f.partitionValues, f.bounds))
-      case None => planned
-    }
-    StreamFilter.record(tableDir, s"$s..$e", planned.size, kept.size)
-    kept
-      .map(f =>
-        DeltaFilePartition(f.path, f.partitionValues): InputPartition)
-      .toArray
-  }
+                                    vectorizedRead: Boolean,
+                                    filterSql: Option[String])
+    extends CommitLogStream(
+      new DeltaCommitLog(tableDir, skipChangeCommits, schema),
+      StreamSpelling.delta("graft-delta"), tableDir, startingVersion,
+      maxVersionsPerTrigger, maxFilesPerTrigger, maxBytesPerTrigger,
+      // built once at query start; fails loudly on unparseable SQL
+      StreamFilter.pruner(filterSql, schema)) {
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DeltaFileReaderFactory(schema.json,

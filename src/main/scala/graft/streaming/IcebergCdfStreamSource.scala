@@ -2,17 +2,15 @@ package graft.streaming
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -80,9 +78,17 @@ class IcebergCdfStreamProvider extends TableProvider
       IcebergStreamSource.pathOf(options))._1
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new IcebergCdfStreamTable(schema,
-      new CaseInsensitiveStringMap(properties))
+                        properties: util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    val path = IcebergStreamSource.pathOf(options)
+    new MicroBatchTable(s"graft-iceberg-cdf:$path", schema, () =>
+      new IcebergCdfMicroBatchStream(schema, path,
+        Option(options.get("startingSnapshotId")),
+        options.getLong("maxSnapshotsPerTrigger", Long.MaxValue),
+        options.getBoolean("vectorizedRead", true),
+        options.getBoolean("skipOverwriteSnapshots", false),
+        options.getBoolean("eqDeletePreimages", false)))
+  }
 }
 
 private[streaming] object IcebergCdfStreamSource {
@@ -97,57 +103,6 @@ private[streaming] object IcebergCdfStreamSource {
       StructField("_commit_version", LongType, nullable = false))),
       ids)
   }
-}
-
-private class IcebergCdfStreamTable(schema: StructType,
-                                    options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String =
-    s"graft-iceberg-cdf:${IcebergStreamSource.pathOf(options)}"
-  override def columns()
-      : Array[org.apache.spark.sql.connector.catalog.Column] =
-    schema.fields.map(f =>
-      org.apache.spark.sql.connector.catalog.Column.create(
-        f.name, f.dataType, f.nullable))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan =
-        new IcebergCdfStreamScan(schema, options)
-    }
-}
-
-private class IcebergCdfStreamScan(schema: StructType,
-                                   options: CaseInsensitiveStringMap)
-    extends Scan {
-  override def readSchema(): StructType = schema
-  override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new IcebergCdfMicroBatchStream(schema,
-      IcebergStreamSource.pathOf(options),
-      // same spellings as the sibling append source: a snapshot id,
-      // or `latest` = only snapshots committed after query start
-      Option(options.get("startingSnapshotId")) match {
-        case Some("latest") =>
-          Iceberg.streamHead(IcebergStreamSource.pathOf(options), None)
-        case Some(v) =>
-          // digit-only AND Long-parseable: a 25-digit id passes the
-          // digit check but overflows toLong — both malformations
-          // must hit the descriptive message, never a raw
-          // NumberFormatException
-          val parsed = scala.util.Try(v.toLong).toOption
-            .filter(_ => v.nonEmpty && v.forall(_.isDigit))
-          require(parsed.isDefined,
-            "graft-iceberg-cdf: startingSnapshotId must be a " +
-              s"snapshot id or 'latest', got '$v'")
-          parsed.get
-        case None => 0L
-      },
-      options.getLong("maxSnapshotsPerTrigger", Long.MaxValue),
-      options.getBoolean("vectorizedRead", true),
-      options.getBoolean("skipOverwriteSnapshots", false),
-      options.getBoolean("eqDeletePreimages", false))
 }
 
 /** One delete snapshot's worth of row-level deletes: the executor
@@ -187,58 +142,33 @@ private case class IcebergEqDeletePreimagePartition(deleteFile: String,
     constants: Map[String, String])
     extends InputPartition
 
+/** `graft-iceberg-cdf`: the shared core over Iceberg's PUBLISHED
+  * main lineage (never the max snapshot id — an offset that advanced
+  * past WAP-staged ids would skip their rows when a later
+  * fastForward publishes them), admitting WHOLE snapshots only
+  * (`maxSnapshotsPerTrigger`): one snapshot's changes form one
+  * transactionally-meaningful unit for a CDC-applying sink. Same
+  * `startingSnapshotId` spellings as the append source. */
 private class IcebergCdfMicroBatchStream(schema: StructType,
                                          tableDir: String,
-                                         startingSnapshotId: Long,
+                                         startingSnapshotId: Option[String],
                                          maxSnapshotsPerTrigger: Long,
-                                         vectorizedRead: Boolean = true,
-                                         skipOverwriteSnapshots:
-                                           Boolean = false,
-                                         eqDeletePreimages:
-                                           Boolean = false)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+                                         vectorizedRead: Boolean,
+                                         skipOverwriteSnapshots: Boolean,
+                                         eqDeletePreimages: Boolean)
+    extends CommitLogStream(
+      new IcebergCommitLog(tableDir, skipOverwriteSnapshots, None),
+      StreamSpelling.iceberg("graft-iceberg-cdf"), tableDir,
+      startingSnapshotId, maxSnapshotsPerTrigger) {
 
-  private val startSig = IcebergStreamSource.schemaSig(tableDir)
-
-  // the PUBLISHED main head, never the max snapshot id — an offset
-  // that advanced past WAP-staged ids would skip their rows when a
-  // later fastForward publishes them
-  @volatile private var availableNowCap: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(Iceberg.streamHead(tableDir, None))
-
-  override def initialOffset(): Offset =
-    SnapshotOffset(startingSnapshotId)
-
-  override def latestOffset(): Offset =
-    SnapshotOffset(availableNowCap
-      .getOrElse(Iceberg.streamHead(tableDir, None)))
-
-  // snapshot-granular admission: one snapshot's changes form one
-  // transactionally-meaningful unit for a CDC-applying sink
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-      : Offset = {
-    val from = start.asInstanceOf[SnapshotOffset].snapshotId
-    val cap = latestOffset().asInstanceOf[SnapshotOffset].snapshotId
-    if (cap <= from) return start
-    val bounded =
-      if (maxSnapshotsPerTrigger >= cap - from) cap
-      else from + maxSnapshotsPerTrigger
-    SnapshotOffset(bounded)
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    SnapshotOffset.parse(json)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  private val requireUnchangedSchema =
+    IcebergStreamSource.schemaGuard(tableDir)
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
-    IcebergStreamSource.requireUnchangedSchema(tableDir, startSig)
-    val from = start.asInstanceOf[SnapshotOffset].snapshotId
-    val to = end.asInstanceOf[SnapshotOffset].snapshotId
+    requireUnchangedSchema()
+    val from = start.asInstanceOf[CommitOffset].commitId
+    val to = end.asInstanceOf[CommitOffset].commitId
     Iceberg.cdfPlanBySnapshot(tableDir, from, to,
       skipOverwriteSnapshots).flatMap { snap =>
       val insertConsts = Map(

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -16,13 +16,13 @@ import graft.sources.Iceberg
 /** `spark.readStream.format("graft-iceberg")` — the
   * [[DeltaStreamProvider]] twin over the Iceberg metadata chain:
   * SNAPSHOT IDS are the offsets, batch planning is the snapshot-diff
-  * manifest walk ([[Iceberg.addedFilesIn]] — each append snapshot's
-  * own manifest-list names its new manifest, only status=ADDED
-  * entries count), and the shared executor-side Group reader
-  * resolves columns BY PARQUET FIELD ID — so a stream over a RENAMED
-  * table reads pre-rename files correctly, something a by-name
-  * reader cannot do. Non-append snapshots refuse loudly unless
-  * `skipOverwriteSnapshots` (Iceberg's own
+  * manifest walk ([[Iceberg.addedFilesSnapshotIterator]] — each
+  * append snapshot's own manifest-list names its new manifest, only
+  * status=ADDED entries count), and the shared executor-side Group
+  * reader resolves columns BY PARQUET FIELD ID — so a stream over a
+  * RENAMED table reads pre-rename files correctly, something a
+  * by-name reader cannot do. Non-append snapshots refuse loudly
+  * unless `skipOverwriteSnapshots` (Iceberg's own
   * streaming-skip-overwrite-snapshots escape hatch).
   *
   * Options: `path` (required), `skipOverwriteSnapshots` (default
@@ -82,11 +82,10 @@ private[streaming] object IcebergStreamSource {
     (schema, ids)
   }
 
-  /** The schema-change signature (see [[IcebergMicroBatchStream]]'s
-    * guard): (field id → type shape) when the table resolves by
-    * field id — renames keep it stable — falling back to
-    * (name → type shape) on name-mapped tables. */
-  def schemaSig(tableDir: String): Map[String, String] = {
+  /** The schema-change signature: (field id → type shape) when the
+    * table resolves by field id — renames keep it stable — falling
+    * back to (name → type shape) on name-mapped tables. */
+  private def schemaSig(tableDir: String): Map[String, String] = {
     val (sch, ids) = Iceberg.streamSchema(tableDir)
     if (ids.nonEmpty)
       ids.map { case (n, id) =>
@@ -98,14 +97,23 @@ private[streaming] object IcebergStreamSource {
         .toMap
   }
 
-  def requireUnchangedSchema(tableDir: String,
-                             startSig: Map[String, String]): Unit =
-    require(schemaSig(tableDir) == startSig,
+  /** SCHEMA CHANGES FAIL LOUDLY: Iceberg schema evolution is a
+    * metadata-version bump, not a snapshot, so it never appears
+    * "inside" an offset range — instead each trigger runs the
+    * returned check, comparing the table's CURRENT [[schemaSig]] with
+    * the one captured here at query start. A RENAME (same ids, same
+    * types, the q193 lifecycle) streams straight through, while an
+    * ADD COLUMN fails the stream with a restart message rather than
+    * silently dropping the new column under the stale schema. */
+  def schemaGuard(tableDir: String): () => Unit = {
+    val startSig = schemaSig(tableDir)
+    () => require(schemaSig(tableDir) == startSig,
       s"the schema of $tableDir CHANGED mid-stream (a field id was " +
         "added, dropped or retyped) — streaming on would silently " +
         "drop the new columns under the query-start schema. Restart " +
         "the query to pick up the evolved schema (files written " +
         "before the change read NULL for new columns).")
+  }
 }
 
 private class IcebergStreamTable(schema: StructType,
@@ -191,30 +199,27 @@ private class IcebergStreamScan(schema: StructType,
       Option(options.get("branch")))
 }
 
-/** The offset is (snapshot id, files consumed WITHIN it) — the
-  * [[VersionOffset]] twin (ids are monotonic in this writer; the
-  * snapshot-diff planner keys on them exactly as
-  * [[Iceberg.consumeIncremental]] does). `index` lets admission
-  * control SPLIT one huge append snapshot across micro-batches (a
-  * committed snapshot's manifest is immutable, so exactly-once
-  * holds). Legacy checkpoints wrote the bare id — deserialized as
-  * fully consumed. */
-private case class SnapshotOffset(snapshotId: Long,
-                                  index: Long = Long.MaxValue)
-    extends Offset {
-  override def json(): String =
-    s"""{"snapshotId":$snapshotId,"index":$index}"""
+/** Iceberg's metadata chain as the [[CommitLogStream]] core reads
+  * it: snapshot ids are the commit ids (monotonic in this writer),
+  * the head is the PUBLISHED main head or the `branch` head — never
+  * the max id, so an offset cannot advance past WAP-staged snapshots
+  * a later fastForward publishes — and
+  * [[Iceberg.addedFilesSnapshotIterator]] walks each snapshot's own
+  * manifests (status=ADDED entries; non-append snapshots refuse
+  * unless `skipOverwriteSnapshots`). */
+private class IcebergCommitLog(tableDir: String,
+                               skipOverwriteSnapshots: Boolean,
+                               branch: Option[String]) extends CommitLog {
+  override def head(): Long = Iceberg.streamHead(tableDir, branch)
+  override def addedFiles(fromExclusive: Long, to: Long)
+      : Iterator[(Long, Seq[graft.sources.DeltaLog.StreamFile])] =
+    Iceberg.addedFilesSnapshotIterator(tableDir, fromExclusive, to,
+      skipOverwriteSnapshots, branch)
 }
 
-private object SnapshotOffset {
-  private val Json =
-    """\{"snapshotId":(-?\d+),"index":(-?\d+)\}""".r
-  def parse(json: String): SnapshotOffset = json.trim match {
-    case Json(s, i) => SnapshotOffset(s.toLong, i.toLong)
-    case bare => SnapshotOffset(bare.toLong) // legacy: whole snapshot
-  }
-}
-
+/** `graft-iceberg`: the shared core over [[IcebergCommitLog]] —
+  * offsets are (snapshotId, fileIndex), manifest byte sizes are the
+  * byte currency, `startingSnapshotId` is exclusive. */
 private class IcebergMicroBatchStream(schema: StructType,
                                       tableDir: String,
                                       skipOverwriteSnapshots: Boolean,
@@ -222,140 +227,22 @@ private class IcebergMicroBatchStream(schema: StructType,
                                       maxSnapshotsPerTrigger: Long,
                                       maxFilesPerTrigger: Long,
                                       maxBytesPerTrigger: Long,
-                                      vectorizedRead: Boolean = true,
-                                      filterSql: Option[String] = None,
-                                      branch: Option[String] = None)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+                                      vectorizedRead: Boolean,
+                                      filterSql: Option[String],
+                                      branch: Option[String])
+    extends CommitLogStream(
+      new IcebergCommitLog(tableDir, skipOverwriteSnapshots, branch),
+      StreamSpelling.iceberg("graft-iceberg"), tableDir,
+      startingSnapshotId, maxSnapshotsPerTrigger, maxFilesPerTrigger,
+      maxBytesPerTrigger, StreamFilter.pruner(filterSql, schema)) {
 
-  // the `filter` option's prune-safe decomposition, built once at
-  // query start (fails loudly on unparseable SQL)
-  private val pruner = StreamFilter.pruner(filterSql, schema)
-
-  // SCHEMA CHANGES FAIL LOUDLY: Iceberg schema evolution is a
-  // metadata-version bump, not a snapshot, so it never appears
-  // "inside" an offset range — instead each trigger compares the
-  // table's CURRENT schema signature with the query-start one. The
-  // signature is (field id → type shape) when the table resolves by
-  // field id — so a RENAME (same ids, same types, the q193 lifecycle)
-  // streams straight through, while an ADD COLUMN fails the stream
-  // with a restart message rather than silently dropping the new
-  // column under the stale schema. Name-mapped tables fall back to
-  // (name → type shape).
-  private val startSig: Map[String, String] =
-    IcebergStreamSource.schemaSig(tableDir)
-  private def requireUnchangedSchema(): Unit =
-    IcebergStreamSource.requireUnchangedSchema(tableDir, startSig)
-
-  @volatile private var availableNowCap: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(Iceberg.streamHead(tableDir, branch))
-
-  // "latest" = backfill the existing table with one batch read and
-  // stream only snapshots committed after query start
-  override def initialOffset(): Offset = startingSnapshotId match {
-    case Some("latest") =>
-      SnapshotOffset(Iceberg.streamHead(tableDir, branch))
-    case Some(s) =>
-      // descriptive refusal for every malformed spelling, overflow
-      // included (the shared startingVersion discipline)
-      val parsed = scala.util.Try(s.toLong).toOption
-        .filter(_ => s.nonEmpty && s.forall(_.isDigit))
-      require(parsed.isDefined,
-        "graft-iceberg: startingSnapshotId must be a snapshot id " +
-          s"or 'latest', got '$s'")
-      SnapshotOffset(parsed.get)
-    case None => SnapshotOffset(0L)
-  }
-
-  override def latestOffset(): Offset =
-    SnapshotOffset(availableNowCap
-      .getOrElse(Iceberg.streamHead(tableDir, branch)))
-
-  // admission control — the [[DeltaMicroBatchStream]] rationale: a
-  // deep backlog drains in bounded batches, not one giant task set;
-  // maxFilesPerTrigger / maxBytesPerTrigger split WITHIN a snapshot
-  // (manifest byte sizes are the currency), at least one file always
-  // admitted so the stream makes progress
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-      : Offset = {
-    val from = start.asInstanceOf[SnapshotOffset]
-    val cap = latestOffset().asInstanceOf[SnapshotOffset].snapshotId
-    if (cap < from.snapshotId) return from
-    val bounded =
-      if (maxSnapshotsPerTrigger >= cap - from.snapshotId) cap
-      else from.snapshotId + maxSnapshotsPerTrigger
-    if (maxFilesPerTrigger == Long.MaxValue &&
-        maxBytesPerTrigger == Long.MaxValue)
-      return SnapshotOffset(bounded)
-    // LAZY walk: stopping the iterator stops the manifest reads too,
-    // so a deep backlog costs O(admitted snapshots) per trigger
-    val byS = Iceberg.addedFilesSnapshotIterator(tableDir,
-      from.snapshotId - 1, bounded, skipOverwriteSnapshots, branch)
-    var endS = from.snapshotId
-    var endI = from.index
-    var nFiles = 0L
-    var nBytes = 0L
-    var stop = false
-    while (!stop && byS.hasNext) {
-      val (s, fs) = byS.next()
-      var i =
-        if (s == from.snapshotId)
-          math.min(from.index, fs.size.toLong).toInt
-        else 0
-      endS = s
-      endI = i.toLong
-      while (i < fs.size && !stop) {
-        if (nFiles > 0 && (nFiles + 1 > maxFilesPerTrigger ||
-            nBytes + fs(i).size > maxBytesPerTrigger)) stop = true
-        else {
-          nFiles += 1
-          nBytes += fs(i).size
-          i += 1
-          endI = i.toLong
-        }
-      }
-    }
-    if (nFiles == 0) from else SnapshotOffset(endS, endI)
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    SnapshotOffset.parse(json)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  private val requireUnchangedSchema =
+    IcebergStreamSource.schemaGuard(tableDir)
 
   override def planInputPartitions(start: Offset,
                                    end: Offset): Array[InputPartition] = {
     requireUnchangedSchema()
-    val s = start.asInstanceOf[SnapshotOffset]
-    val e = end.asInstanceOf[SnapshotOffset]
-    val planned = Iceberg.addedFilesBySnapshot(tableDir, s.snapshotId - 1,
-        e.snapshotId, skipOverwriteSnapshots, branch)
-      .flatMap { case (sid, fs) =>
-        val lo =
-          if (sid == s.snapshotId)
-            math.min(s.index, fs.size.toLong).toInt
-          else 0
-        val hi =
-          if (sid == e.snapshotId)
-            math.min(e.index, fs.size.toLong).toInt
-          else fs.size
-        fs.slice(lo, hi)
-      }
-    // the `filter` option's per-file pruning — identity partition
-    // tuples + manifest value bounds, AFTER the offsets are fixed
-    // (pruning changes what is read, never the (snapshot, index)
-    // bookkeeping, so replay is identical with or without it)
-    val kept = pruner match {
-      case Some(p) => planned.filter(f => p.keep(f.partitionValues, f.bounds))
-      case None => planned
-    }
-    StreamFilter.record(tableDir, s"$s..$e", planned.size, kept.size)
-    kept
-      .map(f =>
-        DeltaFilePartition(f.path, f.partitionValues): InputPartition)
-      .toArray
+    super.planInputPartitions(start, end)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {

@@ -26,24 +26,42 @@ class DeltaCdfStreamSourceSpec extends SparkSuite {
 
   test("malformed startingVersion refuses descriptively, overflow included") {
     val work = Files.createTempDirectory("cdfstartv").toString
-    val dir = s"$work/t"
+    val deltaDir = s"$work/t"
     sources.DeltaLog.commitAppend(
-      Seq((1L, "a")).toDF("k", "s"), dir)
+      Seq((1L, "a")).toDF("k", "s"), deltaDir)
+    val icebergDir = s"$work/ice"
+    sources.Iceberg.commitAppend(
+      Seq((1L, "a")).toDF("k", "s"), icebergDir)
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    // one shared parser behind all four sources: (format, table,
+    // starting option, descriptive refusal)
+    val formats = Seq(
+      ("graft-delta", deltaDir, "startingVersion",
+        "startingVersion must be a version number"),
+      ("graft-delta-cdf", deltaDir, "startingVersion",
+        "startingVersion must be a version number"),
+      ("graft-iceberg", icebergDir, "startingSnapshotId",
+        "startingSnapshotId must be a snapshot id"),
+      ("graft-iceberg-cdf", icebergDir, "startingSnapshotId",
+        "startingSnapshotId must be a snapshot id"))
     // '5-3' fails the regex; a 25-digit string PASSES the regex but
-    // overflows Long — both must hit the descriptive message, never
-    // a raw NumberFormatException
-    Seq("5-3", "9" * 25).foreach { bad =>
+    // overflows Long; '-3' is a well-formed long but no commit id —
+    // all must hit the descriptive message, never a raw
+    // NumberFormatException or a silent stream from the start
+    for ((format, dir, option, expected) <- formats;
+         (bad, i) <- Seq("5-3", "9" * 25, "-3").zipWithIndex) {
       val e = intercept[Exception] {
-        drainTo(dir, s"$work/out-$bad".take(60),
-          s"$work/ckpt-$bad".take(60),
-          Map("startingVersion" -> bad))
+        spark.readStream.format(format).option("path", dir)
+          .option(option, bad).load()
+          .writeStream.format("parquet")
+          .option("path", s"$work/out-$format-$i")
+          .option("checkpointLocation", s"$work/ckpt-$format-$i")
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
       }
-      assert(messages(e).exists(
-        _.contains("startingVersion must be a version number")),
-        s"for '$bad' expected the descriptive refusal, " +
+      assert(messages(e).exists(_.contains(expected)),
+        s"$format: for '$bad' expected the descriptive refusal, " +
           s"got: ${messages(e)}")
     }
   }
