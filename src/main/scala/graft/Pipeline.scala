@@ -14,11 +14,12 @@ import org.apache.spark.sql.functions._
   *
   * Layout decisions carry the reference's scale posture: bronze is
   * Hive-partitioned by `_source_table` (streaming_bronze.py:102), the
-  * fact publishes as a stats-committed snapshot range-clustered on
+  * fact publishes as a Delta table range-clustered on
   * (month_key, l_orderkey) (≡ ClickHouse `PARTITION BY toYYYYMM` +
   * `ORDER BY`, 03_fact_tables.sql:53-55) so month- or order-bounded
-  * readers skip files through the manifest, and every write is an
-  * idempotent overwrite (the reference's TRUNCATE-then-load, S7).
+  * readers skip files through `add.stats` and the `_bloom` sidecar,
+  * and every write is an idempotent overwrite (the reference's
+  * TRUNCATE-then-load, S7).
   *
   * `main` runs it end-to-end: `runMain graft.Pipeline <sfDir> <outDir>`.
   */
@@ -90,8 +91,8 @@ object Pipeline {
     }
   }
 
-  /** Range partitions of the fact snapshot — each output file is a
-    * contiguous (month, order) block, so the stats manifest prunes
+  /** Range partitions of the fact table — each output file is a
+    * contiguous (month, order) block, so `add.stats` prunes
     * month-range scans to a few files. 32 matches the suite's shuffle
     * parallelism; at 100 TB raise it until files sit near the 128 MB
     * parquet sweet spot (the layout logic is volume-independent). */
@@ -112,22 +113,20 @@ object Pipeline {
     (linear / 12) * 100 + (linear % 12 + 1)
   }
 
-  /** Warehouse: star schema; the fact publishes as a stats-committed
-    * snapshot CLUSTERED on (month_key, l_orderkey) — the liquid-
-    * clustering spelling of the reference's monthly partitioning
-    * (ClickHouse PARTITION BY toYYYYMM + ORDER BY,
-    * 03_fact_tables.sql:53-55): a range repartition writes contiguous
-    * (month, order) blocks, `commitWithStats` records per-file
-    * min/max, and month- or order-bounded readers skip files through
-    * the manifest instead of directory names. Directory partitioning
-    * prunes exactly one column; the manifest prunes BOTH dimensions
-    * of the clustering key, and adding one costs a manifest row, not
-    * a directory fan-out.
+  /** Warehouse: star schema; the fact publishes as a Delta table
+    * CLUSTERED on (month_key, l_orderkey) — the liquid-clustering
+    * spelling of the reference's monthly partitioning (ClickHouse
+    * PARTITION BY toYYYYMM + ORDER BY, 03_fact_tables.sql:53-55): a
+    * range repartition writes contiguous (month, order) blocks, the
+    * commit records per-file min/max in `add.stats`, and month- or
+    * order-bounded readers skip files through the log instead of
+    * directory names. Directory partitioning prunes exactly one
+    * column; the stats prune BOTH dimensions of the clustering key.
     *
     * The recent-revenue branch is the in-DAG consumer of that layout:
-    * it resolves the newest [[RecentMonths]] months FROM THE MANIFEST
-    * (metadata, no data scan), reads only intersecting files via
-    * `readPruned`, and publishes the monthly rollup. File counts land
+    * it resolves the newest [[RecentMonths]] months FROM THE REPLAYED
+    * `add.stats` (metadata, no data scan), reads only intersecting
+    * files, and publishes the monthly rollup. File counts land
     * in [[lastRunMetrics]] (`fact_files_scanned`/`fact_files_total`)
     * so the spec — and a production freshness dashboard — can assert
     * the branch actually skipped. */
@@ -157,10 +156,9 @@ object Pipeline {
               count(lit(1)).as("n_lines"))
             .orderBy(col("month_key"))
           // empty-in/empty-out (the JDBC round trip's contract): an
-          // empty fact would fail the stats commit (zero part files →
-          // no schema to re-read) and NPE the manifest max() below, so
-          // land an empty MV with the rollup's own schema and skip the
-          // snapshot. limit-1 existence probe, not a full scan.
+          // empty fact has no month bounds to prune on, so land an
+          // empty MV with the rollup's own schema and skip the commit.
+          // limit-1 existence probe, not a full scan.
           if (factSrc.isEmpty) {
             lastRunMetrics.put("fact_files_scanned", 0L)
             lastRunMetrics.put("fact_files_total", 0L)
@@ -171,43 +169,38 @@ object Pipeline {
             .repartitionByRange(FactRangeFiles,
               col("month_key"), col("l_orderkey"))
             .sortWithinPartitions("month_key", "l_orderkey")
-          // min/max stats serve the month-range branch below; the
+          // add.stats min/max serve the month-range branch below; the
           // l_orderkey BLOOM serves point lookups ("all lines of
           // order X") that the month-major sort leaves unprunable —
           // per-file orderkey spans are wide inside each month block
           timed("fact_commit") {
-            observed(fact, "fact_order_lines")(df =>
-              sources.Snapshots.commitWithStats(
-                df, factDir, Seq("month_key", "l_orderkey"),
-                Seq("l_orderkey")))
+            observed(fact, "fact_order_lines") { df =>
+              if (sources.DeltaLog.versions(factDir).isEmpty)
+                sources.DeltaLog.createTable(factDir, df.schema, Seq.empty,
+                  Map(sources.DeltaLog.BloomColsProp -> "l_orderkey"))
+              sources.DeltaLog.commitOverwrite(df, factDir)
+            }
           }
           // commit-phase attribution rides the metrics dump (dev seam)
-          sources.Snapshots.lastCommitPhases.foreach { case (k, v) =>
+          sources.DeltaLog.lastCommitPhases.foreach { case (k, v) =>
             lastRunMetrics.put(s"fact_$k", v) }
           timed("fact_recent") {
-          // recent slice: newest months resolved from the manifest —
-          // collected ONCE; the max bound, the pruning decision and
-          // the pruned file list all derive from the same rows (this
-          // was three manifest-read jobs before round 18)
-          val v = sources.Snapshots.versions(factDir).last
-          val manifest = sources.Snapshots
-            .statsManifest(spark, factDir, v).collect().toSeq
-          val maxMonth = manifest.iterator.flatMap { r =>
-            val i = r.fieldIndex("max_month_key")
-            if (r.isNullAt(i)) None else Some(r.getLong(i))
-          }.max
+          // recent slice: the max bound, the pruning decision and the
+          // pruned file list all derive from ONE replayed state
+          val st = sources.DeltaLog.replay(factDir,
+            sources.DeltaLog.versions(factDir).last)
+          val monthMaxes = st.adds.values
+            .flatMap(_.longBounds.get("month_key")).map(_._2)
+          require(monthMaxes.nonEmpty,
+            s"$factDir recorded no month_key bounds in add.stats")
+          val maxMonth = monthMaxes.max
           val loMonth = monthsBack(maxMonth, RecentMonths - 1)
-          val range = Seq(("month_key", loMonth, maxMonth))
-          val (kept, total) = sources.Snapshots.pruneFilesFrom(
-            factDir, v, manifest, range)
-          lastRunMetrics.put("fact_files_scanned", kept.size.toLong)
-          lastRunMetrics.put("fact_files_total", total.toLong)
-          val pruned =
-            if (kept.isEmpty)
-              sources.Snapshots.readVersion(spark, factDir, v).limit(0)
-            else spark.read.parquet(kept: _*)
-          write(recentRollup(
-            pruned.filter(col("month_key").between(loMonth, maxMonth))),
+          val kept = sources.DeltaLog.statsPruned(st,
+            Seq(("month_key", loMonth, maxMonth)))
+          lastRunMetrics.put("fact_files_scanned", kept.adds.size.toLong)
+          lastRunMetrics.put("fact_files_total", st.adds.size.toLong)
+          write(recentRollup(sources.DeltaLog.scanState(spark, factDir, kept)
+            .filter(col("month_key").between(loMonth, maxMonth))),
             s"$outDir/warehouse/mv_recent_revenue")
           }
           }

@@ -207,20 +207,20 @@ case class RowPosBitmap(
 }
 
 /** Per-group bloom-filter bitmap as ONE aggregate — the write-side
-  * half of the snapshot bloom sidecar ([[graft.sources.Snapshots]]).
+  * half of the Delta bloom sidecar ([[graft.sources.DeltaLog]]).
   *
   * The expression-only build was `explode(array(pmod(xxhash64(k, i),
-  * m)))` × [[graft.sources.Snapshots.BloomHashes]] followed by a
+  * m)))` × [[graft.sources.DeltaLog.BloomHashes]] followed by a
   * `groupBy(file, word)` — it tripled the row count before the
   * aggregate and probed a string-keyed hash map once per PROBE
   * POSITION: ~13 CPU-seconds on the q84 fact commit's critical path
-  * (FactProbe stack samples: the fused Generate+hashAgg loop was the
-  * top frame of the whole commit). This aggregate folds each row's
-  * probe positions straight into a dense mBits-bit word array — one
-  * group per file, 3 hashes + 3 bit-sets per row, no row expansion.
+  * (stack samples: the fused Generate+hashAgg loop was the top frame
+  * of the whole commit). This aggregate folds each row's probe
+  * positions straight into a dense mBits-bit word array — one group
+  * per file, 3 hashes + 3 bit-sets per row, no row expansion.
   *
   * BIT-FOR-BIT the same filter: positions come from
-  * [[graft.sources.Snapshots.bloomPositions]], the driver-side
+  * [[graft.sources.DeltaLog.bloomPositions]], the driver-side
   * replica of catalyst's `pmod(xxhash64(key, i), m)` that the reader
   * probes with (ScaleSpec holds the equality against the engine's own
   * xxhash64 column). Null keys are skipped (the caller also filters
@@ -253,7 +253,7 @@ case class BloomWords(
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val ps = graft.sources.Snapshots.bloomPositions(
+      val ps = graft.sources.DeltaLog.bloomPositions(
         v.asInstanceOf[Long], mBits)
       var i = 0
       while (i < ps.length) {

@@ -208,8 +208,8 @@ object Scale {
   val PruneDayHi = 1499L
 
   /** Per-(session, orders-mtime) cache of the committed Z-ordered
-    * stats snapshot — the q104 COLD BUILDER, split out so the measured
-    * query body is the pruning payoff (a manifest read + a few-file
+    * Delta table — the q104 COLD BUILDER, split out so the measured
+    * query body is the pruning payoff (a log replay + a few-file
     * scan), not the compaction write. A real lakehouse pays the
     * Z-order rewrite once per OPTIMIZE cycle and answers thousands of
     * queries from it; rebuilding the layout inside every query's
@@ -220,7 +220,7 @@ object Scale {
     * path, source-table mtime; superseded or dead-session entries
     * delete their temp dirs before a replacement builds. */
   private val zSnapshotCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Long), (String, Int)]()
+    (org.apache.spark.sql.SparkSession, String, Long), String]()
 
   // the cache intentionally outlives calls (materialize-once), so the
   // JVM exit hook is what reclaims /tmp for every cached snapshot a
@@ -229,9 +229,8 @@ object Scale {
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     zSnapshotCache.values.forEach(dropZEntry(_))))
 
-  private def dropZEntry(e: (String, Int)): Unit =
-    graft.util.Fs.deleteRecursively(
-      new java.io.File(e._1).getParentFile)
+  private def dropZEntry(table: String): Unit =
+    graft.util.Fs.deleteRecursively(new java.io.File(table).getParentFile)
 
   /** Eviction fingerprint of a source table: hash of the sorted
     * (path, size, mtime) triple of EVERY file under it. Keying the
@@ -252,7 +251,7 @@ object Scale {
   }
 
   private[graft] def zorderStatsSnapshot(
-      spark: org.apache.spark.sql.SparkSession, dir: String): (String, Int) = {
+      spark: org.apache.spark.sql.SparkSession, dir: String): String = {
     import scala.jdk.CollectionConverters._
     zSnapshotCache.keySet.asScala.toSeq.foreach { k =>
       if (k._1.sparkContext.isStopped)
@@ -271,41 +270,42 @@ object Scale {
       val work = java.nio.file.Files.createTempDirectory("graft_q104")
         .toString
       val table = s"$work/orders_z"
-      // min/max stats feed q104's 2-D range box; the o_orderkey BLOOM
-      // feeds q124's point lookups — the key the z-layout does NOT
-      // cluster on, so min/max spans are useless for it by design
-      val v = graft.sources.Snapshots.commitWithStats(
-        zOrderedOrders(spark, dir), table,
-        Seq("o_custkey", "day_no"), Seq("o_orderkey"))
-      (table, v)
+      // add.stats min/max feed q104's 2-D range box; the o_orderkey
+      // BLOOM feeds q124's point lookups — the key the z-layout does
+      // NOT cluster on, so min/max spans are useless for it by design
+      val z = zOrderedOrders(spark, dir)
+      graft.sources.DeltaLog.createTable(table, z.schema, Seq.empty,
+        Map(graft.sources.DeltaLog.BloomColsProp -> "o_orderkey"))
+      graft.sources.DeltaLog.commitOverwrite(z, table)
+      table
     })
   }
 
-  /** q104 — STATS-PRUNED SNAPSHOT SCAN: the payoff step of the q100
+  /** q104 — STATS-PRUNED DELTA SCAN: the payoff step of the q100
     * layout. The session-cached builder ([[zorderStatsSnapshot]])
-    * commits the Z-ordered orders as a [[graft.sources.Snapshots]]
-    * version with a per-file min/max manifest on (o_custkey, day_no);
-    * the query answers a 2-D range query by scanning ONLY the files
+    * commits the Z-ordered orders as a [[graft.sources.DeltaLog]]
+    * table whose `add.stats` carry per-file min/max on (o_custkey,
+    * day_no); the query answers a 2-D range query by scanning ONLY the files
     * whose stats spans intersect the box — `OPTIMIZE ZORDER BY` plus
     * Delta/Iceberg data skipping (or ClickHouse's ORDER-BY sparse
     * index, reference clickhouse_init/03_fact_tables.sql:54-55)
     * end-to-end. The gate is the strongest one available: the pruned
     * scan plus the exact predicate must reproduce the oracle's
-    * full-table filter verbatim, so a manifest that ever skipped a
-    * needed file would hash-mismatch. ScaleSpec additionally asserts
-    * the scanned-file FRACTION is small, which is the part a
-    * correct-but-useless manifest would fail.
+    * full-table filter verbatim, so stats that ever skipped a needed
+    * file would hash-mismatch. ScaleSpec additionally asserts the
+    * scanned-file FRACTION is small, which is the part correct-but-
+    * useless stats would fail.
     *
     * Scale: the layout write is q100's range-partitioned sort, paid
     * once per compaction cycle (here: once per session, like the
-    * q111→q112 code table); the query itself reads manifest rows
-    * (files, not data) to choose files, then scans the few survivors
+    * q111→q112 code table); the query itself replays the log (files,
+    * not data) to choose files, then scans the few survivors
     * with the predicate pushed to parquet. Bench run 1 carries the
     * builder, run 2 is the honest warm cost — min-of-2 reports the
     * pruned read.
     *
     * READER-PINNING CONTRACT (the Delta/vacuum semantics
-    * [[graft.sources.Snapshots.vacuum]] documents): the returned
+    * [[graft.sources.DeltaLog.vacuum]] documents): the returned
     * frame reads the cached snapshot's files lazily, so it stays
     * valid while the snapshot is cached; REWRITING the source orders
     * table evicts and deletes that snapshot, and a frame pinned to it
@@ -313,8 +313,8 @@ object Scale {
     * the fresh snapshot. */
   def zorderPrunedScan(spark: org.apache.spark.sql.SparkSession,
                        dir: String): DataFrame = {
-    val (table, v) = zorderStatsSnapshot(spark, dir)
-    graft.sources.Snapshots.readPruned(spark, table, v,
+    graft.sources.DeltaLog.readWhereStats(spark,
+        zorderStatsSnapshot(spark, dir),
         Seq(("o_custkey", PruneCustLo, PruneCustHi),
           ("day_no", PruneDayLo, PruneDayHi)))
       .filter(col("o_custkey").between(PruneCustLo, PruneCustHi) &&
@@ -495,17 +495,18 @@ object Scale {
     * ever produced a false negative (the one failure mode a bloom
     * must never have) hash-mismatches.
     *
-    * Scale: the pruning decision reads bloom manifest rows (metadata,
-    * a few KB per 1000 files); the scan touches only surviving files
+    * Scale: the pruning decision reads `_bloom` sidecar rows
+    * (metadata, a few KB per 1000 files) through
+    * [[graft.sources.DeltaLog.readWherePoint]]; the scan touches only
+    * surviving files
     * with the key predicate pushed to parquet. Shares q104's
     * session-cached builder — warm after the first q104/q124 call —
     * and its reader-pinning contract: a source-table rewrite evicts
     * the snapshot and invalidates previously returned frames. */
   def pointLookup(spark: org.apache.spark.sql.SparkSession,
                   dir: String): DataFrame = {
-    val (table, v) = zorderStatsSnapshot(spark, dir)
-    graft.sources.Snapshots.readPrunedPoint(
-        spark, table, v, "o_orderkey", PointKeys)
+    graft.sources.DeltaLog.readWherePoint(
+        spark, zorderStatsSnapshot(spark, dir), "o_orderkey", PointKeys)
       .filter(col("o_orderkey").isin(PointKeys: _*))
       .select("o_orderkey", "o_custkey", "day_no", "z_value")
       .orderBy("o_orderkey")
@@ -699,17 +700,17 @@ object Scale {
   // ---------------------------------------------------------------- q133
 
   /** Session cache for the q133 OPTIMIZE demonstration: a
-    * deliberately fragmented snapshot of orders (64 streaming-sink-
+    * deliberately fragmented Delta table of orders (64 streaming-sink-
     * sized files) compacted by
-    * [[graft.sources.Snapshots.optimizeCompact]] into size-targeted,
-    * re-clustered files with fresh stats+blooms. Same keying/eviction
-    * discipline as [[zSnapshotCache]]. Holds (table, fragmented
-    * version, optimized version, fragmented file count, optimized
-    * file count) so ScaleSpec can assert the file-count collapse
-    * without rebuilding. */
+    * [[graft.sources.DeltaLog.compactZorder]] on `o_orderkey` into
+    * size-targeted, re-clustered files with fresh stats+blooms. Same
+    * keying/eviction discipline as [[zSnapshotCache]]. Holds (table,
+    * fragmented version, optimized version, fragmented file count,
+    * optimized file count) so ScaleSpec can assert the file-count
+    * collapse without rebuilding. */
   private val optimizeCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String, Long),
-    (String, Int, Int, Int, Int)]()
+    (String, Long, Long, Int, Int)]()
 
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     optimizeCache.values.forEach(e =>
@@ -718,9 +719,9 @@ object Scale {
 
   private[graft] def optimizedSnapshot(
       spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, Int, Int, Int, Int) = {
+      dir: String): (String, Long, Long, Int, Int) = {
     import scala.jdk.CollectionConverters._
-    def drop(e: (String, Int, Int, Int, Int)): Unit =
+    def drop(e: (String, Long, Long, Int, Int)): Unit =
       graft.util.Fs.deleteRecursively(new java.io.File(e._1).getParentFile)
     optimizeCache.keySet.asScala.toSeq.foreach { k =>
       if (k._1.sparkContext.isStopped)
@@ -733,33 +734,31 @@ object Scale {
         Option(optimizeCache.remove(k)).foreach(drop)
     }
     optimizeCache.computeIfAbsent((spark, canon, fp), _ => {
+      import graft.sources.DeltaLog
       val work = java.nio.file.Files.createTempDirectory("graft_q133")
         .toString
       val table = s"$work/orders_frag"
-      def parquetFiles(v: Int): Int =
-        Option(new java.io.File(s"$table/v=$v").listFiles())
-          .getOrElse(Array.empty)
-          .count(f => f.isFile && f.getName.endsWith(".parquet"))
       // the fragmented state a micro-batching sink leaves behind:
-      // hash-scattered, 64 tiny files, but stats-committed (real
-      // tables carry their manifests even when fragmented)
+      // hash-scattered, 64 tiny files, but stats-committed and
+      // bloomed (real tables carry their stats even when fragmented)
       val o = graft.Tables.load(spark, canon, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      val vFrag = graft.sources.Snapshots.commitWithStats(
-        o.repartition(64), table, Seq("o_orderkey"))
-      val fragBytes = Option(new java.io.File(s"$table/v=$vFrag").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .map(_.length()).sum
-      // target = 1/4 of the data: ~4 packed files from 64 fragments
-      // at every scale factor, preserving a multi-file layout so the
-      // fresh manifest still has spans to assert on
-      val vOpt = graft.sources.Snapshots.optimizeCompact(
-        spark, table, vFrag, math.max(1L, fragBytes / 4),
-        Seq("o_orderkey"), Seq("o_orderkey"), Seq("o_orderkey"))
-      val (nFrag, nOpt) = (parquetFiles(vFrag), parquetFiles(vOpt))
+      DeltaLog.createTable(table, o.schema, Seq.empty,
+        Map(DeltaLog.BloomColsProp -> "o_orderkey"))
+      val vFrag = DeltaLog.commitOverwrite(o.repartition(64), table)
+      // 4 packed files from 64 fragments at every scale factor,
+      // preserving a multi-file layout so the fresh stats still have
+      // spans to assert on
+      val vOpt = DeltaLog.compactZorder(spark, table, Seq("o_orderkey"), 4)
+      val nFrag = DeltaLog.replay(table, vFrag).adds.size
+      val nOpt = DeltaLog.replay(table, vOpt).adds.size
       require(nOpt < nFrag,
         s"OPTIMIZE did not shrink the file count ($nFrag -> $nOpt)")
+      // compaction leaves the packed files unbloomed; the backfill
+      // blooms exactly them (the OPTIMIZE procedures' contract)
+      val bloomed = DeltaLog.bloomBackfill(spark, table)
+      require(bloomed == nOpt,
+        s"blooms backfilled on $bloomed of $nOpt packed files")
       (table, vFrag, vOpt, nFrag, nOpt)
     })
   }
@@ -769,7 +768,7 @@ object Scale {
     * every row — byte-identical to the source table or the rewrite
     * lost/duplicated data (the oracle is the plain projection). The
     * builder `require`s the file-count collapse at run time; ScaleSpec
-    * additionally asserts the fresh manifest's per-file key spans are
+    * additionally asserts the fresh `add.stats` per-file key spans are
     * narrow (clustering restored, not just rows preserved) and that
     * the fragmented version stays readable (reader pinning).
     *
@@ -781,7 +780,7 @@ object Scale {
   def optimizeReadback(spark: org.apache.spark.sql.SparkSession,
                        dir: String): DataFrame = {
     val (table, _, vOpt, _, _) = optimizedSnapshot(spark, dir)
-    graft.sources.Snapshots.readVersion(spark, table, vOpt)
+    graft.sources.DeltaLog.readVersion(spark, table, vOpt)
       .orderBy("o_orderkey")
   }
 

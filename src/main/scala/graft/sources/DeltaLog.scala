@@ -705,15 +705,48 @@ object DeltaLog {
   def readWhereStats(spark: SparkSession, tableDir: String,
                      ranges: Seq[(String, Long, Long)]): DataFrame = {
     require(ranges.nonEmpty, "readWhereStats needs at least one range")
-    val st = replayMaybeCheckpointed(Some(spark), tableDir,
-      versions(tableDir).last)
-    val kept = st.adds.filter { case (_, a) =>
+    val kept = statsPruned(replayMaybeCheckpointed(Some(spark), tableDir,
+      versions(tableDir).last), ranges)
+    lastFilesScanned = kept.adds.size
+    scanState(spark, tableDir, kept)
+  }
+
+  /** `st` keeping only the adds whose recorded [min, max] can
+    * intersect every `(col, lo, hi)` range — [[readWhereStats]]'s
+    * decision, for callers that also need the replayed bounds (the
+    * pipeline's recent-months branch reads its max month from the
+    * same state). */
+  private[graft] def statsPruned(st: State,
+      ranges: Seq[(String, Long, Long)]): State =
+    st.copy(adds = st.adds.filter { case (_, a) =>
       val b = a.longBounds
       ranges.forall { case (c, lo, hi) =>
         b.get(c) match {
           case Some((mn, mx)) => mn <= hi && mx >= lo
           case None => true // no stats can never prove no match
         }
+      }
+    })
+
+  /** BLOOM-PRUNED point read of the latest snapshot: keep only the
+    * files whose `_bloom` sidecar rows say `keyCol` may hold one of
+    * `keys` ([[bloomProbe]]). Files without bloom rows are kept
+    * (superset), so callers re-apply the exact predicate. Refuses a
+    * column the table does not bloom ([[BloomColsProp]]): silently
+    * scanning everything would let a caller believe the lookup was
+    * pruned. [[lastFilesScanned]] records the surviving count. */
+  def readWherePoint(spark: SparkSession, tableDir: String,
+                     keyCol: String, keys: Seq[Long]): DataFrame = {
+    val st = replayMaybeCheckpointed(Some(spark), tableDir,
+      versions(tableDir).last)
+    require(bloomColsOf(st).contains(keyCol),
+      s"readWherePoint: $tableDir does not bloom '$keyCol' — set " +
+        s"$BloomColsProp to point-prune on it")
+    val kept = bloomProbe(spark, tableDir, keyCol, keys) match {
+      case None => st.adds
+      case Some((bloomed, hits)) => st.adds.filter { case (p, _) =>
+        val b = p.substring(p.lastIndexOf('/') + 1)
+        !bloomed.contains(b) || hits.contains(b)
       }
     }
     lastFilesScanned = kept.size
@@ -756,7 +789,7 @@ object DeltaLog {
   }
 
   /** Build the data scan for a replayed (possibly pruned) state. */
-  private def scanState(spark: SparkSession, tableDir: String,
+  private[graft] def scanState(spark: SparkSession, tableDir: String,
                         st: State): DataFrame = {
     val dataSchema = StructType(
       st.schema.filterNot(f => st.partitionColumns.contains(f.name)))
@@ -1528,9 +1561,10 @@ object DeltaLog {
       Set.empty))
 
   /** Delta's per-file data-skipping stats: numRecords + min/max of
-    * top-level INT64 columns — the format spells them as a JSON
-    * STRING inside the add action (same numbers [[Iceberg]] writes
-    * as manifest value bounds). */
+    * top-level integral columns — the format spells them as a JSON
+    * STRING inside the add action. Footer-derived stats carry INT64
+    * and INT32 bounds ([[Iceberg.FooterStats]]); Iceberg manifests
+    * record only the INT64 half. */
   private def statsJsonOf(n: Long,
                           bounds: Map[String, (Long, Long)],
                           schema: StructType = null): String = {
@@ -1557,21 +1591,64 @@ object DeltaLog {
 
   /** [[statsJsonOf]] from ONE driver-side footer open — kept for
     * [[registerFiles]] (external files, one-time migration metadata);
-    * every commit of a just-written batch rides [[statsJsonBatch]]'s
+    * every commit of a just-written batch rides [[statsAndBlooms]]'s
     * distributed job instead. */
-  private def statsJson(absPath: String): String = {
-    val (n, bounds) = Iceberg.parquetFooter(absPath)
-    statsJsonOf(n, bounds)
+  private def statsJson(absPath: String): String =
+    statsJsonOf(Iceberg.parquetFooter(absPath))
+
+  private def statsJsonOf(s: Iceberg.FooterStats): String =
+    statsJsonOf(s.numRecords, s.int64 ++ s.int32)
+
+  /** Dev seam: wall ms per phase of the LAST data batch a writer
+    * staged (`data_write_ms`, `footer_ms`, `sidecars_ms`) — commit
+    * attribution without a listener. Overwritten per batch. */
+  private[graft] val lastCommitPhases:
+      collection.concurrent.TrieMap[String, Long] =
+    collection.concurrent.TrieMap.empty
+
+  private def phased[A](name: String)(body: => A): A = {
+    val t0 = System.nanoTime()
+    val r = body
+    lastCommitPhases.put(name, (System.nanoTime() - t0) / 1000000)
+    r
   }
 
-  /** Per-file `add.stats` for a just-written batch through
-    * [[Iceberg.footerStatsBatch]]'s distributed footer job — the
-    * driver collects O(files) stats rows instead of serializing
-    * O(files) footer opens. Keyed by absolute file path. */
-  private def statsJsonBatch(spark: SparkSession,
-                             files: Seq[File]): Map[String, String] =
-    Iceberg.footerStatsBatch(spark, files.map(_.getPath))
-      .map { case (p, (n, b)) => p -> statsJsonOf(n, b) }
+  /** `add.stats` JSON per just-written file, keyed by path, from ONE
+    * distributed footer job ([[Iceberg.footerStatsBatch]] — the
+    * driver collects O(files) rows, never opens footers itself); when
+    * `state`'s table blooms columns, the sidecar is sized from the
+    * same rows, so no second footer pass runs. `state` is None for a
+    * fresh table and for compactions, whose rewritten files
+    * [[bloomBackfill]] covers. */
+  private def statsAndBlooms(spark: SparkSession, tableDir: String,
+      fs: Seq[File], state: Option[State]): Map[String, String] = {
+    val stats = phased("footer_ms")(
+      Iceberg.footerStatsBatch(spark, fs.map(_.getPath)))
+    phased("sidecars_ms")(maybeWriteBlooms(spark, tableDir,
+      fs.map(f => f.getPath -> stats(f.getPath).numRecords), state))
+    stats.map { case (p, st) => p -> statsJsonOf(st) }
+  }
+
+  /** Write `data` as one UNPARTITIONED batch under `tableDir/sub` and
+    * return its add actions, stats and blooms included
+    * ([[statsAndBlooms]]). An empty listing of the just-written dir
+    * is refused: Spark writes at least one part file even for an
+    * empty frame, so an empty listing means `java.io` could not see
+    * the data (a `file:` URI, a non-local path), and committing would
+    * publish a version with zero adds — silent data loss. */
+  private def writeBatch(data: DataFrame, tableDir: String, sub: String,
+      state: Option[State], dataChange: Boolean = true): Seq[ObjectNode] = {
+    phased("data_write_ms")(data.write.parquet(s"$tableDir/$sub"))
+    val fs = partFiles(tableDir, sub)
+    if (fs.isEmpty) throw new IllegalStateException(
+      s"the data job wrote $tableDir/$sub but listing it found no " +
+        "parquet files — DeltaLog tables need a plain local path " +
+        "(java.io cannot list a URI); refusing to commit a version " +
+        "with zero adds")
+    val stats = statsAndBlooms(data.sparkSession, tableDir, fs, state)
+    fs.map(f => addAction(s"$sub/${f.getName}", f.length, Map.empty,
+      dataChange, stats = Some(stats(f.getPath))))
+  }
 
   private def removeAction(path: String,
                            dataChange: Boolean = true): ObjectNode = {
@@ -1874,12 +1951,7 @@ object DeltaLog {
     // data dir named by UUID, not by version: two racing writers must
     // not collide at the DATA write — only the log CAS decides order
     val sub = s"part-${java.util.UUID.randomUUID}"
-    writeRows(df, tableDir, st0).write.parquet(s"$tableDir/$sub")
-    val fs = partFiles(tableDir, sub)
-    val stats = statsJsonBatch(df.sparkSession, fs)
-    val adds = fs.map(f => addAction(s"$sub/${f.getName}", f.length,
-      stats = Some(stats(f.getPath))))
-    maybeWriteBlooms(df.sparkSession, tableDir, fs, st0)
+    val adds = writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
     // lost CAS ⇒ another writer advanced the log; recompute the
     // version AND the removes from the new latest state and retry —
     // the loop makes progress by construction (each failure means a
@@ -1929,19 +2001,13 @@ object DeltaLog {
     st0.foreach(enforceWriteInvariants(df, _))
     val sub = s"part-${java.util.UUID.randomUUID}"
     val adds: Seq[ObjectNode] =
-      if (partCols.isEmpty) {
-        writeRows(df, tableDir, st0).write.parquet(s"$tableDir/$sub")
-        val fs = partFiles(tableDir, sub)
-        val stats = statsJsonBatch(df.sparkSession, fs)
-        fs.map(f => addAction(s"$sub/${f.getName}", f.length,
-          stats = Some(stats(f.getPath))))
-      } else {
+      if (partCols.isEmpty)
+        writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
+      else {
         df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
-        partitionedAdds(df.sparkSession, tableDir, sub, partCols,
+        partitionedAdds(df.sparkSession, tableDir, sub, partCols, st0,
           dataChange = true)
       }
-    maybeWriteBlooms(df.sparkSession, tableDir, partFiles(tableDir, sub),
-      st0)
     var v = -1L
     var done = false
     while (!done) {
@@ -2004,7 +2070,7 @@ object DeltaLog {
     st0.foreach(st =>
       enforceDsv2Invariants(spark, tableDir, st, partCols, files, op))
     maybeWriteBlooms(spark, tableDir,
-      files.map(f => new File(resolveAbs(f.relPath))), st0)
+      files.map(f => resolveAbs(f.relPath) -> f.numRecords), st0)
     val adds = files.map(f => addAction(f.relPath, f.size,
       f.partitionValues, dataChange = true,
       stats = Some(statsJsonOf(f.numRecords, f.bounds,
@@ -2061,7 +2127,7 @@ object DeltaLog {
       enforceDsv2Invariants(spark, tableDir, st, partCols, files, op)
     }
     maybeWriteBlooms(spark, tableDir,
-      files.map(f => new File(s"$tableDir/${f.relPath}")), st0)
+      files.map(f => s"$tableDir/${f.relPath}" -> f.numRecords), st0)
     val txn = mapper.createObjectNode()
     txn.putObject("txn").put("appId", appId)
       .put("version", txnVersion).put("lastUpdated", 0L)
@@ -2345,7 +2411,7 @@ object DeltaLog {
     enforceDsv2Invariants(spark, tableDir, st, st.partitionColumns,
       files, op)
     maybeWriteBlooms(spark, tableDir,
-      files.map(f => new File(s"$tableDir/${f.relPath}")), Some(st))
+      files.map(f => s"$tableDir/${f.relPath}" -> f.numRecords), Some(st))
     val cdcActs: Seq[ObjectNode] =
       if (!cdfWriteEnabled(st)) Seq.empty
       else cowChangeActions(spark, tableDir, st, removedRel, files, op)
@@ -2432,7 +2498,8 @@ object DeltaLog {
     enforceDsv2Invariants(spark, tableDir, st, st.partitionColumns,
       newFiles, op)
     maybeWriteBlooms(spark, tableDir,
-      newFiles.map(f => new File(s"$tableDir/${f.relPath}")), Some(st))
+      newFiles.map(f => s"$tableDir/${f.relPath}" -> f.numRecords),
+      Some(st))
     def resolveP(p: String) =
       if (p.startsWith("/") || p.contains("://")) p else s"$tableDir/$p"
     def baseName(rel: String) =
@@ -2806,19 +2873,13 @@ object DeltaLog {
     st0.foreach(enforceWriteInvariants(df, _))
     val sub = s"part-${java.util.UUID.randomUUID}"
     val adds: Seq[ObjectNode] =
-      if (partCols.isEmpty) {
-        writeRows(df, tableDir, st0).write.parquet(s"$tableDir/$sub")
-        val fs = partFiles(tableDir, sub)
-        val stats = statsJsonBatch(df.sparkSession, fs)
-        fs.map(f => addAction(s"$sub/${f.getName}", f.length,
-          stats = Some(stats(f.getPath))))
-      } else {
+      if (partCols.isEmpty)
+        writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
+      else {
         df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
-        partitionedAdds(df.sparkSession, tableDir, sub, partCols,
+        partitionedAdds(df.sparkSession, tableDir, sub, partCols, st0,
           dataChange = true)
       }
-    maybeWriteBlooms(df.sparkSession, tableDir, partFiles(tableDir, sub),
-      st0)
     val txn = mapper.createObjectNode()
     txn.putObject("txn").put("appId", appId)
       .put("version", txnVersion).put("lastUpdated", 0L)
@@ -2856,7 +2917,7 @@ object DeltaLog {
     * `partitionValues` — decoded once, here, at write time; after
     * that the paths are opaque, as the spec intends. */
   private def partitionedAdds(spark: SparkSession, tableDir: String,
-      sub: String, partCols: Seq[String],
+      sub: String, partCols: Seq[String], state: Option[State],
       dataChange: Boolean): Seq[ObjectNode] = {
     val moved = partFiles(tableDir, sub).map { f0 =>
       // a single job writing several hive partitions reuses one task
@@ -2870,7 +2931,7 @@ object DeltaLog {
       Files.move(f0.toPath, f.toPath)
       f
     }
-    val stats = statsJsonBatch(spark, moved)
+    val stats = statsAndBlooms(spark, tableDir, moved, state)
     moved.map { f =>
       val rel = Paths.get(tableDir).toAbsolutePath
         .relativize(f.toPath.toAbsolutePath).toString
@@ -2894,9 +2955,7 @@ object DeltaLog {
     val sub = s"part-${java.util.UUID.randomUUID}"
     df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
     val adds = partitionedAdds(df.sparkSession, tableDir, sub, partCols,
-      dataChange = true)
-    maybeWriteBlooms(df.sparkSession, tableDir, partFiles(tableDir, sub),
-      st0)
+      st0, dataChange = true)
     var v = -1L
     var done = false
     while (!done) {
@@ -2944,13 +3003,9 @@ object DeltaLog {
     // write physically at every nesting level: the hoisted
     // [[physicalize]], shared with the mapped append/merge writers
     val sub = s"part-${java.util.UUID.randomUUID}"
-    df.select(mappedSchema.fields.toSeq.map(f =>
-        physicalize(col(f.name), f).as(physFieldName(f))): _*)
-      .write.parquet(s"$tableDir/$sub")
-    val fs = partFiles(tableDir, sub)
-    val stats = statsJsonBatch(df.sparkSession, fs)
-    val adds = fs.map(f => addAction(s"$sub/${f.getName}", f.length,
-      stats = Some(stats(f.getPath))))
+    val adds = writeBatch(df.select(mappedSchema.fields.toSeq.map(f =>
+        physicalize(col(f.name), f).as(physFieldName(f))): _*),
+      tableDir, sub, None)
     require(writeActions(tableDir, 0L,
       Seq(protocolAction(minReader = 2, minWriter = 5),
         metaDataAction(mappedSchema, Seq.empty,
@@ -3080,17 +3135,13 @@ object DeltaLog {
     // exactly that)
     df.sparkSession.conf.set(
       "spark.sql.parquet.fieldId.write.enabled", "true")
-    df.select(mappedSchema.fields.toSeq.map(f =>
+    val adds = writeBatch(df.select(mappedSchema.fields.toSeq.map(f =>
         physicalize(col(f.name), f).as(physFieldName(f),
           new org.apache.spark.sql.types.MetadataBuilder()
             .putLong("parquet.field.id",
               f.metadata.getLong("delta.columnMapping.id"))
-            .build())): _*)
-      .write.parquet(s"$tableDir/$sub")
-    val fs = partFiles(tableDir, sub)
-    val stats = statsJsonBatch(df.sparkSession, fs)
-    val adds = fs.map(f => addAction(s"$sub/${f.getName}", f.length,
-      stats = Some(stats(f.getPath))))
+            .build())): _*),
+      tableDir, sub, None)
     require(writeActions(tableDir, 0L,
       Seq(protocolAction(minReader = 2, minWriter = 5),
         metaDataAction(mappedSchema, Seq.empty,
@@ -3246,23 +3297,43 @@ object DeltaLog {
     * Returns the committed version (unchanged if nothing matched). */
   // ---------------------------------------------------------------
   // Per-file BLOOM sidecar — point-lookup data skipping for
-  // scattered keys (Delta's delta.bloomFilter idea, the
-  // [[Snapshots.commitWithStats]] machinery on the open log)
+  // scattered keys (Delta's delta.bloomFilter idea)
   // ---------------------------------------------------------------
 
   /** Bloom sidecar directory. `add.stats` min/max prunes RANGE
     * predicates but is defeated by a SCATTERED key set (a
     * hash-distributed CDC delete batch spans [min,max] of every
     * file); the per-file bloom answers "could file F hold key k?"
-    * regardless of layout. Rows: (file basename, colname, word,
-    * bits, m_bits), geometry = [[Snapshots.BloomHashes]] positions
-    * via xxhash64(key_as_long, i), sized ~8 bits/row from the batch
-    * ([[Snapshots.bloomSizeFor]]). Sidecar metadata beside the log —
-    * foreign Delta clients ignore it; this engine's deletes probe
-    * it. Superset contract everywhere: a file with no bloom rows is
-    * never pruned, false positives cost a file scan, false negatives
-    * cannot happen. */
+    * regardless of layout. Rows: (file basename, word, bits,
+    * colname, m_bits), geometry = [[BloomHashes]] positions via
+    * xxhash64(key_as_long, i) ([[bloomPositions]]), sized from the
+    * batch ([[sidecarBloomBits]]). Sidecar metadata beside the log —
+    * foreign Delta clients ignore it; this engine's deletes, merges
+    * and [[readWherePoint]] probe it. Superset contract everywhere:
+    * a file with no bloom rows is never pruned, false positives cost
+    * a file scan, false negatives cannot happen. */
   private[graft] val BloomSidecarDir = "_bloom"
+
+  /** Probe positions per key, and the filter-size clamp of
+    * [[sidecarBloomBits]] (2 KiB..16 MiB per file — sidecar
+    * metadata, linear in file count). */
+  private[graft] val BloomHashes = 3
+  private[graft] val BloomMinBits = 16384
+  private[graft] val BloomMaxBits = 1 << 27
+
+  /** The probe positions for `value` in an `mBits`-bit filter —
+    * REPLICATES Spark's `xxhash64(key_as_long, i_as_long)` bit-for-bit
+    * on the driver (seed 42, left-fold over children with seed
+    * chaining), so the reader agrees with the writer about every bit
+    * ([[graft.functions.BloomWords]] builds with it). ScaleSpec holds
+    * this equality against the engine's own xxhash64 column. */
+  private[graft] def bloomPositions(value: Long, mBits: Int): Seq[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    (0 until BloomHashes).map { i =>
+      val h = XXH64.hashLong(i.toLong, XXH64.hashLong(value, 42L))
+      (((h % mBits) + mBits) % mBits).toInt
+    }
+  }
 
   /** Table property naming the bloomed columns (comma-separated,
     * long/int-typed). Writers bloom each new file when set;
@@ -3285,46 +3356,47 @@ object DeltaLog {
         }))
   }
 
-  /** Sidecar geometry: ~20 bits/row where [[Snapshots.bloomSizeFor]]
-    * uses ~8. The delete probe tests a BATCH of K keys per file and
-    * a file survives if ANY key false-positives — prune probability
-    * is (1−fpr)^K, so the per-key fpr must sit well under 1/K. At 20
-    * bits/row with 3 hashes fpr ≈ 0.05%, keeping a 100-key batch's
-    * per-file prune probability ≈ 95% where 8 bits/row (fpr ≈ 2.5%)
-    * would keep almost nothing. Cost: ~2.5 MB sidecar per 1M-row
-    * file — metadata, linear in file count. */
+  /** Sidecar geometry, the one bloom sizing policy: ~20 bits per row
+    * of the batch's largest file, a power of two clamped to
+    * [[BloomMinBits]]..[[BloomMaxBits]]. The delete probe tests a
+    * BATCH of K keys per file and a file survives if ANY key
+    * false-positives — prune probability is (1−fpr)^K, so the per-key
+    * fpr must sit well under 1/K. At 20 bits/row with 3 hashes fpr ≈
+    * 0.05%, keeping a 100-key batch's per-file prune probability ≈
+    * 95% where 8 bits/row (fpr ≈ 2.5%) would keep almost nothing.
+    * Cost: ~2.5 MB sidecar per 1M-row file — metadata, linear in
+    * file count. Saturates: a row count past Long.MaxValue / 20
+    * clamps to the ceiling rather than overflowing to the floor. */
   private[graft] def sidecarBloomBits(maxRows: Long): Int = {
-    val target = math.max(Snapshots.BloomMinBits.toLong, 20L * maxRows)
-    var m = Snapshots.BloomMinBits
-    while (m < target && m < (1 << 27)) m <<= 1
+    val target =
+      if (maxRows > Long.MaxValue / 20) Long.MaxValue
+      else math.max(BloomMinBits.toLong, 20L * maxRows)
+    var m = BloomMinBits
+    while (m < target && m < BloomMaxBits) m <<= 1
     m
   }
 
-  /** Write bloom rows for `absFiles` (one just-written batch, all
-    * one geometry sized from the batch's largest file). One
-    * distributed scan of the batch per call — the same cost class as
-    * the stats job every commit already pays. */
+  /** Write bloom rows for `absFiles` (one just-written batch, all one
+    * geometry sized from `maxRows`, the batch's largest file): ONE
+    * bitmap aggregate per file ([[graft.functions.BloomWords]]), then
+    * posexplode + bits≠0 for the sparse (file, word, bits) rows — a
+    * word row exists iff some key set a bit in it. One distributed
+    * scan of the batch's bloomed columns per call. */
   private def writeBloomRows(spark: SparkSession, tableDir: String,
-      absFiles: Seq[String], cols: Seq[String]): Unit = {
-    if (absFiles.isEmpty || cols.isEmpty) return
-    import org.apache.spark.sql.functions.{array, bit_or, expr,
-      explode, lit, pmod, shiftleft, xxhash64}
-    val maxRows = Iceberg.footerStatsBatch(spark, absFiles)
-      .values.map(_._1).maxOption.getOrElse(0L)
-    if (maxRows == 0L) return
+      absFiles: Seq[String], maxRows: Long, cols: Seq[String]): Unit = {
+    if (absFiles.isEmpty || cols.isEmpty || maxRows == 0L) return
+    import org.apache.spark.sql.functions.{lit, posexplode}
     val mBits = sidecarBloomBits(maxRows)
     val reread = spark.read.parquet(absFiles: _*)
     cols.map { c =>
-      val positions = (0 until Snapshots.BloomHashes).map(i =>
-        pmod(xxhash64(col(c).cast("long"), lit(i.toLong)),
-          lit(mBits.toLong)))
       reread.filter(col(c).isNotNull)
         .select(col("_metadata.file_name").as("file"),
-          explode(array(positions: _*)).as("pos"))
-        .groupBy(col("file"), (col("pos") / 64).cast("int").as("word"))
-        .agg(expr(
-          "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))")
-          .as("bits"))
+          col(c).cast("long").as("_key"))
+        .groupBy(col("file"))
+        .agg(graft.functions.AggExprs.bloomWords(col("_key"), mBits)
+          .as("words"))
+        .select(col("file"), posexplode(col("words")).as(Seq("word", "bits")))
+        .filter(col("bits") =!= 0L)
         .withColumn("colname", lit(c))
         .withColumn("m_bits", lit(mBits))
     }.reduce(_.unionByName(_))
@@ -3333,17 +3405,18 @@ object DeltaLog {
         s"$tableDir/$BloomSidecarDir/bloom-${java.util.UUID.randomUUID}")
   }
 
-  /** Bloom the batch under `tableDir/sub` when the table property
-    * asks for it — the append/merge writers' hook. Runs AFTER the
-    * data write; a crash before the sidecar lands leaves the files
-    * unbloomed = never pruned (safe). */
+  /** Bloom the just-written `files` ((absolute path, row count)
+    * pairs — the counts every writer already has from its stats) when
+    * the table property asks for it: the writers' hook. Runs AFTER
+    * the data write; a crash before the sidecar lands leaves the
+    * files unbloomed = never pruned (safe). */
   private def maybeWriteBlooms(spark: SparkSession, tableDir: String,
-                               fs: Seq[File],
+                               files: Seq[(String, Long)],
                                state: Option[State]): Unit = {
-    if (state.isEmpty || fs.isEmpty) return
-    val cols = bloomColsOf(state.get)
-    if (cols.nonEmpty)
-      writeBloomRows(spark, tableDir, fs.map(_.getPath), cols)
+    val cols = state.map(bloomColsOf).getOrElse(Seq.empty)
+    if (cols.nonEmpty && files.nonEmpty)
+      writeBloomRows(spark, tableDir, files.map(_._1),
+        files.map(_._2).max, cols)
   }
 
   /** Backfill bloom rows for LIVE files lacking them (files
@@ -3364,13 +3437,16 @@ object DeltaLog {
         .collect().map(_.getString(0)).toSet
     }
     val missing = st.files.filterNot(p => bloomed.contains(base(p)))
+      .map(resolve)
     // one sidecar write per geometry-uniform batch: all at once here
-    writeBloomRows(spark, tableDir, missing.map(resolve), cols)
+    val maxRows = Iceberg.footerStatsBatch(spark, missing)
+      .values.map(_.numRecords).maxOption.getOrElse(0L)
+    writeBloomRows(spark, tableDir, missing, maxRows, cols)
     missing.size
   }
 
-  private def bloomManifest(spark: SparkSession,
-                            tableDir: String): Option[DataFrame] = {
+  private[graft] def bloomManifest(spark: SparkSession,
+                                   tableDir: String): Option[DataFrame] = {
     val parts = partFiles(tableDir, BloomSidecarDir)
     if (parts.isEmpty) None
     else Some(spark.read.parquet(parts.map(_.getPath): _*))
@@ -3417,10 +3493,10 @@ object DeltaLog {
     * pruning is the right tool). */
   private val BloomProbeMaxKeys = 100000
 
-  /** Test seam: candidate files the last bloom probe kept vs the
-    * files that HAD bloom rows (unbloomed files bypass the probe). */
-  @volatile private[graft] var lastBloomProbeKept: Int = -1
-  @volatile private[graft] var lastBloomProbeBloomed: Int = -1
+  /** Test seam: rows the last bloom probe collected to the driver —
+    * one (file, m_bits) row per bloomed file and geometry plus one
+    * row per hit file; never whole blooms. */
+  @volatile private[graft] var lastBloomRowsCollected: Long = -1L
 
   /** Which live files may hold ANY of `keyVals` in `keyCol`, per the
     * bloom sidecar. None = no sidecar / column never bloomed →
@@ -3455,7 +3531,7 @@ object DeltaLog {
         val probeRows: Seq[(Int, Int, Long, Int, Int)] =
           geoms.flatMap { g =>
             keyVals.zipWithIndex.flatMap { case (v, ki) =>
-              val byWord = Snapshots.bloomPositions(v, g)
+              val byWord = bloomPositions(v, g)
                 .groupBy(_ / 64).view.mapValues(ps =>
                   ps.foldLeft(0L)((acc, p) => acc | (1L << (p % 64))))
                 .toSeq
@@ -3489,10 +3565,9 @@ object DeltaLog {
           .filter(col("ok") === col("n_words") &&
             col("present") === col("n_words"))
           .select("file").distinct()
-          .collect().map(_.getString(0)).toSet
-        lastBloomProbeBloomed = bloomed.size
-        lastBloomProbeKept = hits.size
-        Some((bloomed, hits))
+          .collect()
+        lastBloomRowsCollected = fileGeoms.length.toLong + hits.length
+        Some((bloomed, hits.map(_.getString(0)).toSet))
       }
     }
   }
@@ -3800,20 +3875,15 @@ object DeltaLog {
     val st = replayMaybeCheckpointed(Some(spark), tableDir, base)
     require(st.partitionColumns.isEmpty,
       "compact supports unpartitioned tables (partitioned OPTIMIZE " +
-        "compacts per-partition — see Snapshots.optimizeCompact)")
+        "compacts per-partition — use compactPartitioned)")
     val sub = s"part-${java.util.UUID.randomUUID}"
     // mapped tables compact like any other: the logical scan folds
     // DVs, the physical spelling goes back on at the write
     val snapshot = scanState(spark, tableDir, st)
-    (if (st.columnMapping.isEmpty) snapshot
-     else physicalRows(snapshot, st))
-      .repartition(targetFiles)
-      .write.parquet(s"$tableDir/$sub")
-    val fs = partFiles(tableDir, sub)
-    val stats = statsJsonBatch(spark, fs)
-    val adds = fs.map(f =>
-      addAction(s"$sub/${f.getName}", f.length, Map.empty,
-        dataChange = false, stats = Some(stats(f.getPath))))
+    val adds = writeBatch(
+      (if (st.columnMapping.isEmpty) snapshot
+       else physicalRows(snapshot, st)).repartition(targetFiles),
+      tableDir, sub, None, dataChange = false)
     val removes = st.files.map(p => removeAction(p, dataChange = false))
     // conflict-proving commit: a racing APPEND never conflicts with a
     // compaction (its files are not in the rewrite set and carry over
@@ -3846,7 +3916,7 @@ object DeltaLog {
       .write.partitionBy(st.partitionColumns: _*)
       .parquet(s"$tableDir/$sub")
     val adds = partitionedAdds(spark, tableDir, sub, st.partitionColumns,
-      dataChange = false)
+      None, dataChange = false)
     val removes = st.files.map(p => removeAction(p, dataChange = false))
     // the compact discipline: append winners carry over by identity
     commitRowOp(tableDir, base, removes ++ adds,
@@ -3894,7 +3964,7 @@ object DeltaLog {
         .write.partitionBy(st.partitionColumns: _*)
         .parquet(s"$tableDir/$sub")
       val adds = partitionedAdds(spark, tableDir, sub,
-        st.partitionColumns, dataChange = false)
+        st.partitionColumns, None, dataChange = false)
       val removes =
         st.files.map(p => removeAction(p, dataChange = false))
       commitRowOp(tableDir, base, removes ++ adds,
@@ -3902,14 +3972,10 @@ object DeltaLog {
     } else {
       val clustered = graft.ops.Scale.zClustered(
         scanState(spark, tableDir, st), zorderCols, targetFiles)
-      (if (st.columnMapping.isEmpty) clustered
-       else physicalRows(clustered, st))
-        .write.parquet(s"$tableDir/$sub")
-      val fs = partFiles(tableDir, sub)
-      val stats = statsJsonBatch(spark, fs)
-      val adds = fs.map(f =>
-        addAction(s"$sub/${f.getName}", f.length, Map.empty,
-          dataChange = false, stats = Some(stats(f.getPath))))
+      val adds = writeBatch(
+        if (st.columnMapping.isEmpty) clustered
+        else physicalRows(clustered, st),
+        tableDir, sub, None, dataChange = false)
       val removes =
         st.files.map(p => removeAction(p, dataChange = false))
       commitRowOp(tableDir, base, removes ++ adds,
@@ -5661,23 +5727,19 @@ object DeltaLog {
         .unionByName(upserts.select(st.schema.fieldNames.map(col): _*))
     val sub = s"part-${java.util.UUID.randomUUID}"
     val adds: Seq[ObjectNode] =
-      if (partCols.isEmpty) {
+      if (partCols.isEmpty)
         // mapped targets (always unpartitioned): rewrite files spell
         // the columns physically, like every other mapped write
-        (if (st.columnMapping.isEmpty) newRows
-         else physicalRows(newRows, st))
-          .write.parquet(s"$tableDir/$sub")
-        val fs = partFiles(tableDir, sub)
-        val stats = statsJsonBatch(spark, fs)
-        fs.map(f => addAction(s"$sub/${f.getName}", f.length,
-          stats = Some(stats(f.getPath))))
-      } else {
+        writeBatch(
+          if (st.columnMapping.isEmpty) newRows
+          else physicalRows(newRows, st),
+          tableDir, sub, Some(st))
+      else {
         newRows.write.partitionBy(partCols: _*)
           .parquet(s"$tableDir/$sub")
-        partitionedAdds(spark, tableDir, sub, partCols,
+        partitionedAdds(spark, tableDir, sub, partCols, Some(st),
           dataChange = true)
       }
-    maybeWriteBlooms(spark, tableDir, partFiles(tableDir, sub), Some(st))
     // delta.enableChangeDataFeed=true: the row-level change file +
     // cdc action ride the SAME commit (update_preimage/postimage for
     // matched upsert keys, delete for tombstone matches, insert for

@@ -1164,7 +1164,7 @@ object Iceberg {
     * manifest [lower, upper] bounds can intersect every `(col, lo,
     * hi)` range — Iceberg data skipping, decided driver-side over
     * manifest rows exactly as an Iceberg client's planner does.
-    * Superset contract (the Snapshots.pruneFiles / DeltaLog.readWhere
+    * Superset contract (the DeltaLog.readWhereStats / readWhere
     * discipline): a file or column WITHOUT bounds never prunes, false
     * positives cost a file read, false negatives cannot happen —
     * callers re-apply the exact predicate. [[lastFilesPlanned]]
@@ -1334,16 +1334,24 @@ object Iceberg {
   // Writer (overwrite/append snapshots through the metadata chain)
   // ---------------------------------------------------------------
 
-  /** Driver-side parquet footer read — metadata, never a scan: the
-    * record count the spec requires per data file, plus min/max of
-    * every top-level INT64 column (merged across row groups) for the
-    * manifest's value bounds. One footer open serves both. Shared
-    * with [[DeltaLog]]'s `add.stats` writer — same numbers, two
-    * format spellings. Kept for the O(1)-per-call sites (single
-    * delete files, external-file migration); a just-written BATCH
-    * goes through [[footerStatsBatch]] so the driver never
-    * serializes O(files) IO round-trips. */
-  private[sources] def parquetFooter(path: String): (Long, Map[String, (Long, Long)]) = {
+  /** One parquet footer's record count plus min/max (merged across
+    * row groups) of its top-level integral columns, split by physical
+    * type: `int64` covers INT64 (timestamps included, decimals
+    * excluded), `int32` covers INT32 with no annotation or an integer
+    * one. Iceberg manifests record only `int64` (their bound encoding
+    * here is 8-byte little-endian, wrong for int columns); Delta's
+    * `add.stats` records both. */
+  private[sources] case class FooterStats(numRecords: Long,
+      int64: Map[String, (Long, Long)], int32: Map[String, (Long, Long)]) {
+    def iceberg: (Long, Map[String, (Long, Long)]) = (numRecords, int64)
+  }
+
+  /** Driver-side parquet footer read — metadata, never a scan. Kept
+    * for the O(1)-per-call sites (single delete files, external-file
+    * migration); a just-written BATCH goes through
+    * [[footerStatsBatch]] so the driver never serializes O(files) IO
+    * round-trips. */
+  private[sources] def parquetFooter(path: String): FooterStats = {
     driverFooterOpens += 1
     footerStatsOf(path)
   }
@@ -1362,9 +1370,10 @@ object Iceberg {
     * thousand part files pays one job instead of a thousand
     * sequential driver round-trips. A single file skips the job
     * (task-launch overhead exceeds one local footer open, and a
-    * 1-file commit's latency never grows with table size). */
+    * 1-file commit's latency never grows with table size). The one
+    * footer-stats reader of both formats' commit paths. */
   private[sources] def footerStatsBatch(spark: SparkSession,
-      paths: Seq[String]): Map[String, (Long, Map[String, (Long, Long)])] =
+      paths: Seq[String]): Map[String, FooterStats] =
     paths match {
       case Seq() => Map.empty
       case Seq(one) => Map(one -> parquetFooter(one))
@@ -1374,38 +1383,57 @@ object Iceberg {
         .collect().toMap
     }
 
-  private def footerStatsOf(path: String): (Long, Map[String, (Long, Long)]) = {
+  /** One Hadoop configuration per JVM for footer opens, read-only
+    * after construction: a fresh one re-parses the default resources
+    * on first use — tens of ms of CPU per footer, paid once per file
+    * by a many-file commit's footer job. */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
+  private def footerStatsOf(path: String): FooterStats = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(path), footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
-      val bounds = scala.collection.mutable.Map.empty[String, (Long, Long)]
+      val int64 = scala.collection.mutable.Map.empty[String, (Long, Long)]
+      val int32 = scala.collection.mutable.Map.empty[String, (Long, Long)]
       r.getFooter.getBlocks.asScala.foreach { b =>
         b.getColumns.asScala.foreach { c =>
+          val prim = c.getPrimitiveType.getPrimitiveTypeName
+          val lt = c.getPrimitiveType.getLogicalTypeAnnotation
           // decimal-annotated INT64 carries an UNSCALED value —
           // recording it as a plain long would poison add.stats
           // with mis-scaled bounds; footer-path decimal stats are
-          // simply omitted (superset — such files never prune)
-          val isLong = c.getPrimitiveType.getPrimitiveTypeName ==
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 &&
-            !c.getPrimitiveType.getLogicalTypeAnnotation
-              .isInstanceOf[org.apache.parquet.schema
-                .LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
+          // simply omitted (superset — such files never prune).
+          // INT32 counts only bare or signed-integer-annotated (dates,
+          // decimals and unsigned ints ride INT32 too, with other
+          // meanings).
+          val into =
+            if (prim == PrimitiveTypeName.INT64 &&
+              !lt.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation])
+              Some(int64)
+            else if (prim == PrimitiveTypeName.INT32 && (lt match {
+              case null => true
+              case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+                i.isSigned
+              case _ => false
+            }))
+              Some(int32)
+            else None
           val st = c.getStatistics
-          if (isLong && c.getPath.size == 1 && st != null &&
-            !st.isEmpty && st.hasNonNullValue) {
+          if (c.getPath.size == 1 && st != null && !st.isEmpty &&
+            st.hasNonNullValue) into.foreach { bounds =>
             val name = c.getPath.toDotString
-            val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue
-            val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue
-            val merged = bounds.get(name)
+            val mn = st.genericGetMin.asInstanceOf[Number].longValue
+            val mx = st.genericGetMax.asInstanceOf[Number].longValue
+            bounds(name) = bounds.get(name)
               .map { case (a, b2) => (math.min(a, mn), math.max(b2, mx)) }
               .getOrElse((mn, mx))
-            bounds(name) = merged
           }
         }
       }
-      (r.getRecordCount, bounds.toMap)
+      FooterStats(r.getRecordCount, int64.toMap, int32.toMap)
     } finally r.close()
   }
 
@@ -1434,7 +1462,7 @@ object Iceberg {
       partition.foreach { case (n, v) => p.put(n, v) }
       df.put("partition", p)
     }
-    val (rows, bounds) = stats.getOrElse(parquetFooter(path))
+    val (rows, bounds) = stats.getOrElse(parquetFooter(path).iceberg)
     df.put("record_count", rows)
     df.put("file_size_in_bytes", new File(path).length())
     val known = bounds.toSeq
@@ -1602,7 +1630,7 @@ object Iceberg {
     // stats for every part file in ONE distributed footer job —
     // the driver collects O(files) rows, never opens footers itself
     val statsByPath = footerStatsBatch(df.sparkSession,
-      parts.map(_._1.getPath))
+      parts.map(_._1.getPath)).view.mapValues(_.iceberg).toMap
     publishDataSnapshot(tableDir, df.schema, tupleFields, declaredSpec,
       parts, statsByPath, overwrite, toBranch, summaryExtra, abortIf,
       () => graft.util.Fs.deleteRecursively(new File(tableDir, sub)),
@@ -3751,7 +3779,7 @@ object Iceberg {
     val part = Option(new File(tableDir, sub).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
-    val (nRows, _) = parquetFooter(part.getPath)
+    val nRows = parquetFooter(part.getPath).numRecords
     if (nRows == 0) { // no live row matched: commit nothing
       graft.util.Fs.deleteRecursively(new File(tableDir, sub))
       return curId
@@ -4147,7 +4175,7 @@ object Iceberg {
     val part = Option(new File(tableDir, sub).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
-    val (nRows, _) = parquetFooter(part.getPath)
+    val nRows = parquetFooter(part.getPath).numRecords
     if (nRows == 0) { // nothing to delete: commit nothing
       graft.util.Fs.deleteRecursively(new File(tableDir, sub))
       return curId

@@ -16,7 +16,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * create (`LocalFSFileOutputStream` ctor) and every `mkdirs` level —
   * falls back to `Shell.execCommand("chmod …")`: one `fork`+`exec`
   * per created file or directory. Profiling round 17's fixture-gate
-  * suite (tools/JobProbe driver+executor stack sampling) shows
+  * suite (driver+executor stack sampling) shows
   * `Shell.runCommand` frames on both the driver (commit-protocol
   * `setupJob` mkdirs) and the executors (per-part-file creates) for
   * every lakehouse write, streaming checkpoint and shuffle-adjacent

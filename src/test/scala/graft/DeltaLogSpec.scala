@@ -2953,4 +2953,147 @@ class DeltaLogSpec extends SparkSuite {
     sources.DeltaLog.compact(spark, dir, targetFiles = 1)
     assert(sources.DeltaLog.read(spark, dir).count() == 7)
   }
+
+  test("add.stats record INT32 bounds and prune on them; Iceberg keeps INT64 only") {
+    // an INT column's footer bounds are INT32 statistics: Delta's
+    // add.stats record them (min/max as JSON numbers) so readWhereStats
+    // prunes on int keys; a DATE (INT32 + DATE annotation) is not an
+    // integer and records none. Iceberg's manifest bound encoding here
+    // is the 8-byte long form, so the SAME frame committed as Iceberg
+    // must carry no INT32 bounds at all.
+    val base = Files.createTempDirectory("dlint32").toString
+    val df = (1 to 100).map(i => (i, i * 3L, java.sql.Date.valueOf(
+        java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong))))
+      .toDF("i", "l", "d").repartitionByRange(4, col("i"))
+    val t = s"$base/delta"
+    sources.DeltaLog.commitOverwrite(df, t)
+    val adds = sources.DeltaLog.replay(t, 0L).adds.values.toSeq
+    assert(adds.size == 4)
+    assert(adds.forall(a => a.longBounds.contains("i") &&
+      a.longBounds.contains("l") && !a.longBounds.contains("d")),
+      s"add.stats bounds: ${adds.map(_.longBounds.keySet)}")
+    assert(adds.map(_.longBounds("i")._1).min == 1L &&
+      adds.map(_.longBounds("i")._2).max == 100L)
+    assert(sources.DeltaLog.readWhereStats(spark, t, Seq(("i", 1L, 10L)))
+      .filter(col("i").between(1, 10)).count() == 10)
+    assert(sources.DeltaLog.lastFilesScanned > 0 &&
+      sources.DeltaLog.lastFilesScanned < 4,
+      s"INT32 bounds must prune: scanned " +
+        s"${sources.DeltaLog.lastFilesScanned} of 4")
+    val it = s"$base/iceberg"
+    sources.Iceberg.commitOverwrite(df, it)
+    val files = sources.Iceberg.filesTable(spark, it)
+      .filter(col("content") === 0).collect()
+    assert(files.length == 4)
+    files.foreach { r =>
+      val mins = r.getAs[scala.collection.Map[String, Long]]("min_values")
+      assert(mins.contains("l") && !mins.contains("i") &&
+        !mins.contains("d"),
+        s"Iceberg manifest bounds must stay INT64-only, got ${mins.keySet}")
+    }
+  }
+
+  test("a commit whose data dir lists empty refuses, never publishes zero adds") {
+    // java.io cannot list a `file:` URI: the data job lands its files
+    // but the listing comes back empty. Committing that listing would
+    // publish a version with zero adds — silent data loss. The writer
+    // must refuse descriptively and publish nothing.
+    val local = Files.createTempDirectory("dluri").toString
+    val uri = s"file:$local/t"
+    val e = intercept[IllegalStateException] {
+      sources.DeltaLog.commitOverwrite(
+        (1L to 10L).map(k => (k, s"v$k")).toDF("k", "s"), uri)
+    }
+    assert(e.getMessage.contains("zero adds"), e.getMessage)
+    assert(sources.DeltaLog.versions(uri).isEmpty &&
+      sources.DeltaLog.versions(s"$local/t").isEmpty,
+      "no version may be published for an unlisted data dir")
+    // and a plain-path commit still publishes non-empty stats that
+    // prune — the end-to-end contract the guard protects
+    val t = s"$local/t2"
+    sources.DeltaLog.commitOverwrite(
+      (1L to 100L).map(k => (k, s"v$k")).toDF("k", "s")
+        .repartitionByRange(4, col("k")), t)
+    assert(sources.DeltaLog.replay(t, 0L).adds.size == 4)
+    sources.DeltaLog.readWhereStats(spark, t, Seq(("k", 1L, 10L))).count()
+    assert(sources.DeltaLog.lastFilesScanned > 0 &&
+      sources.DeltaLog.lastFilesScanned < 4)
+  }
+
+  test("schema evolution: absent stats columns never prune (superset)") {
+    import org.apache.spark.sql.types.LongType
+    val t = Files.createTempDirectory("dlevostats").toString + "/t"
+    // the first commit has stats on k only — column x does not exist
+    sources.DeltaLog.commitOverwrite(
+      (1L to 100L).map(k => (k, s"v$k")).toDF("k", "s")
+        .repartitionByRange(4, col("k")), t)
+    val st0 = sources.DeltaLog.replay(t, 0L)
+    // a range over the FUTURE column x must keep every file: no stats
+    // can never prove no match (and must not throw)
+    assert(sources.DeltaLog.statsPruned(st0, Seq(("x", 0L, 10L)))
+      .adds.size == 4, "absent-column range pruned files")
+    // mixed box: the k half still prunes, the x half is ignored
+    val mix = sources.DeltaLog.statsPruned(st0,
+      Seq(("k", 1L, 10L), ("x", 0L, 10L))).adds.size
+    assert(mix < 4 && mix > 0)
+    // x arrives WITH stats: its files prune on x, the pre-x files
+    // (no x bounds) are always kept
+    sources.DeltaLog.evolveSchema(t, st0.schema.add("x", LongType))
+    sources.DeltaLog.commitAppend(
+      (1L to 100L).map(k => (k, s"v$k", k * 10))
+        .toDF("k", "s", "x").repartitionByRange(4, col("x")), t)
+    val evolved = sources.DeltaLog.readWhereStats(spark, t,
+      Seq(("x", 10L, 100L)))
+    val scanned = sources.DeltaLog.lastFilesScanned
+    assert(scanned > 4 && scanned < 8,
+      s"x range kept $scanned of 8: every pre-x file plus a strict " +
+        "subset of the x-bearing ones")
+    // and the evolved read-back is complete under the merged contract
+    assert(evolved.filter(col("x").isNull).count() == 100)
+  }
+
+  test("BloomWords-built bloom sidecar equals the expression-built rows") {
+    // the sidecar writer folds keys with the BloomWords bitmap
+    // aggregate; its rows must be BIT-IDENTICAL to the
+    // explode(positions)+groupBy(file, word) plan it replaced (same
+    // (file, word) set, same bits), sized from the commit's own
+    // add.stats rows — else readers would probe a different filter
+    // than the writer built
+    import org.apache.spark.sql.functions._
+    val t = Files.createTempDirectory("dlbloomwords").toString + "/t"
+    val df = (1L to 5000L).map(k => (k * 7919L % 100000L, s"p$k"))
+      .toDF("k", "s").repartition(4, col("k"))
+    sources.DeltaLog.createTable(t, df.schema, Seq.empty,
+      Map(sources.DeltaLog.BloomColsProp -> "k"))
+    sources.DeltaLog.commitOverwrite(df, t)
+    val st = sources.DeltaLog.replay(t, 1L)
+    def parquetUnder(d: java.io.File): Seq[String] =
+      if (d.isDirectory) d.listFiles().toSeq.flatMap(parquetUnder)
+      else if (d.getName.endsWith(".parquet")) Seq(d.getPath)
+      else Seq.empty
+    val sidecar = spark.read.parquet(parquetUnder(
+      new java.io.File(t, sources.DeltaLog.BloomSidecarDir)): _*)
+    val mBits = sidecar.select("m_bits").distinct().collect()
+      .map(_.getInt(0)).toSeq
+    val maxRows = st.adds.values
+      .flatMap(_.stats.flatMap(sources.DeltaLog.statsNumRecords)).max
+    assert(mBits == Seq(sources.DeltaLog.sidecarBloomBits(maxRows)),
+      s"bloom geometry $mBits must be sized from add.stats ($maxRows rows)")
+    // rebuild with the ORIGINAL expression-only plan
+    val reread = spark.read.parquet(st.files.map(p => s"$t/$p"): _*)
+    val positions = (0 until sources.DeltaLog.BloomHashes).map(i =>
+      pmod(xxhash64(col("k").cast("long"), lit(i.toLong)),
+        lit(mBits.head.toLong)))
+    val old = reread.filter(col("k").isNotNull)
+      .select(col("_metadata.file_name").as("file"),
+        explode(array(positions: _*)).as("pos"))
+      .groupBy(col("file"), (col("pos") / 64).cast("int").as("word"))
+      .agg(expr(
+        "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))")
+        .as("bits"))
+    val got = sidecar.select("file", "word", "bits")
+    assert(got.exceptAll(old).isEmpty && old.exceptAll(got).isEmpty,
+      "aggregate-built bloom rows diverge from the expression build")
+    assert(got.count() == old.count() && got.count() > 0)
+  }
 }

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.{ConditionalPutStore, LogStore, PosixLogStore,
-  Snapshots}
+import graft.sources.{ConditionalPutStore, DeltaLog, LogStore,
+  PosixLogStore, Snapshots}
 
 /** The commit-point seam: every CAS race shape the engine's protocol
   * rests on, green under BOTH stores — the POSIX hard-link CAS and
@@ -311,21 +311,27 @@ class LogStoreSpec extends SparkSuite {
     }
   }
 
-  test("Snapshots stats commit + torn-claim heal under conditional-put") {
+  test("Delta stats commit + Snapshots torn-claim heal under conditional-put") {
     LogStore.withStore(ConditionalPutStore) {
       val posixBefore = PosixLogStore.claimsAttempted.get
       val t = Files.createTempDirectory("lssnap").toString + "/t"
-      // slot + withheld-_SUCCESS publish, both via the store: the
-      // stats/bloom manifest must land BEFORE the marker exactly as
-      // under posix
-      val v = Snapshots.commitWithStats(
-        (1L to 100L).map(i => (i, s"s$i")).toDF("k", "s")
-          .repartitionByRange(4, col("k")),
-        t, Seq("k"))
-      assert(Snapshots.readPruned(spark, t, v, Seq(("k", 1L, 10L)))
-        .collect().map(_.getLong(0)).sorted.toSeq
-        .forall(k => k <= 100L))
-      assert(Snapshots.read(spark, t).count() == 100)
+      // a stats + bloom Delta commit publishes through the store's
+      // claim: the sidecar and add.stats are staged before the log
+      // entry lands, exactly as under posix, and prune on read
+      val df = (1L to 100L).map(i => (i, s"s$i")).toDF("k", "s")
+        .repartitionByRange(4, col("k"))
+      DeltaLog.createTable(t, df.schema, Seq.empty,
+        Map(DeltaLog.BloomColsProp -> "k"))
+      DeltaLog.commitOverwrite(df, t)
+      assert(DeltaLog.readWhereStats(spark, t, Seq(("k", 1L, 10L)))
+        .filter(col("k") <= 10L).count() == 10)
+      assert(DeltaLog.lastFilesScanned < 4,
+        s"stats committed under the store must prune: scanned " +
+          s"${DeltaLog.lastFilesScanned} of 4")
+      assert(DeltaLog.readWherePoint(spark, t, "k", Seq(42L))
+        .filter(col("k") === 42L).count() == 1)
+      assert(DeltaLog.lastFilesScanned < 4)
+      assert(DeltaLog.read(spark, t).count() == 100)
       // exactly-once commitIfAbsent + torn-claim heal: claim the slot
       // without completing it (a crashed writer), then the owning
       // retry must rewrite and publish through the store
@@ -340,7 +346,7 @@ class LogStoreSpec extends SparkSuite {
         "a replayed batch id is a no-op")
       assert(Snapshots.read(spark, t2).count() == 1)
       assert(PosixLogStore.claimsAttempted.get == posixBefore,
-        "no Snapshots claim may fall back to the posix primitives")
+        "no Delta or Snapshots claim may fall back to the posix primitives")
     }
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 /** The composed pipeline writes every layer, with the layouts the
   * scale design promises (bronze partitioned by source table, fact
-  * partitioned monthly). */
+  * clustered monthly in a Delta table). */
 class PipelineSpec extends SparkSuite {
 
   test("pipeline writes all layers with expected layouts and rows") {
@@ -32,32 +32,37 @@ class PipelineSpec extends SparkSuite {
     // layout contracts
     assert(new java.io.File(s"$out/bronze/events/_source_table=events")
       .isDirectory, "bronze not partitioned by source table")
-    // the fact is a stats-committed snapshot clustered on
-    // (month_key, l_orderkey): per-file month spans must be narrow
-    // (the range layout), and the in-DAG recent-revenue branch must
-    // have scanned a strict subset of its files through the manifest
+    // the fact is a Delta table clustered on (month_key, l_orderkey):
+    // per-file month spans in add.stats must be narrow (the range
+    // layout), and the in-DAG recent-revenue branch must have scanned
+    // a strict subset of its files through those stats
     val factDir = s"$out/warehouse/fact_order_lines"
-    val factV = sources.Snapshots.versions(factDir).last
-    val manifest = sources.Snapshots.statsManifest(spark, factDir, factV)
-    assert(manifest.count() > 1, "fact should land as multiple files")
+    val factState = sources.DeltaLog.replay(factDir,
+      sources.DeltaLog.versions(factDir).last)
+    assert(factState.adds.size > 1, "fact should land as multiple files")
+    // month_key is an INT column: its bounds ride add.stats as INT32
+    // footer stats, recorded for every file
+    val monthBounds = factState.adds.values.toSeq
+      .map(_.longBounds.get("month_key"))
+    assert(monthBounds.forall(_.isDefined),
+      "every fact file must record month_key bounds")
     // span comparisons stay in yyyymm KEY units (a year boundary is a
     // jump of ~89, not 1) — per-file spans vs the global key span
-    val spans = manifest.agg(
-      org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("max_month_key") -
-          org.apache.spark.sql.functions.col("min_month_key")),
-      org.apache.spark.sql.functions.max("max_month_key"),
-      org.apache.spark.sql.functions.min("min_month_key")).head()
-    val (fileSpan, globalSpan) =
-      (spans.getLong(0), spans.getLong(1) - spans.getLong(2))
+    val fileSpan = monthBounds.flatten.map(b => b._2 - b._1).max
+    val globalSpan =
+      monthBounds.flatten.map(_._2).max - monthBounds.flatten.map(_._1).min
     assert(fileSpan < globalSpan / 4,
       s"a fact file spans $fileSpan of $globalSpan key units — not clustered")
     val metrics0 = Pipeline.lastRunMetrics
     assert(metrics0("fact_files_scanned") < metrics0("fact_files_total"),
       s"recent branch scanned ${metrics0("fact_files_scanned")}/" +
         s"${metrics0("fact_files_total")} files — pruning did nothing")
+    // the fact commit's phases ride the per-layer metrics
+    assert(Seq("fact_commit_ms", "fact_sidecars_ms", "fact_footer_ms",
+      "fact_data_write_ms").forall(metrics0.contains),
+      s"fact commit phases missing from ${metrics0.keys.toSeq.sorted}")
     // the pruned rollup equals the same rollup over the FULL fact
-    val fullFact = sources.Snapshots.read(spark, factDir)
+    val fullFact = sources.DeltaLog.read(spark, factDir)
     val maxMonth = fullFact
       .agg(org.apache.spark.sql.functions.max("month_key")).head().getInt(0)
     // the window lower bound re-derived INDEPENDENTLY (java.time), so
@@ -94,21 +99,20 @@ class PipelineSpec extends SparkSuite {
     // the fact's l_orderkey bloom serves point lookups the month-major
     // layout cannot: a single order's lines read from a strict subset
     // of files, with exact parity against the full-table filter
-    val someOrder = sources.Snapshots.read(spark, factDir)
+    val someOrder = sources.DeltaLog.read(spark, factDir)
       .select("l_orderkey").head().getLong(0)
-    val (bloomKept, bloomTotal) = sources.Snapshots.pruneFilesPoint(
-      spark, factDir, factV, "l_orderkey", Seq(someOrder))
-    assert(bloomKept.size < bloomTotal,
-      s"order-key bloom pruned nothing: ${bloomKept.size}/$bloomTotal")
-    val viaBloom = sources.Snapshots.readPrunedPoint(
-        spark, factDir, factV, "l_orderkey", Seq(someOrder))
+    val viaBloom = sources.DeltaLog.readWherePoint(
+        spark, factDir, "l_orderkey", Seq(someOrder))
       .filter(org.apache.spark.sql.functions.col("l_orderkey") === someOrder)
-    val viaFull = sources.Snapshots.read(spark, factDir)
+    val bloomKept = sources.DeltaLog.lastFilesScanned
+    assert(bloomKept < factState.adds.size,
+      s"order-key bloom pruned nothing: $bloomKept/${factState.adds.size}")
+    val viaFull = sources.DeltaLog.read(spark, factDir)
       .filter(org.apache.spark.sql.functions.col("l_orderkey") === someOrder)
     assert(viaBloom.count() == viaFull.count() && viaFull.count() > 0)
 
     // referential sanity: every fact row's order exists in gold
-    val fact = sources.Snapshots.read(spark, factDir)
+    val fact = sources.DeltaLog.read(spark, factDir)
     val gold = sources.Snapshots.read(spark, s"$out/gold/orders_enriched")
     assert(fact.join(gold, fact("l_orderkey") === gold("o_orderkey"),
       "left_anti").count() == 0, "fact rows reference missing orders")

@@ -188,20 +188,20 @@ class PropertySpec extends SparkSuite {
     val sizes = Seq(0L, 1L, 2047L, 2048L, 2049L, 47000L, 1000000L,
       Long.MaxValue / 16)
     sizes.foreach { n =>
-      val m = graft.sources.Snapshots.bloomSizeFor(n)
-      assert(m >= graft.sources.Snapshots.BloomMinBits &&
-        m <= graft.sources.Snapshots.BloomMaxBits)
+      val m = graft.sources.DeltaLog.sidecarBloomBits(n)
+      assert(m >= graft.sources.DeltaLog.BloomMinBits &&
+        m <= graft.sources.DeltaLog.BloomMaxBits)
       assert(Integer.bitCount(m) == 1, s"m=$m not a power of two (n=$n)")
-      assert(m >= graft.sources.Snapshots.BloomMaxBits ||
-        m >= math.min(8L * n, graft.sources.Snapshots.BloomMaxBits.toLong),
+      assert(m >= graft.sources.DeltaLog.BloomMaxBits ||
+        m >= math.min(20L * n, graft.sources.DeltaLog.BloomMaxBits.toLong),
         s"m=$m undersized for n=$n")
     }
     val keyGen = Gen.chooseNum(Long.MinValue, Long.MaxValue)
     (1 to 500).foreach { i =>
       val k = keyGen.apply(Gen.Parameters.default, Seed(99L + i)).get
-      Seq(graft.sources.Snapshots.BloomMinBits, 1 << 19).foreach { m =>
-        val ps = graft.sources.Snapshots.bloomPositions(k, m)
-        assert(ps.size == graft.sources.Snapshots.BloomHashes)
+      Seq(graft.sources.DeltaLog.BloomMinBits, 1 << 19).foreach { m =>
+        val ps = graft.sources.DeltaLog.bloomPositions(k, m)
+        assert(ps.size == graft.sources.DeltaLog.BloomHashes)
         assert(ps.forall(p => p >= 0 && p < m), s"position out of range: $ps")
       }
     }

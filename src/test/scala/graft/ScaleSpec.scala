@@ -136,18 +136,22 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("stats-manifest pruning collects O(files) rows, never data") {
-    val (table, v) = ops.Scale.zorderStatsSnapshot(spark, sfDir)
-    sources.Snapshots.readPruned(spark, table, v,
+    // the skipping decision reads the replayed log's add.stats — one
+    // entry per data file, driver-side metadata with NO Spark job and
+    // no collect: the input to the decision is exactly one stats
+    // record per file, and that must scale with files, not data
+    val table = ops.Scale.zorderStatsSnapshot(spark, sfDir)
+    sources.DeltaLog.readWhereStats(spark, table,
       Seq(("o_custkey", 0L, 50L))).count()
-    val manifestRows = sources.Snapshots.statsManifest(spark, table, v)
-      .count()
-    assert(sources.Snapshots.lastStatsRowsCollected == manifestRows,
-      "the skipping decision must collect exactly the manifest rows")
+    val st = sources.DeltaLog.replay(table,
+      sources.DeltaLog.versions(table).last)
+    assert(st.adds.values.forall(_.longBounds.contains("o_custkey")),
+      "every file must carry the bounds the decision reads")
+    assert(sources.DeltaLog.lastFilesScanned <= st.adds.size)
     val dataRows = Tables.load(spark, sfDir, "orders").count()
-    assert(sources.Snapshots.lastStatsRowsCollected * 10 < dataRows,
-      s"collected ${sources.Snapshots.lastStatsRowsCollected} manifest " +
-        s"rows vs $dataRows data rows — the driver collect must scale " +
-        "with files, not data")
+    assert(st.adds.size * 10 < dataRows,
+      s"decided over ${st.adds.size} stats records vs $dataRows data " +
+        "rows — the decision must scale with files, not data")
   }
 
   test("q110 layout: bucket count derives from data size, builder cached") {
@@ -231,46 +235,49 @@ class ScaleSpec extends SparkSuite {
 
   test("stats manifest prunes a 2-D range query to a small file fraction (q104)") {
     // the payoff step of the z-order layout: commit 16 z-range files
-    // with a per-file (o_custkey, day_no) min/max manifest, then ask
-    // Snapshots which files a 2-D box can touch. On a 16-file layout
-    // (4 curve bits = a 4x4 grid over the normalized plane) the q104
-    // box (~7% of customers x ~21% of days) must scan well under half
-    // the files — the part a correct-but-useless manifest would fail —
-    // while the pruned+filtered rows stay EQUAL to the unpruned filter.
+    // to a Delta table whose add.stats carry per-file (o_custkey,
+    // day_no) min/max, then ask which files a 2-D box can touch. On a
+    // 16-file layout (4 curve bits = a 4x4 grid over the normalized
+    // plane) the q104 box (~7% of customers x ~21% of days) must scan
+    // well under half the files — the part correct-but-useless stats
+    // would fail — while the pruned+filtered rows stay EQUAL to the
+    // unpruned filter.
     val base = java.nio.file.Files.createTempDirectory("prunedscan").toString
     val table = s"$base/orders_z"
     val z = Scale.zOrderedOrders(spark, sfDir)
       .repartitionByRange(16, col("z_value"))
       .sortWithinPartitions("z_value")
-    val v = graft.sources.Snapshots.commitWithStats(
-      z, table, Seq("o_custkey", "day_no"))
+    sources.DeltaLog.commitOverwrite(z, table)
+    val st = sources.DeltaLog.replay(table,
+      sources.DeltaLog.versions(table).last)
+    val total = st.adds.size
+    def kept(ranges: Seq[(String, Long, Long)]): Int =
+      sources.DeltaLog.statsPruned(st, ranges).adds.size
     val ranges = Seq(
       ("o_custkey", Scale.PruneCustLo, Scale.PruneCustHi),
       ("day_no", Scale.PruneDayLo, Scale.PruneDayHi))
-    val (kept, total) = graft.sources.Snapshots.pruneFiles(
-      spark, table, v, ranges)
-    info(s"pruned 2-D box scan: ${kept.size} of $total files")
-    assert(total == 16, s"expected 16 data files, manifest saw $total")
-    assert(kept.nonEmpty, "the box matches rows; pruning must keep files")
-    assert(kept.size <= total / 3,
-      s"z-layout + stats should prune hard: kept ${kept.size}/$total")
+    val boxKept = kept(ranges)
+    info(s"pruned 2-D box scan: $boxKept of $total files")
+    assert(total == 16, s"expected 16 data files, the log holds $total")
+    assert(boxKept > 0, "the box matches rows; pruning must keep files")
+    assert(boxKept <= total / 3,
+      s"z-layout + stats should prune hard: kept $boxKept/$total")
 
     val predicate = col("o_custkey").between(Scale.PruneCustLo, Scale.PruneCustHi) &&
       col("day_no").between(Scale.PruneDayLo, Scale.PruneDayHi)
-    val pruned = graft.sources.Snapshots.readPruned(spark, table, v, ranges)
+    val pruned = sources.DeltaLog.readWhereStats(spark, table, ranges)
       .filter(predicate)
-    val full = graft.sources.Snapshots.read(spark, table).filter(predicate)
+    assert(sources.DeltaLog.lastFilesScanned == boxKept)
+    val full = sources.DeltaLog.read(spark, table).filter(predicate)
     assert(pruned.count() == full.count() && full.count() > 0)
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
 
     // single-dimension boxes prune too (the both-dims-at-once promise):
     // each one-sided range must still skip files
-    val (cOnly, _) = graft.sources.Snapshots.pruneFiles(spark, table, v,
-      Seq(("o_custkey", Scale.PruneCustLo, Scale.PruneCustHi)))
-    val (dOnly, _) = graft.sources.Snapshots.pruneFiles(spark, table, v,
-      Seq(("day_no", Scale.PruneDayLo, Scale.PruneDayHi)))
-    assert(cOnly.size < total && dOnly.size < total,
-      s"each single dim must prune: cust ${cOnly.size}, day ${dOnly.size}")
+    val cOnly = kept(Seq(("o_custkey", Scale.PruneCustLo, Scale.PruneCustHi)))
+    val dOnly = kept(Seq(("day_no", Scale.PruneDayLo, Scale.PruneDayHi)))
+    assert(cOnly < total && dOnly < total,
+      s"each single dim must prune: cust $cOnly, day $dOnly")
   }
 
   test("per-file blooms prune point lookups the min/max manifest cannot") {
@@ -283,97 +290,101 @@ class ScaleSpec extends SparkSuite {
     val o = Tables.load(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey")
       .repartition(16, col("o_custkey")) // scatters orderkeys everywhere
-    val v = graft.sources.Snapshots.commitWithStats(
-      o, table, Seq("o_orderkey"), Seq("o_orderkey"))
+    sources.DeltaLog.createTable(table, o.schema, Seq.empty,
+      Map(sources.DeltaLog.BloomColsProp -> "o_orderkey"))
+    sources.DeltaLog.commitOverwrite(o, table)
 
     // writer/reader hash agreement: the driver-side probe positions
     // must replicate the engine's xxhash64 fold bit-for-bit, at BOTH
     // the floor geometry and a data-scaled one
-    import spark.implicits._
     val keys = Seq(1L, 77L, 424242L, Long.MaxValue, -5L)
-    for (m <- Seq(graft.sources.Snapshots.BloomMinBits, 1 << 19)) {
+    for (m <- Seq(sources.DeltaLog.BloomMinBits, 1 << 19)) {
       val engine = keys.toDF("k").select(
-        (0 until graft.sources.Snapshots.BloomHashes).map(i =>
+        (0 until sources.DeltaLog.BloomHashes).map(i =>
           pmod(xxhash64(col("k"), lit(i.toLong)),
             lit(m.toLong)).as(s"p$i")): _*)
-        .collect().map(r => (0 until graft.sources.Snapshots.BloomHashes)
+        .collect().map(r => (0 until sources.DeltaLog.BloomHashes)
           .map(r.getLong(_).toInt))
       keys.zip(engine).foreach { case (k, want) =>
-        assert(graft.sources.Snapshots.bloomPositions(k, m) == want,
+        assert(sources.DeltaLog.bloomPositions(k, m) == want,
           s"driver bloom positions diverge from xxhash64 for key $k, m=$m")
       }
     }
-    // the size rule: floor for small files, ~8 bits/row beyond it,
-    // clamped at the 2 MiB ceiling — 47k-row files (the 10x bench
-    // shape that saturated a fixed 16k-bit filter) get 2^19 bits
-    assert(graft.sources.Snapshots.bloomSizeFor(100) ==
-      graft.sources.Snapshots.BloomMinBits)
-    assert(graft.sources.Snapshots.bloomSizeFor(47000) == (1 << 19))
-    assert(graft.sources.Snapshots.bloomSizeFor(Long.MaxValue / 16) ==
-      graft.sources.Snapshots.BloomMaxBits)
+    // the size rule: floor for small files, ~20 bits/row beyond it,
+    // clamped at the ceiling — 47k-row files (the 10x bench shape
+    // that saturated a fixed 16k-bit filter) get 2^20 bits
+    assert(sources.DeltaLog.sidecarBloomBits(100) ==
+      sources.DeltaLog.BloomMinBits)
+    assert(sources.DeltaLog.sidecarBloomBits(47000) == (1 << 20))
+    assert(sources.DeltaLog.sidecarBloomBits(Long.MaxValue / 16) ==
+      sources.DeltaLog.BloomMaxBits)
 
     // present keys CHOSEN FAR APART (first/middle/last of the domain):
-    // their min..max range spans ~everything, so the min/max manifest
-    // keeps ~all files while the bloom still skips most
+    // their min..max range spans ~everything, so min/max stats keep
+    // ~all files while the bloom still skips most
     val allKeys = o.select("o_orderkey").distinct()
       .orderBy("o_orderkey").collect().map(_.getLong(0))
     val probe = Seq(allKeys.head, allKeys(allKeys.length / 2), allKeys.last)
-    val (kept, total) = graft.sources.Snapshots.pruneFilesPoint(
-      spark, table, v, "o_orderkey", probe)
-    info(s"bloom point probe kept ${kept.size} of $total files")
-    assert(total == 16)
-    // the round-7 scale flag: the probe must collect O(files × probe
-    // positions) tiny rows, never full per-file blooms. Upper bound =
-    // one row per (file, needed word); needed words ≤ |values| ×
-    // BloomHashes. A full-bloom collect would be ≥ BloomMinBits/64
-    // words per file — orders of magnitude over this bound.
-    val probeBound =
-      total.toLong * probe.size * graft.sources.Snapshots.BloomHashes
-    assert(graft.sources.Snapshots.lastBloomRowsCollected <= probeBound,
-      s"driver collected ${graft.sources.Snapshots.lastBloomRowsCollected} " +
-        s"bloom rows; bound is $probeBound (files × probes) — the " +
-        "collect is scaling with bloom size, not probe count")
-    assert(probeBound <
-      total.toLong * graft.sources.Snapshots.BloomMinBits / 64,
-      "bound sanity: probe bound must sit far under a full-bloom collect")
-    assert(kept.size < total / 2,
-      s"bloom should skip most hash-scattered files: ${kept.size}/$total")
-    val lo = probe.min; val hi = probe.max
-    val (rangeKept, _) = graft.sources.Snapshots.pruneFiles(
-      spark, table, v, Seq(("o_orderkey", lo, hi)))
-    assert(rangeKept.size > kept.size,
-      s"min/max (${rangeKept.size}) should be useless next to the " +
-        s"bloom (${kept.size}) on this layout")
-    val pruned = graft.sources.Snapshots.readPrunedPoint(
-        spark, table, v, "o_orderkey", probe)
+    val pruned = sources.DeltaLog.readWherePoint(
+        spark, table, "o_orderkey", probe)
       .filter(col("o_orderkey").isin(probe: _*))
-    val full = graft.sources.Snapshots.read(spark, table)
+    val kept = sources.DeltaLog.lastFilesScanned
+    val st = sources.DeltaLog.replay(table,
+      sources.DeltaLog.versions(table).last)
+    val total = st.adds.size
+    info(s"bloom point probe kept $kept of $total files")
+    assert(total == 16)
+    // the round-7 scale flag: the probe must collect O(files) tiny
+    // rows, never full per-file blooms. Upper bound = one (file,
+    // m_bits) row per bloomed file and geometry plus one row per hit
+    // file. A full-bloom collect would be ≥ BloomMinBits/64 words per
+    // file — orders of magnitude over this bound.
+    val geoms = sources.DeltaLog.bloomManifest(spark, table).get
+      .filter(col("colname") === "o_orderkey")
+      .select("m_bits").distinct().count()
+    val probeBound = total.toLong * geoms + total
+    assert(sources.DeltaLog.lastBloomRowsCollected >= 0 &&
+      sources.DeltaLog.lastBloomRowsCollected <= probeBound,
+      s"driver collected ${sources.DeltaLog.lastBloomRowsCollected} " +
+        s"bloom rows; bound is $probeBound (files × geometries + " +
+        "files) — the collect is scaling with bloom size, not files")
+    assert(probeBound <
+      total.toLong * sources.DeltaLog.BloomMinBits / 64,
+      "bound sanity: probe bound must sit far under a full-bloom collect")
+    assert(kept < total / 2,
+      s"bloom should skip most hash-scattered files: $kept/$total")
+    val lo = probe.min; val hi = probe.max
+    val rangeKept = sources.DeltaLog.statsPruned(st,
+      Seq(("o_orderkey", lo, hi))).adds.size
+    assert(rangeKept > kept,
+      s"min/max ($rangeKept) should be useless next to the " +
+        s"bloom ($kept) on this layout")
+    val full = sources.DeltaLog.read(spark, table)
       .filter(col("o_orderkey").isin(probe: _*))
     assert(pruned.count() == full.count() && full.count() > 0)
     assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
 
     // absent key: nothing (or almost nothing — FPR) survives, and the
     // read returns empty rows, not an error
-    val (ghost, _) = graft.sources.Snapshots.pruneFilesPoint(
-      spark, table, v, "o_orderkey", Seq(-987654321L))
-    assert(ghost.size <= 1, s"ghost key kept ${ghost.size} files")
-    assert(graft.sources.Snapshots.readPrunedPoint(
-        spark, table, v, "o_orderkey", Seq(-987654321L))
+    assert(sources.DeltaLog.readWherePoint(
+        spark, table, "o_orderkey", Seq(-987654321L))
       .filter(col("o_orderkey") === -987654321L).count() == 0)
+    assert(sources.DeltaLog.lastFilesScanned <= 1,
+      s"ghost key kept ${sources.DeltaLog.lastFilesScanned} files")
 
-    // a version committed WITHOUT blooms refuses point pruning loudly
-    val v2 = graft.sources.Snapshots.commitWithStats(
-      o, table, Seq("o_orderkey"))
+    // a table that does not bloom the column refuses point pruning
+    // loudly
+    val plain = s"$base/orders_plain"
+    sources.DeltaLog.commitOverwrite(o, plain)
     val e = intercept[IllegalArgumentException] {
-      graft.sources.Snapshots.pruneFilesPoint(
-        spark, table, v2, "o_orderkey", probe)
+      sources.DeltaLog.readWherePoint(spark, plain, "o_orderkey", probe)
     }
     assert(e.getMessage.contains("bloom"))
   }
 
   test("q104's snapshot builder is session-cached and mtime-evicted") {
     // the compaction write is paid once per session (the q111→q112
-    // discipline): a second call returns the SAME committed snapshot,
+    // discipline): a second call returns the SAME committed table,
     // and rewriting the source table evicts it (old temp dir deleted)
     val src = java.nio.file.Files.createTempDirectory("zcache").toString
     Tables.load(spark, sfDir, "orders").write
@@ -381,7 +392,7 @@ class ScaleSpec extends SparkSuite {
     val a = Scale.zorderStatsSnapshot(spark, src)
     val b = Scale.zorderStatsSnapshot(spark, src)
     assert(a == b, "second call must reuse the cached snapshot")
-    assert(new java.io.File(a._1).isDirectory)
+    assert(new java.io.File(a).isDirectory)
     // q104's measured body reproduces the full filter from the cache
     val q = Scale.zorderPrunedScan(spark, src)
     assert(q.count() > 0)
@@ -394,8 +405,8 @@ class ScaleSpec extends SparkSuite {
       .filter(_.getName.endsWith(".parquet")).head
     assert(part.setLastModified(part.lastModified + 10000))
     val c = Scale.zorderStatsSnapshot(spark, src)
-    assert(c._1 != a._1, "superseded snapshot must not be served")
-    assert(!new java.io.File(a._1).exists,
+    assert(c != a, "superseded snapshot must not be served")
+    assert(!new java.io.File(a).exists,
       "evicted snapshot's temp dir must be reclaimed")
   }
 
@@ -405,7 +416,7 @@ class ScaleSpec extends SparkSuite {
     val base = java.nio.file.Files.createTempDirectory("nullstats").toString
     val table = s"$base/t"
     // two single-partition halves → two files: one with k=1..10, one
-    // all-null; the all-null file has null min/max and must survive
+    // all-null; the all-null file records no k bounds and must survive
     // every box, because "no stats" can never prove "no match".
     // (Built at the RDD level: a DataFrame coalesce(1)-union would be
     // collapsed back to one partition by the optimizer.)
@@ -415,102 +426,113 @@ class ScaleSpec extends SparkSuite {
       .parallelize((1L to 10L).map(k => Row(k, s"v$k")), 1)
       .union(spark.sparkContext.parallelize(
         Seq(Row(null, "n1"), Row(null, "n2")), 1))
-    val v = graft.sources.Snapshots.commitWithStats(
-      spark.createDataFrame(rdd, schema), table, Seq("k"))
-    val (far, total) = graft.sources.Snapshots.pruneFiles(
-      spark, table, v, Seq(("k", 100L, 200L)))
-    assert(total == 2 && far.size == 1,
-      s"box misses the valued file but must keep the null-stats file: $far")
+    sources.DeltaLog.commitOverwrite(spark.createDataFrame(rdd, schema), table)
+    val st = sources.DeltaLog.replay(table,
+      sources.DeltaLog.versions(table).last)
+    val far = sources.DeltaLog.statsPruned(st, Seq(("k", 100L, 200L)))
+    assert(st.adds.size == 2 && far.adds.size == 1,
+      s"box misses the valued file but must keep the null-stats file: " +
+        s"${far.files}")
     // the superset then filters to empty — correct, just unprunable
-    val rows = graft.sources.Snapshots.readPruned(spark, table, v,
+    val rows = sources.DeltaLog.readWhereStats(spark, table,
       Seq(("k", 100L, 200L))).filter(col("k").between(100, 200))
     assert(rows.count() == 0)
     // a box over the data keeps both files (valued + unprunable null)
-    val (hit, _) = graft.sources.Snapshots.pruneFiles(
-      spark, table, v, Seq(("k", 5L, 6L)))
-    assert(hit.size == 2)
+    assert(sources.DeltaLog.statsPruned(st, Seq(("k", 5L, 6L)))
+      .adds.size == 2)
   }
 
   test("stats pruning is exact under random layouts and boxes (property)") {
-    import spark.implicits._
     val rnd = new scala.util.Random(97)
     val base = java.nio.file.Files.createTempDirectory("pruneprop").toString
     (1 to 2).foreach { trial =>
       val table = s"$base/t$trial"
       val data = (1 to 200).map(_ =>
         (rnd.nextInt(1000).toLong, rnd.nextInt(100).toLong))
-      val v = graft.sources.Snapshots.commitWithStats(
-        data.toDF("k", "w").repartitionByRange(8, col("k")),
-        table, Seq("k", "w"))
+      sources.DeltaLog.commitOverwrite(
+        data.toDF("k", "w").repartitionByRange(8, col("k")), table)
       (1 to 4).foreach { _ =>
         val lo = rnd.nextInt(1000).toLong; val hi = lo + rnd.nextInt(300)
         val wlo = rnd.nextInt(100).toLong; val whi = wlo + rnd.nextInt(40)
         val ranges = Seq(("k", lo, hi), ("w", wlo, whi))
         val pred = col("k").between(lo, hi) && col("w").between(wlo, whi)
-        val pruned = graft.sources.Snapshots
-          .readPruned(spark, table, v, ranges).filter(pred)
-        val full = graft.sources.Snapshots
-          .readVersion(spark, table, v).filter(pred)
+        val pruned = sources.DeltaLog
+          .readWhereStats(spark, table, ranges).filter(pred)
+        val full = sources.DeltaLog.read(spark, table).filter(pred)
         assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty,
           s"pruning changed the result for k∈[$lo,$hi], w∈[$wlo,$whi]")
       }
     }
   }
 
+  /** Run `body` with [[sources.DeltaLog.commitClaimHook]] crashing the
+    * first claim on `table` after `atClaim` inspected the staged
+    * commit; the hook is restored afterwards. */
+  private def crashingClaim(table: String)(atClaim: => Unit)
+      (body: => Unit): Unit = {
+    sources.DeltaLog.commitClaimHook = (dir, _) =>
+      if (dir == table) {
+        sources.DeltaLog.commitClaimHook = (_, _) => ()
+        atClaim
+        throw new RuntimeException("planted crash before publish")
+      }
+    try {
+      val e = intercept[RuntimeException](body)
+      assert(e.getMessage.contains("planted crash"))
+    } finally sources.DeltaLog.commitClaimHook = (_, _) => ()
+  }
+
   test("a writer crashing before publish leaves no reader-visible version") {
-    import spark.implicits._
     val table = java.nio.file.Files.createTempDirectory("crashstats")
       .toString + "/t"
-    graft.sources.Snapshots.onStatsBeforePublish = () => {
-      // data + stats are fully staged at this point, yet no reader
-      // primitive may see the version
-      assert(graft.sources.Snapshots.versions(table).isEmpty,
-        "version visible before _SUCCESS")
-      throw new RuntimeException("planted crash before publish")
+    val df = (1L to 10L).map(k => (k, k * 2)).toDF("k", "w")
+    sources.DeltaLog.createTable(table, df.schema, Seq.empty,
+      Map(sources.DeltaLog.BloomColsProp -> "k"))
+    crashingClaim(table) {
+      // data, add.stats and the bloom sidecar are fully staged at the
+      // claim, yet no reader primitive may see the version
+      assert(new java.io.File(table, sources.DeltaLog.BloomSidecarDir)
+        .list().nonEmpty, "bloom sidecar not staged before the claim")
+      assert(sources.DeltaLog.versions(table) == Seq(0L),
+        "version visible before the log claim")
+    } {
+      sources.DeltaLog.commitOverwrite(df, table)
     }
-    try {
-      val e = intercept[RuntimeException] {
-        graft.sources.Snapshots.commitWithStats(
-          (1L to 10L).map(k => (k, k * 2)).toDF("k", "w"), table, Seq("k"))
-      }
-      assert(e.getMessage.contains("planted crash"))
-      assert(graft.sources.Snapshots.versions(table).isEmpty)
-    } finally graft.sources.Snapshots.onStatsBeforePublish = () => ()
+    assert(sources.DeltaLog.versions(table) == Seq(0L))
+    assert(sources.DeltaLog.read(spark, table).count() == 0)
     // a later clean commit claims the NEXT slot and is fully readable
-    val v = graft.sources.Snapshots.commitWithStats(
-      (1L to 10L).map(k => (k, k * 2)).toDF("k", "w"), table, Seq("k"))
-    assert(graft.sources.Snapshots.versions(table) == Seq(v))
-    assert(graft.sources.Snapshots.read(spark, table).count() == 10)
+    sources.DeltaLog.commitOverwrite(df, table)
+    assert(sources.DeltaLog.versions(table) == Seq(0L, 1L))
+    assert(sources.DeltaLog.read(spark, table).count() == 10)
   }
 
   test("a writer crashing between data job and stats job is also invisible") {
-    // the EARLIER window: Spark's parquet job normally drops _SUCCESS
-    // at its own commit, so deleting it afterwards would leave a
-    // moment (or, on a crash, a permanent state) where the version
-    // looked committed with no stats manifest. commitWithStats
-    // suppresses the job marker instead; this spec crashes in exactly
-    // that window and proves no reader primitive sees the version.
-    import spark.implicits._
+    // Delta publishes at exactly one point — the log claim — so a
+    // writer dying anywhere after its data job (before, during or
+    // after the footer-stats job) leaves only orphan part files. This
+    // spec crashes with the data on disk and proves no reader, and no
+    // LATER commit, ever serves those orphans.
     val table = java.nio.file.Files.createTempDirectory("crashdata")
       .toString + "/t"
-    graft.sources.Snapshots.onDataBeforeStats = () => {
-      assert(graft.sources.Snapshots.versions(table).isEmpty,
-        "version visible after the data job, before stats")
-      throw new RuntimeException("planted crash before stats")
+    def dataDirs = Option(new java.io.File(table).listFiles())
+      .getOrElse(Array.empty).count(_.getName.startsWith("part-"))
+    crashingClaim(table) {
+      assert(dataDirs == 1, "the data job should have landed its files")
+      assert(sources.DeltaLog.versions(table).isEmpty,
+        "version visible after the data job, before the claim")
+    } {
+      sources.DeltaLog.commitOverwrite(
+        (1L to 10L).map(k => (k, k * 2)).toDF("k", "w"), table)
     }
-    try {
-      val e = intercept[RuntimeException] {
-        graft.sources.Snapshots.commitWithStats(
-          (1L to 10L).map(k => (k, k * 2)).toDF("k", "w"), table, Seq("k"))
-      }
-      assert(e.getMessage.contains("planted crash"))
-      assert(graft.sources.Snapshots.versions(table).isEmpty)
-    } finally graft.sources.Snapshots.onDataBeforeStats = () => ()
-    // recovery: the next clean commit works and readPruned serves it
-    val v = graft.sources.Snapshots.commitWithStats(
-      (1L to 10L).map(k => (k, k * 2)).toDF("k", "w"), table, Seq("k"))
-    assert(graft.sources.Snapshots
-      .readPruned(spark, table, v, Seq(("k", 3L, 5L))).count() > 0)
+    assert(sources.DeltaLog.versions(table).isEmpty)
+    // recovery: the next clean commit works, readWhereStats serves it,
+    // and the crashed writer's orphan files stay out of every read
+    sources.DeltaLog.commitOverwrite(
+      (1L to 10L).map(k => (k, k * 2)).toDF("k", "w"), table)
+    assert(dataDirs == 2)
+    assert(sources.DeltaLog.read(spark, table).count() == 10)
+    assert(sources.DeltaLog.readWhereStats(spark, table,
+      Seq(("k", 3L, 5L))).count() > 0)
   }
 
   test("q133 OPTIMIZE: packs files, restores clustering, refreshes stats") {
@@ -519,34 +541,33 @@ class ScaleSpec extends SparkSuite {
     // file-count collapse: 64 fragments -> a handful of packed files
     assert(nFrag == 64 && nOpt < nFrag / 4,
       s"OPTIMIZE left $nOpt of $nFrag files")
-    // fresh stats: the optimized manifest exists, covers every packed
-    // file, and its per-file key spans are NARROW — the re-clustering
-    // payoff. The fragmented version's hash-scattered files each span
-    // ~the whole key domain; the packed files must not.
-    val mOpt = graft.sources.Snapshots.statsManifest(spark, table, vOpt)
-      .collect()
-    assert(mOpt.length == nOpt, "stats manifest must cover every file")
-    val mFrag = graft.sources.Snapshots.statsManifest(spark, table, vFrag)
-      .collect()
-    def span(r: org.apache.spark.sql.Row) =
-      r.getAs[Long]("max_o_orderkey") - r.getAs[Long]("min_o_orderkey")
-    val globalSpan = mFrag.map(_.getAs[Long]("max_o_orderkey")).max -
-      mFrag.map(_.getAs[Long]("min_o_orderkey")).min
-    assert(mOpt.map(span).max <= globalSpan / 2,
+    // fresh stats: every packed file's add carries o_orderkey bounds,
+    // and its key span is NARROW — the re-clustering payoff. The
+    // fragmented version's hash-scattered files each span ~the whole
+    // key domain; the packed files must not.
+    def bounds(v: Long) = sources.DeltaLog.replay(table, v).adds.values
+      .toSeq.flatMap(_.longBounds.get("o_orderkey"))
+    val opt = bounds(vOpt)
+    assert(opt.size == nOpt, "add.stats must cover every packed file")
+    val frag = bounds(vFrag)
+    def span(b: (Long, Long)) = b._2 - b._1
+    val globalSpan = frag.map(_._2).max - frag.map(_._1).min
+    assert(opt.map(span).max <= globalSpan / 2,
       "packed files must carry narrow key spans (clustering restored)")
-    assert(mFrag.map(span).min > globalSpan / 2,
+    assert(frag.map(span).min > globalSpan / 2,
       "precondition: fragmented files were hash-scattered (wide spans)")
     // bloom refreshed: a point probe against the OPTIMIZED version
     // prunes to ~one file
-    val keys = Seq(graft.sources.Snapshots.read(spark, table)
-      .agg(org.apache.spark.sql.functions.min("o_orderkey")).head.getLong(0))
-    val (kept, total) = graft.sources.Snapshots.pruneFilesPoint(
-      spark, table, vOpt, "o_orderkey", keys)
-    assert(total == nOpt && kept.size <= 2,
-      s"fresh bloom should prune the point probe: kept ${kept.size}/$total")
+    val key = sources.DeltaLog.read(spark, table)
+      .agg(org.apache.spark.sql.functions.min("o_orderkey")).head.getLong(0)
+    assert(sources.DeltaLog.readWherePoint(spark, table, "o_orderkey",
+      Seq(key)).filter(col("o_orderkey") === key).count() == 1)
+    assert(sources.DeltaLog.lastFilesScanned <= 2,
+      s"fresh bloom should prune the point probe: kept " +
+        s"${sources.DeltaLog.lastFilesScanned}/$nOpt")
     // reader pinning: the fragmented version is untouched and equal
-    val a = graft.sources.Snapshots.readVersion(spark, table, vFrag)
-    val b = graft.sources.Snapshots.readVersion(spark, table, vOpt)
+    val a = sources.DeltaLog.readVersion(spark, table, vFrag)
+    val b = sources.DeltaLog.readVersion(spark, table, vOpt)
     assert(a.count() == b.count())
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }

@@ -216,56 +216,6 @@ class SnapshotsSpec extends SparkSuite {
       3 -> (("c", Some(30), "insert"))))
   }
 
-  test("schema evolution: absent stats columns never prune (superset)") {
-    import org.apache.spark.sql.functions.col
-    val t = table()
-    // v0 committed with stats on k only — column x does not exist yet
-    val v0 = Snapshots.commitWithStats(
-      (1L to 100L).map(k => (k, s"v$k")).toDF("k", "s")
-        .repartitionByRange(4, col("k")), t, Seq("k"))
-    // a range over the FUTURE column x must keep every file of v0:
-    // no stats can never prove no match (and must not throw)
-    val (keptX, totalX) = Snapshots.pruneFiles(
-      spark, t, v0, Seq(("x", 0L, 10L)))
-    assert(totalX == 4 && keptX.size == 4,
-      s"absent-column range pruned ${totalX - keptX.size} files")
-    // mixed box: the k half still prunes, the x half is ignored
-    val (keptMix, _) = Snapshots.pruneFiles(
-      spark, t, v0, Seq(("k", 1L, 10L), ("x", 0L, 10L)))
-    assert(keptMix.size < 4 && keptMix.nonEmpty)
-    // v1 adds x WITH stats: pruning on x works from this version on
-    val v1 = Snapshots.commitWithStats(
-      (1L to 100L).map(k => (k, s"v$k", k * 10))
-        .toDF("k", "s", "x").repartitionByRange(4, col("x")),
-      t, Seq("k", "x"))
-    val (keptV1, totalV1) = Snapshots.pruneFiles(
-      spark, t, v1, Seq(("x", 10L, 100L)))
-    assert(totalV1 == 4 && keptV1.size < 4)
-    // and the evolved read-back is complete under the merged contract
-    assert(Snapshots.readPruned(spark, t, v0, Seq(("x", 0L, 10L)))
-      .count() == 100)
-  }
-
-  test("footerStats on an unlistable/empty dir is None, never Some(empty)") {
-    // an empty java.io listing means the lister couldn't enumerate the
-    // dir (URI scheme, remote path, IO error) — Some(Seq.empty) here
-    // would publish an EMPTY stats manifest and prune every file of a
-    // version that has data. None triggers the scan fallback instead.
-    val empty = Files.createTempDirectory("snap_nofiles").toString
-    assert(Snapshots.footerStats(spark, empty, Seq("k")).isEmpty)
-    assert(Snapshots.footerStats(
-      spark, s"$empty/never_created", Seq("k")).isEmpty)
-    // and a real commit still publishes a usable, non-empty manifest
-    // that prunes — the end-to-end contract the fix protects
-    val t = table()
-    val v = Snapshots.commitWithStats(
-      (1L to 100L).map(k => (k, s"v$k")).toDF("k", "s")
-        .repartitionByRange(4, org.apache.spark.sql.functions.col("k")),
-      t, Seq("k"))
-    val (kept, total) = Snapshots.pruneFiles(spark, t, v, Seq(("k", 1L, 10L)))
-    assert(total == 4 && kept.nonEmpty && kept.size < 4)
-  }
-
   test("a reader pinned to a version is isolated from later commits") {
     val t = table()
     Snapshots.commit(Seq((1, "old")).toDF("k", "s"), t)
@@ -275,37 +225,4 @@ class SnapshotsSpec extends SparkSuite {
     assert(pinned.collect().head.getString(1) == "old")
   }
 
-  test("BloomWords-built bloom manifest equals the expression-built rows") {
-    // round 18: writeBloomManifest switched from
-    // explode(positions)+groupBy(file, word) to the BloomWords
-    // bitmap aggregate — the manifest rows must be BIT-IDENTICAL
-    // (same (file, word) set, same bits, same geometry), else readers
-    // would probe a different filter than the writer built
-    import org.apache.spark.sql.functions._
-    val t = table()
-    val df = (1L to 5000L).map(k => (k * 7919L % 100000L, s"p$k"))
-      .toDF("k", "s").repartition(4, col("k"))
-    val v = Snapshots.commitWithStats(df, t, Seq("k"), Seq("k"))
-    val dir = new java.io.File(t, s"v=$v")
-    val manifest = spark.read.parquet(
-      new java.io.File(dir, Snapshots.BloomDir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toIndexedSeq: _*)
-    val mBits = manifest.select("m_bits").head().getInt(0)
-    // rebuild with the ORIGINAL expression-only plan
-    val reread = spark.read.parquet(s"$dir")
-    val positions = (0 until Snapshots.BloomHashes).map(i =>
-      pmod(xxhash64(col("k").cast("long"), lit(i.toLong)),
-        lit(mBits.toLong)))
-    val old = reread.filter(col("k").isNotNull)
-      .select(regexp_extract(input_file_name(), "[^/]+$", 0).as("file"),
-        explode(array(positions: _*)).as("pos"))
-      .groupBy(col("file"), (col("pos") / 64).cast("int").as("word"))
-      .agg(expr(
-        "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))")
-        .as("bits"))
-    val got = manifest.select("file", "word", "bits")
-    assert(got.exceptAll(old).isEmpty && old.exceptAll(got).isEmpty,
-      "aggregate-built bloom rows diverge from the expression build")
-    assert(got.count() == old.count() && got.count() > 0)
-  }
 }
