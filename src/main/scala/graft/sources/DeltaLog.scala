@@ -16,8 +16,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType,
 /** Minimal reader/writer for the OPEN Delta Lake transaction-log
   * format (the public protocol: a `_delta_log/` directory of
   * zero-padded `<version>.json` commit files, each line one action —
-  * `protocol`, `metaData`, `add`, `remove`, `commitInfo`), plus an
-  * export from [[Snapshots]] tables into that layout.
+  * `protocol`, `metaData`, `add`, `remove`, `commitInfo`).
   *
   * The reference pipeline is a *Delta* lakehouse (reference:
   * spark/batch_silver.py:152-164 writes silver as Delta;
@@ -643,31 +642,28 @@ object DeltaLog {
     * changes the table for downstream consumers. Returns the new
     * version. */
   def restore(tableDir: String, version: Long): Long = {
-    val vs = versions(tableDir)
-    require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
-    val cur = replay(tableDir, vs.last)
     val tgt = replay(tableDir, version)
-    require(cur.schema == tgt.schema && cur.columnMapping == tgt.columnMapping,
-      "RESTORE across a schema/mapping change is out of scope — " +
-        "restore the metadata evolution first")
-    // act on every path whose ADD ENTRY differs — not just presence:
-    // a deletion-vector delete is remove+add of the SAME path, so a
-    // presence-only diff would restore the files but keep the newer
-    // DV and lose rows silently
-    val removes = cur.files
-      .filter(p => !tgt.adds.get(p).contains(cur.adds(p)))
-      .map(p => removeAction(p))
-    val adds = tgt.files
-      .filter(p => !cur.adds.get(p).contains(tgt.adds(p)))
-      .map { p =>
-        val a = tgt.adds(p)
-        addAction(p, a.size, a.partitionValues, dataChange = true,
-          a.stats, a.dv)
-      }
-    require(writeActions(tableDir, vs.last + 1, removes ++ adds),
-      s"concurrent writer claimed version ${vs.last + 1} during restore " +
-        "— re-run against the new state")
-    vs.last + 1
+    claimOnHead(tableDir) { cur =>
+      require(cur.schema == tgt.schema &&
+          cur.columnMapping == tgt.columnMapping,
+        "RESTORE across a schema/mapping change is out of scope — " +
+          "restore the metadata evolution first")
+      // act on every path whose ADD ENTRY differs — not just presence:
+      // a deletion-vector delete is remove+add of the SAME path, so a
+      // presence-only diff would restore the files but keep the newer
+      // DV and lose rows silently
+      val removes = cur.files
+        .filter(p => !tgt.adds.get(p).contains(cur.adds(p)))
+        .map(p => removeAction(p))
+      val adds = tgt.files
+        .filter(p => !cur.adds.get(p).contains(tgt.adds(p)))
+        .map { p =>
+          val a = tgt.adds(p)
+          addAction(p, a.size, a.partitionValues, dataChange = true,
+            a.stats, a.dv)
+        }
+      removes ++ adds
+    }
   }
 
   /** Time travel: the table exactly as of commit `version`. Schema
@@ -1380,7 +1376,7 @@ object DeltaLog {
     }
 
   // ---------------------------------------------------------------
-  // Writer: overwrite/append/compaction commits + Snapshots export
+  // Writer: overwrite/append/compaction commits
   // ---------------------------------------------------------------
 
   /** Publish commit `v`. Returns false if another writer claimed `v`
@@ -1392,9 +1388,9 @@ object DeltaLog {
     * would expose an empty one), conditional PUT on object stores
     * ([[ConditionalPutStore]] — what real Delta does on S3). A
     * crashed writer leaves only a dot-tmp the version listing never
-    * sees. Sibling paths (Staging.linkInto, exportSnapshots) copy
-    * instead because a lost link only costs bytes there; here the
-    * claim IS the commit point. */
+    * sees. Sibling paths (Staging.linkInto) copy instead because a
+    * lost link only costs bytes there; here the claim IS the commit
+    * point. */
   private[graft] def writeActions(tableDir: String, v: Long,
                            actions: Seq[ObjectNode]): Boolean = {
     Files.createDirectories(Paths.get(logDir(tableDir)))
@@ -1431,6 +1427,94 @@ object DeltaLog {
         .exists(java.util.Arrays.equals(_, bytes))
     }
   }
+
+  /** The one commit loop: every version claim in this module goes
+    * through here. Each attempt lists the committed versions and
+    * hands them to `attempt`, which answers with this attempt's
+    * actions, with None to skip (a txn already recorded), or throws
+    * to refuse (a create that finds a log, a row op whose winners are
+    * not disjoint). The claim is the next version (0 on an empty
+    * log); a lost claim bumps [[commitCasRetries]] and asks again
+    * against the new head — progress by construction, since each
+    * loss means a new committed version exists. Returns the committed
+    * version, None on a skip. */
+  @scala.annotation.tailrec
+  private def publish(tableDir: String)(
+      attempt: Seq[Long] => Option[Seq[ObjectNode]]): Option[Long] = {
+    val vs = versions(tableDir)
+    val v = if (vs.isEmpty) 0L else vs.last + 1
+    attempt(vs) match {
+      case None => None
+      case Some(actions) =>
+        commitClaimHook(tableDir, v)
+        if (writeActions(tableDir, v, actions)) Some(v)
+        else {
+          commitCasRetries.incrementAndGet()
+          publish(tableDir)(attempt)
+        }
+    }
+  }
+
+  /** [[publish]] for an attempt that never skips. */
+  private def claim(tableDir: String)(
+      actions: Seq[Long] => Seq[ObjectNode]): Long =
+    publish(tableDir)(vs => Some(actions(vs))).get
+
+  /** The rule every metadata-only commit follows: each attempt
+    * re-replays the head and re-derives (and re-validates) its
+    * actions from it, so a lost claim never lands a schema,
+    * configuration or file list computed against a stale state. */
+  private def claimOnHead(tableDir: String)(
+      actions: State => Seq[ObjectNode]): Long =
+    claim(tableDir) { vs =>
+      require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
+      actions(replay(tableDir, vs.last))
+    }
+
+  /** Version 0 of a new table. A log found up front (before `write`
+    * stages any data) or on any attempt refuses: a racing create
+    * wins, and the loser fails loudly instead of landing at v1. */
+  private def claimCreate(tableDir: String, op: String)(
+      write: => Seq[ObjectNode]): Long = {
+    def fresh(vs: Seq[Long]): Unit = require(vs.isEmpty,
+      s"$op: $tableDir already has _delta_log commits — a new table " +
+        "lands in a fresh location")
+    fresh(versions(tableDir))
+    val actions = write
+    claim(tableDir) { vs => fresh(vs); actions }
+  }
+
+  /** The protocol's `txn` action: `appId` recorded at `version`. */
+  private def txnAction(txn: (String, Long)): ObjectNode = {
+    val t = mapper.createObjectNode()
+    t.putObject("txn").put("appId", txn._1)
+      .put("version", txn._2).put("lastUpdated", 0L)
+    t
+  }
+
+  private def txnRecorded(tableDir: String, txn: (String, Long)): Boolean =
+    latestTxnVersion(tableDir, txn._1).exists(_ >= txn._2)
+
+  /** The blind-write attempt shared by the library writers and the
+    * DSv2 connector. Per attempt: a `txn` already recorded skips
+    * (re-checked every time — a lost claim may mean a racing instance
+    * of the same app just recorded it; `drop` removes the staged
+    * files); a fresh table gets protocol + metaData; an overwrite
+    * removes every file live at the head. An append replays nothing,
+    * so a hot CDC append never pays O(history) per attempt. */
+  private def publishBlind(tableDir: String, schema: StructType,
+      partCols: Seq[String], overwrite: Boolean,
+      txn: Option[(String, Long)], adds: Seq[ObjectNode])(
+      drop: => Unit): Option[Long] =
+    publish(tableDir) { vs =>
+      if (txn.exists(txnRecorded(tableDir, _))) { drop; None }
+      else Some(
+        (if (vs.isEmpty)
+          Seq(protocolAction(), metaDataAction(schema, partCols))
+        else if (overwrite)
+          replay(tableDir, vs.last).files.map(p => removeAction(p))
+        else Seq.empty) ++ txn.map(txnAction) ++ adds)
+    }
 
   private def protocolAction(minReader: Int = 1,
                              minWriter: Int = 2): ObjectNode = {
@@ -1740,32 +1824,6 @@ object DeltaLog {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
   }
 
-  /** Commit `df` as the table's next version with OVERWRITE semantics
-    * (previous adds removed — the reference's
-    * `.mode("overwrite")` Delta writes, spark/batch_gold.py:156).
-    * Data files land under `part-v<version>/`; the first commit also
-    * carries protocol + metaData. Returns the committed version. */
-  /** An unpartitioned commit against a PARTITIONED table would write
-    * adds with no `partitionValues` — readers would reconstruct NULL
-    * partition columns, silently wrong. Loud, here and in append. */
-  private def requireUnpartitioned(tableDir: String,
-                                   op: String): Option[State] =
-    requirePartitionSpec(tableDir, Seq.empty, op)
-
-  /** The commit writers' partition-spec discipline: the caller's
-    * declared `partCols` must EQUAL the table's (ordered — the
-    * metaData's partitionColumns is an ordered list), so an
-    * unpartitioned write against a partitioned table (adds with no
-    * partitionValues — readers would reconstruct NULL partition
-    * columns, silently wrong) and a partitioned write against a
-    * table declaring different columns both fail loudly. Mapped
-    * tables refuse every writer that would spell logical names into
-    * data files. First commit (no log yet) passes — it DECLARES the
-    * spec. */
-  /** Returns the replayed state (None on a fresh table) so callers
-    * thread ONE replay through the write path instead of each helper
-    * re-replaying — a hot CDC append must not pay O(history) three
-    * times per commit. */
   /** Write-side enforcement of the table's declared invariants —
     * `delta.constraints.<name>` CHECK expressions (the reference's
     * own Postgres schema carries CHECKs, postgres_init/init.sql:134
@@ -1818,32 +1876,22 @@ object DeltaLog {
     import org.apache.spark.sql.functions.{expr, lit}
     require(name.nonEmpty && !name.contains(' '),
       s"constraint name '$name' must be a bare identifier")
-    var v = -1L
-    var done = false
-    while (!done) {
-      // validate INSIDE the claim loop: a lost CAS means rows landed
+    claimOnHead(tableDir) { st =>
+      // validate on EVERY attempt: a lost CAS means rows landed
       // between validation and commit — they must be re-checked, or
       // a racing violating write slips under the new constraint
-      val vs = versions(tableDir)
-      require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
-      val st = replay(tableDir, vs.last)
       val bad = read(spark, tableDir)
         .filter(expr(check) <=> lit(false)).limit(1).collect()
       require(bad.isEmpty,
         s"cannot add CHECK constraint '$name' ($check): existing " +
           s"rows already violate it (e.g. ${bad.headOption.getOrElse("")})")
-      v = vs.last + 1
-      commitClaimHook(tableDir, v)
       // the spec's writer gate: CHECK constraints require writer 3
       // (legacy) / the checkConstraints writer feature — a foreign
       // writer that would not enforce the constraint must refuse
-      done = writeActions(tableDir, v,
-        writerUpgrade(st, "checkConstraints", 3).toSeq :+
+      writerUpgrade(st, "checkConstraints", 3).toSeq :+
         metaDataAction(st.schema, st.partitionColumns,
-          st.configuration + (s"delta.constraints.$name" -> check)))
-      if (!done) commitCasRetries.incrementAndGet()
+          st.configuration + (s"delta.constraints.$name" -> check))
     }
-    v
   }
 
   /** Declare `colName` GENERATED AS `generationExpr` (metadata-only
@@ -1853,15 +1901,10 @@ object DeltaLog {
                               colName: String,
                               generationExpr: String): Long = {
     import org.apache.spark.sql.functions.{expr, not}
-    var v = -1L
-    var done = false
-    while (!done) {
-      // the addCheckConstraint discipline: re-derive state AND
-      // re-validate existing rows per claim attempt, so neither a
-      // racing schema change nor racing violating rows slip under
-      val vs = versions(tableDir)
-      require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
-      val st = replay(tableDir, vs.last)
+    claimOnHead(tableDir) { st =>
+      // the addCheckConstraint discipline: re-validate existing rows
+      // per claim attempt, so neither a racing schema change nor
+      // racing violating rows slip under
       require(st.schema.fieldNames.contains(colName),
         s"generated column $colName not in table schema")
       val bad = read(spark, tableDir)
@@ -1878,19 +1921,29 @@ object DeltaLog {
             .putString("delta.generationExpression", generationExpr)
             .build())
       })
-      v = vs.last + 1
-      commitClaimHook(tableDir, v)
       // generated columns gate foreign writers at writer 4 (legacy)
       // / the generatedColumns writer feature
-      done = writeActions(tableDir, v,
-        writerUpgrade(st, "generatedColumns", 4).toSeq :+
+      writerUpgrade(st, "generatedColumns", 4).toSeq :+
         metaDataAction(schemaOut, st.partitionColumns,
-          st.configuration))
-      if (!done) commitCasRetries.incrementAndGet()
+          st.configuration)
     }
-    v
   }
 
+  /** The commit writers' partition-spec discipline: the caller's
+    * declared `partCols` must EQUAL the table's (ordered — the
+    * metaData's partitionColumns is an ordered list), so an
+    * unpartitioned write against a partitioned table (adds with no
+    * partitionValues — readers would reconstruct NULL partition
+    * columns, silently wrong) and a partitioned write against a
+    * table declaring different columns both fail loudly. Mapped
+    * tables refuse every writer that would spell logical names into
+    * data files. First commit (no log yet) passes — it DECLARES the
+    * spec.
+    *
+    * Returns the replayed state (None on a fresh table) so callers
+    * thread ONE replay through the write path instead of each helper
+    * re-replaying — a hot CDC append must not pay O(history) three
+    * times per commit. */
   private def requirePartitionSpec(tableDir: String,
       partCols: Seq[String], op: String): Option[State] = {
     val vs = versions(tableDir)
@@ -1938,38 +1991,42 @@ object DeltaLog {
       case _ => df
     }
 
+  /** Commit `df` as the table's next version with OVERWRITE semantics
+    * (previous adds removed — the reference's
+    * `.mode("overwrite")` Delta writes, spark/batch_gold.py:156).
+    * Data files land under `part-v<version>/`; the first commit also
+    * carries protocol + metaData. Returns the committed version. */
   def commitOverwrite(df: DataFrame, tableDir: String): Long =
-    commitOverwriteExtra(df, tableDir, Seq.empty)
+    commit(df, tableDir, "commitOverwrite", overwrite = true,
+      Seq.empty).get
 
-  /** [[commitOverwrite]] with extra actions (cdc change-data stamps)
-    * riding the SAME commit — change files and the file churn they
-    * describe must be atomic or a CDF reader sees a torn version. */
-  private def commitOverwriteExtra(df: DataFrame, tableDir: String,
-      extra: Seq[ObjectNode]): Long = {
-    val st0 = requireUnpartitioned(tableDir, "commitOverwrite")
+  /** The library blind writers' one body ([[commitOverwrite]],
+    * [[commitAppend]], [[commitAppendPartitioned]],
+    * [[commitAppendIdempotent]], [[commitOverwritePartitioned]]):
+    * spec check, invariants, one data write (unpartitioned batch or
+    * `partitionBy` + [[partitionedAdds]]), then [[publishBlind]].
+    * `txn` makes the append exactly-once: a recorded (appId, version)
+    * skips up front, before any data is written, and again on every
+    * attempt. Returns None only on such a skip. */
+  private def commit(df: DataFrame, tableDir: String, op: String,
+      overwrite: Boolean, partCols: Seq[String],
+      txn: Option[(String, Long)] = None): Option[Long] = {
+    val st0 = requirePartitionSpec(tableDir, partCols, op)
+    if (txn.exists(txnRecorded(tableDir, _))) return None
     st0.foreach(enforceWriteInvariants(df, _))
     // data dir named by UUID, not by version: two racing writers must
     // not collide at the DATA write — only the log CAS decides order
     val sub = s"part-${java.util.UUID.randomUUID}"
-    val adds = writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
-    // lost CAS ⇒ another writer advanced the log; recompute the
-    // version AND the removes from the new latest state and retry —
-    // the loop makes progress by construction (each failure means a
-    // new committed version exists)
-    var v = -1L
-    var done = false
-    while (!done) {
-      val vs = versions(tableDir)
-      v = if (vs.isEmpty) 0L else vs.last + 1
-      val head: Seq[ObjectNode] =
-        if (vs.isEmpty)
-          Seq(protocolAction(), metaDataAction(df.schema, Seq.empty))
-        else replay(tableDir, vs.last).files.map(p => removeAction(p))
-      commitClaimHook(tableDir, v)
-      done = writeActions(tableDir, v, head ++ adds ++ extra)
-      if (!done) commitCasRetries.incrementAndGet()
-    }
-    v
+    val adds: Seq[ObjectNode] =
+      if (partCols.isEmpty)
+        writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
+      else {
+        df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
+        partitionedAdds(df.sparkSession, tableDir, sub, partCols, st0,
+          dataChange = true)
+      }
+    publishBlind(tableDir, df.schema, partCols, overwrite, txn, adds)(
+      graft.util.Fs.deleteRecursively(new File(tableDir, sub)))
   }
 
   /** Commit `df` as the table's next version with APPEND semantics:
@@ -1979,7 +2036,7 @@ object DeltaLog {
     * data write. First commit on an empty table also carries
     * protocol + metaData. Returns the committed version. */
   def commitAppend(df: DataFrame, tableDir: String): Long =
-    commitAppendCore(df, tableDir, Seq.empty)
+    commit(df, tableDir, "commitAppend", overwrite = false, Seq.empty).get
 
   /** [[commitAppend]] for a PARTITIONED table — the CDC-sink append
     * a 100 TB silver needs: `df` is written `partitionBy(partCols)`
@@ -1992,36 +2049,7 @@ object DeltaLog {
                               partCols: Seq[String]): Long = {
     require(partCols.nonEmpty,
       "partitioned append needs partition columns")
-    commitAppendCore(df, tableDir, partCols)
-  }
-
-  private def commitAppendCore(df: DataFrame, tableDir: String,
-                               partCols: Seq[String]): Long = {
-    val st0 = requirePartitionSpec(tableDir, partCols, "commitAppend")
-    st0.foreach(enforceWriteInvariants(df, _))
-    val sub = s"part-${java.util.UUID.randomUUID}"
-    val adds: Seq[ObjectNode] =
-      if (partCols.isEmpty)
-        writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
-      else {
-        df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
-        partitionedAdds(df.sparkSession, tableDir, sub, partCols, st0,
-          dataChange = true)
-      }
-    var v = -1L
-    var done = false
-    while (!done) {
-      val vs = versions(tableDir)
-      v = if (vs.isEmpty) 0L else vs.last + 1
-      val head: Seq[ObjectNode] =
-        if (vs.isEmpty)
-          Seq(protocolAction(), metaDataAction(df.schema, partCols))
-        else Seq.empty
-      commitClaimHook(tableDir, v)
-      done = writeActions(tableDir, v, head ++ adds)
-      if (!done) commitCasRetries.incrementAndGet()
-    }
-    v
+    commit(df, tableDir, "commitAppend", overwrite = false, partCols).get
   }
 
   /** One file the DSv2 WRITER produced: log-relative path, size,
@@ -2053,47 +2081,9 @@ object DeltaLog {
     */
   private[graft] def commitDsv2(spark: SparkSession, tableDir: String,
       logicalSchema: StructType, partCols: Seq[String],
-      files: Seq[Dsv2File], overwrite: Boolean): Long = {
-    val op = if (overwrite) "dsv2 overwrite" else "dsv2 append"
-    val st0 = requirePartitionSpec(tableDir, partCols, op)
-    st0.foreach { st =>
-      // compare LOGICAL shapes: schemaShape keys mapped schemas by
-      // physical name, but the incoming DSv2 schema is logical
-      require(schemaShape(stripFieldMetadata(st.schema)) ==
-          schemaShape(stripFieldMetadata(logicalSchema)),
-        s"$op to $tableDir: incoming schema shape " +
-          s"${stripFieldMetadata(logicalSchema)} does not match the " +
-          s"table's ${stripFieldMetadata(st.schema)} — use " +
-          "evolveSchema for schema changes")
-    }
-    def resolveAbs(rel: String) = s"$tableDir/$rel"
-    st0.foreach(st =>
-      enforceDsv2Invariants(spark, tableDir, st, partCols, files, op))
-    maybeWriteBlooms(spark, tableDir,
-      files.map(f => resolveAbs(f.relPath) -> f.numRecords), st0)
-    val adds = files.map(f => addAction(f.relPath, f.size,
-      f.partitionValues, dataChange = true,
-      stats = Some(statsJsonOf(f.numRecords, f.bounds,
-        logicalSchema))))
-    var v = -1L
-    var done = false
-    while (!done) {
-      val vs = versions(tableDir)
-      v = if (vs.isEmpty) 0L else vs.last + 1
-      val head: Seq[ObjectNode] =
-        if (vs.isEmpty)
-          Seq(protocolAction(), metaDataAction(
-            stripFieldMetadata(logicalSchema).asInstanceOf[StructType],
-            partCols))
-        else if (overwrite)
-          replay(tableDir, vs.last).files.map(p => removeAction(p))
-        else Seq.empty
-      commitClaimHook(tableDir, v)
-      done = writeActions(tableDir, v, head ++ adds)
-      if (!done) commitCasRetries.incrementAndGet()
-    }
-    v
-  }
+      files: Seq[Dsv2File], overwrite: Boolean): Long =
+    dsv2Commit(spark, tableDir, logicalSchema, partCols, files,
+      overwrite, None).get
 
   /** [[commitDsv2]] with the EXACTLY-ONCE txn watermark — the
     * native DSv2 STREAMING sink's commit
@@ -2109,54 +2099,49 @@ object DeltaLog {
   private[graft] def commitDsv2Idempotent(spark: SparkSession,
       tableDir: String, logicalSchema: StructType,
       partCols: Seq[String], files: Seq[Dsv2File], appId: String,
-      txnVersion: Long): Option[Long] = {
+      txnVersion: Long): Option[Long] =
+    dsv2Commit(spark, tableDir, logicalSchema, partCols, files,
+      overwrite = false, Some(appId -> txnVersion))
+
+  /** The one body of [[commitDsv2]] and [[commitDsv2Idempotent]]:
+    * shape check, [[enforceDsv2Invariants]], blooms, adds, then
+    * [[publishBlind]] with the optional txn. A skipped txn deletes
+    * the writer's files. */
+  private def dsv2Commit(spark: SparkSession, tableDir: String,
+      logicalSchema: StructType, partCols: Seq[String],
+      files: Seq[Dsv2File], overwrite: Boolean,
+      txn: Option[(String, Long)]): Option[Long] = {
     def dropFiles(): Unit = files.foreach(f =>
       Files.deleteIfExists(Paths.get(s"$tableDir/${f.relPath}")): Unit)
-    if (latestTxnVersion(tableDir, appId).exists(_ >= txnVersion)) {
+    if (txn.exists(txnRecorded(tableDir, _))) {
       dropFiles()
       return None
     }
-    val op = "dsv2 streaming append"
+    val op =
+      if (overwrite) "dsv2 overwrite"
+      else if (txn.isDefined) "dsv2 streaming append"
+      else "dsv2 append"
     val st0 = requirePartitionSpec(tableDir, partCols, op)
     st0.foreach { st =>
+      // compare LOGICAL shapes: schemaShape keys mapped schemas by
+      // physical name, but the incoming DSv2 schema is logical
       require(schemaShape(stripFieldMetadata(st.schema)) ==
           schemaShape(stripFieldMetadata(logicalSchema)),
         s"$op to $tableDir: incoming schema shape " +
           s"${stripFieldMetadata(logicalSchema)} does not match the " +
-          s"table's ${stripFieldMetadata(st.schema)}")
+          s"table's ${stripFieldMetadata(st.schema)} — use " +
+          "evolveSchema for schema changes")
       enforceDsv2Invariants(spark, tableDir, st, partCols, files, op)
     }
     maybeWriteBlooms(spark, tableDir,
       files.map(f => s"$tableDir/${f.relPath}" -> f.numRecords), st0)
-    val txn = mapper.createObjectNode()
-    txn.putObject("txn").put("appId", appId)
-      .put("version", txnVersion).put("lastUpdated", 0L)
     val adds = files.map(f => addAction(f.relPath, f.size,
       f.partitionValues, dataChange = true,
       stats = Some(statsJsonOf(f.numRecords, f.bounds,
         logicalSchema))))
-    var v = -1L
-    var done = false
-    while (!done) {
-      // re-check INSIDE the loop: losing the CAS may mean a racing
-      // instance of the SAME query just recorded this very epoch
-      if (latestTxnVersion(tableDir, appId).exists(_ >= txnVersion)) {
-        dropFiles()
-        return None
-      }
-      val vs = versions(tableDir)
-      v = if (vs.isEmpty) 0L else vs.last + 1
-      val head: Seq[ObjectNode] =
-        if (vs.isEmpty)
-          Seq(protocolAction(), metaDataAction(
-            stripFieldMetadata(logicalSchema).asInstanceOf[StructType],
-            partCols))
-        else Seq.empty
-      commitClaimHook(tableDir, v)
-      done = writeActions(tableDir, v, (head :+ txn) ++ adds)
-      if (!done) commitCasRetries.incrementAndGet()
-    }
-    Some(v)
+    publishBlind(tableDir,
+      stripFieldMetadata(logicalSchema).asInstanceOf[StructType],
+      partCols, overwrite, txn, adds)(dropFiles())
   }
 
   /** CHECK-constraint / generated-column enforcement for files a
@@ -2208,8 +2193,6 @@ object DeltaLog {
   def createTable(tableDir: String, schema: StructType,
                   partCols: Seq[String],
                   properties: Map[String, String] = Map.empty): Long = {
-    require(versions(tableDir).isEmpty,
-      s"CREATE TABLE: $tableDir already has _delta_log commits")
     val missing = partCols.filterNot(schema.fieldNames.contains)
     require(missing.isEmpty,
       s"CREATE TABLE: partition columns ${missing.mkString(", ")} " +
@@ -2250,12 +2233,8 @@ object DeltaLog {
       case None =>
         (clean, properties, protocolAction(minWriter = baseWriter))
     }
-    commitClaimHook(tableDir, 0L)
-    require(writeActions(tableDir, 0L,
-      Seq(protocol, metaDataAction(recorded, partCols, props))),
-      s"CREATE TABLE lost the version-0 claim on $tableDir — a " +
-        "concurrent writer created this table first")
-    0L
+    claimCreate(tableDir, "CREATE TABLE")(
+      Seq(protocol, metaDataAction(recorded, partCols, props)))
   }
 
   /** Declared row-identity columns for CDF derivation (this
@@ -2865,53 +2844,10 @@ object DeltaLog {
     * unpartitioned (the two-arg overload). */
   def commitAppendIdempotent(df: DataFrame, tableDir: String,
                              appId: String, txnVersion: Long,
-                             partCols: Seq[String]): Option[Long] = {
-    val st0 =
-      requirePartitionSpec(tableDir, partCols, "commitAppendIdempotent")
-    if (latestTxnVersion(tableDir, appId).exists(_ >= txnVersion))
-      return None
-    st0.foreach(enforceWriteInvariants(df, _))
-    val sub = s"part-${java.util.UUID.randomUUID}"
-    val adds: Seq[ObjectNode] =
-      if (partCols.isEmpty)
-        writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
-      else {
-        df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
-        partitionedAdds(df.sparkSession, tableDir, sub, partCols, st0,
-          dataChange = true)
-      }
-    val txn = mapper.createObjectNode()
-    txn.putObject("txn").put("appId", appId)
-      .put("version", txnVersion).put("lastUpdated", 0L)
-    var v = -1L
-    var done = false
-    while (!done) {
-      // re-check INSIDE the loop: losing the CAS may mean the same
-      // app's racing instance just recorded this very transaction
-      if (latestTxnVersion(tableDir, appId).exists(_ >= txnVersion)) {
-        graft.util.Fs.deleteRecursively(new File(tableDir, sub))
-        return None
-      }
-      val vs = versions(tableDir)
-      v = if (vs.isEmpty) 0L else vs.last + 1
-      val head: Seq[ObjectNode] =
-        if (vs.isEmpty)
-          Seq(protocolAction(), metaDataAction(df.schema, partCols))
-        else Seq.empty
-      commitClaimHook(tableDir, v)
-      done = writeActions(tableDir, v, head ++ (txn +: adds))
-      if (!done) commitCasRetries.incrementAndGet()
-    }
-    Some(v)
-  }
+                             partCols: Seq[String]): Option[Long] =
+    commit(df, tableDir, "commitAppendIdempotent", overwrite = false,
+      partCols, Some(appId -> txnVersion))
 
-  /** [[commitOverwrite]] for a PARTITIONED table: `df` is written
-    * `partitionBy(partCols)` (data files do NOT contain the partition
-    * columns — the spec's layout), and each add action carries the
-    * file's `partitionValues` so readers reconstruct the columns from
-    * the LOG. The hive-style value directories the write produces are
-    * decoded once, here, at write time; after that the paths are
-    * opaque, as the spec intends. Returns the committed version. */
   /** Decode the hive-style value directories of a `partitionBy` write
     * under `tableDir/sub` into add actions carrying each file's
     * `partitionValues` — decoded once, here, at write time; after
@@ -2941,6 +2877,13 @@ object DeltaLog {
     }
   }
 
+  /** [[commitOverwrite]] for a PARTITIONED table: `df` is written
+    * `partitionBy(partCols)` (data files do NOT contain the partition
+    * columns — the spec's layout), and each add action carries the
+    * file's `partitionValues` so readers reconstruct the columns from
+    * the LOG. The hive-style value directories the write produces are
+    * decoded once, here, at write time; after that the paths are
+    * opaque, as the spec intends. Returns the committed version. */
   def commitOverwritePartitioned(df: DataFrame, tableDir: String,
                                  partCols: Seq[String]): Long = {
     require(partCols.nonEmpty, "partitioned commit needs partition columns")
@@ -2949,27 +2892,8 @@ object DeltaLog {
     // partitionValues the unrefreshed metaData cannot reconstruct
     // (silently NULLed partition columns); mapped tables (always
     // unpartitioned) refuse through the same check
-    val st0 = requirePartitionSpec(tableDir, partCols,
-      "commitOverwritePartitioned")
-    st0.foreach(enforceWriteInvariants(df, _))
-    val sub = s"part-${java.util.UUID.randomUUID}"
-    df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
-    val adds = partitionedAdds(df.sparkSession, tableDir, sub, partCols,
-      st0, dataChange = true)
-    var v = -1L
-    var done = false
-    while (!done) {
-      val vs = versions(tableDir)
-      v = if (vs.isEmpty) 0L else vs.last + 1
-      val head: Seq[ObjectNode] =
-        if (vs.isEmpty)
-          Seq(protocolAction(), metaDataAction(df.schema, partCols))
-        else replay(tableDir, vs.last).files.map(p => removeAction(p))
-      commitClaimHook(tableDir, v)
-      done = writeActions(tableDir, v, head ++ adds)
-      if (!done) commitCasRetries.incrementAndGet()
-    }
-    v
+    commit(df, tableDir, "commitOverwritePartitioned", overwrite = true,
+      partCols).get
   }
 
   /** COLUMN MAPPING (mode=name) table creation — the Delta protocol's
@@ -2983,38 +2907,59 @@ object DeltaLog {
     * (replay validates the mode explains minReaderVersion 2, the scan
     * reads physically and surfaces logically, checkpoints preserve
     * protocol + configuration). Returns the committed version (0). */
-  def commitOverwriteMapped(df: DataFrame, tableDir: String): Long = {
-    require(versions(tableDir).isEmpty,
-      "mapped writer creates a fresh table (the mapping mode is fixed " +
-        "at creation, as Delta fixes it)")
-    // replay refuses map-key structs under mapping — refuse HERE too
-    // rather than minting a table every subsequent read refuses
-    require(!df.schema.fields.exists(f => mapKeyStruct(f.dataType)),
-      "structs under map KEYS with column mapping are out of scope")
-    // annotate RECURSIVELY via the shared [[annotateMapped]]: every
-    // nested field (arrays / map values included) gets its own id
-    // and physicalName; ids number depth-first. Deterministic
-    // path-derived names are safe at CREATION only — evolve mints
-    // random (see mappedEvolution's collision note).
-    val (annotated, maxId) = annotateMapped(df.schema, 0L, path =>
-      s"col-${java.util.UUID.nameUUIDFromBytes(path.getBytes("UTF-8"))}")
-    val mappedSchema = annotated.asInstanceOf[StructType]
-    val nextId = maxId
-    // write physically at every nesting level: the hoisted
-    // [[physicalize]], shared with the mapped append/merge writers
-    val sub = s"part-${java.util.UUID.randomUUID}"
-    val adds = writeBatch(df.select(mappedSchema.fields.toSeq.map(f =>
-        physicalize(col(f.name), f).as(physFieldName(f))): _*),
-      tableDir, sub, None)
-    require(writeActions(tableDir, 0L,
+  def commitOverwriteMapped(df: DataFrame, tableDir: String): Long =
+    createMapped(df, tableDir, "name")
+
+  /** The one body of [[commitOverwriteMapped]] and
+    * [[commitOverwriteMappedId]]: version 0 of a fresh mapped table
+    * (the mapping mode is fixed at creation, as Delta fixes it). */
+  private def createMapped(df: DataFrame, tableDir: String,
+                           mode: String): Long =
+    claimCreate(tableDir, s"mapped (mode=$mode) writer") {
+      // replay refuses map-key structs under mapping — refuse HERE too
+      // rather than minting a table every subsequent read refuses;
+      // other nesting is fine — nested levels read through the
+      // physical-name machinery (round 14), so Spark's
+      // field-id-stripping nested pruning can't NULL them
+      df.schema.fields.foreach(f => require(!mapKeyStruct(f.dataType),
+        s"column ${f.name}: structs under map KEYS with column " +
+          "mapping are out of scope"))
+      // annotate RECURSIVELY via the shared [[annotateMapped]]: every
+      // nested field (arrays / map values included) gets its own id
+      // and physicalName; ids number depth-first. Deterministic
+      // path-derived names are safe at CREATION only — evolve mints
+      // random (see mappedEvolution's collision note).
+      val (annotated, maxId) = annotateMapped(df.schema, 0L, path =>
+        s"col-${java.util.UUID.nameUUIDFromBytes(path.getBytes("UTF-8"))}")
+      val mappedSchema = annotated.asInstanceOf[StructType]
+      // write physically at every nesting level: the hoisted
+      // [[physicalize]], shared with the mapped append/merge writers.
+      // Under mode=id the top-level aliases also carry parquet field
+      // ids: the `.as(name, metadata)` alias spelling is the one whose
+      // ids reliably reach the parquet writer (a DataFrame.to's
+      // metadata is lost to Project collapsing — measured round 13).
+      // INNER struct fields are spelled physically without ids —
+      // sufficient for any protocol-conforming reader, which resolves
+      // by physical name where an id is absent (and this engine's
+      // nested-id read does exactly that)
+      if (mode == "id") df.sparkSession.conf.set(
+        "spark.sql.parquet.fieldId.write.enabled", "true")
+      val adds = writeBatch(df.select(mappedSchema.fields.toSeq.map { f =>
+          val c = physicalize(col(f.name), f)
+          if (mode == "id") c.as(physFieldName(f),
+            new org.apache.spark.sql.types.MetadataBuilder()
+              .putLong("parquet.field.id",
+                f.metadata.getLong("delta.columnMapping.id"))
+              .build())
+          else c.as(physFieldName(f))
+        }: _*),
+        tableDir, s"part-${java.util.UUID.randomUUID}", None)
       Seq(protocolAction(minReader = 2, minWriter = 5),
         metaDataAction(mappedSchema, Seq.empty,
-          Map("delta.columnMapping.mode" -> "name",
-            "delta.columnMapping.maxColumnId" ->
-              nextId.toString))) ++ adds),
-      s"table $tableDir already has commit 0")
-    0L
-  }
+          Map("delta.columnMapping.mode" -> mode,
+            "delta.columnMapping.maxColumnId" -> maxId.toString))) ++
+        adds
+    }
 
   /** Session-cached NESTED column-mapped table: orders reshaped into
     * two struct columns, committed under mode=name (every nesting
@@ -3107,50 +3052,25 @@ object DeltaLog {
     * resolves through Spark's native field-id matcher — so a rename
     * stays a pure metadata commit even if physical names drift.
     * Returns the committed version (0). */
-  def commitOverwriteMappedId(df: DataFrame, tableDir: String): Long = {
-    require(versions(tableDir).isEmpty,
-      "mapped writer creates a fresh table (the mapping mode is fixed " +
-        "at creation, as Delta fixes it)")
-    // structs under map KEYS stay refused (no sound physical
-    // spelling); other nesting is fine — nested levels read through
-    // the physical-name machinery (round 14), so Spark's
-    // field-id-stripping nested pruning can't NULL them
-    df.schema.fields.foreach(f => require(!mapKeyStruct(f.dataType),
-      s"column ${f.name}: structs under map KEYS with column " +
-        "mapping are out of scope"))
-    // ids number depth-first via the shared [[annotateMapped]] —
-    // the same scheme as the name-mode creation writer
-    val (annotated, nextId) = annotateMapped(df.schema, 0L, path =>
-      s"col-${java.util.UUID.nameUUIDFromBytes(path.getBytes("UTF-8"))}")
-    val mappedSchema = annotated.asInstanceOf[StructType]
-    val sub = s"part-${java.util.UUID.randomUUID}"
-    // physical names + parquet field ids: the `.as(name, metadata)`
-    // alias spelling is the one whose ids reliably reach the parquet
-    // writer (a DataFrame.to's metadata is lost to Project
-    // collapsing — measured round 13). Top-level aliases carry the
-    // ids; INNER struct fields are spelled physically by
-    // [[physicalize]] without ids — sufficient for any
-    // protocol-conforming reader, which resolves by physical name
-    // where an id is absent (and this engine's nested-id read does
-    // exactly that)
-    df.sparkSession.conf.set(
-      "spark.sql.parquet.fieldId.write.enabled", "true")
-    val adds = writeBatch(df.select(mappedSchema.fields.toSeq.map(f =>
-        physicalize(col(f.name), f).as(physFieldName(f),
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("parquet.field.id",
-              f.metadata.getLong("delta.columnMapping.id"))
-            .build())): _*),
-      tableDir, sub, None)
-    require(writeActions(tableDir, 0L,
-      Seq(protocolAction(minReader = 2, minWriter = 5),
-        metaDataAction(mappedSchema, Seq.empty,
-          Map("delta.columnMapping.mode" -> "id",
-            "delta.columnMapping.maxColumnId" ->
-              nextId.toString))) ++ adds),
-      s"table $tableDir already has commit 0")
-    0L
-  }
+  def commitOverwriteMappedId(df: DataFrame, tableDir: String): Long =
+    createMapped(df, tableDir, "id")
+
+  /** ALTER TABLE DROP COLUMN — METADATA-ONLY on a column-mapped
+    * table (the reason real Delta requires mapping for drops: the
+    * physical column stays in the data files, unreferenced; readers
+    * resolve by the remaining mapping entries and never see it).
+    * Top-level, non-partition columns; dropping the last column
+    * refuses. Unmapped tables refuse — without mapping a drop means
+    * rewriting every data file. */
+  def dropColumnMapped(tableDir: String, name: String): Long =
+    commitMappedSchema(tableDir, "dropColumnMapped", "drop") { st =>
+      require(st.schema.fieldNames.contains(name), s"no column $name")
+      require(!st.partitionColumns.contains(name),
+        s"$name is a partition column — repartition instead")
+      require(st.schema.fields.length > 1,
+        "cannot drop the table's last column")
+      StructType(st.schema.fields.filterNot(_.name == name))
+    }
 
   /** RENAME a logical column of a mapped table — the metadata-only
     * commit column mapping buys: same physical files, new
@@ -3161,96 +3081,74 @@ object DeltaLog {
     * metadata op. Works under either mapping mode (the mode rides
     * the table's existing configuration). Returns the committed
     * version. */
-  /** ALTER TABLE DROP COLUMN — METADATA-ONLY on a column-mapped
-    * table (the reason real Delta requires mapping for drops: the
-    * physical column stays in the data files, unreferenced; readers
-    * resolve by the remaining mapping entries and never see it).
-    * Top-level, non-partition columns; dropping the last column
-    * refuses. Unmapped tables refuse — without mapping a drop means
-    * rewriting every data file. */
-  def dropColumnMapped(tableDir: String, name: String): Long = {
-    val vs = versions(tableDir)
-    require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
-    val st = replay(tableDir, vs.last)
-    require(st.columnMapping.nonEmpty,
-      "dropColumnMapped needs a column-mapped table — without " +
-        "mapping a drop means rewriting every data file")
-    require(st.schema.fieldNames.contains(name), s"no column $name")
-    require(!st.partitionColumns.contains(name),
-      s"$name is a partition column — repartition instead")
-    require(st.schema.fields.length > 1,
-      "cannot drop the table's last column")
-    val remaining =
-      StructType(st.schema.fields.filterNot(_.name == name))
-    val maxId = math.max(maxMappedId(st.schema),
-      st.configuration.get("delta.columnMapping.maxColumnId")
-        .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(0L))
-    require(writeActions(tableDir, vs.last + 1,
-      Seq(metaDataAction(remaining, st.partitionColumns,
-        st.configuration ++
-          Map("delta.columnMapping.mode" -> st.mappingMode,
-            "delta.columnMapping.maxColumnId" -> maxId.toString)))),
-      s"concurrent writer claimed version ${vs.last + 1}")
-    vs.last + 1
-  }
-
   def renameColumnMapped(tableDir: String, from: String,
-                         to: String): Long = {
-    val vs = versions(tableDir)
-    require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
-    val st = replay(tableDir, vs.last)
-    require(st.columnMapping.nonEmpty,
-      "renameColumnMapped needs a column-mapped table — without " +
-        "mapping a rename means rewriting every data file")
-    require(!to.contains("."), s"new name $to must be unqualified")
-    def renameAt(s: StructType, path: List[String]): StructType =
-      path match {
-        case name :: Nil =>
-          require(s.fieldNames.contains(name), s"no column $name")
-          require(!s.fieldNames.contains(to),
-            s"column $to exists at this level")
-          StructType(s.fields.map(f =>
-            if (f.name == name) f.copy(name = to) else f))
-        case name :: rest =>
-          require(s.fieldNames.contains(name), s"no column $name")
-          StructType(s.fields.map { f =>
-            if (f.name != name) f
-            else {
-              // descend THROUGH containers: renaming a field of a
-              // struct inside an array / map value is the same pure
-              // metadata op (the files spell physical names at every
-              // level, containers included)
-              def into(dt: DataType): DataType = dt match {
-                case inner: StructType => renameAt(inner, rest)
-                case a: org.apache.spark.sql.types.ArrayType =>
-                  a.copy(elementType = into(a.elementType))
-                case m: org.apache.spark.sql.types.MapType =>
-                  m.copy(valueType = into(m.valueType))
-                case other => throw new IllegalArgumentException(
-                  s"$name is $other, not a struct — cannot descend")
+                         to: String): Long =
+    commitMappedSchema(tableDir, "renameColumnMapped", "rename") { st =>
+      require(!to.contains("."), s"new name $to must be unqualified")
+      def renameAt(s: StructType, path: List[String]): StructType =
+        path match {
+          case name :: Nil =>
+            require(s.fieldNames.contains(name), s"no column $name")
+            require(!s.fieldNames.contains(to),
+              s"column $to exists at this level")
+            StructType(s.fields.map(f =>
+              if (f.name == name) f.copy(name = to) else f))
+          case name :: rest =>
+            require(s.fieldNames.contains(name), s"no column $name")
+            StructType(s.fields.map { f =>
+              if (f.name != name) f
+              else {
+                // descend THROUGH containers: renaming a field of a
+                // struct inside an array / map value is the same pure
+                // metadata op (the files spell physical names at every
+                // level, containers included)
+                def into(dt: DataType): DataType = dt match {
+                  case inner: StructType => renameAt(inner, rest)
+                  case a: org.apache.spark.sql.types.ArrayType =>
+                    a.copy(elementType = into(a.elementType))
+                  case m: org.apache.spark.sql.types.MapType =>
+                    m.copy(valueType = into(m.valueType))
+                  case other => throw new IllegalArgumentException(
+                    s"$name is $other, not a struct — cannot descend")
+                }
+                f.copy(dataType = into(f.dataType))
               }
-              f.copy(dataType = into(f.dataType))
-            }
-          })
-        case Nil => throw new IllegalArgumentException("empty path")
-      }
-    val renamed = renameAt(st.schema, from.split('.').toList)
-    // maxColumnId must stay >= EVERY assigned id (the spec invariant
-    // an external writer relies on when allocating new ids): ids are
-    // assigned depth-first across NESTED fields, so top-level field
-    // count undercounts — take the max id actually present in the
-    // replayed schema, never regressing below the prior recorded value
-    val maxId = math.max(maxMappedId(st.schema),
-      st.configuration.get("delta.columnMapping.maxColumnId")
-        .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(0L))
-    require(writeActions(tableDir, vs.last + 1,
-      Seq(metaDataAction(renamed, st.partitionColumns,
+            })
+          case Nil => throw new IllegalArgumentException("empty path")
+        }
+      renameAt(st.schema, from.split('.').toList)
+    }
+
+  /** A metadata-only schema change of a mapped table, on the
+    * [[claimOnHead]] rule: `reshape` re-derives the schema from the
+    * head on every attempt, and the mapping mode and maxColumnId
+    * ride the new metaData. */
+  private def commitMappedSchema(tableDir: String, op: String,
+      verb: String)(reshape: State => StructType): Long =
+    claimOnHead(tableDir) { st =>
+      require(st.columnMapping.nonEmpty,
+        s"$op needs a column-mapped table — without mapping a $verb " +
+          "means rewriting every data file")
+      Seq(metaDataAction(reshape(st), st.partitionColumns,
         st.configuration ++
           Map("delta.columnMapping.mode" -> st.mappingMode,
-            "delta.columnMapping.maxColumnId" -> maxId.toString)))),
-      s"concurrent writer claimed version ${vs.last + 1}")
-    vs.last + 1
-  }
+            "delta.columnMapping.maxColumnId" ->
+              maxColumnId(st).toString)))
+    }
+
+  /** The floor new mapping ids mint past, and the maxColumnId every
+    * mapped metaData records: the larger of the recorded value and
+    * the max id actually present in the schema. maxColumnId must stay
+    * >= EVERY assigned id (the spec invariant an external writer
+    * relies on when allocating new ids); ids are assigned depth-first
+    * across NESTED fields, so top-level field count undercounts, and
+    * a foreign table with a missing/stale/garbled maxColumnId must
+    * never mint ids that collide with existing ones — id-keyed
+    * readers would silently misresolve the new column to old data. */
+  private def maxColumnId(st: State): Long =
+    math.max(maxMappedId(st.schema),
+      st.configuration.get("delta.columnMapping.maxColumnId")
+        .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(0L))
 
   /** Largest `delta.columnMapping.id` assigned anywhere in `schema`
     * (recursive — nested fields carry their own ids). 0 when no field
@@ -3269,32 +3167,6 @@ object DeltaLog {
     walk(schema)
   }
 
-  /** MERGE-ON-READ DELETE through DELETION VECTORS (protocol reader 3
-    * / writer 7, feature `deletionVectors`): rows matching `predicate`
-    * are recorded as row indexes in a per-file roaring bitmap — the
-    * data files are NOT rewritten; each affected file gets
-    * remove+add of the SAME path where the new add carries the DV
-    * descriptor. Stacked deletes union into a replacement DV (the
-    * spec's contract: an add's DV covers ALL of that file's deleted
-    * rows). At 100 TB this is the difference between a DELETE costing
-    * kilobytes of bitmap and rewriting every touched gigabyte.
-    *
-    * The bitmaps are built EXECUTOR-SIDE: matched rows group by file
-    * and fold their row indexes into a
-    * [[graft.functions.RowPosBitmap]] aggregate (map-side partial →
-    * bitmap-OR merge), so the driver collects ONE row per affected
-    * file whose payload is the compressed bitmap — O(files), never
-    * O(deleted rows); a DELETE matching 1% of a 100 TB table collects
-    * file-count rows, not billions of positions
-    * ([[lastDeleteRowsCollected]] pins the bound). Existing DVs are
-    * probed through the same broadcast-bitmap filter the read path
-    * uses and union into replacement DVs in bitmap space. Composes
-    * with PARTITIONED tables — partition columns are restored from
-    * the log before the predicate runs (so it may reference them,
-    * and a partition-only DELETE is still answered with bitmaps, as
-    * Delta spells it), and each re-add keeps its `partitionValues`;
-    * column-mapped tables stay refused.
-    * Returns the committed version (unchanged if nothing matched). */
   // ---------------------------------------------------------------
   // Per-file BLOOM sidecar — point-lookup data skipping for
   // scattered keys (Delta's delta.bloomFilter idea)
@@ -3572,6 +3444,32 @@ object DeltaLog {
     }
   }
 
+  /** MERGE-ON-READ DELETE through DELETION VECTORS (protocol reader 3
+    * / writer 7, feature `deletionVectors`): rows matching `predicate`
+    * are recorded as row indexes in a per-file roaring bitmap — the
+    * data files are NOT rewritten; each affected file gets
+    * remove+add of the SAME path where the new add carries the DV
+    * descriptor. Stacked deletes union into a replacement DV (the
+    * spec's contract: an add's DV covers ALL of that file's deleted
+    * rows). At 100 TB this is the difference between a DELETE costing
+    * kilobytes of bitmap and rewriting every touched gigabyte.
+    *
+    * The bitmaps are built EXECUTOR-SIDE: matched rows group by file
+    * and fold their row indexes into a
+    * [[graft.functions.RowPosBitmap]] aggregate (map-side partial →
+    * bitmap-OR merge), so the driver collects ONE row per affected
+    * file whose payload is the compressed bitmap — O(files), never
+    * O(deleted rows); a DELETE matching 1% of a 100 TB table collects
+    * file-count rows, not billions of positions
+    * ([[lastDeleteRowsCollected]] pins the bound). Existing DVs are
+    * probed through the same broadcast-bitmap filter the read path
+    * uses and union into replacement DVs in bitmap space. Composes
+    * with PARTITIONED tables — partition columns are restored from
+    * the log before the predicate runs (so it may reference them,
+    * and a partition-only DELETE is still answered with bitmaps, as
+    * Delta spells it), and each re-add keeps its `partitionValues`;
+    * column-mapped tables stay refused.
+    * Returns the committed version (unchanged if nothing matched). */
   def deleteWhere(spark: SparkSession, tableDir: String,
                   predicate: org.apache.spark.sql.Column): Long = {
     // the predicate's prune-safe conjuncts skip files that provably
@@ -3884,15 +3782,21 @@ object DeltaLog {
       (if (st.columnMapping.isEmpty) snapshot
        else physicalRows(snapshot, st)).repartition(targetFiles),
       tableDir, sub, None, dataChange = false)
-    val removes = st.files.map(p => removeAction(p, dataChange = false))
-    // conflict-proving commit: a racing APPEND never conflicts with a
-    // compaction (its files are not in the rewrite set and carry over
-    // by identity — at 100 TB, OPTIMIZE races ingest constantly and
-    // must not abort for it); a winner touching any INPUT file (DV
-    // delete, merge, another OPTIMIZE) still aborts loudly
-    commitRowOp(tableDir, base, removes ++ adds,
-      st.files.toSet, (_, _) => false, "compaction")
+    commitCompaction(tableDir, base, st, adds)
   }
+
+  /** The compactions' commit: remove every file of the `base` state
+    * (dataChange=false) and add the rewrite. Conflict-proving: a
+    * racing APPEND never conflicts with a compaction (its files are
+    * not in the rewrite set and carry over by identity — at 100 TB,
+    * OPTIMIZE races ingest constantly and must not abort for it); a
+    * winner touching any INPUT file (DV delete, merge, another
+    * OPTIMIZE) still aborts loudly. */
+  private def commitCompaction(tableDir: String, base: Long, st: State,
+                               adds: Seq[ObjectNode]): Long =
+    commitRowOp(tableDir, base,
+      st.files.map(p => removeAction(p, dataChange = false)) ++ adds,
+      st.files.toSet, (_, _) => false, "compaction")
 
   /** [[compact]] for a PARTITIONED table: OPTIMIZE compacts WITHIN
     * each partition (the Delta contract — partition boundaries are
@@ -3915,12 +3819,8 @@ object DeltaLog {
       .repartition(st.partitionColumns.map(col): _*)
       .write.partitionBy(st.partitionColumns: _*)
       .parquet(s"$tableDir/$sub")
-    val adds = partitionedAdds(spark, tableDir, sub, st.partitionColumns,
-      None, dataChange = false)
-    val removes = st.files.map(p => removeAction(p, dataChange = false))
-    // the compact discipline: append winners carry over by identity
-    commitRowOp(tableDir, base, removes ++ adds,
-      st.files.toSet, (_, _) => false, "compaction")
+    commitCompaction(tableDir, base, st, partitionedAdds(spark, tableDir,
+      sub, st.partitionColumns, None, dataChange = false))
   }
 
   /** OPTIMIZE ZORDER BY — [[compact]] whose layout is a MORTON
@@ -3952,35 +3852,29 @@ object DeltaLog {
     val base = vs.last
     val st = replayMaybeCheckpointed(Some(spark), tableDir, base)
     val sub = s"part-${java.util.UUID.randomUUID}"
-    if (st.partitionColumns.nonEmpty) {
-      // PARTITIONED OPTIMIZE ZORDER: the range partitioning and
-      // within-partition sort LEAD with the table's partition
-      // columns, so every written file is a z-contiguous slice of
-      // one partition — partition pruning and z-bounds pruning
-      // compose (real Delta's semantics: z-order never crosses
-      // partition boundaries)
-      graft.ops.Scale.zClusteredBy(scanState(spark, tableDir, st),
-          st.partitionColumns, zorderCols, targetFiles)
-        .write.partitionBy(st.partitionColumns: _*)
-        .parquet(s"$tableDir/$sub")
-      val adds = partitionedAdds(spark, tableDir, sub,
-        st.partitionColumns, None, dataChange = false)
-      val removes =
-        st.files.map(p => removeAction(p, dataChange = false))
-      commitRowOp(tableDir, base, removes ++ adds,
-        st.files.toSet, (_, _) => false, "compaction")
-    } else {
-      val clustered = graft.ops.Scale.zClustered(
-        scanState(spark, tableDir, st), zorderCols, targetFiles)
-      val adds = writeBatch(
-        if (st.columnMapping.isEmpty) clustered
-        else physicalRows(clustered, st),
-        tableDir, sub, None, dataChange = false)
-      val removes =
-        st.files.map(p => removeAction(p, dataChange = false))
-      commitRowOp(tableDir, base, removes ++ adds,
-        st.files.toSet, (_, _) => false, "compaction")
-    }
+    val adds =
+      if (st.partitionColumns.nonEmpty) {
+        // PARTITIONED OPTIMIZE ZORDER: the range partitioning and
+        // within-partition sort LEAD with the table's partition
+        // columns, so every written file is a z-contiguous slice of
+        // one partition — partition pruning and z-bounds pruning
+        // compose (real Delta's semantics: z-order never crosses
+        // partition boundaries)
+        graft.ops.Scale.zClusteredBy(scanState(spark, tableDir, st),
+            st.partitionColumns, zorderCols, targetFiles)
+          .write.partitionBy(st.partitionColumns: _*)
+          .parquet(s"$tableDir/$sub")
+        partitionedAdds(spark, tableDir, sub, st.partitionColumns, None,
+          dataChange = false)
+      } else {
+        val clustered = graft.ops.Scale.zClustered(
+          scanState(spark, tableDir, st), zorderCols, targetFiles)
+        writeBatch(
+          if (st.columnMapping.isEmpty) clustered
+          else physicalRows(clustered, st),
+          tableDir, sub, None, dataChange = false)
+      }
+    commitCompaction(tableDir, base, st, adds)
   }
 
   // ---------------------------------------------------------------
@@ -5184,16 +5078,13 @@ object DeltaLog {
     * column-mapping territory (protocol ≥2, declared out of scope).
     * Returns the committed version. */
   def evolveSchema(tableDir: String, newSchema: StructType): Long = {
-    val vs = versions(tableDir)
-    require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
     // validated against the CURRENT head on every claim attempt: a
     // lost CAS means a racing commit landed, and if THAT commit also
     // changed the schema, blindly rewriting our metaData would
     // silently clobber its evolution — re-validate (and refuse on a
     // genuine conflict) instead, the metadata-conflict discipline
     // Delta's own transaction protocol applies
-    def validate(): State = {
-      val st = replay(tableDir, versions(tableDir).last)
+    def validate(st: State): Unit = {
       st.schema.fields.foreach { f =>
         val nf = newSchema.fields.find(_.name == f.name)
         // compare SHAPES: a mapped table's own fields carry mapping
@@ -5208,7 +5099,6 @@ object DeltaLog {
         .foreach(f => require(f.nullable,
           s"new column ${f.name} must be nullable: files written " +
             "before the evolution have no values for it"))
-      st
     }
     // MAPPED tables: kept fields keep their annotations (the
     // schemaString's id/physicalName are the files' identity — a
@@ -5228,15 +5118,7 @@ object DeltaLog {
               "with column mapping are out of scope")
 
         }
-      // seed past BOTH the recorded maxColumnId and the schema's own
-      // max id (the renameColumnMapped discipline): a foreign mapped
-      // table with a missing/stale/garbled maxColumnId must never
-      // mint ids that collide with existing ones — id-keyed readers
-      // would silently misresolve the new column to old data
-      var nextId = math.max(maxMappedId(st.schema),
-        st.configuration.get("delta.columnMapping.maxColumnId")
-          .flatMap(v => scala.util.Try(v.toLong).toOption)
-          .getOrElse(0L))
+      var nextId = maxColumnId(st)
       val evolved = StructType(newSchema.fields.map { f =>
         st.schema.fields.find(_.name == f.name).getOrElse {
           // RANDOM physical names, never path-derived: a rename
@@ -5256,31 +5138,17 @@ object DeltaLog {
         st.configuration +
           ("delta.columnMapping.maxColumnId" -> nextId.toString))
     }
-    var v = -1L
-    var done = false
-    while (!done) {
-      val st = validate()
+    claimOnHead(tableDir) { st =>
+      validate(st)
       val (schemaOut, confOut) =
         if (st.columnMapping.isEmpty) (newSchema, st.configuration)
         else mappedEvolution(st)
-      v = versions(tableDir).last + 1
-      commitClaimHook(tableDir, v)
       // the replayed configuration rides the new metaData — a schema
       // evolution must not silently clear unrelated table properties
-      done = writeActions(tableDir, v,
-        Seq(metaDataAction(schemaOut, st.partitionColumns, confOut)))
-      if (!done) commitCasRetries.incrementAndGet()
+      Seq(metaDataAction(schemaOut, st.partitionColumns, confOut))
     }
-    v
   }
 
-  /** ALTER TABLE SET TBLPROPERTIES: commit a metaData-only action
-    * carrying the existing schema/partitioning with `props` merged
-    * into the configuration — how `delta.enableChangeDataFeed` is
-    * switched on for [[mergeInto]]/[[deleteWhere]]'s cdc-action
-    * writes. Schema SHAPE is unchanged, so streaming sources pass the
-    * commit through their schema-change guard. Returns the committed
-    * version. */
   /** ALTER TABLE UNSET TBLPROPERTIES — the removal twin of
     * [[setTableProperties]] (which merges). Unknown keys are a
     * no-op, real Delta's semantics. */
@@ -5297,32 +5165,21 @@ object DeltaLog {
       s"UNSET TBLPROPERTIES ${reserved.mkString(", ")} on $tableDir: " +
         "protocol-bearing properties cannot be removed — a mapped " +
         "table's replay depends on them")
-    var v = -1L
-    var done = false
-    while (!done) {
-      val vs = versions(tableDir)
-      require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
-      val st = replay(tableDir, vs.last)
-      v = vs.last + 1
-      commitClaimHook(tableDir, v)
-      done = writeActions(tableDir, v,
-        Seq(metaDataAction(st.schema, st.partitionColumns,
-          st.configuration -- keys)))
-      if (!done) commitCasRetries.incrementAndGet()
-    }
-    v
+    claimOnHead(tableDir)(st =>
+      Seq(metaDataAction(st.schema, st.partitionColumns,
+        st.configuration -- keys)))
   }
 
+  /** ALTER TABLE SET TBLPROPERTIES: commit a metaData-only action
+    * carrying the existing schema/partitioning with `props` merged
+    * into the configuration — how `delta.enableChangeDataFeed` is
+    * switched on for [[mergeInto]]/[[deleteWhere]]'s cdc-action
+    * writes. Schema SHAPE is unchanged, so streaming sources pass the
+    * commit through their schema-change guard. Returns the committed
+    * version. */
   def setTableProperties(tableDir: String,
-                         props: Map[String, String]): Long = {
-    var v = -1L
-    var done = false
-    while (!done) {
-      val vs = versions(tableDir)
-      require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
-      val st = replay(tableDir, vs.last)
-      v = vs.last + 1
-      commitClaimHook(tableDir, v)
+                         props: Map[String, String]): Long =
+    claimOnHead(tableDir) { st =>
       // properties that ACTIVATE writer capabilities upgrade the
       // protocol in the same commit — ONE combined action (CDF =
       // writer 4 legacy / the changeDataFeed writer feature; CHECK
@@ -5347,14 +5204,10 @@ object DeltaLog {
           else Some(protocolFull(st.minReader, need,
             st.readerFeatures, Set.empty))
         }
-      done = writeActions(tableDir, v,
-        upgrade.toSeq :+
+      upgrade.toSeq :+
         metaDataAction(st.schema, st.partitionColumns,
-          st.configuration ++ props))
-      if (!done) commitCasRetries.incrementAndGet()
+          st.configuration ++ props)
     }
-    v
-  }
 
   /** Test seams, set per [[mergeInto]] call:
     * `lastMergeFilesTotal` — candidate files AFTER partition pruning
@@ -5394,11 +5247,10 @@ object DeltaLog {
     * insert) + cdc action, so CDF readers never mis-derive the file
     * churn.
     *
-    * CONCURRENCY: single writer per table — a lost CAS means the
-    * snapshot changed under the pruning decision, so this fails
-    * loudly for a re-run rather than silently merging into a stale
-    * file set (the [[deleteWhere]] discipline). Returns the
-    * committed version. */
+    * CONCURRENCY: the [[commitRowOp]] conflict-proving discipline —
+    * a lost CAS retries internally when every winner is provably
+    * disjoint from the merge's footprint, and fails loudly for a
+    * re-run otherwise. Returns the committed version. */
   def mergeInto(spark: SparkSession, tableDir: String,
                 source: DataFrame, keys: Seq[String]): Long =
     mergeInto(spark, tableDir, source, keys, None)
@@ -5484,20 +5336,15 @@ object DeltaLog {
       actions: Seq[ObjectNode], ourRemoves: Set[String],
       couldMatch: (String, AddFile) => Boolean, op: String): Long = {
     var checked = base
-    var committed = -1L
-    while (committed < 0) {
-      val head = versions(tableDir).last
-      if (head > checked) {
-        requireWinnersDisjoint(tableDir, checked, head, ourRemoves,
+    claim(tableDir) { vs =>
+      if (vs.last > checked) {
+        requireWinnersDisjoint(tableDir, checked, vs.last, ourRemoves,
           couldMatch, op)
-        checked = head
+        checked = vs.last
         rowOpConflictRetries.incrementAndGet()
       }
-      commitClaimHook(tableDir, head + 1)
-      if (writeActions(tableDir, head + 1, actions)) committed = head + 1
-      else commitCasRetries.incrementAndGet()
+      actions
     }
-    committed
   }
 
   /** [[mergeInto]] with an optional `whenMatchedDelete` arm: source
@@ -6099,19 +5946,14 @@ object DeltaLog {
     * fresh. Returns the committed version (0). */
   def registerFiles(tableDir: String, schema: StructType,
                     partCols: Seq[String],
-                    files: Seq[(String, Map[String, String])]): Long = {
-    require(versions(tableDir).isEmpty,
-      s"registerFiles target $tableDir already has a log — " +
-        "migrations land in a fresh location")
-    require(files.nonEmpty, "nothing to register")
-    val adds = files.sortBy(_._1).map { case (p, pv) =>
-      addAction(p, new File(p).length, pv, stats = Some(statsJson(p)))
+                    files: Seq[(String, Map[String, String])]): Long =
+    claimCreate(tableDir, "registerFiles") {
+      require(files.nonEmpty, "nothing to register")
+      protocolAction() +: metaDataAction(schema, partCols) +:
+        files.sortBy(_._1).map { case (p, pv) =>
+          addAction(p, new File(p).length, pv, stats = Some(statsJson(p)))
+        }
     }
-    require(writeActions(tableDir, 0L,
-      protocolAction() +: metaDataAction(schema, partCols) +: adds),
-      s"racing writer claimed version 0 of fresh target $tableDir")
-    0L
-  }
 
   /** Current state's live files for a cross-format export: absolute
     * path → partition values. */
@@ -6123,43 +5965,5 @@ object DeltaLog {
     (st.schema, st.partitionColumns,
       st.adds.toSeq.sortBy(_._1).map { case (p, a) =>
         (resolve(p), a.partitionValues) })
-  }
-
-  /** Export every committed version of a [[Snapshots]] table as a
-    * Delta-layout table — version k of the log reproduces version
-    * `versions(k)` of the snapshots (each Snapshots version is a full
-    * table state, so each commit is an overwrite). Data files are
-    * hard-linked where the filesystem allows (copy fallback): the
-    * export is metadata work, not a data rewrite. */
-  def exportSnapshots(spark: SparkSession, snapshotsDir: String,
-                      deltaDir: String): Seq[Long] = {
-    val schema = Snapshots.read(spark, snapshotsDir).schema
-    var prev: Seq[String] = Seq.empty
-    Snapshots.versions(snapshotsDir).zipWithIndex.map { case (sv, i) =>
-      val sub = s"part-v$i"
-      Files.createDirectories(Paths.get(deltaDir, sub))
-      val parts = Option(
-          new File(s"$snapshotsDir/v=$sv").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      val rels = parts.map { f =>
-        val dest = Paths.get(deltaDir, sub, f.getName)
-        try Files.createLink(dest, f.toPath)
-        catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-          Files.copy(f.toPath, dest, StandardCopyOption.REPLACE_EXISTING) }
-        s"$sub/${f.getName}"
-      }.toSeq
-      val head: Seq[ObjectNode] =
-        if (i == 0) Seq(protocolAction(), metaDataAction(schema, Seq.empty))
-        else prev.map(p => removeAction(p))
-      require(writeActions(deltaDir, i.toLong,
-        head ++ rels.zip(parts.map(_.length))
-          .map { case (p, s) => addAction(p, s) }),
-        s"export target $deltaDir already carries commit $i — " +
-          "export into a fresh directory")
-      prev = rels
-      i.toLong
-    }
   }
 }

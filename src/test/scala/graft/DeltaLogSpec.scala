@@ -172,7 +172,7 @@ class DeltaLogSpec extends SparkSuite {
     assert(e.getMessage.contains("minReaderVersion"))
   }
 
-  test("commitOverwrite + Snapshots export replay as full table states") {
+  test("commitOverwrite commits replay as full table states") {
     // engine-written log: two overwrite commits
     val dir = Files.createTempDirectory("dlogw").toString + "/t"
     val v0 = sources.DeltaLog.commitOverwrite(
@@ -183,21 +183,6 @@ class DeltaLogSpec extends SparkSuite {
     assert(sources.DeltaLog.readVersion(spark, dir, 0).count() == 2)
     assert(sources.DeltaLog.read(spark, dir)
       .collect().map(_.getLong(0)).toSeq == Seq(3L))
-
-    // Snapshots → Delta layout: version k of the log equals version
-    // k of the snapshots table
-    val snapDir = Files.createTempDirectory("dlogs").toString + "/s"
-    sources.Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), snapDir)
-    sources.Snapshots.commit(Seq((9L, "z")).toDF("k", "s"), snapDir)
-    val deltaDir = Files.createTempDirectory("dlogd").toString + "/d"
-    val vs = sources.DeltaLog.exportSnapshots(spark, snapDir, deltaDir)
-    assert(vs == Seq(0L, 1L))
-    sources.Snapshots.versions(snapDir).zip(vs).foreach { case (sv, dv) =>
-      val want = sources.Snapshots.readVersion(spark, snapDir, sv)
-      val got = sources.DeltaLog.readVersion(spark, deltaDir, dv)
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-        s"snapshot v$sv != delta v$dv")
-    }
   }
 
   test("empty table state (all files removed) reads as zero rows") {
@@ -1265,6 +1250,176 @@ class DeltaLogSpec extends SparkSuite {
     assert(sources.DeltaLog.read(spark, dir)
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 100L, 200L),
       "both the racer's and the loser's rows land exactly once")
+  }
+
+  /** Every message down `t`'s cause chain (Spark wraps a driver-side
+    * commit failure of a DSv2 write). */
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty
+    else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("restore, drop and rename re-derive and retry after a lost claim") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    def keys(dir: String): Seq[Long] = sources.DeltaLog.read(spark, dir)
+      .select("k").collect().map(_.getLong(0)).sorted.toSeq
+    // plant one blind append in the first claim window of `op` on
+    // `dir`: the op loses the claim and must land right after it
+    def raced(dir: String, racer: Seq[Long])(op: => Long): Long = {
+      val before = sources.DeltaLog.commitCasRetries.get
+      val racerV = sources.DeltaLog.versions(dir).last + 1
+      val planted = new java.util.concurrent.atomic.AtomicBoolean(false)
+      sources.DeltaLog.commitClaimHook = (d, _) =>
+        if (d == dir && planted.compareAndSet(false, true))
+          sources.DeltaLog.commitAppend(
+            racer.map(k => (k, s"r$k", k)).toDF("k", "s", "x"), d)
+      val v = try op finally sources.DeltaLog.commitClaimHook = (_, _) => ()
+      assert(planted.get, "the op must reach the claim hook")
+      assert(sources.DeltaLog.commitCasRetries.get >= before + 1,
+        "the lost claim must surface in the retry seam")
+      assert(v == racerV + 1, "the op lands right after the racer")
+      assert(sources.DeltaLog.versions(dir) == (0L to v))
+      v
+    }
+    val base = (1L to 4L).map(k => (k, s"s$k", k)).toDF("k", "s", "x")
+
+    // RESTORE re-derives its removes from the new head: the table
+    // equals the target version, the racer's commit stays in history
+    val r = Files.createTempDirectory("dlretry").toString + "/r"
+    sources.DeltaLog.commitOverwrite(base, r)
+    sources.DeltaLog.commitAppend(Seq((5L, "s5", 5L)).toDF("k", "s", "x"), r)
+    val rv = raced(r, Seq(9L))(sources.DeltaLog.restore(r, 0L))
+    assert(keys(r) == (1L to 4L), "restored rows")
+    assert(sources.DeltaLog.readVersion(spark, r, rv - 1)
+      .select("k").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L, 5L, 9L), "the racer's commit is history")
+
+    // DROP and RENAME re-derive the schema from the new head: the
+    // racer's rows survive under the changed schema
+    val d = Files.createTempDirectory("dlretry").toString + "/d"
+    sources.DeltaLog.commitOverwriteMapped(base, d)
+    raced(d, Seq(9L))(sources.DeltaLog.dropColumnMapped(d, "x"))
+    assert(sources.DeltaLog.read(spark, d).schema.fieldNames.toSeq ==
+      Seq("k", "s"), "dropped schema")
+    assert(keys(d) == Seq(1L, 2L, 3L, 4L, 9L), "racing rows kept")
+
+    val n = Files.createTempDirectory("dlretry").toString + "/n"
+    sources.DeltaLog.commitOverwriteMapped(base, n)
+    raced(n, Seq(9L))(sources.DeltaLog.renameColumnMapped(n, "s", "name"))
+    val renamed = sources.DeltaLog.read(spark, n)
+    assert(renamed.schema == StructType(Seq(StructField("k", LongType),
+      StructField("name", StringType), StructField("x", LongType))),
+      "renamed schema")
+    assert(renamed.filter(col("k") === 9L).select("name").head()
+      .getString(0) == "r9", "racing rows kept, read by the new name")
+    assert(keys(n) == Seq(1L, 2L, 3L, 4L, 9L))
+  }
+
+  test("crash matrix, claim step: a crash at the claim of every Delta commit entry point lands nothing") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val kv = StructType(Seq(StructField("k", LongType),
+      StructField("s", StringType)))
+    def rows(ks: Seq[Long]) = ks.map(k => (k, s"s$k")).toDF("k", "s")
+    def parted(ks: Seq[Long]) = rows(ks).withColumn("p", col("k") % 2)
+    val work = Files.createTempDirectory("dlcrash").toString
+    val ext = s"$work/external"
+    rows(1L to 5L).coalesce(1).write.parquet(ext)
+    val extFiles = new java.io.File(ext).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    val fresh: String => Unit = _ => ()
+    val plain: String => Unit = d => {
+      sources.DeltaLog.commitOverwrite(rows(1L to 20L).repartition(2), d)
+      sources.DeltaLog.commitAppend(rows(21L to 30L), d): Unit
+    }
+    val partitioned: String => Unit = d =>
+      sources.DeltaLog.commitOverwritePartitioned(parted(1L to 20L), d,
+        Seq("p")): Unit
+    val mapped: String => Unit = d =>
+      sources.DeltaLog.commitOverwriteMapped(rows(1L to 20L), d): Unit
+    def dsv2(mode: String): String => Unit = d =>
+      rows(100L to 105L).write.format("graft-delta").mode(mode).save(d)
+    // (entry point, table set-up, the commit under test)
+    val cases: Seq[(String, String => Unit, String => Any)] = Seq(
+      ("createTable", fresh,
+        d => sources.DeltaLog.createTable(d, kv, Seq.empty)),
+      ("commitOverwriteMapped", fresh,
+        d => sources.DeltaLog.commitOverwriteMapped(rows(1L to 5L), d)),
+      ("commitOverwriteMappedId", fresh,
+        d => sources.DeltaLog.commitOverwriteMappedId(rows(1L to 5L), d)),
+      ("registerFiles", fresh, d => sources.DeltaLog.registerFiles(d, kv,
+        Seq.empty, extFiles.map(_ -> Map.empty[String, String]))),
+      ("commitOverwrite", plain,
+        d => sources.DeltaLog.commitOverwrite(rows(100L to 105L), d)),
+      ("commitAppend", plain,
+        d => sources.DeltaLog.commitAppend(rows(100L to 105L), d)),
+      ("commitAppendPartitioned", partitioned,
+        d => sources.DeltaLog.commitAppendPartitioned(
+          parted(100L to 105L), d, Seq("p"))),
+      ("commitAppendIdempotent", plain,
+        d => sources.DeltaLog.commitAppendIdempotent(
+          rows(100L to 105L), d, "app", 1L)),
+      ("commitAppendIdempotent partitioned", partitioned,
+        d => sources.DeltaLog.commitAppendIdempotent(
+          parted(100L to 105L), d, "app", 1L, Seq("p"))),
+      ("commitOverwritePartitioned", partitioned,
+        d => sources.DeltaLog.commitOverwritePartitioned(
+          parted(100L to 105L), d, Seq("p"))),
+      ("restore", plain, d => sources.DeltaLog.restore(d, 0L)),
+      ("dropColumnMapped", mapped,
+        d => sources.DeltaLog.dropColumnMapped(d, "s")),
+      ("renameColumnMapped", mapped,
+        d => sources.DeltaLog.renameColumnMapped(d, "s", "name")),
+      ("addCheckConstraint", plain, d => sources.DeltaLog
+        .addCheckConstraint(spark, d, "pos", "k > 0")),
+      ("addGenerationExpression", d => sources.DeltaLog.commitOverwrite(
+          rows(1L to 5L).withColumn("k2", col("k") * 2), d): Unit,
+        d => sources.DeltaLog.addGenerationExpression(spark, d, "k2",
+          "k * 2")),
+      ("evolveSchema", plain, d => sources.DeltaLog.evolveSchema(d,
+        kv.add(StructField("x", LongType, nullable = true)))),
+      ("setTableProperties", plain, d => sources.DeltaLog
+        .setTableProperties(d, Map("owner" -> "etl"))),
+      ("removeTableProperties", plain, d => sources.DeltaLog
+        .removeTableProperties(d, Seq("owner"))),
+      ("deleteWhere", plain,
+        d => sources.DeltaLog.deleteWhere(spark, d, col("k") <= 5L)),
+      ("deleteWhereKeys", plain, d => sources.DeltaLog.deleteWhereKeys(
+        spark, d, "k", Seq(1L, 2L).toDF("k"))),
+      ("mergeInto", plain, d => sources.DeltaLog.mergeInto(spark, d,
+        rows(25L to 35L), Seq("k"))),
+      ("mergeInto whenMatchedDelete", plain, d => sources.DeltaLog
+        .mergeInto(spark, d, rows(25L to 35L), Seq("k"),
+          Some(col("k") === 25L))),
+      ("compact", plain, d => sources.DeltaLog.compact(spark, d, 1)),
+      ("compactPartitioned", partitioned,
+        d => sources.DeltaLog.compactPartitioned(spark, d)),
+      ("compactZorder", plain, d => sources.DeltaLog.compactZorder(spark,
+        d, Seq("k"), 1)),
+      ("dsv2 append", plain, dsv2("append")),
+      ("dsv2 overwrite", plain, dsv2("overwrite")))
+    cases.zipWithIndex.foreach { case ((name, setup, op), i) =>
+      val d = s"$work/t$i"
+      setup(d)
+      val vs0 = sources.DeltaLog.versions(d)
+      def table(): Seq[String] =
+        if (sources.DeltaLog.versions(d).isEmpty) Seq.empty
+        else sources.DeltaLog.read(spark, d).collect()
+          .map(_.toString).sorted.toSeq
+      val rows0 = table()
+      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+      sources.DeltaLog.commitClaimHook = (dir, _) =>
+        if (dir == d && fired.compareAndSet(false, true))
+          throw new RuntimeException("planted crash at the claim")
+      val e = try withClue(s"$name: ")(intercept[Exception](op(d)))
+        finally sources.DeltaLog.commitClaimHook = (_, _) => ()
+      assert(messages(e).exists(_.contains("planted crash")),
+        s"$name: expected the planted crash, got ${messages(e)}")
+      assert(sources.DeltaLog.versions(d) == vs0,
+        s"$name: a crash at the claim published a version")
+      assert(table() == rows0, s"$name: a crash at the claim changed rows")
+      op(d)
+      assert(sources.DeltaLog.versions(d) == vs0 :+ vs0.size.toLong,
+        s"$name: the retry must land exactly one version")
+    }
   }
 
   test("commit stats ride the distributed footer job, driver opens none") {
