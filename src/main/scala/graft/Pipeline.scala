@@ -73,21 +73,19 @@ object Pipeline {
     // empty window between truncate and load-complete; a snapshot
     // commit swaps atomically (readers see the old version until
     // _SUCCESS lands) and keeps history for time travel.
-    // UNORDERED variants for every commit: the declared queries keep
-    // their presentation sorts, but a table sink needs no total order
-    // and each orderBy here was a full range exchange + sort the
-    // commit threw away (readers re-sort; q84's gate re-sorts the
-    // read-back — guide §2.4, the q08 fact precedent from round 17).
+    // Every commit builds the SINK layout (graft.Layout): no
+    // presentation sort, and key-fanned scans where q84 measured them
+    // to pay; the declared queries keep their sorts and plain scans.
     timed("gold") {
       inParallel(spark,
         () => snapshotCommit(
-          gold.Enrich.ordersEnrichedFanned(spark, sfDir), s"$outDir/gold/orders_enriched"),
+          gold.Enrich.ordersEnriched(spark, sfDir, Layout.Sink), s"$outDir/gold/orders_enriched"),
         () => snapshotCommit(
-          gold.Summaries.dailySalesSummaryFanned(spark, sfDir), s"$outDir/gold/daily_sales_summary"),
+          gold.Summaries.dailySalesSummary(spark, sfDir, Layout.Sink), s"$outDir/gold/daily_sales_summary"),
         () => snapshotCommit(
-          gold.Summaries.customerSegmentsUnordered(spark, sfDir), s"$outDir/gold/customer_segments"),
+          gold.Summaries.customerSegments(spark, sfDir, Layout.Sink), s"$outDir/gold/customer_segments"),
         () => snapshotCommit(
-          gold.Summaries.productPerformanceFanned(spark, sfDir), s"$outDir/gold/product_performance"))
+          gold.Summaries.productPerformance(spark, sfDir, Layout.Sink), s"$outDir/gold/product_performance"))
     }
   }
 
@@ -145,7 +143,7 @@ object Pipeline {
           // before the shuffle does (guide §2.4: don't recompute what
           // one pass already produced). Unpersisted in the finally —
           // nothing outlives the run.
-          val factSrc = warehouse.Star.factOrderLinesFanned(spark, sfDir)
+          val factSrc = warehouse.Star.factOrderLines(spark, sfDir, Layout.Sink)
             .withColumn("month_key",
               col("date_key").cast("int").divide(100).cast("int"))
             .persist()
@@ -212,14 +210,13 @@ object Pipeline {
   /** MV layer: rollups over the fact/base tables. */
   private def mvLayer(spark: SparkSession, sfDir: String,
                       outDir: String): Unit = {
-    // unordered cores, same rationale as the gold layer: a table sink
-    // needs no total order and each orderBy was a dead range exchange
+    // the sink layout, as in the gold layer
     timed("mv") {
       inParallel(spark,
-        () => write(warehouse.Views.mvDailyRevenueFanned(spark, sfDir), s"$outDir/warehouse/mv_daily_revenue"),
-        () => write(warehouse.Views.mvMonthlyRevenueUnordered(spark, sfDir), s"$outDir/warehouse/mv_monthly_revenue"),
-        () => write(warehouse.Views.mvNationRevenueUnordered(spark, sfDir), s"$outDir/warehouse/mv_nation_revenue"),
-        () => write(warehouse.Views.mvHourlyPatternUnordered(spark, sfDir), s"$outDir/warehouse/mv_hourly_pattern"))
+        () => write(warehouse.Views.mvDailyRevenue(spark, sfDir, Layout.Sink), s"$outDir/warehouse/mv_daily_revenue"),
+        () => write(warehouse.Views.mvMonthlyRevenue(spark, sfDir, Layout.Sink), s"$outDir/warehouse/mv_monthly_revenue"),
+        () => write(warehouse.Views.mvNationRevenue(spark, sfDir, Layout.Sink), s"$outDir/warehouse/mv_nation_revenue"),
+        () => write(warehouse.Views.mvHourlyPattern(spark, sfDir, Layout.Sink), s"$outDir/warehouse/mv_hourly_pattern"))
     }
   }
 

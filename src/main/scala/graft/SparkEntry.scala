@@ -21,10 +21,10 @@ object SparkEntry {
     // gold layer (A1-A6, J1/J2, P2, F3/F4/F9/F10)
     "q01_order_items_rollup"  -> (gold.Enrich.orderItemsRollup _),
     "q02_payment_rollup"      -> (gold.Summaries.paymentRollup _),
-    "q03_daily_sales_summary" -> (gold.Summaries.dailySalesSummary _),
-    "q04_customer_segments"   -> (gold.Summaries.customerSegments _),
-    "q05_product_performance" -> (gold.Summaries.productPerformance _),
-    "q06_orders_enriched"     -> (gold.Enrich.ordersEnriched _),
+    "q03_daily_sales_summary" -> (gold.Summaries.dailySalesSummary(_, _)),
+    "q04_customer_segments"   -> (gold.Summaries.customerSegments(_, _)),
+    "q05_product_performance" -> (gold.Summaries.productPerformance(_, _)),
+    "q06_orders_enriched"     -> (gold.Enrich.ordersEnriched(_, _)),
     // relational ops (J6, O2, §2.7, F3/P9, P8/F4)
     "q07_anti_join_customers" -> (ops.Relational.customersWithoutBigOrders _),
     "q21_top_orders"          -> (ops.Relational.topOrders _),
@@ -38,16 +38,16 @@ object SparkEntry {
     "q12_silver_compaction"     -> (cdc.Cdc.silverCompaction _),
     "q13_merge_upsert"          -> (cdc.Cdc.mergeUpsert _),
     // warehouse star schema (F11/F14/F15, J3, S11)
-    "q08_fact_order_lines"   -> (warehouse.Star.factOrderLines _),
+    "q08_fact_order_lines"   -> (warehouse.Star.factOrderLines(_, _)),
     "q19_dim_order_status"   -> (warehouse.Star.dimOrderStatus _),
     "q20_event_type_keys"    -> (warehouse.Star.eventTypeKeys _),
     "q26_surrogate_join"     -> (warehouse.Star.surrogateJoinConsistency _),
     "q27_dim_customer"       -> (warehouse.Star.dimCustomer _),
     // materialized views (A9-A12, J5)
-    "q14_mv_daily_revenue"   -> (warehouse.Views.mvDailyRevenue _),
-    "q15_mv_monthly_revenue" -> (warehouse.Views.mvMonthlyRevenue _),
-    "q16_mv_nation_revenue"  -> (warehouse.Views.mvNationRevenue _),
-    "q17_mv_hourly_pattern"  -> (warehouse.Views.mvHourlyPattern _),
+    "q14_mv_daily_revenue"   -> (warehouse.Views.mvDailyRevenue(_, _)),
+    "q15_mv_monthly_revenue" -> (warehouse.Views.mvMonthlyRevenue(_, _)),
+    "q16_mv_nation_revenue"  -> (warehouse.Views.mvNationRevenue(_, _)),
+    "q17_mv_hourly_pattern"  -> (warehouse.Views.mvHourlyPattern(_, _)),
     // date dimension (S10, F18-F20)
     "q18_dim_time"           -> (warehouse.DateDim.dimTime _),
     // scalar function surface (F6-F9)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Parquet table registry over the driver's TPC-H-ish testdata
   * (repo:TESTDATA.md). Plays the role of the reference's per-table
@@ -99,13 +99,9 @@ object Tables {
       _ => load(spark, sfDir, name).rdd.getNumPartitions).intValue()
 
   /** [[load]] with an ADAPTIVE fan-out for NARROW inputs (guide §2.5,
-    * input skew — the batch twin of Bronze.fanOut): when the table's
-    * planned scan parallelism is well below the session's cores, a
-    * narrow scan carries every fused map-side operator on ONE thread
-    * (the testdata's single-row-group files plan as exactly one task).
-    * The rebalance moves the scan's rows once, keyed on `keys` so a
-    * following groupBy on (a superset of) them needs no second
-    * exchange.
+    * input skew — the batch twin of Bronze.fanOut): [[fanOut]] of the
+    * plain scan, keyed on `keys` so a following groupBy on (a superset
+    * of) them needs no second exchange.
     *
     * APPLY ONLY where the downstream per-row work dominates the
     * rebalance — explode + per-shingle/token hashing builders, vector
@@ -113,20 +109,29 @@ object Tables {
     * and inside the already-concurrent q84 pipeline this HURT
     * (q84 8.2→13.3 s, q15 0.19→0.38 s — extra exchange + 32-task
     * stage overhead with no idle cores to soak up), so those sites
-    * deliberately do NOT use it.
+    * deliberately do NOT use it; [[Layout.Sink]] names the pipeline
+    * scans re-measured positive since. */
+  def loadFanned(spark: SparkSession, sfDir: String, name: String,
+                 keys: Column*): DataFrame =
+    fanOut(load(spark, sfDir, name), scanParallelism(spark, sfDir, name),
+      keys: _*)
+
+  /** The narrow-input rule over any frame `df` derived from a scan that
+    * plans `scanParts` tasks: when that is well below the session's
+    * cores, every fused map-side operator rides a few threads (the
+    * testdata's single-row-group files plan as exactly one task), so
+    * the rows move once into `defaultParallelism` partitions, hashed
+    * on `keys` (round-robin when none are given).
     *
     * Scale-honest by construction: the decision reads the PLANNED
     * split count, so a production table whose scan already yields ≥
     * cores/2 tasks passes through untouched — no plan change. Only
     * pathological layouts (few huge unsplittable files) pay the one
     * rebalance, the standard remedy for them. */
-  def loadFanned(spark: SparkSession, sfDir: String, name: String,
-                 keys: org.apache.spark.sql.Column*): DataFrame = {
-    val df = load(spark, sfDir, name)
-    val target = spark.sparkContext.defaultParallelism
-    if (scanParallelism(spark, sfDir, name) >= math.max(1, target / 2)) df
-    else if (keys.nonEmpty) df.repartition(target, keys: _*)
-    else df.repartition(target)
+  def fanOut(df: DataFrame, scanParts: Int, keys: Column*): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (scanParts >= math.max(1, target / 2)) df
+    else df.repartition(target, keys: _*)
   }
 
   /** Register every testdata table as a session temp view, so the
@@ -147,4 +152,46 @@ object Tables {
   def registerViews(spark: SparkSession, sfDir: String): Unit =
     if (viewsRegistered.put(spark, sfDir) != sfDir)
       names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+}
+
+/** Where a gold/MV builder's frame goes, and so what shape it takes.
+  * Each of the nine medallion tables (the four gold tables, the fact,
+  * the four MV rollups) has ONE builder taking a layout:
+  *
+  *  - [[Layout.Declared]] — the gated query: plain scans and the
+  *    presentation sort the oracle compares against.
+  *  - [[Layout.Sink]] — the q84 pipeline's table write. A table sink
+  *    needs no total order (readers re-sort; q84's gate re-sorts the
+  *    read-back), and each sink-side orderBy was a full range exchange
+  *    + sort the commit threw away (guide §2.4; for the fact, a global
+  *    sort feeding the pipeline's repartitionByRange is an extra
+  *    shuffle the optimizer cannot remove across its persist). The one
+  *    scan a table routes through [[scan]] is key-fanned
+  *    ([[Tables.loadFanned]]): on the testdata's one-row-group files a
+  *    wide expand/partial aggregate or broadcast probe otherwise rides
+  *    ONE scan task, which under q84's branch concurrency gets a
+  *    fraction of the execution-memory pool and spills (mv_daily
+  *    measured ~264 MB, 23× its standalone CPU, round 18). Fan-out
+  *    pays only under the pipeline's FAIR pools (a round-17 blanket
+  *    retest under FIFO scheduling was negative), and the four tables
+  *    whose pipeline write measured worse fanned keep [[Tables.load]].
+  *
+  * Both layouts build the same rows: same operators over the same
+  * input, and the exact count/distinct/decimal aggregates are
+  * partition-order-insensitive. */
+sealed abstract class Layout(sink: Boolean) {
+  /** The builder's fan-out candidate scan of table `name`. */
+  def scan(spark: SparkSession, dir: String, name: String,
+           keys: Column*): DataFrame =
+    if (sink) Tables.loadFanned(spark, dir, name, keys: _*)
+    else Tables.load(spark, dir, name)
+
+  /** The finished frame, ordered by `cols` when presented. */
+  def present(df: DataFrame, cols: Column*): DataFrame =
+    if (sink) df else df.orderBy(cols: _*)
+}
+
+object Layout {
+  case object Declared extends Layout(sink = false)
+  case object Sink extends Layout(sink = true)
 }

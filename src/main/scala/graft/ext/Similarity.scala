@@ -798,16 +798,13 @@ object Similarity {
       // the exact expression shape ((xx + cc) − 2·xc), so every
       // comparison — and therefore the argmin under ties — is
       // bit-identical to the oracle's.
-      // adaptive narrow-input fan-out (Tables.loadFanned's rule,
-      // applied to the derived vectors df): the subvector slicing and
-      // the ×PqCents dot-product fan-out below otherwise run fused on
-      // the single embeddings scan task; keyed on vec_id so the
-      // argmin aggregate's distribution is pre-satisfied
-      val vWide =
-        if (graft.Tables.scanParallelism(spark, dir, "embeddings") >=
-            math.max(1, spark.sparkContext.defaultParallelism / 2)) v
-        else v.repartition(
-          spark.sparkContext.defaultParallelism, col("vec_id"))
+      // adaptive narrow-input fan-out (Tables.fanOut, applied to the
+      // derived vectors df): the subvector slicing and the ×PqCents
+      // dot-product fan-out below otherwise run fused on the single
+      // embeddings scan task; keyed on vec_id so the argmin
+      // aggregate's distribution is pre-satisfied
+      val vWide = graft.Tables.fanOut(v,
+        graft.Tables.scanParallelism(spark, dir, "embeddings"), col("vec_id"))
       val subs = pqSubs(vWide).withColumn("xx", dot(col("xs"), col("xs")))
       val cb = pqCodebook(v).withColumn("cc", dot(col("cs"), col("cs")))
       subs.join(broadcast(cb), col("s") === col("cb_s"))

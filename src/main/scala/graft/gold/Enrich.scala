@@ -3,7 +3,7 @@ package graft.gold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Layout, Tables}
 import graft.util.Cols._
 
 /** Gold-layer enrichment — the Spark-native rebuild of the reference's
@@ -50,39 +50,17 @@ object Enrich {
   /** Flagship: orders enriched with customer geo + item rollup
     * (reference: spark/batch_gold.py:104-153 — 4-way left-join chain
     * then a wide typed projection with date parts, coalesce defaults
-    * and a CASE band). */
-  def ordersEnriched(spark: SparkSession, dir: String): DataFrame =
-    ordersEnrichedUnordered(spark, dir).orderBy(col("o_orderkey"))
-
-  /** [[ordersEnriched]] WITHOUT the gate's global presentation sort —
-    * for the q84 pipeline's snapshot write: a table sink doesn't need
-    * a total order, and the orderBy costs a full range exchange +
-    * sort of the widest gold projection that the commit throws away
-    * (the q08 factOrderLinesUnordered precedent, guide §2.4). The
-    * declared q01 query keeps its sort. */
-  def ordersEnrichedUnordered(spark: SparkSession, dir: String): DataFrame =
-    ordersEnrichedCore(spark, dir, Tables.load(spark, dir, "lineitem"))
-
-  /** The pipeline-sink variant: SAME joins/projection, but the
-    * lineitem rollup input is key-fanned — the rollup's
-    * expand+partial-aggregate (~600k (orderkey, partkey) groups)
-    * otherwise rides the testdata's one-row-group scan task, which
-    * under q84's branch concurrency is starved of execution memory
-    * (the mv_daily spill class, round 18). Result-identical (same
-    * core; exact aggregates are partition-order-insensitive);
-    * declared q01/q06 keep the plain scan and their plans. */
-  def ordersEnrichedFanned(spark: SparkSession, dir: String): DataFrame =
-    ordersEnrichedCore(spark, dir,
-      Tables.loadFanned(spark, dir, "lineitem", col("l_orderkey")))
-
-  private def ordersEnrichedCore(spark: SparkSession, dir: String,
-                                 lineitem: DataFrame): DataFrame = {
+    * and a CASE band). The [[Layout]] scan is the lineitem rollup's
+    * input: its expand + partial aggregate (~600k (orderkey, partkey)
+    * groups) is the widest map-side work here. */
+  def ordersEnriched(spark: SparkSession, dir: String,
+                     layout: Layout = Layout.Declared): DataFrame = {
     val orders   = Tables.load(spark, dir, "orders")
     val customer = Tables.load(spark, dir, "customer")
     val nation   = Tables.load(spark, dir, "nation")
     val region   = Tables.load(spark, dir, "region")
 
-    val items = lineitem
+    val items = layout.scan(spark, dir, "lineitem", col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(
         count(lit(1)).as("total_items"),
@@ -99,7 +77,7 @@ object Enrich {
         col("c_custkey"), col("c_name"), col("c_mktsegment"), col("c_acctbal"),
         col("n_name").as("nation_name"), col("r_name").as("region_name"))
 
-    orders
+    layout.present(orders
       .join(geo, orders("o_custkey") === geo("c_custkey"), "left")
       .join(items, orders("o_orderkey") === items("l_orderkey"), "left")
       .select(
@@ -118,7 +96,8 @@ object Enrich {
         coalesce(col("unique_parts"), lit(0L)).as("unique_parts"),
         when(col("o_totalprice") < 50000, "low")
           .when(col("o_totalprice") < 150000, "mid")
-          .otherwise("high").as("price_band"))
+          .otherwise("high").as("price_band")),
+      col("o_orderkey"))
   }
 
   val ordersEnrichedSql: String =

@@ -3,7 +3,7 @@ package graft.gold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Layout, Tables}
 import graft.util.Cols._
 
 /** Gold-layer summary tables — Spark-native rebuilds of the reference's
@@ -48,31 +48,17 @@ object Summaries {
 
   /** A3 + O1: daily sales summary grouped on a derived date string,
     * globally sorted (reference: spark/batch_gold.py:168-180). */
-  def dailySalesSummary(spark: SparkSession, dir: String): DataFrame =
-    dailySalesSummaryUnordered(spark, dir).orderBy(col("order_date"))
-
-  /** [[dailySalesSummary]] without the presentation sort — the q84
-    * pipeline's snapshot write re-reads and re-sorts downstream, so
-    * the sink-side global sort is a dead exchange (guide §2.4; the
-    * declared q03 query keeps its sort). */
-  def dailySalesSummaryUnordered(spark: SparkSession, dir: String): DataFrame =
-    dailySalesSummaryCore(Tables.load(spark, dir, "orders"))
-
-  /** Pipeline-sink variant over a key-fanned orders scan (the
-    * mv_daily spill class — see [[graft.warehouse.Views
-    * .mvDailyRevenueFanned]]); declared q03 keeps the plain scan. */
-  def dailySalesSummaryFanned(spark: SparkSession, dir: String): DataFrame =
-    dailySalesSummaryCore(
-      Tables.loadFanned(spark, dir, "orders", col("o_orderdate")))
-
-  private def dailySalesSummaryCore(orders: DataFrame): DataFrame =
-    orders
-      .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"))
-      .agg(
-        count(lit(1)).as("total_orders"),
-        countDistinct(col("o_custkey")).as("unique_customers"),
-        dsum(col("o_totalprice")).as("total_revenue"),
-        davg(col("o_totalprice")).as("avg_order_value"))
+  def dailySalesSummary(spark: SparkSession, dir: String,
+                        layout: Layout = Layout.Declared): DataFrame =
+    layout.present(
+      layout.scan(spark, dir, "orders", col("o_orderdate"))
+        .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"))
+        .agg(
+          count(lit(1)).as("total_orders"),
+          countDistinct(col("o_custkey")).as("unique_customers"),
+          dsum(col("o_totalprice")).as("total_revenue"),
+          davg(col("o_totalprice")).as("avg_order_value")),
+      col("order_date"))
 
   val dailySalesSummarySql: String =
     s"""SELECT strftime(o_orderdate, '%Y-%m-%d') AS order_date,
@@ -86,13 +72,8 @@ object Summaries {
     * max(o_orderdate) crosses the driver boundary as a scalar literal,
     * exactly like the reference (spark/batch_gold.py:195), then feeds
     * datediff inside the per-customer aggregate (:197-216). */
-  def customerSegments(spark: SparkSession, dir: String): DataFrame =
-    customerSegmentsUnordered(spark, dir).orderBy(col("o_custkey"))
-
-  /** [[customerSegments]] without the presentation sort (the q84
-    * pipeline's table write — same rationale as
-    * [[dailySalesSummaryUnordered]]). */
-  def customerSegmentsUnordered(spark: SparkSession, dir: String): DataFrame = {
+  def customerSegments(spark: SparkSession, dir: String,
+                       layout: Layout = Layout.Declared): DataFrame = {
     val orders = Tables.load(spark, dir, "orders")
     // string-typed scalar round-trip: o_orderdate is TIMESTAMP_NTZ in
     // Spark 4 (parquet isAdjustedToUTC=false), so head() yields a
@@ -101,7 +82,7 @@ object Summaries {
     val maxDateStr = orders
       .agg(max(date_format(col("o_orderdate"), "yyyy-MM-dd")))
       .head().getString(0)
-    orders.groupBy(col("o_custkey"))
+    layout.present(orders.groupBy(col("o_custkey"))
       .agg(
         datediff(to_date(lit(maxDateStr)), max(col("o_orderdate")))
           .as("recency_days"),
@@ -114,7 +95,8 @@ object Summaries {
              col("monetary") >= 3000000.0, "VIP")
           .when(col("recency_days") <= 730 && col("frequency") >= 5, "Regular")
           .when(col("recency_days") <= 1460, "At Risk")
-          .otherwise("Lost"))
+          .otherwise("Lost")),
+      col("o_custkey"))
   }
 
   val customerSegmentsSql: String =
@@ -138,38 +120,25 @@ object Summaries {
     * enrich with the part dimension (reference: spark/batch_gold.py:233-250).
     * part is the small side: Catalyst/AQE broadcasts it under the default
     * threshold; at 100 TB it stays orders of magnitude below lineitem. */
-  def productPerformance(spark: SparkSession, dir: String): DataFrame =
-    productPerformanceUnordered(spark, dir).orderBy(col("product_id"))
-
-  /** [[productPerformance]] without the presentation sort (the q84
-    * pipeline's table write — same rationale as
-    * [[dailySalesSummaryUnordered]]). */
-  def productPerformanceUnordered(spark: SparkSession, dir: String): DataFrame =
-    productPerformanceCore(spark, dir, Tables.load(spark, dir, "lineitem"))
-
-  /** Pipeline-sink variant over a key-fanned lineitem scan (the
-    * mv_daily spill class); declared q05 keeps the plain scan. */
-  def productPerformanceFanned(spark: SparkSession, dir: String): DataFrame =
-    productPerformanceCore(spark, dir,
-      Tables.loadFanned(spark, dir, "lineitem", col("l_partkey")))
-
-  private def productPerformanceCore(spark: SparkSession, dir: String,
-                                     li: DataFrame): DataFrame = {
+  def productPerformance(spark: SparkSession, dir: String,
+                         layout: Layout = Layout.Declared): DataFrame = {
     val part = Tables.load(spark, dir, "part")
-    val agg = li.groupBy(col("l_partkey"))
+    val agg = layout.scan(spark, dir, "lineitem", col("l_partkey"))
+      .groupBy(col("l_partkey"))
       .agg(
         count(lit(1)).as("times_sold"),
         countDistinct(col("l_orderkey")).as("order_count"),
         dsum(col("l_extendedprice")).as("total_revenue"),
         davg(col("l_extendedprice")).as("avg_price"),
         dsum(col("l_quantity")).as("total_qty"))
-    agg.join(part, agg("l_partkey") === part("p_partkey"), "left")
+    layout.present(agg.join(part, agg("l_partkey") === part("p_partkey"), "left")
       .select(
         col("l_partkey").as("product_id"),
         coalesce(col("p_name"), lit("UNKNOWN")).as("product_name"),
         coalesce(col("p_brand"), lit("UNKNOWN")).as("product_brand"),
         col("times_sold"), col("order_count"),
-        col("total_revenue"), col("avg_price"), col("total_qty"))
+        col("total_revenue"), col("avg_price"), col("total_qty")),
+      col("product_id"))
   }
 
   val productPerformanceSql: String =

@@ -1994,7 +1994,8 @@ object DeltaLog {
   /** Commit `df` as the table's next version with OVERWRITE semantics
     * (previous adds removed — the reference's
     * `.mode("overwrite")` Delta writes, spark/batch_gold.py:156).
-    * Data files land under `part-v<version>/`; the first commit also
+    * Data files land under a fresh `part-<uuid>/` dir (named by UUID,
+    * not version, so racing writers never collide); the first commit also
     * carries protocol + metaData. Returns the committed version. */
   def commitOverwrite(df: DataFrame, tableDir: String): Long =
     commit(df, tableDir, "commitOverwrite", overwrite = true,

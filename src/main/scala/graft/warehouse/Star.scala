@@ -3,7 +3,7 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Layout, Tables}
 
 /** Warehouse star schema — the Spark-native rebuild of the reference's
   * `load_warehouse.py`: xxhash64 surrogate keys (F14), literal-map dict
@@ -35,42 +35,24 @@ object Star {
     * (spark/load_warehouse.py:200). Note: at 100 TB the orders side is
     * NOT broadcastable — the production shape is a shuffle join on
     * l_orderkey (or bucketed co-location); the hint here reproduces the
-    * reference's stated plan at its own scale. */
-  def factOrderLines(spark: SparkSession, dir: String): DataFrame =
-    factOrderLinesUnordered(spark, dir)
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** The fact rows WITHOUT the q08 gate's global presentation sort —
-    * for writers that immediately re-cluster (the q84 pipeline's
-    * range-partitioned fact layout): a global sort feeding a
-    * repartitionByRange is a full extra shuffle+sort the next exchange
-    * throws away, and the optimizer can't remove it across the
-    * pipeline's persist boundary (round 17, guide §2.4). */
-  def factOrderLinesUnordered(spark: SparkSession, dir: String): DataFrame =
-    factOrderLinesCore(spark, dir, Tables.load(spark, dir, "lineitem"))
-
-  /** Pipeline-sink variant: SAME join/projection over a key-fanned
-    * lineitem scan — the broadcast probe + wide projection of 600k
-    * rows otherwise ride the testdata's one-row-group scan task under
-    * q84's branch concurrency (the mv_daily spill class, round 18).
-    * Result-identical; declared q08 keeps the plain scan and plan. */
-  def factOrderLinesFanned(spark: SparkSession, dir: String): DataFrame =
-    factOrderLinesCore(spark, dir,
-      Tables.loadFanned(spark, dir, "lineitem", col("l_orderkey")))
-
-  private def factOrderLinesCore(spark: SparkSession, dir: String,
-                                 li: DataFrame): DataFrame = {
+    * reference's stated plan at its own scale. The [[Layout]] scan is
+    * the probe side of that broadcast join. */
+  def factOrderLines(spark: SparkSession, dir: String,
+                     layout: Layout = Layout.Declared): DataFrame = {
+    val li = layout.scan(spark, dir, "lineitem", col("l_orderkey"))
     val orders = Tables.load(spark, dir, "orders")
-    li.join(broadcast(orders), li("l_orderkey") === orders("o_orderkey"), "left")
-      .select(
-        col("l_orderkey"), col("l_linenumber"),
-        date_format(col("o_orderdate"), "yyyyMMdd").cast("int").as("date_key"),
-        coalesce(element_at(statusKeyMap, col("o_orderstatus")), lit(0))
-          .as("status_key"),
-        col("l_extendedprice").as("unit_price"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("net_amount"),
-        (col("l_quantity") * col("l_tax")).as("tax_units"))
+    layout.present(
+      li.join(broadcast(orders), li("l_orderkey") === orders("o_orderkey"), "left")
+        .select(
+          col("l_orderkey"), col("l_linenumber"),
+          date_format(col("o_orderdate"), "yyyyMMdd").cast("int").as("date_key"),
+          coalesce(element_at(statusKeyMap, col("o_orderstatus")), lit(0))
+            .as("status_key"),
+          col("l_extendedprice").as("unit_price"),
+          (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+            .as("net_amount"),
+          (col("l_quantity") * col("l_tax")).as("tax_units")),
+      col("l_orderkey"), col("l_linenumber"))
   }
 
   val factOrderLinesSql: String =

@@ -3,7 +3,7 @@ package graft.warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Layout, Tables}
 import graft.util.Cols._
 
 /** The reference's 7 ClickHouse materialized views re-expressed as
@@ -19,43 +19,21 @@ import graft.util.Cols._
   */
 object Views {
 
-  /** A9: daily rollup (04_materialized_views.sql:11-25). */
-  def mvDailyRevenue(spark: SparkSession, dir: String): DataFrame =
-    mvDailyRevenueUnordered(spark, dir).orderBy(col("ship_date"))
-
-  /** [[mvDailyRevenue]] without the presentation sort — the q84
-    * pipeline's MV writes need no total order (readers re-sort), and
-    * each sink-side orderBy was a dead range exchange (guide §2.4,
-    * the gold-layer precedent; declared q14 keeps its sort). */
-  def mvDailyRevenueUnordered(spark: SparkSession, dir: String): DataFrame =
-    mvDailyRevenueCore(Tables.load(spark, dir, "lineitem"))
-
-  /** The pipeline-sink variant: SAME aggregate over a key-fanned scan.
-    * The two-countDistinct expand triples the row count before the
-    * partial aggregate, and on the testdata's one-row-group scan that
-    * whole ~1M-group hash map rides ONE task — under the pipeline's
-    * branch concurrency its execution-memory share is a fraction of
-    * the pool and the task SPILLS (~264 MB measured round 18, 23× the
-    * standalone CPU). Fanning the scan 32 ways splits the map below
-    * every task's share. Result-identical by construction (same
-    * [[mvDailyRevenueCore]]; exact count/distinct/decimal aggregates
-    * are partition-order-insensitive); declared q14 keeps the plain
-    * scan and its unchanged plan. The round-17 blanket fan-out retest
-    * was negative under FIFO scheduling — re-measured positive after
-    * the FAIR-pool + cheap-bloom changes removed the core contention
-    * that made the extra exchange a loss. */
-  def mvDailyRevenueFanned(spark: SparkSession, dir: String): DataFrame =
-    mvDailyRevenueCore(
-      Tables.loadFanned(spark, dir, "lineitem", col("l_shipdate")))
-
-  private def mvDailyRevenueCore(li: DataFrame): DataFrame =
-    li.groupBy(date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_date"))
-      .agg(
-        count(lit(1)).as("line_count"),
-        countDistinct(col("l_orderkey")).as("unique_orders"),
-        countDistinct(col("l_partkey")).as("unique_parts"),
-        dsum(col("l_extendedprice")).as("revenue"),
-        davg(col("l_quantity")).as("avg_qty"))
+  /** A9: daily rollup (04_materialized_views.sql:11-25). The
+    * [[Layout]] scan feeds the two-countDistinct expand, which triples
+    * the row count before the partial aggregate (~1M groups). */
+  def mvDailyRevenue(spark: SparkSession, dir: String,
+                     layout: Layout = Layout.Declared): DataFrame =
+    layout.present(
+      layout.scan(spark, dir, "lineitem", col("l_shipdate"))
+        .groupBy(date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_date"))
+        .agg(
+          count(lit(1)).as("line_count"),
+          countDistinct(col("l_orderkey")).as("unique_orders"),
+          countDistinct(col("l_partkey")).as("unique_parts"),
+          dsum(col("l_extendedprice")).as("revenue"),
+          davg(col("l_quantity")).as("avg_qty")),
+      col("ship_date"))
 
   val mvDailyRevenueSql: String =
     s"""SELECT strftime(l_shipdate, '%Y-%m-%d') AS ship_date,
@@ -67,20 +45,17 @@ object Views {
        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** A10: monthly rollup (04_materialized_views.sql:30-42). */
-  def mvMonthlyRevenue(spark: SparkSession, dir: String): DataFrame =
-    mvMonthlyRevenueUnordered(spark, dir)
-      .orderBy(col("ship_year"), col("ship_month"))
-
-  /** Unordered core for the pipeline write (see
-    * [[mvDailyRevenueUnordered]]). */
-  def mvMonthlyRevenueUnordered(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "lineitem")
-      .groupBy(year(col("l_shipdate")).as("ship_year"),
-        month(col("l_shipdate")).as("ship_month"))
-      .agg(
-        count(lit(1)).as("line_count"),
-        dsum(col("l_extendedprice")).as("revenue"),
-        davg(col("l_extendedprice")).as("avg_price"))
+  def mvMonthlyRevenue(spark: SparkSession, dir: String,
+                       layout: Layout = Layout.Declared): DataFrame =
+    layout.present(
+      Tables.load(spark, dir, "lineitem")
+        .groupBy(year(col("l_shipdate")).as("ship_year"),
+          month(col("l_shipdate")).as("ship_month"))
+        .agg(
+          count(lit(1)).as("line_count"),
+          dsum(col("l_extendedprice")).as("revenue"),
+          davg(col("l_extendedprice")).as("avg_price")),
+      col("ship_year"), col("ship_month"))
 
   val mvMonthlyRevenueSql: String =
     s"""SELECT CAST(year(l_shipdate) AS INT) AS ship_year,
@@ -93,23 +68,21 @@ object Views {
   /** A11 + J5: join-then-group rollup by a dimension attribute —
     * revenue by supplier nation (04_materialized_views.sql:64-76
     * sales-by-state analog). supplier and nation broadcast. */
-  def mvNationRevenue(spark: SparkSession, dir: String): DataFrame =
-    mvNationRevenueUnordered(spark, dir).orderBy(col("nation_name"))
-
-  /** Unordered core for the pipeline write (see
-    * [[mvDailyRevenueUnordered]]). */
-  def mvNationRevenueUnordered(spark: SparkSession, dir: String): DataFrame = {
+  def mvNationRevenue(spark: SparkSession, dir: String,
+                      layout: Layout = Layout.Declared): DataFrame = {
     val li = Tables.load(spark, dir, "lineitem")
     val supplier = Tables.load(spark, dir, "supplier")
     val nation = Tables.load(spark, dir, "nation")
-    li.join(broadcast(supplier), li("l_suppkey") === supplier("s_suppkey"), "left")
-      .join(broadcast(nation), supplier("s_nationkey") === nation("n_nationkey"), "left")
-      .groupBy(coalesce(col("n_name"), lit("UNKNOWN")).as("nation_name"))
-      .agg(
-        count(lit(1)).as("line_count"),
-        countDistinct(col("l_suppkey")).as("unique_suppliers"),
-        dsum(col("l_extendedprice")).as("revenue"),
-        davg(col("l_discount"), 4).as("avg_discount"))
+    layout.present(
+      li.join(broadcast(supplier), li("l_suppkey") === supplier("s_suppkey"), "left")
+        .join(broadcast(nation), supplier("s_nationkey") === nation("n_nationkey"), "left")
+        .groupBy(coalesce(col("n_name"), lit("UNKNOWN")).as("nation_name"))
+        .agg(
+          count(lit(1)).as("line_count"),
+          countDistinct(col("l_suppkey")).as("unique_suppliers"),
+          dsum(col("l_extendedprice")).as("revenue"),
+          davg(col("l_discount"), 4).as("avg_discount")),
+      col("nation_name"))
   }
 
   val mvNationRevenueSql: String =
@@ -126,22 +99,19 @@ object Views {
   /** A12 + F18/F19: hourly pattern by (hour, day-of-week) with weekend
     * flag (04_materialized_views.sql:117-126). Spark dayofweek is Sun=1;
     * the oracle normalizes DuckDB's Sun=0 (SURVEY §7.4). */
-  def mvHourlyPattern(spark: SparkSession, dir: String): DataFrame =
-    mvHourlyPatternUnordered(spark, dir)
-      .orderBy(col("event_hour"), col("event_dow"))
-
-  /** Unordered core for the pipeline write (see
-    * [[mvDailyRevenueUnordered]]). */
-  def mvHourlyPatternUnordered(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "events")
-      .groupBy(hour(col("ts")).as("event_hour"),
-        dayofweek(col("ts")).as("event_dow"))
-      .agg(
-        count(lit(1)).as("event_count"),
-        dsum(col("value")).as("total_value"))
-      .withColumn("is_weekend", col("event_dow").isin(1, 7))
-      .select(col("event_hour"), col("event_dow"), col("is_weekend"),
-        col("event_count"), col("total_value"))
+  def mvHourlyPattern(spark: SparkSession, dir: String,
+                      layout: Layout = Layout.Declared): DataFrame =
+    layout.present(
+      Tables.load(spark, dir, "events")
+        .groupBy(hour(col("ts")).as("event_hour"),
+          dayofweek(col("ts")).as("event_dow"))
+        .agg(
+          count(lit(1)).as("event_count"),
+          dsum(col("value")).as("total_value"))
+        .withColumn("is_weekend", col("event_dow").isin(1, 7))
+        .select(col("event_hour"), col("event_dow"), col("is_weekend"),
+          col("event_count"), col("total_value")),
+      col("event_hour"), col("event_dow"))
 
   val mvHourlyPatternSql: String =
     s"""SELECT CAST(hour(ts) AS INT) AS event_hour,
