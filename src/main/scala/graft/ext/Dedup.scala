@@ -49,16 +49,6 @@ object Dedup {
   private[ext] def shingles(c: Column): Column =
     graft.functions.TextExprs.shingles(c, 3)
 
-  /** The declarative spelling [[graft.functions.Shingles]] replaced —
-    * kept as the parity witness ExtSpec compares against. */
-  private[graft] def shinglesDeclarative(c: Column): Column = {
-    val toks = tokens(c)
-    when(size(toks) >= 3,
-      array_distinct(transform(sequence(lit(1), size(toks) - 2),
-        i => concat_ws(" ", slice(toks, i, lit(3))))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   private[ext] val shinglesSql =
     """list_distinct(list_transform(
       |    range(1, len(regexp_split_to_array(text, '\s+')) - 1),
@@ -1227,54 +1217,53 @@ object Dedup {
     * the spirit of Lee et al. 2022 ("Deduplicating Training Data Makes
     * Language Models Better" — their ExactSubstr removes ≥50-token
     * spans that recur anywhere in the corpus). Every [[SpanTokens]]-
-    * token window is hashed across the corpus; a window occurring in
+    * token window is keyed across the corpus; a window occurring in
     * ≥2 distinct documents is a repeated span, and each document
     * reports its repeated-span count plus the EXACT number of tokens
     * covered by the union of its repeated windows (overlapping windows
-    * merged interval-style: contribution = span end minus the running
-    * max end of everything before it — one ordered pass per doc,
-    * all-integer, so both engines agree bitwise). `dup_frac` is the
-    * per-doc fraction a substring-level deduper would strip.
+    * merged interval-style, all-integer, so both engines agree
+    * bitwise). `dup_frac` is the per-doc fraction a substring-level
+    * deduper would strip.
+    *
+    * Coverage: the oracle's contribution per window is its end minus
+    * the running max end of the doc's earlier repeated windows. Every
+    * window has the same length and a doc's start positions are
+    * unique, so that running max is the previous window's end and the
+    * contribution is `least(SpanTokens, pos − lag(pos))` —
+    * [[SpanTokens]] for a doc's first window. One lag per doc instead
+    * of an unbounded-preceding frame.
     *
     * Differs from doc-level shingle dedup (q33/q58): those score DOC
     * pairs by shared-shingle counts; this measures WHICH SLICES of
     * each doc are boilerplate, the pre-step of span excision.
     *
-    * Scale: explode is linear in corpus tokens; the repeated-window
-    * reduction is one hash exchange on the span key (df-cap thinking
-    * applies — a stop-phrase span has bounded effect because only
-    * DISTINCT membership ≥2 is asked, not pairs); the coverage merge
-    * is one window pass keyed by doc. Nothing is quadratic. */
+    * Scale: the windows come from the native n-gram kernel
+    * ([[graft.functions.TextExprs.ngrams]]: one split per doc, every
+    * occurrence with its position), so the explode is linear in corpus
+    * tokens; the repeated-window reduction is one hash exchange on the
+    * span key, asking only `min(doc_id) < max(doc_id)` (a stop-phrase
+    * span has bounded effect: no pairs, no per-span lists); the
+    * coverage merge is one lag pass keyed by doc. Nothing is
+    * quadratic. */
   def repeatedSpans(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.load(spark, dir, "documents")
-    val toks = tokens(col("text"))
-    // positional windows: (pos, 8-gram) per start index — built
-    // declaratively because [[shingles]] dedups (coverage needs every
-    // occurrence with its position)
     val wins = d.select(col("doc_id"),
-        when(size(toks) >= SpanTokens,
-          transform(sequence(lit(0), size(toks) - SpanTokens),
-            i => struct(i.as("pos"),
-              concat_ws(" ", slice(toks, i + 1, lit(SpanTokens))).as("sh"))))
-          .otherwise(array().cast("array<struct<pos:int,sh:string>>"))
-          .as("ws"))
-      .select(col("doc_id"), explode(col("ws")).as("w"))
-      .select(col("doc_id"), col("w.pos").as("pos"), col("w.sh").as("sh"))
+      posexplode(graft.functions.TextExprs.ngrams(col("text"), SpanTokens))
+        .as(Seq("pos", "sh")))
     val repeated = wins.groupBy(col("sh"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2).select("sh")
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .filter(col("lo") < col("hi")).select("sh")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val perDoc = wins.join(repeated, Seq("sh"), "left_semi")
-      .withColumn("prev_end", max(col("pos") + SpanTokens).over(w))
-      .withColumn("contrib", greatest(lit(0),
-        col("pos") + SpanTokens -
-          greatest(coalesce(col("prev_end"), lit(0)), col("pos"))))
+      .withColumn("contrib", coalesce(
+        least(lit(SpanTokens), col("pos") - lag(col("pos"), 1).over(w)),
+        lit(SpanTokens)))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_rep_spans"),
         sum(col("contrib")).cast("long").as("covered_tokens"))
-    d.select(col("doc_id"), size(toks).cast("long").as("n_tokens"))
+    d.select(col("doc_id"),
+        size(tokens(col("text"))).cast("long").as("n_tokens"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_rep_spans"), lit(0L)).as("n_rep_spans"),

@@ -583,13 +583,10 @@ object TextAnalysis {
     * (same materialize-once shape as the sketch tables). */
   def bigramFamiliarity(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.load(spark, dir, "documents")
-    val toks = tokens(col("text"))
-    // adjacent pairs, 1-based element_at; empty for <2-token docs
-    val bgArr = when(size(toks) >= 2,
-      transform(sequence(lit(1), size(toks) - 1),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val bg = d.select(col("doc_id"), explode(bgArr).as("bg"))
+    // adjacent pairs from the native n-gram kernel (one split per
+    // doc); empty for <2-token docs
+    val bg = d.select(col("doc_id"),
+      explode(graft.functions.TextExprs.ngrams(col("text"), 2)).as("bg"))
     val counts = bg.groupBy(col("bg")).agg(count(lit(1)).as("cnt"))
     val scored = bg.join(counts, Seq("bg"))
       .groupBy(col("doc_id"))

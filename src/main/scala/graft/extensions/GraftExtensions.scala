@@ -17,8 +17,8 @@ import graft.functions.{BoundedTopK, PairCombinations, Shingles, VecDot}
   *
   *  - `vec_dot(a, b)` — codegen'd sequential-fold dot product
   *    ([[graft.functions.VecDot]]);
-  *  - `shingles(text, n)` — distinct word n-grams in one imperative
-  *    pass ([[graft.functions.Shingles]]);
+  *  - `shingles(text[, n])` — distinct word n-grams (n defaults to 3)
+  *    in one imperative pass ([[graft.functions.Shingles]]);
   *  - `pair_combinations(sorted_ids)` — C(n,2) pair generator
   *    ([[graft.functions.PairCombinations]]);
   *  - `top_k_min(score, id, k)` — k-bounded ranking aggregate
@@ -59,10 +59,11 @@ object GraftExtensions {
         case args => throw new IllegalArgumentException(
           s"vec_dot expects 2 arguments, got ${args.size}")
       },
-      fn("shingles", "shingles(text, n) - distinct word n-grams") {
+      fn("shingles", "shingles(text[, n]) - distinct word n-grams (n = 3)") {
+        case Seq(t) => Shingles(t, 3)
         case Seq(t, n) => Shingles(t, litInt(n, "shingles", "n"))
         case args => throw new IllegalArgumentException(
-          s"shingles expects 2 arguments, got ${args.size}")
+          s"shingles expects 1 or 2 arguments, got ${args.size}")
       },
       fn("pair_combinations",
         "pair_combinations(ids) - all C(n,2) ordered pairs") {

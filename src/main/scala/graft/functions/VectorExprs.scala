@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
@@ -90,53 +89,20 @@ object VectorExprs {
   def vecDot(a: Column, b: Column): Column =
     Bridge.column(VecDot(Bridge.expression(a), Bridge.expression(b)))
 
-  private val info = new ExpressionInfo(
-    classOf[VecDot].getCanonicalName, "vec_dot")
-
   /** Idempotent SQL-function registration on an existing session (the
     * driver contract hands us pre-built sessions, so extension-style
-    * injection at build time isn't always available). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"), info,
-      (children: Seq[Expression]) => VecDot(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pair_combinations"),
-      new ExpressionInfo(classOf[PairCombinations].getCanonicalName,
-        "pair_combinations"),
-      (children: Seq[Expression]) => PairCombinations(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[Shingles].getCanonicalName, "shingles"),
-      (children: Seq[Expression]) => children match {
-        case Seq(text) => Shingles(text, 3)
-        case Seq(text, n) => Shingles(text,
-          n.eval().asInstanceOf[Number].intValue())
-      })
-  }
+    * injection at build time isn't always available). Registers the
+    * same builders [[graft.extensions.GraftExtensions]] injects. */
+  def register(spark: SparkSession): Unit =
+    graft.extensions.GraftExtensions.functions.foreach { case (id, info, b) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, b)
+    }
 }
 
-/** `SparkSessionExtensions` hook for deployments that own the session
-  * builder: `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
+/** `SparkSessionExtensions` hook under its older name
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`): injects the
+  * same function builders as [[graft.extensions.GraftExtensions]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getCanonicalName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("pair_combinations"),
-      new ExpressionInfo(classOf[PairCombinations].getCanonicalName,
-        "pair_combinations"),
-      (children: Seq[Expression]) => PairCombinations(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[Shingles].getCanonicalName, "shingles"),
-      (children: Seq[Expression]) => children match {
-        case Seq(text) => Shingles(text, 3)
-        case Seq(text, n) => Shingles(text,
-          n.eval().asInstanceOf[Number].intValue())
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.extensions.GraftExtensions.functions.foreach(ext.injectFunction)
 }

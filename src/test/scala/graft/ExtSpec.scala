@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Similarity, TextAnalysis}
 
@@ -85,17 +86,72 @@ class ExtSpec extends SparkSuite {
     assert(cl(4L) == 4L, s"isolated doc joined a cluster: $cl")
   }
 
+  /** The declarative HOF spelling the native n-gram kernel
+    * ([[graft.functions.Shingles]]) replaced: `n`-token windows by
+    * 1-based slice, deduped when `distinct`; empty under `n` tokens. */
+  private def shinglesDeclarative(c: Column, n: Int,
+      distinct: Boolean): Column = {
+    val toks = split(c, "\\s+")
+    val all = transform(sequence(lit(1), size(toks) - (n - 1)),
+      i => concat_ws(" ", slice(toks, i, lit(n))))
+    when(size(toks) >= n, if (distinct) array_distinct(all) else all)
+      .otherwise(array().cast("array<string>"))
+  }
+
   test("native shingles expression equals the declarative HOF spelling") {
     // bit parity over the real corpus INCLUDING edge shapes: short
-    // texts, repeated shingles, leading/trailing/multi whitespace
+    // texts, repeated shingles, leading/trailing/multi whitespace,
+    // one token under and exactly at the q108 window length
     val corpus = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
     val edge = Seq(501L -> "a b", 502L -> "x y z", 503L -> "  p q r  ",
-      504L -> "t t t t t", 505L -> "").toDF("doc_id", "text")
-    val df = corpus.unionByName(edge).select(
+      504L -> "t t t t t", 505L -> "", 506L -> "a b c d e f g",
+      507L -> "a b c d e f g h").toDF("doc_id", "text")
+    val texts = corpus.unionByName(edge)
+    val df = texts.select(
       col("doc_id"),
       graft.functions.TextExprs.shingles(col("text"), 3).as("fast"),
-      Dedup.shinglesDeclarative(col("text")).as("ref"))
+      shinglesDeclarative(col("text"), 3, distinct = true).as("ref"))
     assert(df.filter(not(col("fast") <=> col("ref"))).count() == 0)
+
+    // every-window mode against the generic spelling and the HOF
+    // spellings q97 (n = 2) and q108 (n = 8) used before the kernel,
+    // verbatim. Compared after (pos)explode, which also pins the
+    // order: on a null text the kernel returns null where the HOF
+    // spelling returns an empty array, and both must yield no rows
+    val nullId = 508L
+    val withNull = texts.unionByName(
+      Seq((nullId, null: String)).toDF("doc_id", "text"))
+    def sameRows(what: String, fast: DataFrame, ref: DataFrame): Unit = {
+      assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty,
+        s"$what: native and declarative windows differ")
+      assert(fast.filter(col("doc_id") === nullId).isEmpty &&
+        ref.filter(col("doc_id") === nullId).isEmpty,
+        s"$what: a null text must yield no windows")
+    }
+    def posRows(arr: Column) =
+      withNull.select(col("doc_id"), posexplode(arr).as(Seq("pos", "w")))
+    val ngrams = graft.functions.TextExprs.ngrams _
+    for (n <- Seq(2, 3, 8))
+      sameRows(s"ngrams n=$n", posRows(ngrams(col("text"), n)),
+        posRows(shinglesDeclarative(col("text"), n, distinct = false)))
+
+    val toks = split(col("text"), "\\s+")
+    val q97Hof = when(size(toks) >= 2,
+      transform(sequence(lit(1), size(toks) - 1),
+        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
+      .otherwise(array().cast("array<string>"))
+    sameRows("q97 bigrams", posRows(ngrams(col("text"), 2)),
+      posRows(q97Hof))
+
+    val span = Dedup.SpanTokens
+    val q108Hof = when(size(toks) >= span,
+      transform(sequence(lit(0), size(toks) - span),
+        i => struct(i.as("pos"),
+          concat_ws(" ", slice(toks, i + 1, lit(span))).as("sh"))))
+      .otherwise(array().cast("array<struct<pos:int,sh:string>>"))
+    sameRows("q108 spans", posRows(ngrams(col("text"), span)),
+      withNull.select(col("doc_id"), explode(q108Hof).as("w"))
+        .select(col("doc_id"), col("w.pos"), col("w.sh")))
   }
 
   test("driver union-find CC equals the distributed label propagation") {
@@ -372,6 +428,43 @@ class ExtSpec extends SparkSuite {
     assert(out(3L) == ((0L, 0L, 0.0)), s"doc3: ${out(3L)}")
     assert(out(4L) == ((2L, 16L, 16.0 / 19)), s"doc4: ${out(4L)}")
     assert(out(5L) == ((2L, 16L, 16.0 / 20)), s"doc5: ${out(5L)}")
+  }
+
+  test("repeated spans: overlaps 1-7, adjacency, twin docs, in-doc repeats (q108)") {
+    // doc 1: 56 unique tokens; doc 2 plants ten of doc 1's 8-token
+    // windows, each followed by a unique separator, so exactly those
+    // windows repeat. Their starts in doc 1 step by 1..7 (overlaps of
+    // 7..1 tokens), then 8 (adjacent) and 10 (disjoint):
+    // union [0,44) + [46,54) = 52 covered tokens
+    val t1 = (0 until 56).map(i => s"d$i")
+    val starts = Seq(0, 1, 3, 6, 10, 15, 21, 28, 36, 46)
+    val doc2 = starts.zipWithIndex.flatMap { case (p, k) =>
+      t1.slice(p, p + 8) :+ s"sep$k" }
+    val twin = (0 until 12).map(i => s"e$i").mkString(" ")
+    val run = (0 until 8).map(i => s"f$i").mkString(" ")
+    val tmp = java.nio.file.Files.createTempDirectory("spanshapes").toString
+    docs(
+      1L -> t1.mkString(" "),
+      2L -> doc2.mkString(" "),
+      // identical pair: every window of each repeats in the other
+      3L -> twin, 4L -> twin,
+      // one span twice inside one doc only: not a repeated span
+      5L -> s"$run g0 $run",
+      // 7 tokens (doc 1's prefix): no window at all
+      6L -> t1.take(7).mkString(" "))
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val got = Dedup.repeatedSpans(spark, tmp).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
+    // doc_id -> (n_tokens, n_rep_spans, covered_tokens)
+    val want = Map(
+      1L -> (56L, 10L, 52L),
+      2L -> (90L, 10L, 80L),
+      3L -> (12L, 5L, 12L),
+      4L -> (12L, 5L, 12L),
+      5L -> (17L, 0L, 0L),
+      6L -> (7L, 0L, 0L))
+    assert(got == want)
   }
 
   test("an in-process table rewrite evicts and unpersists its superseded cache") {

@@ -281,6 +281,17 @@ class PlansSpec extends SparkSuite {
       s"q108 planned an all-pairs join:\n$p")
   }
 
+  test("q97/q108 windows come from the native kernel: no lambda, no distinct count") {
+    for (q <- Seq("q97_bigram_familiarity", "q108_repeated_spans")) {
+      val p = plan(q)
+      assert(!p.toLowerCase.contains("lambdafunction"),
+        s"$q builds its windows through a per-element lambda:\n$p")
+    }
+    val p = plan("q108_repeated_spans")
+    assert(!p.toLowerCase.contains("count(distinct"),
+      s"q108 repeated-span test plans a distinct count:\n$p")
+  }
+
   test("q113/q114/q115 plan as the canonical TPC-H shapes") {
     // Q1: one scan, date filter pushed to parquet, map-side partials
     val p1 = plan("q113_pricing_summary")
