@@ -132,9 +132,9 @@ object Pipeline {
                              outDir: String): Unit = {
     timed("warehouse") {
       inParallel(spark,
-        () => write(warehouse.Star.dimCustomer(spark, sfDir), s"$outDir/warehouse/dim_customer"),
-        () => write(warehouse.Star.dimOrderStatus(spark, sfDir), s"$outDir/warehouse/dim_order_status"),
-        () => write(warehouse.DateDim.dimTime(spark, sfDir), s"$outDir/warehouse/dim_time"),
+        () => write(warehouse.Star.dimCustomer(spark, sfDir, Layout.Sink), s"$outDir/warehouse/dim_customer"),
+        () => write(warehouse.Star.dimOrderStatus(spark, sfDir, Layout.Sink), s"$outDir/warehouse/dim_order_status"),
+        () => write(warehouse.DateDim.dimTime(spark, sfDir, Layout.Sink), s"$outDir/warehouse/dim_time"),
         () => {
           val factDir = s"$outDir/warehouse/fact_order_lines"
           // persist the joined fact for THIS commit only:
@@ -148,11 +148,11 @@ object Pipeline {
               col("date_key").cast("int").divide(100).cast("int"))
             .persist()
           try {
-          def recentRollup(df: DataFrame): DataFrame = df
-            .groupBy(col("month_key"))
-            .agg(util.Cols.dsum(col("net_amount"), 4).as("net_revenue"),
-              count(lit(1)).as("n_lines"))
-            .orderBy(col("month_key"))
+          def recentRollup(df: DataFrame): DataFrame = Layout.Sink.present(
+            df.groupBy(col("month_key"))
+              .agg(util.Cols.dsum(col("net_amount"), 4).as("net_revenue"),
+                count(lit(1)).as("n_lines")),
+            col("month_key"))
           // empty-in/empty-out (the JDBC round trip's contract): an
           // empty fact has no month bounds to prune on, so land an
           // empty MV with the rollup's own schema and skip the commit.

@@ -39,17 +39,17 @@ object SparkEntry {
     "q13_merge_upsert"          -> (cdc.Cdc.mergeUpsert _),
     // warehouse star schema (F11/F14/F15, J3, S11)
     "q08_fact_order_lines"   -> (warehouse.Star.factOrderLines(_, _)),
-    "q19_dim_order_status"   -> (warehouse.Star.dimOrderStatus _),
+    "q19_dim_order_status"   -> (warehouse.Star.dimOrderStatus(_, _)),
     "q20_event_type_keys"    -> (warehouse.Star.eventTypeKeys _),
     "q26_surrogate_join"     -> (warehouse.Star.surrogateJoinConsistency _),
-    "q27_dim_customer"       -> (warehouse.Star.dimCustomer _),
+    "q27_dim_customer"       -> (warehouse.Star.dimCustomer(_, _)),
     // materialized views (A9-A12, J5)
     "q14_mv_daily_revenue"   -> (warehouse.Views.mvDailyRevenue(_, _)),
     "q15_mv_monthly_revenue" -> (warehouse.Views.mvMonthlyRevenue(_, _)),
     "q16_mv_nation_revenue"  -> (warehouse.Views.mvNationRevenue(_, _)),
     "q17_mv_hourly_pattern"  -> (warehouse.Views.mvHourlyPattern(_, _)),
     // date dimension (S10, F18-F20)
-    "q18_dim_time"           -> (warehouse.DateDim.dimTime _),
+    "q18_dim_time"           -> (warehouse.DateDim.dimTime(_, _)),
     // scalar function surface (F6-F9)
     "q23_timestamp_codec"    -> (functions.TimeFns.timestampCodec _),
     // text analysis extensions (SURVEY §7.5)

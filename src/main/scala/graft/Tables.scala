@@ -155,8 +155,10 @@ object Tables {
 }
 
 /** Where a gold/MV builder's frame goes, and so what shape it takes.
-  * Each of the nine medallion tables (the four gold tables, the fact,
-  * the four MV rollups) has ONE builder taking a layout:
+  * Each of the twelve medallion tables (the four gold tables, the
+  * fact, the four MV rollups, the three dimensions) has ONE builder
+  * taking a layout (the dimensions only present — their scans never
+  * fan):
   *
   *  - [[Layout.Declared]] — the gated query: plain scans and the
   *    presentation sort the oracle compares against.

@@ -219,7 +219,8 @@ case class RowPosBitmap(
   * positions straight into a dense mBits-bit word array — one group
   * per file, 3 hashes + 3 bit-sets per row, no row expansion.
   *
-  * BIT-FOR-BIT the same filter: positions come from
+  * BIT-FOR-BIT the same filter: bits come from
+  * [[graft.sources.DeltaLog.bloomAdd]] over
   * [[graft.sources.DeltaLog.bloomPositions]], the driver-side
   * replica of catalyst's `pmod(xxhash64(key, i), m)` that the reader
   * probes with (ScaleSpec holds the equality against the engine's own
@@ -252,16 +253,7 @@ case class BloomWords(
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) {
-      val ps = graft.sources.DeltaLog.bloomPositions(
-        v.asInstanceOf[Long], mBits)
-      var i = 0
-      while (i < ps.length) {
-        val p = ps(i)
-        buf(p / 64) |= 1L << (p % 64)
-        i += 1
-      }
-    }
+    if (v != null) graft.sources.DeltaLog.bloomAdd(buf, v.asInstanceOf[Long])
     buf
   }
 

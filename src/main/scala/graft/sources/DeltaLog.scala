@@ -10,8 +10,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 /** Minimal reader/writer for the OPEN Delta Lake transaction-log
   * format (the public protocol: a `_delta_log/` directory of
@@ -1675,8 +1675,8 @@ object DeltaLog {
 
   /** [[statsJsonOf]] from ONE driver-side footer open — kept for
     * [[registerFiles]] (external files, one-time migration metadata);
-    * every commit of a just-written batch rides [[statsAndBlooms]]'s
-    * distributed job instead. */
+    * every commit of a just-written batch takes its stats from the
+    * write tasks instead ([[writeStaged]]). */
   private def statsJson(absPath: String): String =
     statsJsonOf(Iceberg.parquetFooter(absPath))
 
@@ -1697,41 +1697,37 @@ object DeltaLog {
     r
   }
 
-  /** `add.stats` JSON per just-written file, keyed by path, from ONE
-    * distributed footer job ([[Iceberg.footerStatsBatch]] — the
-    * driver collects O(files) rows, never opens footers itself); when
-    * `state`'s table blooms columns, the sidecar is sized from the
-    * same rows, so no second footer pass runs. `state` is None for a
-    * fresh table and for compactions, whose rewritten files
-    * [[bloomBackfill]] covers. */
-  private def statsAndBlooms(spark: SparkSession, tableDir: String,
-      fs: Seq[File], state: Option[State]): Map[String, String] = {
-    val stats = phased("footer_ms")(
-      Iceberg.footerStatsBatch(spark, fs.map(_.getPath)))
-    phased("sidecars_ms")(maybeWriteBlooms(spark, tableDir,
-      fs.map(f => f.getPath -> stats(f.getPath).numRecords), state))
-    stats.map { case (p, st) => p -> statsJsonOf(st) }
-  }
-
-  /** Write `data` as one UNPARTITIONED batch under `tableDir/sub` and
-    * return its add actions, stats and blooms included
-    * ([[statsAndBlooms]]). An empty listing of the just-written dir
-    * is refused: Spark writes at least one part file even for an
-    * empty frame, so an empty listing means `java.io` could not see
-    * the data (a `file:` URI, a non-local path), and committing would
-    * publish a version with zero adds — silent data loss. */
-  private def writeBatch(data: DataFrame, tableDir: String, sub: String,
-      state: Option[State], dataChange: Boolean = true): Seq[ObjectNode] = {
-    phased("data_write_ms")(data.write.parquet(s"$tableDir/$sub"))
-    val fs = partFiles(tableDir, sub)
-    if (fs.isEmpty) throw new IllegalStateException(
-      s"the data job wrote $tableDir/$sub but listing it found no " +
-        "parquet files — DeltaLog tables need a plain local path " +
-        "(java.io cannot list a URI); refusing to commit a version " +
-        "with zero adds")
-    val stats = statsAndBlooms(data.sparkSession, tableDir, fs, state)
-    fs.map(f => addAction(s"$sub/${f.getName}", f.length, Map.empty,
-      dataChange, stats = Some(stats(f.getPath))))
+  /** Write `data` as one batch under `tableDir/sub` and return its
+    * add actions. The data job is the library writers' one
+    * ([[graft.streaming.StagedWrite]]): its tasks report each file's
+    * size, partition values, numRecords, min/max bounds and — for
+    * `state`'s bloomed columns — bloom words, so `add.stats` is a
+    * driver-side fold and the sidecar one driver-written part
+    * ([[writeBloomSidecar]]): no footer job, no re-read. A
+    * partitioned batch (`partCols` nonEmpty) projects its partition
+    * columns out of the files. `state` is None for a fresh table and
+    * for compactions, whose rewritten files [[bloomBackfill]] covers.
+    *
+    * A staged dir that lists short of the files the tasks reported is
+    * refused: `java.io` cannot see the data (a `file:` URI, a
+    * non-local path), and committing would publish adds no reader
+    * resolves — silent data loss. */
+  private def writeStaged(data: DataFrame, tableDir: String, sub: String,
+      partCols: Seq[String], state: Option[State],
+      dataChange: Boolean = true): Seq[ObjectNode] = {
+    val files = phased("data_write_ms")(graft.streaming.StagedWrite(data,
+      tableDir, s"$sub/", partCols,
+      state.map(bloomColsOf).getOrElse(Seq.empty)))
+    val listed = partFiles(tableDir, sub).size
+    if (listed < files.size) throw new IllegalStateException(
+      s"the data job wrote ${files.size} parquet file(s) under " +
+        s"$tableDir/$sub but listing it found $listed — DeltaLog " +
+        "tables need a plain local path (java.io cannot list a URI); " +
+        "refusing to commit a version with zero adds readers can see")
+    phased("sidecars_ms")(writeBloomSidecar(tableDir, files))
+    phased("footer_ms")(files.map(f => addAction(f.relPath, f.size,
+      f.partitionValues, dataChange,
+      stats = Some(statsJsonOf(f.numRecords, f.bounds, data.schema)))))
   }
 
   private def removeAction(path: String,
@@ -2004,8 +2000,8 @@ object DeltaLog {
   /** The library blind writers' one body ([[commitOverwrite]],
     * [[commitAppend]], [[commitAppendPartitioned]],
     * [[commitAppendIdempotent]], [[commitOverwritePartitioned]]):
-    * spec check, invariants, one data write (unpartitioned batch or
-    * `partitionBy` + [[partitionedAdds]]), then [[publishBlind]].
+    * spec check, invariants, one data write ([[writeStaged]]), then
+    * [[publishBlind]].
     * `txn` makes the append exactly-once: a recorded (appId, version)
     * skips up front, before any data is written, and again on every
     * attempt. Returns None only on such a skip. */
@@ -2018,14 +2014,9 @@ object DeltaLog {
     // data dir named by UUID, not by version: two racing writers must
     // not collide at the DATA write — only the log CAS decides order
     val sub = s"part-${java.util.UUID.randomUUID}"
-    val adds: Seq[ObjectNode] =
-      if (partCols.isEmpty)
-        writeBatch(writeRows(df, tableDir, st0), tableDir, sub, st0)
-      else {
-        df.write.partitionBy(partCols: _*).parquet(s"$tableDir/$sub")
-        partitionedAdds(df.sparkSession, tableDir, sub, partCols, st0,
-          dataChange = true)
-      }
+    val adds = writeStaged(
+      if (partCols.isEmpty) writeRows(df, tableDir, st0) else df,
+      tableDir, sub, partCols, st0)
     publishBlind(tableDir, df.schema, partCols, overwrite, txn, adds)(
       graft.util.Fs.deleteRecursively(new File(tableDir, sub)))
   }
@@ -2053,13 +2044,22 @@ object DeltaLog {
     commit(df, tableDir, "commitAppend", overwrite = false, partCols).get
   }
 
-  /** One file the DSv2 WRITER produced: log-relative path, size,
-    * the file's partition values (null allowed), and the stats the
-    * writer tracked while writing (numRecords + long bounds — no
-    * post-write footer pass needed). */
+  /** One file a DSv2 data writer produced: log-relative path, size,
+    * the file's partition values (null allowed), the stats the writer
+    * tracked while writing (numRecords + integral bounds — no
+    * post-write footer pass needed), and its bloom words per bloomed
+    * column. */
   private[graft] case class Dsv2File(relPath: String, size: Long,
       partitionValues: Map[String, String], numRecords: Long,
-      bounds: Map[String, (Long, Long)])
+      bounds: Map[String, (Long, Long)],
+      blooms: Seq[FileBloom] = Seq.empty)
+
+  /** One file's bloom filter over column `col`: `mBits` bits
+    * ([[sidecarBloomBits]] of the file's row count), spelled as its
+    * non-zero 64-bit words (`bits(i)` is word `words(i)`) — exactly
+    * the file's rows of the bloom sidecar. */
+  private[graft] case class FileBloom(col: String, mBits: Int,
+      words: Array[Int], bits: Array[Long])
 
   /** Commit files the DSv2 write connector produced — the log half
     * of `df.write.format("graft-delta")`. The data files are already
@@ -2076,7 +2076,8 @@ object DeltaLog {
     *    readers until the commit, so the check is race-free) with
     *    the same [[enforceWriteInvariants]] every library writer
     *    uses — a violating DSv2 write deletes its files and refuses;
-    *  - bloom sidecars are written for bloom-configured tables;
+    *  - bloom-configured tables get the sidecar part of the words the
+    *    write tasks built ([[writeBloomSidecar]] — no re-read);
     *  - the version claim rides the same [[LogStore]] CAS loop as
     *    every other commit (overwrite recomputes removes per retry).
     */
@@ -2134,8 +2135,7 @@ object DeltaLog {
           "evolveSchema for schema changes")
       enforceDsv2Invariants(spark, tableDir, st, partCols, files, op)
     }
-    maybeWriteBlooms(spark, tableDir,
-      files.map(f => s"$tableDir/${f.relPath}" -> f.numRecords), st0)
+    writeBloomSidecar(tableDir, files)
     val adds = files.map(f => addAction(f.relPath, f.size,
       f.partitionValues, dataChange = true,
       stats = Some(statsJsonOf(f.numRecords, f.bounds,
@@ -2356,12 +2356,12 @@ object DeltaLog {
     * loudly rather than committing a remove nothing tracks.
     *
     * Invariants are enforced on the REWRITTEN rows (an UPDATE must
-    * not forge a row a CHECK constraint refuses); bloom sidecars are
-    * written for bloom-configured tables, so a rewrite keeps the
-    * scattered-key delete path pruned. CDF-enabled tables derive
-    * their row-level change files from the rewrite itself
-    * ([[cowChangeActions]]) and stamp cdc actions, so any Delta CDF
-    * reader — this engine's or a foreign client's — reads exact
+    * not forge a row a CHECK constraint refuses); bloom-configured
+    * tables get the sidecar part of the rewrite tasks' own words, so
+    * a rewrite keeps the scattered-key delete path pruned.
+    * CDF-enabled tables derive their row-level change files from the
+    * rewrite itself ([[cowChangeActions]]) and stamp cdc actions, so
+    * any Delta CDF reader — this engine's or a foreign client's — reads exact
     * row-level changes instead of mis-deriving the file churn.
     *
     * CONCURRENCY: the [[commitRowOp]] conflict-proving discipline —
@@ -2390,8 +2390,7 @@ object DeltaLog {
     }
     enforceDsv2Invariants(spark, tableDir, st, st.partitionColumns,
       files, op)
-    maybeWriteBlooms(spark, tableDir,
-      files.map(f => s"$tableDir/${f.relPath}" -> f.numRecords), Some(st))
+    writeBloomSidecar(tableDir, files)
     val cdcActs: Seq[ObjectNode] =
       if (!cdfWriteEnabled(st)) Seq.empty
       else cowChangeActions(spark, tableDir, st, removedRel, files, op)
@@ -2477,9 +2476,7 @@ object DeltaLog {
     if (touched.nonEmpty) requireNotAppendOnly(st, tableDir, op)
     enforceDsv2Invariants(spark, tableDir, st, st.partitionColumns,
       newFiles, op)
-    maybeWriteBlooms(spark, tableDir,
-      newFiles.map(f => s"$tableDir/${f.relPath}" -> f.numRecords),
-      Some(st))
+    writeBloomSidecar(tableDir, newFiles)
     def resolveP(p: String) =
       if (p.startsWith("/") || p.contains("://")) p else s"$tableDir/$p"
     def baseName(rel: String) =
@@ -2849,42 +2846,13 @@ object DeltaLog {
     commit(df, tableDir, "commitAppendIdempotent", overwrite = false,
       partCols, Some(appId -> txnVersion))
 
-  /** Decode the hive-style value directories of a `partitionBy` write
-    * under `tableDir/sub` into add actions carrying each file's
-    * `partitionValues` — decoded once, here, at write time; after
-    * that the paths are opaque, as the spec intends. */
-  private def partitionedAdds(spark: SparkSession, tableDir: String,
-      sub: String, partCols: Seq[String], state: Option[State],
-      dataChange: Boolean): Seq[ObjectNode] = {
-    val moved = partFiles(tableDir, sub).map { f0 =>
-      // a single job writing several hive partitions reuses one task
-      // basename across the value dirs (part-00003-<jobUUID> lands
-      // under every status=X it touched) — rename to a per-FILE UUID
-      // so basenames stay globally unique, the invariant the
-      // partitionValues broadcast join keys on; the log records the
-      // new path, so the rename is free driver metadata
-      val f = new File(f0.getParentFile,
-        s"part-${java.util.UUID.randomUUID}.parquet")
-      Files.move(f0.toPath, f.toPath)
-      f
-    }
-    val stats = statsAndBlooms(spark, tableDir, moved, state)
-    moved.map { f =>
-      val rel = Paths.get(tableDir).toAbsolutePath
-        .relativize(f.toPath.toAbsolutePath).toString
-      addAction(rel, f.length,
-        PartitionedScan.hivePartitionValues(rel, partCols), dataChange,
-        stats = Some(stats(f.getPath)))
-    }
-  }
-
   /** [[commitOverwrite]] for a PARTITIONED table: `df` is written
-    * `partitionBy(partCols)` (data files do NOT contain the partition
-    * columns — the spec's layout), and each add action carries the
-    * file's `partitionValues` so readers reconstruct the columns from
-    * the LOG. The hive-style value directories the write produces are
-    * decoded once, here, at write time; after that the paths are
-    * opaque, as the spec intends. Returns the committed version. */
+    * partitioned by `partCols` (data files do NOT contain the
+    * partition columns — the spec's layout), and each add action
+    * carries the file's `partitionValues` — recorded by the write task
+    * that produced it — so readers reconstruct the columns from the
+    * LOG; the paths stay opaque, as the spec intends. Returns the
+    * committed version. */
   def commitOverwritePartitioned(df: DataFrame, tableDir: String,
                                  partCols: Seq[String]): Long = {
     require(partCols.nonEmpty, "partitioned commit needs partition columns")
@@ -2945,7 +2913,7 @@ object DeltaLog {
       // nested-id read does exactly that)
       if (mode == "id") df.sparkSession.conf.set(
         "spark.sql.parquet.fieldId.write.enabled", "true")
-      val adds = writeBatch(df.select(mappedSchema.fields.toSeq.map { f =>
+      val adds = writeStaged(df.select(mappedSchema.fields.toSeq.map { f =>
           val c = physicalize(col(f.name), f)
           if (mode == "id") c.as(physFieldName(f),
             new org.apache.spark.sql.types.MetadataBuilder()
@@ -2954,7 +2922,7 @@ object DeltaLog {
               .build())
           else c.as(physFieldName(f))
         }: _*),
-        tableDir, s"part-${java.util.UUID.randomUUID}", None)
+        tableDir, s"part-${java.util.UUID.randomUUID}", Seq.empty, None)
       Seq(protocolAction(minReader = 2, minWriter = 5),
         metaDataAction(mappedSchema, Seq.empty,
           Map("delta.columnMapping.mode" -> mode,
@@ -3179,8 +3147,8 @@ object DeltaLog {
     * file); the per-file bloom answers "could file F hold key k?"
     * regardless of layout. Rows: (file basename, word, bits,
     * colname, m_bits), geometry = [[BloomHashes]] positions via
-    * xxhash64(key_as_long, i) ([[bloomPositions]]), sized from the
-    * batch ([[sidecarBloomBits]]). Sidecar metadata beside the log —
+    * xxhash64(key_as_long, i) ([[bloomPositions]]), each file sized
+    * from its own row count ([[sidecarBloomBits]]). Sidecar metadata beside the log —
     * foreign Delta clients ignore it; this engine's deletes, merges
     * and [[readWherePoint]] probe it. Superset contract everywhere:
     * a file with no bloom rows is never pruned, false positives cost
@@ -3208,12 +3176,25 @@ object DeltaLog {
     }
   }
 
+  /** Set `value`'s probe bits in `words`, a dense filter of
+    * `words.length * 64` bits — the one fold both bloom builders use
+    * (the write tasks' [[FileBloom]]s and [[graft.functions.BloomWords]]). */
+  private[graft] def bloomAdd(words: Array[Long], value: Long): Unit = {
+    val ps = bloomPositions(value, words.length * 64)
+    var i = 0
+    while (i < ps.length) {
+      val p = ps(i)
+      words(p / 64) |= 1L << (p % 64)
+      i += 1
+    }
+  }
+
   /** Table property naming the bloomed columns (comma-separated,
     * long/int-typed). Writers bloom each new file when set;
     * [[bloomBackfill]] covers files committed before it was set. */
   private[graft] val BloomColsProp = "graft.bloomFilter.columns"
 
-  private def bloomColsOf(st: State): Seq[String] = {
+  private[graft] def bloomColsOf(st: State): Seq[String] = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
     // mapped tables: the sidecar writer rereads data files by
     // LOGICAL name, which physical files cannot resolve — declared
@@ -3230,8 +3211,10 @@ object DeltaLog {
   }
 
   /** Sidecar geometry, the one bloom sizing policy: ~20 bits per row
-    * of the batch's largest file, a power of two clamped to
-    * [[BloomMinBits]]..[[BloomMaxBits]]. The delete probe tests a
+    * of the file being bloomed, a power of two clamped to
+    * [[BloomMinBits]]..[[BloomMaxBits]] — each file sized by its own
+    * row count, so a write task can build a file's filter the moment
+    * the file closes (readers probe per file `m_bits`). The delete probe tests a
     * BATCH of K keys per file and a file survives if ANY key
     * false-positives — prune probability is (1−fpr)^K, so the per-key
     * fpr must sit well under 1/K. At 20 bits/row with 3 hashes fpr ≈
@@ -3240,26 +3223,33 @@ object DeltaLog {
     * Cost: ~2.5 MB sidecar per 1M-row file — metadata, linear in
     * file count. Saturates: a row count past Long.MaxValue / 20
     * clamps to the ceiling rather than overflowing to the floor. */
-  private[graft] def sidecarBloomBits(maxRows: Long): Int = {
+  private[graft] def sidecarBloomBits(rows: Long): Int = {
     val target =
-      if (maxRows > Long.MaxValue / 20) Long.MaxValue
-      else math.max(BloomMinBits.toLong, 20L * maxRows)
+      if (rows > Long.MaxValue / 20) Long.MaxValue
+      else math.max(BloomMinBits.toLong, 20L * rows)
     var m = BloomMinBits
     while (m < target && m < BloomMaxBits) m <<= 1
     m
   }
 
-  /** Write bloom rows for `absFiles` (one just-written batch, all one
-    * geometry sized from `maxRows`, the batch's largest file): ONE
-    * bitmap aggregate per file ([[graft.functions.BloomWords]]), then
-    * posexplode + bits≠0 for the sparse (file, word, bits) rows — a
-    * word row exists iff some key set a bit in it. One distributed
-    * scan of the batch's bloomed columns per call. */
+  /** The sidecar's row layout: one row per (file, bloomed column,
+    * non-zero 64-bit word) — `file` is the data file's basename. */
+  private val BloomSidecarSchema = StructType(Seq(
+    StructField("file", StringType, nullable = false),
+    StructField("word", IntegerType, nullable = false),
+    StructField("bits", LongType, nullable = false),
+    StructField("colname", StringType, nullable = false),
+    StructField("m_bits", IntegerType, nullable = false)))
+
+  /** Write bloom rows for `absFiles` (all one geometry, `mBits`) by
+    * re-reading them — [[bloomBackfill]]'s path for files that
+    * already exist: ONE bitmap aggregate per file
+    * ([[graft.functions.BloomWords]]), then posexplode + bits≠0 for
+    * the sparse (file, word, bits) rows — a word row exists iff some
+    * key set a bit in it. */
   private def writeBloomRows(spark: SparkSession, tableDir: String,
-      absFiles: Seq[String], maxRows: Long, cols: Seq[String]): Unit = {
-    if (absFiles.isEmpty || cols.isEmpty || maxRows == 0L) return
+      absFiles: Seq[String], mBits: Int, cols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{lit, posexplode}
-    val mBits = sidecarBloomBits(maxRows)
     val reread = spark.read.parquet(absFiles: _*)
     cols.map { c =>
       reread.filter(col(c).isNotNull)
@@ -3278,23 +3268,32 @@ object DeltaLog {
         s"$tableDir/$BloomSidecarDir/bloom-${java.util.UUID.randomUUID}")
   }
 
-  /** Bloom the just-written `files` ((absolute path, row count)
-    * pairs — the counts every writer already has from its stats) when
-    * the table property asks for it: the writers' hook. Runs AFTER
-    * the data write; a crash before the sidecar lands leaves the
-    * files unbloomed = never pruned (safe). */
-  private def maybeWriteBlooms(spark: SparkSession, tableDir: String,
-                               files: Seq[(String, Long)],
-                               state: Option[State]): Unit = {
-    val cols = state.map(bloomColsOf).getOrElse(Seq.empty)
-    if (cols.nonEmpty && files.nonEmpty)
-      writeBloomRows(spark, tableDir, files.map(_._1),
-        files.map(_._2).max, cols)
+  /** The bloom sidecar part of one just-written batch: the words its
+    * write tasks built ([[Dsv2File.blooms]]) as ONE parquet part the
+    * driver writes itself — no scan, no shuffle, no job. Runs before
+    * the claim: a crash before the part lands leaves the files
+    * unbloomed = never pruned (safe). */
+  private def writeBloomSidecar(tableDir: String,
+      files: Seq[Dsv2File]): Unit = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val rows = for {
+      f <- files
+      name = UTF8String.fromString(
+        f.relPath.substring(f.relPath.lastIndexOf('/') + 1))
+      b <- f.blooms
+      i <- b.words.indices
+    } yield org.apache.spark.sql.catalyst.InternalRow(name, b.words(i),
+      b.bits(i), UTF8String.fromString(b.col), b.mBits)
+    if (rows.nonEmpty) graft.streaming.DeltaDataWriter.writeFile(
+      s"$tableDir/$BloomSidecarDir/bloom-${java.util.UUID.randomUUID}/" +
+        "part-0.snappy.parquet", BloomSidecarSchema, rows.iterator)
   }
 
   /** Backfill bloom rows for LIVE files lacking them (files
     * committed before the property was set). Returns how many files
-    * were bloomed. One distributed scan of exactly those files. */
+    * were bloomed. Each file is sized by its own row count (from one
+    * distributed footer job); one scan of exactly those files per
+    * geometry. */
   def bloomBackfill(spark: SparkSession, tableDir: String): Int = {
     val vs = versions(tableDir)
     require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
@@ -3311,10 +3310,13 @@ object DeltaLog {
     }
     val missing = st.files.filterNot(p => bloomed.contains(base(p)))
       .map(resolve)
-    // one sidecar write per geometry-uniform batch: all at once here
-    val maxRows = Iceberg.footerStatsBatch(spark, missing)
-      .values.map(_.numRecords).maxOption.getOrElse(0L)
-    writeBloomRows(spark, tableDir, missing, maxRows, cols)
+    // each file sized by its own row count; one sidecar part per
+    // geometry (empty files hold no key to bloom)
+    Iceberg.footerStatsBatch(spark, missing).toSeq
+      .filter(_._2.numRecords > 0)
+      .groupBy(p => sidecarBloomBits(p._2.numRecords)).toSeq.sortBy(_._1)
+      .foreach { case (mBits, fs) =>
+        writeBloomRows(spark, tableDir, fs.map(_._1).sorted, mBits, cols) }
     missing.size
   }
 
@@ -3779,10 +3781,10 @@ object DeltaLog {
     // mapped tables compact like any other: the logical scan folds
     // DVs, the physical spelling goes back on at the write
     val snapshot = scanState(spark, tableDir, st)
-    val adds = writeBatch(
+    val adds = writeStaged(
       (if (st.columnMapping.isEmpty) snapshot
        else physicalRows(snapshot, st)).repartition(targetFiles),
-      tableDir, sub, None, dataChange = false)
+      tableDir, sub, Seq.empty, None, dataChange = false)
     commitCompaction(tableDir, base, st, adds)
   }
 
@@ -3815,13 +3817,11 @@ object DeltaLog {
     val st = replayMaybeCheckpointed(Some(spark), tableDir, base)
     require(st.partitionColumns.nonEmpty,
       "compactPartitioned needs a partitioned table (use compact)")
-    val sub = s"part-${java.util.UUID.randomUUID}"
-    scanState(spark, tableDir, st)
-      .repartition(st.partitionColumns.map(col): _*)
-      .write.partitionBy(st.partitionColumns: _*)
-      .parquet(s"$tableDir/$sub")
-    commitCompaction(tableDir, base, st, partitionedAdds(spark, tableDir,
-      sub, st.partitionColumns, None, dataChange = false))
+    commitCompaction(tableDir, base, st, writeStaged(
+      scanState(spark, tableDir, st)
+        .repartition(st.partitionColumns.map(col): _*),
+      tableDir, s"part-${java.util.UUID.randomUUID}",
+      st.partitionColumns, None, dataChange = false))
   }
 
   /** OPTIMIZE ZORDER BY — [[compact]] whose layout is a MORTON
@@ -3852,9 +3852,8 @@ object DeltaLog {
     require(vs.nonEmpty, s"no _delta_log commits under $tableDir")
     val base = vs.last
     val st = replayMaybeCheckpointed(Some(spark), tableDir, base)
-    val sub = s"part-${java.util.UUID.randomUUID}"
-    val adds =
-      if (st.partitionColumns.nonEmpty) {
+    val rewrite =
+      if (st.partitionColumns.nonEmpty)
         // PARTITIONED OPTIMIZE ZORDER: the range partitioning and
         // within-partition sort LEAD with the table's partition
         // columns, so every written file is a z-contiguous slice of
@@ -3862,20 +3861,16 @@ object DeltaLog {
         // compose (real Delta's semantics: z-order never crosses
         // partition boundaries)
         graft.ops.Scale.zClusteredBy(scanState(spark, tableDir, st),
-            st.partitionColumns, zorderCols, targetFiles)
-          .write.partitionBy(st.partitionColumns: _*)
-          .parquet(s"$tableDir/$sub")
-        partitionedAdds(spark, tableDir, sub, st.partitionColumns, None,
-          dataChange = false)
-      } else {
+          st.partitionColumns, zorderCols, targetFiles)
+      else {
         val clustered = graft.ops.Scale.zClustered(
           scanState(spark, tableDir, st), zorderCols, targetFiles)
-        writeBatch(
-          if (st.columnMapping.isEmpty) clustered
-          else physicalRows(clustered, st),
-          tableDir, sub, None, dataChange = false)
+        if (st.columnMapping.isEmpty) clustered
+        else physicalRows(clustered, st)
       }
-    commitCompaction(tableDir, base, st, adds)
+    commitCompaction(tableDir, base, st, writeStaged(rewrite, tableDir,
+      s"part-${java.util.UUID.randomUUID}", st.partitionColumns, None,
+      dataChange = false))
   }
 
   // ---------------------------------------------------------------
@@ -5574,20 +5569,11 @@ object DeltaLog {
          .drop("_m_f", "_m_p"))
         .unionByName(upserts.select(st.schema.fieldNames.map(col): _*))
     val sub = s"part-${java.util.UUID.randomUUID}"
-    val adds: Seq[ObjectNode] =
-      if (partCols.isEmpty)
-        // mapped targets (always unpartitioned): rewrite files spell
-        // the columns physically, like every other mapped write
-        writeBatch(
-          if (st.columnMapping.isEmpty) newRows
-          else physicalRows(newRows, st),
-          tableDir, sub, Some(st))
-      else {
-        newRows.write.partitionBy(partCols: _*)
-          .parquet(s"$tableDir/$sub")
-        partitionedAdds(spark, tableDir, sub, partCols, Some(st),
-          dataChange = true)
-      }
+    // mapped targets (always unpartitioned): rewrite files spell the
+    // columns physically, like every other mapped write
+    val adds = writeStaged(
+      if (st.columnMapping.isEmpty) newRows else physicalRows(newRows, st),
+      tableDir, sub, partCols, Some(st))
     // delta.enableChangeDataFeed=true: the row-level change file +
     // cdc action ride the SAME commit (update_preimage/postimage for
     // matched upsert keys, delete for tombstone matches, insert for

@@ -1341,7 +1341,7 @@ object Iceberg {
     * one. Iceberg manifests record only `int64` (their bound encoding
     * here is 8-byte little-endian, wrong for int columns); Delta's
     * `add.stats` records both. */
-  private[sources] case class FooterStats(numRecords: Long,
+  private[graft] case class FooterStats(numRecords: Long,
       int64: Map[String, (Long, Long)], int32: Map[String, (Long, Long)]) {
     def iceberg: (Long, Map[String, (Long, Long)]) = (numRecords, int64)
   }
@@ -1351,16 +1351,17 @@ object Iceberg {
     * migration); a just-written BATCH goes through
     * [[footerStatsBatch]] so the driver never serializes O(files) IO
     * round-trips. */
-  private[sources] def parquetFooter(path: String): FooterStats = {
+  private[graft] def parquetFooter(path: String): FooterStats = {
     driverFooterOpens += 1
     footerStatsOf(path)
   }
 
   /** Driver-side footer opens since session start — the spec seam
-    * proving commit paths collect stats through the DISTRIBUTED job:
-    * executor tasks call [[footerStatsOf]] directly, so local-mode
-    * tasks never inflate the count, and a multi-file commit must
-    * leave it unchanged. */
+    * proving commit paths never open footers on the driver: Delta
+    * commits take stats from their write tasks, Iceberg commits from
+    * the DISTRIBUTED job (executor tasks call [[footerStatsOf]]
+    * directly, so local-mode tasks never inflate the count), and a
+    * multi-file commit must leave it unchanged. */
   @volatile private[graft] var driverFooterOpens: Long = 0L
 
   /** Per-file footer stats for a just-written batch via ONE
@@ -1370,8 +1371,10 @@ object Iceberg {
     * thousand part files pays one job instead of a thousand
     * sequential driver round-trips. A single file skips the job
     * (task-launch overhead exceeds one local footer open, and a
-    * 1-file commit's latency never grows with table size). The one
-    * footer-stats reader of both formats' commit paths. */
+    * 1-file commit's latency never grows with table size). Callers:
+    * the Iceberg commit paths and Delta's [[DeltaLog.bloomBackfill]]
+    * (files that already exist); Delta commits of just-written data
+    * take their stats from the write tasks instead. */
   private[sources] def footerStatsBatch(spark: SparkSession,
       paths: Seq[String]): Map[String, FooterStats] =
     paths match {

@@ -16,8 +16,9 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
   SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetOutputWriter, ParquetWriteSupport}
-import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
-  LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType,
+  IntegerType, LongType, ShortType, StringType, StructField, StructType,
+  TimestampType}
 
 import graft.sources.DeltaLog
 
@@ -25,16 +26,19 @@ import graft.sources.DeltaLog
   * `df.write.format("graft-delta").mode("append"/"overwrite")
   * [.partitionBy(...)].save/option("path", dir)`, the reference's
   * own write spelling (spark/streaming_bronze.py writes bronze with
-  * `.format("delta")`). Executors write the parquet data files
+  * `.format("delta")`) — and the data job of every library Delta
+  * writer ([[StagedWrite]]). Executors write the parquet data files
   * DIRECTLY into the table directory under UUID names (invisible —
   * only the log makes files live, Delta's own uncommitted-file
   * model; an aborted write's files are deleted, and stragglers are
-  * vacuum's ordinary prey), tracking numRecords + long min/max AS
-  * THEY WRITE so the add actions carry data-skipping stats without
-  * any post-write footer pass. The driver then commits through
+  * vacuum's ordinary prey), tracking numRecords + integral min/max AS
+  * THEY WRITE, and folding the keys of the table's bloomed columns
+  * into each file's bloom words when the file closes — so a commit
+  * carries data-skipping stats and its bloom sidecar rows without any
+  * post-write footer pass or re-read. The driver then commits through
   * [[DeltaLog.commitDsv2]]: partition-spec + schema-shape
   * validation, CHECK-constraint/generated-column enforcement by
-  * reading back the not-yet-visible files, bloom sidecars, and the
+  * reading back the not-yet-visible files, the bloom sidecar, and the
   * same LogStore CAS claim loop as every library writer — so a DSv2
   * write races library writers safely.
   *
@@ -64,9 +68,10 @@ private[streaming] class DeltaWriteBuilder(tableDir: String,
   }
 
   /** Resolve the write's (logical schema, physical schema,
-    * partition columns) against the table's current state — shared
-    * by the batch and streaming halves. */
-  private def resolved(): (StructType, StructType, Seq[String]) = {
+    * partition columns, bloomed columns) against the table's current
+    * state — shared by the batch and streaming halves. */
+  private def resolved()
+      : (StructType, StructType, Seq[String], Seq[String]) = {
     val schema = info.schema()
     val exists = DeltaLog.versions(tableDir).nonEmpty
     val st =
@@ -96,14 +101,15 @@ private[streaming] class DeltaWriteBuilder(tableDir: String,
             "— supported partition types are string, long, int, date")
       }
     }
-    (schema, Dsv2WriteSchemas.physicalFor(st, schema), partCols)
+    (schema, Dsv2WriteSchemas.physicalFor(st, schema), partCols,
+      st.map(DeltaLog.bloomColsOf).getOrElse(Seq.empty))
   }
 
   override def build(): Write = new Write {
     override def toBatch: BatchWrite = {
-      val (schema, physical, partCols) = resolved()
+      val (schema, physical, partCols, bloomCols) = resolved()
       new DeltaBatchWrite(tableDir, schema, physical, partCols,
-        overwrite)
+        overwrite, bloomCols)
     }
 
     /** `df.writeStream.format("graft-delta")` — the NATIVE
@@ -120,9 +126,9 @@ private[streaming] class DeltaWriteBuilder(tableDir: String,
         "graft-delta streaming sink is APPEND-only — complete mode " +
           "rewrites the table per trigger; use " +
           "foreachBatch + DeltaLog.commitOverwrite for that shape")
-      val (schema, physical, partCols) = resolved()
+      val (schema, physical, partCols, bloomCols) = resolved()
       new DeltaStreamingWrite(tableDir, schema, physical, partCols,
-        info.queryId())
+        info.queryId(), bloomCols)
     }
   }
 }
@@ -133,7 +139,7 @@ private[streaming] class DeltaWriteBuilder(tableDir: String,
   * (queryId, epochId). */
 private[streaming] class DeltaStreamingWrite(tableDir: String,
     logicalSchema: StructType, physicalSchema: StructType,
-    partCols: Seq[String], queryId: String)
+    partCols: Seq[String], queryId: String, bloomCols: Seq[String])
   extends org.apache.spark.sql.connector.write.streaming
     .StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming
@@ -142,7 +148,7 @@ private[streaming] class DeltaStreamingWrite(tableDir: String,
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new DeltaWriterFactory(tableDir, logicalSchema.json,
-      physicalSchema.json, partCols)
+      physicalSchema.json, partCols, bloomCols = bloomCols)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit =
@@ -211,12 +217,13 @@ private[streaming] case class Dsv2CommitMsg(
 
 private[streaming] class DeltaBatchWrite(tableDir: String,
     logicalSchema: StructType, physicalSchema: StructType,
-    partCols: Seq[String], overwrite: Boolean) extends BatchWrite {
+    partCols: Seq[String], overwrite: Boolean, bloomCols: Seq[String])
+  extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
     new DeltaWriterFactory(tableDir, logicalSchema.json,
-      physicalSchema.json, partCols)
+      physicalSchema.json, partCols, bloomCols = bloomCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.toSeq
@@ -234,10 +241,65 @@ private[streaming] class DeltaBatchWrite(tableDir: String,
     }
 }
 
+/** The library Delta writers' data job ([[DeltaLog]]'s
+  * `commitOverwrite`/`commitAppend*`/partitioned/mapped writers and
+  * the compactions): `df` is written by the stats- and
+  * bloom-tracking [[DeltaDataWriter]]s under `tableDir/relPrefix` as
+  * ONE append command over the caller's plan (so an `Observation` on
+  * `df` completes and query listeners see the job), and the tasks'
+  * files come back to the caller instead of being committed here —
+  * the caller owns the log claim. An unpartitioned batch always
+  * lands at least one file. */
+private[graft] object StagedWrite {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table,
+    TableCapability}
+
+  def apply(df: DataFrame, tableDir: String, relPrefix: String,
+      partCols: Seq[String], bloomCols: Seq[String])
+      : Seq[DeltaLog.Dsv2File] = {
+    @volatile var written: Seq[DeltaLog.Dsv2File] = null
+    val table = new Table with SupportsWrite {
+      override def name(): String = s"$tableDir/$relPrefix"
+      override def schema(): StructType = df.schema
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.BATCH_WRITE,
+          TableCapability.ACCEPT_ANY_SCHEMA)
+      override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+        new WriteBuilder { override def build(): Write = new Write {
+          // the connector's batch write, minus its log commit: the
+          // tasks' files go back to the caller (abort is inherited)
+          override def toBatch: BatchWrite = new DeltaBatchWrite(tableDir,
+              info.schema(), info.schema(), partCols, overwrite = false,
+              bloomCols) {
+            override def createBatchWriterFactory(
+                pinfo: PhysicalWriteInfo): DataWriterFactory =
+              new DeltaWriterFactory(tableDir, info.schema().json,
+                info.schema().json, partCols, relPrefix,
+                bloomCols = bloomCols, keepEmpty = partCols.isEmpty)
+            override def commit(
+                messages: Array[WriterCommitMessage]): Unit =
+              written = messages.toSeq
+                .flatMap(_.asInstanceOf[Dsv2CommitMsg].files)
+          }
+        } }
+    }
+    org.apache.spark.sql.graftbridge.Bridge.appendV2(df, table)
+    written
+  }
+}
+
+/** `keepEmpty`: partition 0 lands one (possibly empty) file even
+  * when it saw no rows — the library writers' contract that an
+  * unpartitioned batch is never zero files (Spark's file writer
+  * keeps the same one for an empty frame), so the commit always
+  * carries a schema-bearing add. */
 private[streaming] class DeltaWriterFactory(tableDir: String,
     logicalJson: String, physicalJson: String, partCols: Seq[String],
     relPrefix: String = "",
-    hiddenSpec: Seq[(String, String)] = Seq.empty)
+    hiddenSpec: Seq[(String, String)] = Seq.empty,
+    bloomCols: Seq[String] = Seq.empty,
+    keepEmpty: Boolean = false)
   extends DataWriterFactory
   with org.apache.spark.sql.connector.write.streaming
     .StreamingDataWriterFactory {
@@ -246,7 +308,8 @@ private[streaming] class DeltaWriterFactory(tableDir: String,
     new DeltaDataWriter(tableDir,
       DataType.fromJson(logicalJson).asInstanceOf[StructType],
       DataType.fromJson(physicalJson).asInstanceOf[StructType],
-      partCols, relPrefix, hiddenSpec)
+      partCols, relPrefix, hiddenSpec, bloomCols,
+      keepEmpty && partitionId == 0)
   // streaming tasks write the same UUID-named invisible files —
   // epoch identity lives in the COMMIT's txn/summary watermark
   override def createWriter(partitionId: Int, taskId: Long,
@@ -256,8 +319,13 @@ private[streaming] class DeltaWriterFactory(tableDir: String,
 
 /** Executor-side writer: one open parquet file per partition value
   * seen (rows need not be clustered), partition columns projected
-  * out via a codegen'd UnsafeProjection, numRecords + long/int
-  * min/max tracked per file while writing.
+  * out via a codegen'd UnsafeProjection, numRecords + integral
+  * min/max tracked per file while writing. Each file also keeps the
+  * non-null keys of its `bloomCols` and folds them into bloom words
+  * when it closes, sized by its own row count
+  * ([[DeltaLog.sidecarBloomBits]]) — the geometry is only known once
+  * the file is complete, so the keys wait in a primitive buffer
+  * (8 bytes per key) until then.
   *
   * `hiddenSpec` (mutually exclusive with `partCols`) switches the
   * writer to Iceberg HIDDEN partitioning: the file key is the
@@ -271,7 +339,9 @@ private[streaming] class DeltaWriterFactory(tableDir: String,
 private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
     physical: StructType, partCols: Seq[String],
     relPrefix: String = "",
-    hiddenSpec: Seq[(String, String)] = Seq.empty)
+    hiddenSpec: Seq[(String, String)] = Seq.empty,
+    bloomCols: Seq[String] = Seq.empty,
+    keepEmpty: Boolean = false)
   extends DataWriter[InternalRow] {
 
   require(partCols.isEmpty || hiddenSpec.isEmpty,
@@ -313,6 +383,12 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
       case (f, j) if f.dataType == IntegerType =>
         (j, f.name, (r: org.apache.spark.sql.catalyst.expressions
           .UnsafeRow, i: Int) => r.getInt(i).toLong)
+      case (f, j) if f.dataType == ShortType =>
+        (j, f.name, (r: org.apache.spark.sql.catalyst.expressions
+          .UnsafeRow, i: Int) => r.getShort(i).toLong)
+      case (f, j) if f.dataType == ByteType =>
+        (j, f.name, (r: org.apache.spark.sql.catalyst.expressions
+          .UnsafeRow, i: Int) => r.getByte(i).toLong)
       case (f, j) if f.dataType
           .isInstanceOf[org.apache.spark.sql.types.DecimalType] &&
           f.dataType.asInstanceOf[org.apache.spark.sql.types
@@ -324,42 +400,27 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
           r.getDecimal(i, d.precision, d.scale).toUnscaledLong)
     }
 
+  // bloomed columns within the DATA row: (ordinal, name, is int)
+  private val bloomIdx: Array[(Int, String, Boolean)] =
+    dataLogical.fields.zipWithIndex.collect {
+      case (f, j) if bloomCols.contains(f.name) =>
+        (j, f.name, f.dataType == IntegerType)
+    }
+
   private final class OpenFile(val relPath: String) {
     val abs = s"$tableDir/$relPath"
-    val writer: ParquetOutputWriter = {
-      // prefixed layouts (iceberg's data/) need the subdir to exist
-      Option(new File(abs).getParentFile)
-        .foreach(d => java.nio.file.Files.createDirectories(d.toPath))
-      val conf = new Configuration()
-      conf.set("parquet.write.support.class",
-        classOf[ParquetWriteSupport].getName)
-      ParquetWriteSupport.setSchema(dataPhysical, conf)
-      conf.set("parquet.compression", "SNAPPY")
-      conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-      conf.set("spark.sql.parquet.outputTimestampType",
-        "TIMESTAMP_MICROS")
-      conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      conf.set("spark.sql.parquet.datetimeRebaseModeInWrite",
-        "CORRECTED")
-      conf.set("spark.sql.parquet.int96RebaseModeInWrite",
-        "CORRECTED")
-      // the schema converter's boolean reads have no usable string
-      // defaults — same keys the vectorized READER path pins
-      conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-      conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      conf.set("spark.sql.caseSensitive", "false")
-      conf.set(
-        "spark.sql.parquet.variant.annotateLogicalType.enabled",
-        "false")
-      new ParquetOutputWriter(abs,
-        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-    }
+    val writer: ParquetOutputWriter =
+      DeltaDataWriter.parquetWriter(abs, dataPhysical)
     var rows = 0L
     val mins = Array.fill[Long](statCols.length)(Long.MaxValue)
     val maxs = Array.fill[Long](statCols.length)(Long.MinValue)
     var sawValue: Array[Boolean] =
       Array.fill(statCols.length)(false)
+    val keys = Array.fill(bloomIdx.length)(new mutable.ArrayBuilder.ofLong)
   }
+
+  private def newFile(): OpenFile =
+    new OpenFile(s"${relPrefix}part-${UUID.randomUUID}.snappy.parquet")
 
   private val open = mutable.LinkedHashMap.empty[Seq[String], OpenFile]
 
@@ -372,8 +433,12 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
       case IntegerType => row.getInt(idx).toString
       case DateType =>
         java.time.LocalDate.ofEpochDay(row.getInt(idx).toLong).toString
-      case other => throw new IllegalStateException(
-        s"unreachable partition type $other")
+      // the library writers partition by any atomic type: spelled as
+      // Spark's own partition-path cast does (session time zone)
+      case other => org.apache.spark.sql.catalyst.expressions.Cast(
+        BoundReference(idx, other, nullable = true), StringType,
+        Some(org.apache.spark.sql.internal.SQLConf.get
+          .sessionLocalTimeZone)).eval(row).toString
     }
 
   /** The derived-tuple extractor for `transform` over source
@@ -428,8 +493,7 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
       if (hiddenIdx.nonEmpty)
         hiddenIdx.toSeq.map { case (_, get) => get(row) }
       else partIdx.toSeq.map { case (_, i, dt) => pvString(row, i, dt) }
-    val of = open.getOrElseUpdate(key,
-      new OpenFile(s"${relPrefix}part-${UUID.randomUUID}.snappy.parquet"))
+    val of = open.getOrElseUpdate(key, newFile())
     val out = proj(row)
     // stats BEFORE write: the projection's UnsafeRow is reused
     var s = 0
@@ -443,11 +507,34 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
       }
       s += 1
     }
+    var b = 0
+    while (b < bloomIdx.length) {
+      val (j, _, isInt) = bloomIdx(b)
+      if (!out.isNullAt(j))
+        of.keys(b) += (if (isInt) out.getInt(j).toLong else out.getLong(j))
+      b += 1
+    }
     of.writer.write(out)
     of.rows += 1
   }
 
+  /** The file's bloom words per bloomed column: its keys folded
+    * into a `sidecarBloomBits(rows)`-bit filter, non-zero words only
+    * (a column with no non-null key yields none — never bloomed). */
+  private def bloomsOf(of: OpenFile): Seq[DeltaLog.FileBloom] =
+    bloomIdx.toSeq.zip(of.keys).flatMap { case ((_, name, _), kb) =>
+      val ks = kb.result()
+      if (ks.isEmpty) None
+      else {
+        val words = new Array[Long](DeltaLog.sidecarBloomBits(of.rows) / 64)
+        ks.foreach(DeltaLog.bloomAdd(words, _))
+        val nz = words.indices.filter(words(_) != 0L).toArray
+        Some(DeltaLog.FileBloom(name, words.length * 64, nz, nz.map(words)))
+      }
+    }
+
   override def commit(): WriterCommitMessage = {
+    if (keepEmpty && open.isEmpty) open(Seq.empty) = newFile()
     val files = open.toSeq.map { case (key, of) =>
       of.writer.close()
       val bounds = statCols.zipWithIndex.collect {
@@ -458,8 +545,10 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
         if (hiddenIdx.nonEmpty) hiddenIdx.toSeq.map(_._1)
         else partIdx.toSeq.map(_._1)
       DeltaLog.Dsv2File(of.relPath, new File(of.abs).length,
-        keyNames.zip(key).toMap, of.rows, bounds)
+        keyNames.zip(key).toMap, of.rows, bounds, bloomsOf(of))
     }
+    org.apache.spark.sql.graftbridge.Bridge.addTaskOutput(
+      files.map(_.size).sum, files.map(_.numRecords).sum)
     open.clear()
     Dsv2CommitMsg(files)
   }
@@ -474,6 +563,66 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
   }
 
   override def close(): Unit = ()
+}
+
+private[graft] object DeltaDataWriter {
+
+  /** One Hadoop configuration per JVM, loaded once and copied per
+    * file: a fresh one re-parses the default resources on first use —
+    * tens of ms of CPU per file on a many-file write. */
+  private lazy val baseConf = {
+    val c = new Configuration()
+    c.size() // load the default resources now, so copies clone them
+    c
+  }
+
+  /** One parquet file at `abs` in `schema`, written by Spark's own
+    * parquet write support (the same bytes a DataFrame write lands),
+    * without a task context — the executor writers above and the
+    * driver's bloom sidecar part ([[DeltaLog]]) both open theirs
+    * here. Missing parent directories are created through the
+    * path's Hadoop file system. */
+  def parquetWriter(abs: String, schema: StructType): ParquetOutputWriter = {
+    val conf = new Configuration(baseConf)
+    conf.set("parquet.write.support.class",
+      classOf[ParquetWriteSupport].getName)
+    ParquetWriteSupport.setSchema(schema, conf)
+    conf.set("parquet.compression", "SNAPPY")
+    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
+    conf.set("spark.sql.parquet.outputTimestampType",
+      "TIMESTAMP_MICROS")
+    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite",
+      "CORRECTED")
+    conf.set("spark.sql.parquet.int96RebaseModeInWrite",
+      "CORRECTED")
+    // the schema converter's boolean reads have no usable string
+    // defaults — same keys the vectorized READER path pins
+    conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    conf.set("spark.sql.caseSensitive", "false")
+    conf.set(
+      "spark.sql.parquet.variant.annotateLogicalType.enabled",
+      "false")
+    // prefixed layouts (iceberg's data/, a library writer's
+    // part-<uuid>/) need the subdir to exist
+    val p = new org.apache.hadoop.fs.Path(abs)
+    p.getFileSystem(conf).mkdirs(p.getParent)
+    new ParquetOutputWriter(abs,
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+  }
+
+  /** `rows` as one parquet file at `abs`, staged under a dot-name and
+    * renamed into place, so no reader lists it half written. */
+  def writeFile(abs: String, schema: StructType,
+      rows: Iterator[InternalRow]): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(abs)
+    val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
+      s".${dst.getName}.tmp")
+    val w = parquetWriter(tmp.toString, schema)
+    try rows.foreach(w.write) finally w.close()
+    dst.getFileSystem(baseConf).rename(tmp, dst): Unit
+  }
 }
 
 /** q224's home — the DSv2 write path's gated query. */

@@ -115,7 +115,7 @@ private[streaming] class DeltaPositionMergeOperation(dir: String,
           new PositionDeltaBatchWrite(DeltaPositionMergeOperation.this,
             dir, info.schema(),
             Dsv2WriteSchemas.physicalFor(Some(st), info.schema()),
-            st.partitionColumns, rowIdSchema)
+            st.partitionColumns, rowIdSchema, DeltaLog.bloomColsOf(st))
         }
       }
     }
@@ -152,13 +152,15 @@ private[streaming] case class MergeDeltaCommitMsg(
 private[streaming] class PositionDeltaBatchWrite(
     op: DeltaPositionMergeOperation, tableDir: String,
     logicalSchema: StructType, physicalSchema: StructType,
-    partCols: Seq[String], rowIdSchema: StructType)
+    partCols: Seq[String], rowIdSchema: StructType,
+    bloomCols: Seq[String])
   extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DeltaWriterFactory =
     new PositionDeltaWriterFactory(tableDir, logicalSchema.json,
-      physicalSchema.json, partCols, rowIdSchema.json)
+      physicalSchema.json, partCols, rowIdSchema.json,
+      bloomCols = bloomCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.toSeq.map(_.asInstanceOf[MergeDeltaCommitMsg])
@@ -179,7 +181,8 @@ private[streaming] class PositionDeltaBatchWrite(
 private class PositionDeltaWriterFactory(tableDir: String,
     logicalJson: String, physicalJson: String, partCols: Seq[String],
     rowIdJson: String, relPrefix: String = "",
-    hiddenSpec: Seq[(String, String)] = Seq.empty)
+    hiddenSpec: Seq[(String, String)] = Seq.empty,
+    bloomCols: Seq[String] = Seq.empty)
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DeltaWriter[InternalRow] =
@@ -188,7 +191,7 @@ private class PositionDeltaWriterFactory(tableDir: String,
       DataType.fromJson(physicalJson).asInstanceOf[StructType],
       partCols,
       DataType.fromJson(rowIdJson).asInstanceOf[StructType],
-      relPrefix, hiddenSpec)
+      relPrefix, hiddenSpec, bloomCols)
 }
 
 /** Executor-side MERGE writer: inserted and updated rows flow into
@@ -199,7 +202,8 @@ private class PositionDeltaWriterFactory(tableDir: String,
 private class PositionDeltaWriter(tableDir: String,
     logical: StructType, physical: StructType, partCols: Seq[String],
     rowIdSchema: StructType, relPrefix: String = "",
-    hiddenSpec: Seq[(String, String)] = Seq.empty)
+    hiddenSpec: Seq[(String, String)] = Seq.empty,
+    bloomCols: Seq[String] = Seq.empty)
   extends DeltaWriter[InternalRow] {
 
   // rowId field positions resolved by NAME — never assume the
@@ -209,7 +213,7 @@ private class PositionDeltaWriter(tableDir: String,
 
   private def mkWriter() =
     new DeltaDataWriter(tableDir, logical, physical, partCols,
-      relPrefix, hiddenSpec)
+      relPrefix, hiddenSpec, bloomCols)
   private var insW: DeltaDataWriter = null
   private var updW: DeltaDataWriter = null
   private val delBms =

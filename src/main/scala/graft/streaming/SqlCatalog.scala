@@ -1257,7 +1257,7 @@ private[streaming] class DeltaRowLevelOperation(dir: String,
         val schema = info.schema()
         new ReplaceFilesBatchWrite(DeltaRowLevelOperation.this, dir,
           schema, Dsv2WriteSchemas.physicalFor(Some(st), schema),
-          st.partitionColumns)
+          st.partitionColumns, DeltaLog.bloomColsOf(st))
       }
     }
   }
@@ -1288,12 +1288,12 @@ private[streaming] class DeltaRowLevelOperation(dir: String,
 private[streaming] class ReplaceFilesBatchWrite(
     op: DeltaRowLevelOperation, tableDir: String,
     logicalSchema: StructType, physicalSchema: StructType,
-    partCols: Seq[String]) extends BatchWrite {
+    partCols: Seq[String], bloomCols: Seq[String]) extends BatchWrite {
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
     new DeltaWriterFactory(tableDir, logicalSchema.json,
-      physicalSchema.json, partCols)
+      physicalSchema.json, partCols, bloomCols = bloomCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     op.commitReplace(messages.toSeq

@@ -3,6 +3,8 @@ package graft.warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Layout
+
 /** S10 + F18/F19/F20: the generated date dimension (reference:
   * clickhouse_init/02_dim_tables.sql:10-66 — arrayJoin(arrayMap(range))
   * row generator + toYear/toQuarter/... + multiIf weekend flag).
@@ -16,8 +18,9 @@ import org.apache.spark.sql.functions._
   */
 object DateDim {
 
-  def dimTime(spark: SparkSession, dir: String): DataFrame =
-    spark.range(1)
+  def dimTime(spark: SparkSession, dir: String,
+              layout: Layout = Layout.Declared): DataFrame =
+    layout.present(spark.range(1)
       .select(explode(sequence(
         to_date(lit("2016-01-01")),
         to_date(lit("2025-12-31")))).as("d"))
@@ -32,8 +35,8 @@ object DateDim {
         dayofmonth(col("d")).as("day_of_month"),
         dayofweek(col("d")).as("day_of_week"),
         date_format(col("d"), "EEEE").as("day_name"),
-        dayofweek(col("d")).isin(1, 7).as("is_weekend"))
-      .orderBy(col("date_key"))
+        dayofweek(col("d")).isin(1, 7).as("is_weekend")),
+      col("date_key"))
 
   val dimTimeSql: String =
     """SELECT CAST(strftime(d, '%Y%m%d') AS INT) AS date_key,

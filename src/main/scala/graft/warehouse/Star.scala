@@ -83,15 +83,16 @@ object Star {
 
   /** S11: static dimension seeded from literals (reference:
     * clickhouse_init/02_dim_tables.sql:146-153 order-status dim). */
-  def dimOrderStatus(spark: SparkSession, dir: String): DataFrame = {
+  def dimOrderStatus(spark: SparkSession, dir: String,
+                     layout: Layout = Layout.Declared): DataFrame = {
     import spark.implicits._
-    Seq(
+    layout.present(Seq(
       (1, "O", "Open"),
       (2, "F", "Finished"),
       (3, "P", "Pending"),
       (0, "?", "Unknown"))
-      .toDF("status_key", "status_code", "status_name")
-      .orderBy(col("status_key"))
+      .toDF("status_key", "status_code", "status_name"),
+      col("status_key"))
   }
 
   val dimOrderStatusSql: String =
@@ -128,13 +129,14 @@ object Star {
     * raw xxhash64 value has no DuckDB equivalent, so this query is
     * covered by the join-consistency gate above plus a ScalaTest
     * pinning known xxhash64 values. */
-  def dimCustomer(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "customer")
+  def dimCustomer(spark: SparkSession, dir: String,
+                  layout: Layout = Layout.Declared): DataFrame =
+    layout.present(Tables.load(spark, dir, "customer")
       .select(
         surrogate(col("c_custkey")).as("customer_key"),
         col("c_custkey"), col("c_name"), col("c_mktsegment"),
-        col("c_acctbal"))
-      .orderBy(col("c_custkey"))
+        col("c_acctbal")),
+      col("c_custkey"))
 
   // ---------------------------------------------------------------- q80
 

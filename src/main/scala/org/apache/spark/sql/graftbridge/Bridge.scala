@@ -31,4 +31,32 @@ object Bridge {
       p: org.apache.spark.sql.connector.expressions.filter.Predicate)
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p)
+
+  /** Count a DSv2 data writer's files in its task's output metrics,
+    * as Spark's own file writer does (the DSv2 write task leaves them
+    * at zero); `OutputMetrics`' setters are `private[spark]`. */
+  def addTaskOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+      val om = tc.taskMetrics().outputMetrics
+      om.setBytesWritten(om.bytesWritten + bytes)
+      om.setRecordsWritten(om.recordsWritten + records)
+    }
+
+  /** Append `df` into the DSv2 `table` as ONE command over the
+    * caller's plan — what `df.write.format(...).save()` runs, minus
+    * the provider lookup: the library Delta writers hand their own
+    * in-memory table (whose BatchWrite keeps the task commit
+    * messages) straight to the planner. Query listeners and
+    * `Observation`s see the write like any other Dataset action. */
+  def appendV2(df: org.apache.spark.sql.DataFrame,
+      table: org.apache.spark.sql.connector.catalog.Table): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.AppendData
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    new QueryExecution(ds.sparkSession,
+      AppendData.byPosition(DataSourceV2Relation.create(table, None, None),
+        ds.logicalPlan),
+      ds.queryExecution.tracker).assertCommandExecuted()
+  }
 }

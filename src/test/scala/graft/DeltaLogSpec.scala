@@ -3207,48 +3207,160 @@ class DeltaLogSpec extends SparkSuite {
     assert(evolved.filter(col("x").isNull).count() == 100)
   }
 
-  test("BloomWords-built bloom sidecar equals the expression-built rows") {
-    // the sidecar writer folds keys with the BloomWords bitmap
-    // aggregate; its rows must be BIT-IDENTICAL to the
-    // explode(positions)+groupBy(file, word) plan it replaced (same
-    // (file, word) set, same bits), sized from the commit's own
-    // add.stats rows — else readers would probe a different filter
-    // than the writer built
+  /** Every sidecar row of `t` must be BIT-IDENTICAL to the
+    * expression-only build — explode(pmod(xxhash64(key, i), m)) +
+    * groupBy(file, word) over the live files — with each file's
+    * filter sized from its OWN add.stats numRecords
+    * (`sidecarBloomBits`), one geometry per (file, column); else
+    * readers would probe a different filter than the writer built. */
+  private def assertSidecarIsExpressionBuild(t: String,
+      cols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
-    val t = Files.createTempDirectory("dlbloomwords").toString + "/t"
-    val df = (1L to 5000L).map(k => (k * 7919L % 100000L, s"p$k"))
-      .toDF("k", "s").repartition(4, col("k"))
-    sources.DeltaLog.createTable(t, df.schema, Seq.empty,
-      Map(sources.DeltaLog.BloomColsProp -> "k"))
-    sources.DeltaLog.commitOverwrite(df, t)
-    val st = sources.DeltaLog.replay(t, 1L)
+    val st = sources.DeltaLog.replay(t, sources.DeltaLog.versions(t).last)
+    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
+    val rows: Map[String, Long] = st.adds.map { case (p, a) =>
+      base(p) -> a.stats.flatMap(sources.DeltaLog.statsNumRecords).get }
     def parquetUnder(d: java.io.File): Seq[String] =
       if (d.isDirectory) d.listFiles().toSeq.flatMap(parquetUnder)
       else if (d.getName.endsWith(".parquet")) Seq(d.getPath)
       else Seq.empty
     val sidecar = spark.read.parquet(parquetUnder(
       new java.io.File(t, sources.DeltaLog.BloomSidecarDir)): _*)
-    val mBits = sidecar.select("m_bits").distinct().collect()
-      .map(_.getInt(0)).toSeq
-    val maxRows = st.adds.values
-      .flatMap(_.stats.flatMap(sources.DeltaLog.statsNumRecords)).max
-    assert(mBits == Seq(sources.DeltaLog.sidecarBloomBits(maxRows)),
-      s"bloom geometry $mBits must be sized from add.stats ($maxRows rows)")
-    // rebuild with the ORIGINAL expression-only plan
+    val geoms = sidecar.select("file", "colname", "m_bits").distinct()
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+    assert(geoms.map(g => (g._1, g._2)).distinct.length == geoms.length,
+      s"a (file, column) carries two geometries: ${geoms.toSeq}")
+    geoms.foreach { case (f, c, m) =>
+      assert(m == sources.DeltaLog.sidecarBloomBits(rows(f)),
+        s"$f.$c: m_bits $m must be sized from its own add.stats " +
+          s"(${rows(f)} rows)")
+    }
+    val sizes = rows.toSeq.map { case (f, n) =>
+      (f, sources.DeltaLog.sidecarBloomBits(n)) }.toDF("file", "m")
     val reread = spark.read.parquet(st.files.map(p => s"$t/$p"): _*)
-    val positions = (0 until sources.DeltaLog.BloomHashes).map(i =>
-      pmod(xxhash64(col("k").cast("long"), lit(i.toLong)),
-        lit(mBits.head.toLong)))
-    val old = reread.filter(col("k").isNotNull)
-      .select(col("_metadata.file_name").as("file"),
-        explode(array(positions: _*)).as("pos"))
-      .groupBy(col("file"), (col("pos") / 64).cast("int").as("word"))
-      .agg(expr(
-        "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))")
-        .as("bits"))
-    val got = sidecar.select("file", "word", "bits")
+      .withColumn("file", col("_metadata.file_name"))
+      .join(broadcast(sizes), "file")
+    val old = cols.map { c =>
+      val positions = (0 until sources.DeltaLog.BloomHashes).map(i =>
+        pmod(xxhash64(col(c).cast("long"), lit(i.toLong)),
+          col("m").cast("long")))
+      reread.filter(col(c).isNotNull)
+        .select(col("file"), col("m"), explode(array(positions: _*)).as("pos"))
+        .groupBy(col("file"), (col("pos") / 64).cast("int").as("word"),
+          col("m").as("m_bits"))
+        .agg(expr(
+          "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))")
+          .as("bits"))
+        .withColumn("colname", lit(c))
+    }.reduce(_.unionByName(_))
+      .select("file", "word", "bits", "colname", "m_bits")
+    val got = sidecar.select("file", "word", "bits", "colname", "m_bits")
     assert(got.exceptAll(old).isEmpty && old.exceptAll(got).isEmpty,
-      "aggregate-built bloom rows diverge from the expression build")
+      s"$t: sidecar rows diverge from the expression build")
     assert(got.count() == old.count() && got.count() > 0)
+  }
+
+  test("BloomWords-built bloom sidecar equals the expression-built rows") {
+    // both builders: the commit's write tasks (per-file words in the
+    // commit messages) and bloomBackfill's BloomWords aggregate over
+    // files committed before the property was set
+    val dir = Files.createTempDirectory("dlbloomwords").toString
+    val df = (1L to 5000L).map(k => (k * 7919L % 100000L, s"p$k"))
+      .toDF("k", "s").repartition(4, col("k"))
+    val t = s"$dir/t"
+    sources.DeltaLog.createTable(t, df.schema, Seq.empty,
+      Map(sources.DeltaLog.BloomColsProp -> "k"))
+    sources.DeltaLog.commitOverwrite(df, t)
+    assertSidecarIsExpressionBuild(t, Seq("k"))
+    val u = s"$dir/u"
+    sources.DeltaLog.commitOverwrite(df, u)
+    sources.DeltaLog.setTableProperties(u,
+      Map(sources.DeltaLog.BloomColsProp -> "k"))
+    val live = sources.DeltaLog.replay(u, 1L).files.size
+    assert(sources.DeltaLog.bloomBackfill(spark, u) == live)
+    assertSidecarIsExpressionBuild(u, Seq("k"))
+  }
+
+  test("Delta commits take add.stats and bloom words from their write tasks") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions._
+    // three files of 100 / 1000 / 5000 rows (three bloom geometries),
+    // no shuffle: the commit's own data job is the caller's only job
+    val df = spark.range(0, 15000, 1, 3)
+      .filter(col("id") < 100 || col("id").between(5000, 5999) ||
+        col("id") >= 10000)
+      .select((col("id") * 7919L % 100003L).as("k"),
+        when(col("id") % 10 === 0, lit(null))
+          .otherwise((col("id") % 1000 - 500).cast("int")).as("i"),
+        expr("CAST((id - 3000) * 1.25 AS DECIMAL(18,2))").as("d"),
+        (col("id") % 2).cast("string").as("p"))
+    val props = Map(sources.DeltaLog.BloomColsProp -> "k,i")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString("; "))
+    }
+    /** Run one commit; assert its job budget and that the driver
+      * opened no footer. */
+    def committed(name: String)(commit: => Unit): Unit = {
+      org.apache.spark.ListenerSync.drain(spark.sparkContext)
+      jobs.clear()
+      val opens = sources.Iceberg.driverFooterOpens
+      commit
+      org.apache.spark.ListenerSync.drain(spark.sparkContext)
+      val seen = jobs.asScala.toSeq
+      assert(seen.size <= 2, s"$name: ${seen.size} jobs: $seen")
+      assert(!seen.exists(_.contains("Iceberg.scala")),
+        s"$name: a footer-stats job ran: $seen")
+      assert(sources.Iceberg.driverFooterOpens == opens,
+        s"$name: the driver opened parquet footers")
+    }
+    /** Each add's stats are its file's footer stats — numRecords and
+      * every INT64/INT32 bound — plus the decimal bounds the footer
+      * path never recorded, exact against the file's rows. */
+    def statsAreFooters(t: String): Unit = {
+      val st = sources.DeltaLog.replay(t, sources.DeltaLog.versions(t).last)
+      assert(st.adds.size >= 3, s"$t: ${st.adds.size} files")
+      st.adds.foreach { case (rel, a) =>
+        val foot = sources.Iceberg.parquetFooter(s"$t/$rel")
+        assert(a.stats.flatMap(sources.DeltaLog.statsNumRecords)
+          .contains(foot.numRecords), s"$rel: numRecords")
+        assert(a.longBounds.filter(_._1 != "d") == foot.int64 ++ foot.int32,
+          s"$rel: ${a.longBounds} vs footer ${foot.int64 ++ foot.int32}")
+        val r = spark.read.parquet(s"$t/$rel")
+          .agg(min("d"), max("d")).head()
+        assert(a.boundsFor(st.schema).get("d") == Some(
+          (r.getDecimal(0).unscaledValue.longValueExact,
+            r.getDecimal(1).unscaledValue.longValueExact)), s"$rel: d bounds")
+      }
+    }
+    val dir = Files.createTempDirectory("dltaskstats").toString
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t1 = s"$dir/overwrite"
+      sources.DeltaLog.createTable(t1, df.schema, Seq.empty, props)
+      committed("commitOverwrite")(sources.DeltaLog.commitOverwrite(df, t1))
+      val t2 = s"$dir/partitioned"
+      sources.DeltaLog.createTable(t2, df.schema, Seq("p"), props)
+      committed("commitOverwritePartitioned")(
+        sources.DeltaLog.commitOverwritePartitioned(df, t2, Seq("p")))
+      val t3 = s"$dir/dsv2"
+      sources.DeltaLog.createTable(t3, df.schema, Seq.empty, props)
+      committed("graft-delta write")(
+        df.write.format("graft-delta").mode("append").save(t3))
+      for (t <- Seq(t1, t2, t3)) {
+        statsAreFooters(t)
+        assertSidecarIsExpressionBuild(t, Seq("k", "i"))
+        val back = sources.DeltaLog.read(spark, t)
+          .select(df.columns.map(col): _*)
+        assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty,
+          s"$t: rows differ from the source")
+      }
+      // the partitioned table's files hold 50 / 500 / 2500 rows: the
+      // geometries differ per file
+      val st2 = sources.DeltaLog.replay(t2, 1L)
+      assert(st2.adds.values.map(_.partitionValues("p")).toSet == Set("0", "1"))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{SortExec, SparkPlan, WholeStageCodegenExe
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 
-/** Each gold/MV table has one builder and two layouts: the pipeline's
+/** Each gold/MV/dimension table has one builder and two layouts: the pipeline's
   * [[Layout.Sink]] frame must hold exactly the rows of the gated
   * [[Layout.Declared]] query, without its presentation sort. */
 class LayoutSpec extends SparkSuite with AdaptiveSparkPlanHelper {
@@ -34,12 +34,12 @@ class LayoutSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   private def fanOuts(p: SparkPlan): Seq[ShuffleExchangeExec] =
     collect(p) { case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e }
 
-  test("sink layout ≡ declared rows for all nine builders; only declared sorts") {
-    // the fan-out cases below assume a narrow scan: the testdata's
-    // single-file tables plan fewer tasks than half the session's cores
-    assert(Tables.scanParallelism(spark, sfDir, "lineitem") <
-      spark.sparkContext.defaultParallelism / 2)
-    for ((name, build, fanned) <- builders) {
+  /** The table-driven check: per builder, sink rows ≡ declared rows;
+    * only the declared plan sorts (once, at its root); the sink fans
+    * its scan out exactly when `fanned`. */
+  private def checkLayouts(cases: Seq[(String,
+      (SparkSession, String, Layout) => DataFrame, Boolean)]): Unit =
+    for ((name, build, fanned) <- cases) {
       val declared = build(spark, sfDir, Layout.Declared)
       val sink = build(spark, sfDir, Layout.Sink)
       assert(declared.schema == sink.schema, s"$name: schemas differ")
@@ -62,5 +62,19 @@ class LayoutSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       assert(fanOuts(sPlan).size == (if (fanned) 1 else 0),
         s"$name: sink fan-out expected=$fanned:\n$sPlan")
     }
+
+  test("sink layout ≡ declared rows for all nine builders; only declared sorts") {
+    // the fan-out cases below assume a narrow scan: the testdata's
+    // single-file tables plan fewer tasks than half the session's cores
+    assert(Tables.scanParallelism(spark, sfDir, "lineitem") <
+      spark.sparkContext.defaultParallelism / 2)
+    checkLayouts(builders)
+  }
+
+  test("sink layout ≡ declared rows for the three dimensions; only declared sorts") {
+    checkLayouts(Seq(
+      ("dim_customer", warehouse.Star.dimCustomer _, false),
+      ("dim_order_status", warehouse.Star.dimOrderStatus _, false),
+      ("dim_time", warehouse.DateDim.dimTime _, false)))
   }
 }
