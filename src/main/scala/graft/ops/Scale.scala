@@ -563,7 +563,7 @@ object Scale {
     def agg(joined: DataFrame): DataFrame = joined
       .groupBy(col("k"))
       .agg(count(lit(1)).as("n_lines"), sum(col("attr")).as("attr_sum"),
-        sum(col("v").cast("decimal(18,2)")).cast("double").as("revenue"))
+        graft.util.Cols.dsum(col("v")).as("revenue"))
     val rows = li.count() // parquet metadata count, no scan
     // ~80% of rows × ~16 B/row raw; thresholds at 1/4 and 1/16 of the
     // estimate absorb shuffle compression and split the hot key into

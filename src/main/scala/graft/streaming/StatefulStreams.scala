@@ -216,7 +216,7 @@ object StatefulStreams {
         date_format(col("o_orderdate"), "yyyy-MM"))
       .groupBy(col("order_month"))
       .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).as("rev_dec"))
+        graft.util.Cols.decSum(col("o_totalprice")).as("rev_dec"))
 
   /** [[streamingMvMonthly]] over a CALLER-OWNED work dir, so the spec
     * can inspect the per-batch emission log (which months each

@@ -2,7 +2,8 @@ package graft.util
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+
+import graft.functions.MoneyExprs
 
 /** Shared column helpers.
   *
@@ -13,12 +14,31 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * produce bit-identical results — then surface a double. A plain
   * sum(double) would drift with partition count, which both breaks
   * oracle hashing and makes results nondeterministic on a real cluster.
+  *
+  * Semantics: [[dsum]] is `sum(CAST(c AS DECIMAL(18,s))).cast(double)`
+  * and [[davg]] is `dsum / count(c)`, row for row, in the session's
+  * eval mode — the same nulls, values and error classes as Spark's own
+  * cast and `Sum` (ColsSpec holds the equality). They run on the money
+  * kernel [[graft.functions.MoneySum]]: a buffer of three longs instead
+  * of a decimal(28,s), and a double→decimal conversion that skips
+  * `Double.toString` wherever a 4-ulp margin proves it rounds the same.
+  *
+  * One documented difference: Spark nulls (legacy) or raises (ANSI)
+  * when any intermediate prefix of the sum overflows decimal(28,s),
+  * even if the final sum fits; the kernel judges the final sum only.
+  * Every input is below 10^18 in unscaled magnitude, so no group below
+  * about 10^10 maximal-magnitude rows can reach this.
   */
 object Cols {
 
+  /** Exact `sum(CAST(c AS DECIMAL(18, scale)))` as decimal(28, scale) —
+    * for partial state that is merged before its double surface. */
+  def decSum(c: Column, scale: Int = 2): Column =
+    MoneyExprs.sum(c, scale, asDouble = false)
+
   /** Exact decimal sum of a double column, surfaced as double. */
   def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
+    MoneyExprs.sum(c, scale, asDouble = true)
 
   /** Order-independent average: exact decimal sum / non-null count. */
   def davg(c: Column, scale: Int = 2): Column =

@@ -138,8 +138,10 @@ object Views {
     * The algebra that makes it correct: count and sum are
     * commutative-monoid aggregates, and the partial sums stay EXACT
     * DECIMAL until the final surface cast — a double partial would
-    * make merge order observable. At 100 TB this is the only viable
-    * MV strategy (the delta is a day, the state is years), exactly
+    * make merge order observable. The partials are [[decSum]], the
+    * decimal(28,2) of the same money kernel `dsum` surfaces as double.
+    * At 100 TB this is the only viable MV strategy (the delta is a
+    * day, the state is years), exactly
     * the reference's refresh loop
     * (clickhouse_init/04_materialized_views.sql's MVs are
     * incremental by engine design). */
@@ -149,7 +151,7 @@ object Views {
     def partial(df: DataFrame): DataFrame =
       df.groupBy(col("order_month"))
         .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).as("rev_dec"))
+          decSum(col("o_totalprice")).as("rev_dec"))
     val state = partial(o.filter(col("order_month") < IncrementalCutMonth))
     val delta = partial(o.filter(col("order_month") >= IncrementalCutMonth))
     state.unionByName(delta)

@@ -1,6 +1,18 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Cast, EvalMode, GenericInternalRow, Literal, UnsafeProjection, UnscaledValue}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+import graft.functions.{MoneyMath, MoneySum, MoneyUnscaled}
 import graft.util.Cols
 
 /** dsum/davg must be partition-order independent — the property that
@@ -35,5 +47,264 @@ class ColsSpec extends SparkSuite {
     val df = Seq(Some(1.0), Some(2.0), None, Some(4.0)).toDF("x")
     val got = df.agg(Cols.davg(col("x"))).head().getDouble(0)
     assert(got == (1.0 + 2.0 + 4.0) / 3)
+  }
+
+  // ------------------------------------------------ the money kernel
+  //
+  // Cols.dsum/davg/decSum run on graft.functions.MoneySum. The specs
+  // below hold them to Spark's own `sum(CAST(x AS DECIMAL(18,s)))`
+  // (values, nulls and error classes) on adversarial inputs.
+
+  private val Scales = Seq(0, 2, 4, 6)
+
+  private def pow10(s: Int): Double = MoneyMath.Pow10(s).toDouble
+
+  /** Doubles that stress the double→decimal rounding: cents, TPC-H
+    * style price products, exact decimal half-points with their
+    * neighbours, random bit patterns and mantissas, both signs. */
+  private def moneyDoubles(s: Int): Gen[Double] = {
+    val cents = Gen.chooseNum(-10000000L, 10000000L).map(_ / 100.0)
+    val product = for {
+      p <- Gen.chooseNum(90L, 10000000L)
+      d <- Gen.chooseNum(0, 10)
+      t <- Gen.chooseNum(0, 8)
+    } yield p / 100.0 * (1.0 - d / 100.0) * (1.0 + t / 100.0)
+    val half = for {
+      k <- Gen.chooseNum(-10000000L, 10000000L)
+      sc <- Gen.oneOf(s, s, s, 0, 2, 4, 6)
+      nb <- Gen.oneOf(0, 1, 2)
+    } yield {
+      val h = (k + 0.5) / pow10(sc)
+      if (nb == 1) Math.nextUp(h) else if (nb == 2) Math.nextDown(h) else h
+    }
+    val bits = Gen.long.map(java.lang.Double.longBitsToDouble)
+      .suchThat(x => !x.isNaN && !x.isInfinite && math.abs(x) < 1e17 / pow10(s))
+    val mantissa = for {
+      m <- Gen.chooseNum(0L, (1L << 52) - 1)
+      e <- Gen.chooseNum(-30, 45)
+      neg <- Gen.oneOf(false, true)
+    } yield {
+      val x = java.lang.Double.longBitsToDouble(((e + 1023L) << 52) | m)
+      if (neg) -x else x
+    }
+    Gen.frequency(4 -> cents, 3 -> product, 3 -> half, 1 -> bits,
+      2 -> mantissa)
+  }
+
+  /** Doubles Spark's cast nulls (legacy) or rejects (ANSI) or takes
+    * only just: NaN, ±Inf, the decimal(18,s) limit and its
+    * neighbours, huge random bit patterns. */
+  private def edgeDoubles(s: Int): Gen[Double] = {
+    val lim = 1e18 / pow10(s)
+    Gen.oneOf(
+      Gen.const(Double.NaN), Gen.const(Double.PositiveInfinity),
+      Gen.const(Double.NegativeInfinity),
+      Gen.oneOf(lim, -lim, Math.nextDown(lim), -Math.nextDown(lim),
+        (1e18 - 1) / pow10(s), lim / 2, Double.MaxValue, Double.MinPositiveValue),
+      Gen.long.map(java.lang.Double.longBitsToDouble))
+  }
+
+  private def castUnscaled(v: Any, dt: DataType, s: Int,
+                           mode: EvalMode.Value): Try[Any] =
+    Try(UnscaledValue(Cast(Literal.create(v, dt), DecimalType(18, s), None, mode))
+      .eval(InternalRow.empty))
+
+  /** The error class of a failed action (the first in the cause chain). */
+  private def condition(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case e: SparkThrowable if e.getCondition != null => e.getCondition
+    }.getOrElse(t.getClass.getName)
+
+  test("money conversion equals Spark's Cast on 10^6 doubles (interpreted and generated)") {
+    val params = Gen.Parameters.default
+    var fast = 0
+    var n = 0
+    Scales.foreach { s =>
+      val gen = Gen.frequency(20 -> moneyDoubles(s), 1 -> edgeDoubles(s))
+      val xs = Array.tabulate(260000)(i =>
+        gen.pureApply(params, Seed(1000L * s + i)))
+      val expr = MoneyUnscaled(BoundReference(0, DoubleType, nullable = true),
+        s, EvalMode.LEGACY)
+      val proj = UnsafeProjection.create(Seq(expr))
+      assert(proj.getClass.getName.contains("SpecificUnsafeProjection"),
+        "the conversion must run through generated code here")
+      xs.foreach { x =>
+        val want = castUnscaled(x, DoubleType, s, EvalMode.LEGACY).get
+        val row = new GenericInternalRow(Array[Any](x))
+        val interp = expr.eval(row)
+        val out = proj(row)
+        val generated = if (out.isNullAt(0)) null else out.getLong(0)
+        assert(interp == want && generated == want,
+          s"scale $s, x=$x (${java.lang.Double.doubleToRawLongBits(x)}): " +
+            s"cast $want, interpreted $interp, generated $generated")
+        if (MoneyMath.fromDouble(x, pow10(s)) != MoneyMath.Slow) fast += 1
+        n += 1
+      }
+    }
+    assert(n >= 1000000)
+    // the fast path is the common case, not a corner
+    assert(fast > n / 2, s"fast path taken on $fast of $n")
+  }
+
+  test("money conversion raises Spark's cast errors in ANSI mode") {
+    val params = Gen.Parameters.default
+    Scales.foreach { s =>
+      val expr = MoneyUnscaled(BoundReference(0, DoubleType, nullable = true),
+        s, EvalMode.ANSI)
+      val proj = UnsafeProjection.create(Seq(expr))
+      (0 until 400).map(i => edgeDoubles(s).pureApply(params, Seed(77L + i)))
+        .foreach { x =>
+          val row = new GenericInternalRow(Array[Any](x))
+          val want = castUnscaled(x, DoubleType, s, EvalMode.ANSI)
+          val got = Try { val o = proj(row); if (o.isNullAt(0)) null else o.getLong(0) }
+          (want, got) match {
+            case (Success(a), Success(b)) => assert(a == b, s"scale $s, x=$x")
+            case (Failure(a), Failure(b)) =>
+              assert(condition(a) == condition(b), s"scale $s, x=$x")
+            case _ => fail(s"scale $s, x=$x: cast $want, kernel $got")
+          }
+        }
+    }
+  }
+
+  private val decimalTypes =
+    Seq(DecimalType(18, 2), DecimalType(18, 0), DecimalType(10, 4),
+      DecimalType(12, 8), DecimalType(5, 5), DecimalType(18, 9))
+
+  /** One generated table: a group key and one column per input type
+    * (double, int, long, decimal(p≤18)), with an all-null group. */
+  private def moneyRows(s: Int, dec: DecimalType, mode: EvalMode.Value,
+                        seed: Long): (StructType, Seq[Row]) = {
+    val p = Gen.Parameters.default
+    val r = new scala.util.Random(seed)
+    def pick[T](g: Gen[T], i: Int) = g.pureApply(p, Seed(seed * 7919 + i))
+    val poisonRate = if (r.nextBoolean()) 0.0 else 0.02
+    val lim = MoneyMath.Pow10(18 - s)
+    // clean values fit decimal(18,s) at every tested scale; edge values
+    // (poisoned rows only) sit at or past its limit
+    val ints = Gen.chooseNum(-100000, 100000)
+    val edgeInts = Gen.oneOf(Int.MinValue, Int.MaxValue, 0, -1)
+    val longs = Gen.chooseNum(-10000000000L, 10000000000L)
+    val edgeLongs = Gen.oneOf(lim - 1, 1 - lim, lim, -lim, Long.MaxValue, Long.MinValue)
+    def decs(digits: Int) = {
+      val m = MoneyMath.Pow10(digits) - 1
+      Gen.chooseNum(-m, m).map(u =>
+        new java.math.BigDecimal(java.math.BigInteger.valueOf(u), dec.scale))
+    }
+    val n = 50 + r.nextInt(1500)
+    val raw = (0 until n).map { i =>
+      val poison = r.nextDouble() < poisonRate
+      def maybeNull(v: Any): Any = if (r.nextInt(20) == 0) null else v
+      Array[Any](r.nextInt(5),
+        maybeNull(pick(if (poison) edgeDoubles(s) else moneyDoubles(s), i)),
+        maybeNull(pick(if (poison) edgeInts else ints, i)),
+        maybeNull(pick(if (poison) edgeLongs else longs, i)),
+        maybeNull(pick(decs(if (poison) dec.precision else dec.precision.min(10)), i)))
+    } ++ (0 until 3).map(_ => Array[Any](7, null, null, null, null))
+    val types = Seq(DoubleType, IntegerType, LongType, dec)
+    // under ANSI keep the rejected values of ONE (column, error class),
+    // so which task fails first cannot change the expected class
+    val rows = if (mode != EvalMode.ANSI) raw else {
+      var kept: Option[(Int, String)] = None
+      raw.map(_.zipWithIndex.map {
+        case (v, 0) => v
+        case (null, _) => null
+        case (v, c) =>
+          castUnscaled(v, types(c - 1), s, mode) match {
+            case Success(_) => v
+            case Failure(e) =>
+              val key = (c, condition(e))
+              if (kept.isEmpty) kept = Some(key)
+              if (kept.contains(key)) v else null
+          }
+      })
+    }
+    val schema = StructType(StructField("g", IntegerType) +:
+      Seq("d", "i", "l", "m").zip(types).map { case (c, t) => StructField(c, t) })
+    (schema, rows.map(a => Row.fromSeq(a.toSeq)))
+  }
+
+  private def kernelAggs(s: Int) = Seq("d", "i", "l", "m").flatMap(c =>
+    Seq(Cols.dsum(col(c), s), Cols.davg(col(c), s), Cols.decSum(col(c), s)))
+
+  private def sparkAggs(s: Int) = Seq("d", "i", "l", "m").flatMap { c =>
+    val dec = sum(col(c).cast(DecimalType(18, s)))
+    Seq(dec.cast(DoubleType), dec.cast(DoubleType) / count(col(c)), dec)
+  }
+
+  /** Both sides give equal rows or fail with one error class; returns
+    * "ok" or that class. */
+  private def sameOutcome(what: String, a: => Seq[Row], b: => Seq[Row]): String =
+    (Try(a), Try(b)) match {
+      case (Success(x), Success(y)) => assert(x == y, what); "ok"
+      case (Failure(x), Failure(y)) =>
+        assert(condition(x) == condition(y), s"$what: ${x.getMessage}\n${y.getMessage}")
+        condition(x)
+      case (x, y) => fail(s"$what: kernel $x, Spark $y")
+    }
+
+  test("dsum/davg/decSum equal Spark's sum(cast(x as decimal(18,s))) row for row") {
+    val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
+    val outcomes = collection.mutable.ArrayBuffer.empty[(Boolean, String)]
+    try {
+      for (ansi <- Seq(false, true); s <- Scales; parts <- Seq(1, 17);
+           k <- 0 until 3) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+        val mode = EvalMode.fromBoolean(ansi)
+        val seed = (if (ansi) 5000L else 0L) + 100L * s + 10L * parts + k
+        val dec = decimalTypes((seed % decimalTypes.size).toInt)
+        val (schema, rows) = moneyRows(s, dec, mode, seed)
+        val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .repartition(parts)
+        def grouped(aggs: Seq[org.apache.spark.sql.Column]): Seq[Row] =
+          df.groupBy("g").agg(aggs.head, aggs.tail: _*).orderBy("g").collect().toSeq
+        def empty(aggs: Seq[org.apache.spark.sql.Column]): Seq[Row] =
+          df.limit(0).agg(aggs.head, aggs.tail: _*).collect().toSeq
+        val what = s"ansi=$ansi scale=$s parts=$parts seed=$seed $dec"
+        outcomes += ansi -> sameOutcome(what, grouped(kernelAggs(s)), grouped(sparkAggs(s)))
+        if (k == 0) outcomes += ansi -> sameOutcome(s"$what (empty input)",
+          empty(kernelAggs(s)), empty(sparkAggs(s)))
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
+    // both modes compared real rows, and ANSI also compared cast errors
+    assert(outcomes.count(_ == (false -> "ok")) == outcomes.count(!_._1))
+    assert(outcomes.count(_ == (true -> "ok")) >= 8, outcomes)
+    assert(outcomes.exists { case (a, c) =>
+      a && c.startsWith("NUMERIC_VALUE_OUT_OF_RANGE") }, outcomes)
+  }
+
+  test("a final sum past 28 digits is null in legacy mode and Spark's Sum error in ANSI") {
+    Seq(EvalMode.LEGACY, EvalMode.ANSI).foreach { mode =>
+      val agg = MoneySum(Literal(1.0), 2, mode, asDouble = false)
+      val eval = BindReferences.bindReference(agg.evaluateExpression,
+        agg.aggBufferAttributes)
+      def total(hi: Long, lo: Long, n: Long) =
+        Try(eval.eval(new GenericInternalRow(Array[Any](hi, lo, n))))
+      // Spark's Sum after its decimal(28,2) buffer overflowed: sum = null
+      val sparkSum = Sum(Literal(Decimal(1), DecimalType(18, 2)),
+        org.apache.spark.sql.catalyst.expressions.NumericEvalContext(mode))
+      val sparkEval = BindReferences.bindReference(sparkSum.evaluateExpression,
+        sparkSum.aggBufferAttributes)
+      val overflowed = Try(sparkEval.eval(new GenericInternalRow(Array[Any](null, false))))
+      // 10^28 - 1 (the largest decimal(28) unscaled value) fits; one more does not
+      val max = java.math.BigInteger.TEN.pow(28).subtract(java.math.BigInteger.ONE)
+      val hi = max.shiftRight(32).longValueExact
+      val lo = max.and(java.math.BigInteger.valueOf(0xFFFFFFFFL)).longValueExact
+      assert(total(hi, lo, 1).get ==
+        Decimal(new java.math.BigDecimal(max, 2), 28, 2))
+      assert(total(-hi - 1, (1L << 32) - lo, 1).get ==
+        Decimal(new java.math.BigDecimal(max.negate, 2), 28, 2))
+      assert(total(0, 0, 0) == Success(null), "no input rows sum to null")
+      val past = total(hi, lo + 1, 1)
+      val pastNeg = total(-hi - 1, (1L << 32) - lo - 1, 1)
+      if (mode == EvalMode.ANSI) {
+        assert(overflowed.isFailure)
+        Seq(past, pastNeg).foreach(t =>
+          assert(condition(t.failed.get) == condition(overflowed.failed.get)))
+      } else {
+        assert(overflowed == Success(null))
+        assert(past == Success(null) && pastNeg == Success(null))
+      }
+    }
   }
 }

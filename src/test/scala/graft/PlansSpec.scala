@@ -4,7 +4,8 @@ package graft
   * plans the 100 TB design depends on (pruning, pushdown, broadcast,
   * partial aggregation, top-k) must survive refactors. Assertions are
   * on executedPlan strings — coarse but stable. */
-class PlansSpec extends SparkSuite {
+class PlansSpec extends SparkSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan.toString
@@ -478,5 +479,30 @@ class PlansSpec extends SparkSuite {
     assert(exchanges.nonEmpty)
     exchanges.foreach(k => assert(k.contains("source"),
       s"q92 exchange keyed off-source ($k):\n$p"))
+  }
+
+  test("q01/q113/q03 money sums keep fixed-width hash-aggregate buffers") {
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.types.DecimalType
+    Seq("q01_order_items_rollup", "q113_pricing_summary",
+        "q03_daily_sales_summary").foreach { q =>
+      val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
+      val aggs = collect(p) { case h: HashAggregateExec => h }
+      assert(aggs.nonEmpty, s"$q has no hash aggregate:\n$p")
+      // Cols.dsum/davg run on the money kernel: long buffers, no
+      // decimal(28,s) sum and no double-typed decimal first() carry
+      val fns = aggs.flatMap(_.aggregateExpressions.map(_.aggregateFunction))
+      assert(fns.exists(_.isInstanceOf[graft.functions.MoneySum]), s"$q:\n$p")
+      val wide = fns.flatMap(_.aggBufferAttributes).filter(_.dataType match {
+        case d: DecimalType => d.precision > 18
+        case _ => false
+      })
+      assert(wide.isEmpty, s"$q holds variable-width decimal buffers $wide:\n$p")
+      val fallback = collect(p) {
+        case a: SortAggregateExec => a
+        case a: ObjectHashAggregateExec => a
+      }
+      assert(fallback.isEmpty, s"$q left the hash-aggregate path:\n$p")
+    }
   }
 }

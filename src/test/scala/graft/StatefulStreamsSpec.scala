@@ -51,6 +51,33 @@ class StatefulStreamsSpec extends SparkSuite {
     assert(got == want)
   }
 
+  test("windowed aggregation resumes from its checkpoint: a second run's file joins the state") {
+    // the money-sum state (three longs per key) must survive a restart:
+    // run 2 reads only the new file, so equality with the batch needs
+    // run 1's (window, type) sums restored from the state store
+    val base = Files.createTempDirectory("winrestart").toString
+    val raw = rawLongEvents()
+    val cut = raw.stat.approxQuantile("ts", Array(0.5), 0.0).head.toLong
+    stage(raw.filter(col("ts") < cut), s"$base/src/a.parquet")
+    var last: Array[Row] = Array.empty
+    StatefulStreams.windowedCountsStream(spark, s"$base/src", s"$base/ckpt") {
+      df => last = df.collect()
+    }
+    val first = last
+    stage(raw.filter(col("ts") >= cut), s"$base/src/b.parquet")
+    StatefulStreams.windowedCountsStream(spark, s"$base/src", s"$base/ckpt") {
+      df => last = df.collect()
+    }
+    def key(r: Row) = (r.getLong(0), r.getString(1))
+    def vals(rs: Array[Row]) =
+      rs.map(r => key(r) -> (r.getLong(2), r.getDouble(3))).toMap
+    val got = vals(last)
+    assert(got == vals(Sessions.windowedCounts(spark, sfDir).collect()))
+    // some key straddles the cut: its run-1 state was extended by run 2
+    assert(vals(first).exists { case (k, (n, _)) => got(k)._1 > n },
+      "no (window, type) key received rows in both runs")
+  }
+
   test("streaming dropDuplicates removes at-least-once replays") {
     val base = Files.createTempDirectory("dedupstream").toString
     val raw = rawLongEvents().limit(400)
