@@ -143,6 +143,136 @@ object BoundedTopK {
   }
 }
 
+/** Exact distinct count of an integral or date column as ONE
+  * aggregate, for groups whose fan-in the data model bounds (one
+  * order's lines): the same non-null bigint as `countDistinct`, 0 for
+  * empty or all-null input.
+  *
+  * Spark plans two or more `countDistinct`s through
+  * `RewriteDistinctAggregates`: an `Expand` copies every input row once
+  * per distinct column, and four hash aggregates over (group, value,
+  * gid) keys follow. Here each group dedups inside its own buffer — a
+  * primitive-long open-addressing set ([[SmallDistinct.LongSet]]), no
+  * boxing — so the plan keeps one aggregate pair and one exchange; the
+  * partial buffer ships as a flat array of longs.
+  *
+  * Heap-safe only under the contract of [[graft.util.Cols.distinctPerOrder]]
+  * (bounded fan-in per group); q03, q05, mvDailyRevenue, mvNationRevenue,
+  * Quality, Sketches and TextAnalysis group by unbounded keys and stay
+  * on Spark's spillable `countDistinct`. */
+case class SmallDistinct(
+    child: Expression,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[SmallDistinct.LongSet] {
+
+  override def children: Seq[Expression] = Seq(child)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ByteType | ShortType | IntegerType | LongType | DateType =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an integral or date argument, got " +
+        other.simpleString)
+  }
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "small_distinct"
+
+  override def createAggregationBuffer(): SmallDistinct.LongSet =
+    new SmallDistinct.LongSet
+
+  override def update(buf: SmallDistinct.LongSet,
+                      input: InternalRow): SmallDistinct.LongSet = {
+    val v = child.eval(input)
+    // Byte/Short/Integer (dates are Integer days) and Long all widen
+    if (v != null) buf.add(v.asInstanceOf[Number].longValue)
+    buf
+  }
+
+  override def merge(buf: SmallDistinct.LongSet,
+                     other: SmallDistinct.LongSet): SmallDistinct.LongSet = {
+    other.foreach(buf.add)
+    buf
+  }
+
+  override def eval(buf: SmallDistinct.LongSet): Any = buf.size.toLong
+
+  override def serialize(buf: SmallDistinct.LongSet): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(8 * buf.size)
+    buf.foreach(v => bb.putLong(v))
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): SmallDistinct.LongSet = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val buf = new SmallDistinct.LongSet
+    while (bb.hasRemaining) buf.add(bb.getLong)
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): SmallDistinct =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): SmallDistinct =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(child = newChildren(0))
+}
+
+object SmallDistinct {
+
+  /** Open-addressing set of longs with linear probing. 0 marks an
+    * empty slot, so the value 0 is held by a flag instead. Fibonacci
+    * hashing spreads the keys (order keys, part keys, dates are
+    * dense runs); the table doubles at half load. */
+  final class LongSet {
+    private var slots = new Array[Long](8)
+    private var used = 0
+    private var hasZero = false
+
+    def size: Int = used + (if (hasZero) 1 else 0)
+
+    def add(v: Long): Unit =
+      if (v == 0L) hasZero = true
+      else {
+        if (2 * (used + 1) > slots.length) grow()
+        if (put(slots, v)) used += 1
+      }
+
+    def foreach(f: Long => Unit): Unit = {
+      if (hasZero) f(0L)
+      var i = 0
+      while (i < slots.length) {
+        if (slots(i) != 0L) f(slots(i))
+        i += 1
+      }
+    }
+
+    /** Inserts non-zero `v`; false when it was already there. */
+    private def put(table: Array[Long], v: Long): Boolean = {
+      val mask = table.length - 1
+      val h = v * 0x9E3779B97F4A7C15L
+      var i = (h ^ (h >>> 32)).toInt & mask
+      while (table(i) != 0L && table(i) != v) i = (i + 1) & mask
+      val fresh = table(i) == 0L
+      table(i) = v
+      fresh
+    }
+
+    private def grow(): Unit = {
+      val old = slots
+      slots = new Array[Long](old.length * 2)
+      var i = 0
+      while (i < old.length) {
+        if (old(i) != 0L) put(slots, old(i))
+        i += 1
+      }
+    }
+  }
+}
+
 /** Per-group ROARING BITMAP of long row positions as ONE aggregate —
   * the executor-side construction step of a Delta deletion vector
   * (graft.sources.DeltaLog.deleteWhere groups matched rows by file

@@ -23,20 +23,26 @@ import graft.util.Cols._
   */
 object Enrich {
 
-  /** A1: per-order lineitem rollup — count / sum / countDistinct
-    * (reference: spark/batch_gold.py:81-87). countDistinct is exact,
-    * as required for oracle parity (SURVEY §7.4). */
-  def orderItemsRollup(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(spark, dir, "lineitem")
-    li.groupBy(col("l_orderkey"))
+  /** A1: per-order lineitem rollup — count / sum / exact distinct
+    * counts (reference: spark/batch_gold.py:81-87), over the
+    * [[Layout]]'s lineitem scan. One order's lines are few, so the two
+    * distinct counts run on [[distinctPerOrder]]; [[ordersEnriched]]
+    * reads the same rollup and Catalyst prunes what it leaves unread. */
+  private def itemsRollup(spark: SparkSession, dir: String,
+                          layout: Layout): DataFrame =
+    layout.scan(spark, dir, "lineitem", col("l_orderkey"))
+      .groupBy(col("l_orderkey"))
       .agg(
         count(lit(1)).as("total_items"),
         dsum(col("l_quantity")).as("total_qty"),
         dsum(col("l_extendedprice")).as("total_price"),
-        countDistinct(col("l_partkey")).as("unique_parts"),
-        countDistinct(col("l_suppkey")).as("unique_suppliers"))
-      .orderBy(col("l_orderkey"))
-  }
+        distinctPerOrder(col("l_partkey")).as("unique_parts"),
+        distinctPerOrder(col("l_suppkey")).as("unique_suppliers"))
+
+  /** q01: the A1 rollup, presented in order-key order. */
+  def orderItemsRollup(spark: SparkSession, dir: String): DataFrame =
+    Layout.Declared.present(itemsRollup(spark, dir, Layout.Declared),
+      col("l_orderkey"))
 
   val orderItemsRollupSql: String =
     s"""SELECT l_orderkey,
@@ -51,8 +57,8 @@ object Enrich {
     * (reference: spark/batch_gold.py:104-153 — 4-way left-join chain
     * then a wide typed projection with date parts, coalesce defaults
     * and a CASE band). The [[Layout]] scan is the lineitem rollup's
-    * input: its expand + partial aggregate (~600k (orderkey, partkey)
-    * groups) is the widest map-side work here. */
+    * input: its partial aggregate (one group per order) is the widest
+    * map-side work here. */
   def ordersEnriched(spark: SparkSession, dir: String,
                      layout: Layout = Layout.Declared): DataFrame = {
     val orders   = Tables.load(spark, dir, "orders")
@@ -60,13 +66,7 @@ object Enrich {
     val nation   = Tables.load(spark, dir, "nation")
     val region   = Tables.load(spark, dir, "region")
 
-    val items = layout.scan(spark, dir, "lineitem", col("l_orderkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(
-        count(lit(1)).as("total_items"),
-        dsum(col("l_quantity")).as("total_qty"),
-        dsum(col("l_extendedprice")).as("items_price"),
-        countDistinct(col("l_partkey")).as("unique_parts"))
+    val items = itemsRollup(spark, dir, layout)
 
     // geo dims are tiny — broadcast explicitly, mirroring the reference's
     // one explicit hint (reference: spark/load_warehouse.py:200).
@@ -92,7 +92,7 @@ object Enrich {
         coalesce(col("region_name"), lit("UNKNOWN")).as("region_name"),
         coalesce(col("total_items"), lit(0L)).as("total_items"),
         coalesce(col("total_qty"), lit(0.0)).as("total_qty"),
-        coalesce(col("items_price"), lit(0.0)).as("items_price"),
+        coalesce(col("total_price"), lit(0.0)).as("items_price"),
         coalesce(col("unique_parts"), lit(0L)).as("unique_parts"),
         when(col("o_totalprice") < 50000, "low")
           .when(col("o_totalprice") < 150000, "mid")

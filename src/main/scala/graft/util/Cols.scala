@@ -3,7 +3,9 @@ package graft.util
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.functions.MoneyExprs
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.functions.{MoneyExprs, SmallDistinct}
 
 /** Shared column helpers.
   *
@@ -43,6 +45,23 @@ object Cols {
   /** Order-independent average: exact decimal sum / non-null count. */
   def davg(c: Column, scale: Int = 2): Column =
     dsum(c, scale) / count(c)
+
+  /** Exact `countDistinct(c)` of an integral or date column for a
+    * group whose fan-in the data model bounds — one order's lines —
+    * on the [[graft.functions.SmallDistinct]] kernel: the dedup runs
+    * inside the group's own aggregate buffer, with no `Expand` and no
+    * extra aggregate layers.
+    *
+    * Heap contract: each group holds its distinct values in an
+    * on-heap set of an `ObjectHashAggregate`, whose map keeps at most
+    * 65,536 groups per task (the `sortBased.fallbackThreshold` that
+    * [[graft.Tables.load]] sets); past that, Spark's sort-based
+    * fallback aggregates one group at a time. A task's heap is thus
+    * bounded only when each group's distinct values are. The fan-in of
+    * a day, a nation or a product is not bounded: those rollups stay
+    * on Spark's spillable `countDistinct`. */
+  def distinctPerOrder(c: Column): Column =
+    Bridge.column(SmallDistinct(Bridge.expression(c)).toAggregateExpression())
 
   /** SQL fragments for the DuckDB oracle matching dsum/davg. */
   def dsumSql(c: String, scale: Int = 2): String =

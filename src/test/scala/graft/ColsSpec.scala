@@ -19,7 +19,8 @@ import graft.util.Cols
   * makes results reproducible on a real cluster AND hash-equal to the
   * DuckDB oracle (SURVEY §7.4 decimal-vs-double drift).
   */
-class ColsSpec extends SparkSuite {
+class ColsSpec extends SparkSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val values =
@@ -305,6 +306,93 @@ class ColsSpec extends SparkSuite {
         assert(overflowed == Success(null))
         assert(past == Success(null) && pastNeg == Success(null))
       }
+    }
+  }
+
+  // ------------------------------------------ the distinct-set kernel
+  //
+  // Cols.distinctPerOrder runs on graft.functions.SmallDistinct. The
+  // spec holds it to Spark's own countDistinct, row for row.
+
+  private val distinctCols = Seq("b", "s", "i", "l", "d")
+
+  /** Groups 0–4 draw from a small pool (duplicates everywhere, the
+    * extremes of every type, negatives and 0), group 5 holds 3000
+    * distinct longs (the set grows), group 7 is all null. */
+  private def distinctRows(seed: Long): (StructType, Seq[Row]) = {
+    val r = new scala.util.Random(seed)
+    val pool = Array[Long](0, 1, -1, 2, -2, 7, 127, -128, 32767, -32768,
+      Int.MaxValue, Int.MinValue, Long.MaxValue, Long.MinValue, 1L << 40)
+    def pick(): Long = pool(r.nextInt(pool.length))
+    def maybeNull(v: Any): Any = if (r.nextInt(8) == 0) null else v
+    def row(g: Int, v: Long, day: Int): Array[Any] = Array[Any](g,
+      maybeNull(v.toByte), maybeNull(v.toShort), maybeNull(v.toInt),
+      maybeNull(v),
+      maybeNull(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))))
+    val small = (0 until 400 + r.nextInt(800)).map(_ =>
+      row(r.nextInt(5), pick(), r.nextInt(40) - 20))
+    val wide = (0 until 3000).map(i =>
+      row(5, r.nextLong(), i - 1500))
+    val nulls = (0 until 3).map(_ => Array[Any](7, null, null, null, null, null))
+    val schema = StructType(StructField("g", IntegerType) +:
+      distinctCols.zip(Seq(ByteType, ShortType, IntegerType, LongType, DateType))
+        .map { case (c, t) => StructField(c, t) })
+    (schema, (small ++ wide ++ nulls).map(a => Row.fromSeq(a.toSeq)))
+  }
+
+  test("distinctPerOrder equals countDistinct row for row") {
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    val confs = Seq("spark.sql.ansi.enabled",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+    val before = confs.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (ansi <- Seq(false, true); threshold <- Seq(65536, 1);
+           parts <- Seq(1, 8); k <- 0 until 2) {
+        spark.conf.set(confs(0), ansi.toString)
+        spark.conf.set(confs(1), threshold.toString)
+        val seed = (if (ansi) 1000L else 0L) + 100L * parts +
+          (if (threshold == 1) 10L else 0L) + k
+        val (schema, rows) = distinctRows(seed)
+        // round-robin: every group's duplicates land in every partition,
+        // so partial sets serialize and merge
+        val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .repartition(parts)
+        val kernel = distinctCols.map(c => Cols.distinctPerOrder(col(c)))
+        val exact = distinctCols.map(c => countDistinct(col(c)))
+        val what = s"ansi=$ansi threshold=$threshold parts=$parts seed=$seed"
+        val grouped = df.groupBy("g").agg(kernel.head, kernel.tail: _*).orderBy("g")
+        val got = grouped.collect().toSeq
+        assert(got == df.groupBy("g").agg(exact.head, exact.tail: _*)
+          .orderBy("g").collect().toSeq, what)
+        assert(got.exists(_.getLong(5) > 2000), s"$what: the wide group")
+        assert(got.last.toSeq.tail.forall(_ == 0L), s"$what: the all-null group")
+        val aggs = collect(grouped.queryExecution.executedPlan) {
+          case a: ObjectHashAggregateExec => a
+        }
+        assert(aggs.nonEmpty, s"$what: the kernel left ObjectHashAggregate")
+        if (threshold == 1)
+          assert(aggs.map(_.metrics("numTasksFallBacked").value).sum > 0,
+            s"$what: no task took the sort-based fallback")
+        val none = df.limit(0)
+        assert(none.agg(kernel.head, kernel.tail: _*).collect().toSeq ==
+          none.agg(exact.head, exact.tail: _*).collect().toSeq, s"$what: empty")
+        assert(none.agg(kernel.head, kernel.tail: _*).head().toSeq.forall(_ == 0L))
+        assert(none.groupBy("g").agg(kernel.head, kernel.tail: _*).isEmpty,
+          s"$what: empty grouped")
+      }
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("distinctPerOrder refuses non-integral input at analysis") {
+    val df = Seq(("a", 1.5)).toDF("s", "x")
+    Seq("s", "x").foreach { c =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.agg(Cols.distinctPerOrder(col(c))))
+      assert(e.getMessage.contains("small_distinct requires an integral or date"),
+        e.getMessage)
     }
   }
 }

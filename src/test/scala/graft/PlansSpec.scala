@@ -481,22 +481,30 @@ class PlansSpec extends SparkSuite
       s"q92 exchange keyed off-source ($k):\n$p"))
   }
 
-  test("q01/q113/q03 money sums keep fixed-width hash-aggregate buffers") {
-    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+  /** The aggregate functions of every aggregate operator of `p`, and
+    * the buffers among them wider than a long-backed decimal(18). */
+  private def aggFunctions(p: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.types.DecimalType
-    Seq("q01_order_items_rollup", "q113_pricing_summary",
-        "q03_daily_sales_summary").foreach { q =>
+    val fns = collect(p) { case a: BaseAggregateExec => a }
+      .flatMap(_.aggregateExpressions.map(_.aggregateFunction))
+    val wide = fns.flatMap(_.aggBufferAttributes).filter(_.dataType match {
+      case d: DecimalType => d.precision > 18
+      case _ => false
+    })
+    (fns, wide)
+  }
+
+  test("q113/q03 money sums keep fixed-width hash-aggregate buffers") {
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    Seq("q113_pricing_summary", "q03_daily_sales_summary").foreach { q =>
       val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
       val aggs = collect(p) { case h: HashAggregateExec => h }
       assert(aggs.nonEmpty, s"$q has no hash aggregate:\n$p")
       // Cols.dsum/davg run on the money kernel: long buffers, no
       // decimal(28,s) sum and no double-typed decimal first() carry
-      val fns = aggs.flatMap(_.aggregateExpressions.map(_.aggregateFunction))
+      val (fns, wide) = aggFunctions(p)
       assert(fns.exists(_.isInstanceOf[graft.functions.MoneySum]), s"$q:\n$p")
-      val wide = fns.flatMap(_.aggBufferAttributes).filter(_.dataType match {
-        case d: DecimalType => d.precision > 18
-        case _ => false
-      })
       assert(wide.isEmpty, s"$q holds variable-width decimal buffers $wide:\n$p")
       val fallback = collect(p) {
         case a: SortAggregateExec => a
@@ -504,5 +512,43 @@ class PlansSpec extends SparkSuite
       }
       assert(fallback.isEmpty, s"$q left the hash-aggregate path:\n$p")
     }
+  }
+
+  test("q01 distinct counts run on the set kernel: no Expand, fixed-width money buffers") {
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    val p = SparkEntry.queries("q01_order_items_rollup")(spark, sfDir)
+      .queryExecution.executedPlan
+    val (fns, wide) = aggFunctions(p)
+    assert(fns.exists(_.isInstanceOf[graft.functions.MoneySum]), p)
+    assert(wide.isEmpty, s"variable-width decimal buffers $wide:\n$p")
+    assert(collect(p) { case e: ExpandExec => e }.isEmpty,
+      s"the distinct counts went through Spark's Expand rewrite:\n$p")
+    assert(collect(p) { case a: SortAggregateExec => a }.isEmpty, p)
+    assert("Exchange hashpartitioning".r.findAllIn(p.toString).size == 1,
+      s"one hash exchange, on l_orderkey:\n$p")
+    val objAggs = collect(p) { case a: ObjectHashAggregateExec => a }
+    assert(objAggs.nonEmpty, p)
+    objAggs.foreach(a => assert(a.aggregateExpressions.exists(
+      _.aggregateFunction.isInstanceOf[graft.functions.SmallDistinct]),
+      s"an object aggregate without the set kernel:\n$a"))
+  }
+
+  test("q03 and mvDailyRevenue keep Spark's distinct planning (unbounded groups)") {
+    import org.apache.spark.sql.execution.ExpandExec
+    // a day's fan-in is not bounded: its distinct counts must stay on
+    // Spark's spillable aggregation, never the per-group heap set
+    Seq("q03_daily_sales_summary" -> false, "q14_mv_daily_revenue" -> true)
+      .foreach { case (q, expand) =>
+        val p = SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan
+        val (fns, _) = aggFunctions(p)
+        assert(!fns.exists(_.isInstanceOf[graft.functions.SmallDistinct]), s"$q:\n$p")
+        // one distinct column plans as a distinct aggregate, two through
+        // RewriteDistinctAggregates' Expand
+        if (expand) assert(collect(p) { case e: ExpandExec => e }.nonEmpty, s"$q:\n$p")
+        else assert(collect(p) {
+          case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+        }.exists(_.aggregateExpressions.exists(_.isDistinct)), s"$q:\n$p")
+      }
   }
 }
