@@ -78,7 +78,7 @@ object Bench {
     // q110 left OUT since round 9: its bucketed layout is session-
     // cached (Scale.bucketedTables), so run 1 carries the builder and
     // min-of-2 reports the exchange-free join — the q104 precedent
-    "q106_change_data_feed", // two fresh snapshot commits per call
+    "q106_change_data_feed", // two fresh Delta commits per call
     "q111_pq_codes",         // cold builder of the cached PQ code table (q112 reads warm)
     "q150_csv_insert_absent") // fresh CSV stage per call — both runs identically cold (the q84 class)
 

@@ -68,23 +68,23 @@ object Pipeline {
     // zone already — only the events CDC log has a raw form, and its
     // bronze→silver lineage is exercised above.
     //
-    // Gold publishes as VERSIONED SNAPSHOTS (sources.Snapshots): the
-    // reference's TRUNCATE-then-load (S7) leaves dashboards a visible
-    // empty window between truncate and load-complete; a snapshot
-    // commit swaps atomically (readers see the old version until
-    // _SUCCESS lands) and keeps history for time travel.
+    // Gold publishes as Delta overwrite commits (sources.DeltaLog), as
+    // the reference writes gold (batch_gold.py:156-157). A commit
+    // swaps atomically — readers see the old version until the log
+    // entry lands, never the empty window a TRUNCATE-then-load (S7)
+    // leaves dashboards — and keeps history for time travel.
     // Every commit builds the SINK layout (graft.Layout): no
     // presentation sort, and key-fanned scans where q84 measured them
     // to pay; the declared queries keep their sorts and plain scans.
     timed("gold") {
       inParallel(spark,
-        () => snapshotCommit(
+        () => goldCommit(
           gold.Enrich.ordersEnriched(spark, sfDir, Layout.Sink), s"$outDir/gold/orders_enriched"),
-        () => snapshotCommit(
+        () => goldCommit(
           gold.Summaries.dailySalesSummary(spark, sfDir, Layout.Sink), s"$outDir/gold/daily_sales_summary"),
-        () => snapshotCommit(
+        () => goldCommit(
           gold.Summaries.customerSegments(spark, sfDir, Layout.Sink), s"$outDir/gold/customer_segments"),
-        () => snapshotCommit(
+        () => goldCommit(
           gold.Summaries.productPerformance(spark, sfDir, Layout.Sink), s"$outDir/gold/product_performance"))
     }
   }
@@ -176,12 +176,14 @@ object Pipeline {
               if (sources.DeltaLog.versions(factDir).isEmpty)
                 sources.DeltaLog.createTable(factDir, df.schema, Seq.empty,
                   Map(sources.DeltaLog.BloomColsProp -> "l_orderkey"))
-              sources.DeltaLog.commitOverwrite(df, factDir)
+              // commit-phase attribution rides the metrics dump; the
+              // scope holds this commit's phases only, not the gold
+              // commits running beside it
+              sources.DeltaLog.recordingPhases(
+                sources.DeltaLog.commitOverwrite(df, factDir))
+                .foreach { case (k, v) => lastRunMetrics.put(s"fact_$k", v) }
             }
           }
-          // commit-phase attribution rides the metrics dump (dev seam)
-          sources.DeltaLog.lastCommitPhases.foreach { case (k, v) =>
-            lastRunMetrics.put(s"fact_$k", v) }
           timed("fact_recent") {
           // recent slice: the max bound, the pruning decision and the
           // pruned file list all derive from ONE replayed state
@@ -306,19 +308,19 @@ object Pipeline {
       _.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path))
 
   /** Gold-layer commits ride the same observe-backed metrics as plain
-    * writes — the snapshot path must not bypass volume alerting (the
+    * writes — the Delta commit must not bypass volume alerting (the
     * observation attaches to the commit's own write job). */
-  private def snapshotCommit(df: DataFrame, tableDir: String): Unit =
+  private def goldCommit(df: DataFrame, tableDir: String): Unit =
     observed(df, tableDir.replaceAll(".*/", ""))(
-      sources.Snapshots.commit(_, tableDir))
+      sources.DeltaLog.commitOverwrite(_, tableDir))
 
   /** q84 — the composed DAG as a gated query: run the FULL medallion
-    * pipeline (streaming bronze → silver compaction → gold snapshot
+    * pipeline (streaming bronze → silver compaction → gold Delta
     * commits → warehouse star + MVs) into a fresh directory, then read
-    * one gold table back FROM ITS COMMITTED SNAPSHOT. The DuckDB
+    * one gold table back FROM ITS LATEST DELTA VERSION. The DuckDB
     * oracle is q03's SQL, so the gate proves the end-to-end DAG —
     * including the stream ingest, every layer write, and the
-    * Snapshots commit/read round trip — reproduces the direct
+    * Delta commit/read round trip — reproduces the direct
     * batch-query result bit-for-bit. Always cold (fresh out dir +
     * checkpoint per call); Bench exempts it from re-measurement. */
   def pipelineGold(spark: SparkSession, dir: String): DataFrame = {
@@ -328,7 +330,7 @@ object Pipeline {
     // manager so the multi-MB pipeline output dir can be deleted
     // before returning — repeated q84 invocations (bench, verify,
     // explain) no longer accumulate temp dirs under /tmp
-    val result = sources.Snapshots.read(spark, s"$out/gold/daily_sales_summary")
+    val result = sources.DeltaLog.read(spark, s"$out/gold/daily_sales_summary")
       .orderBy(col("order_date"))
       .localCheckpoint()
     graft.util.Fs.deleteRecursively(new java.io.File(out))

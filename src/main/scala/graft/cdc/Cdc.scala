@@ -280,24 +280,24 @@ object Cdc {
     * the full log (the testdata events span 2024-01). */
   val CdfCutoff = "2024-01-16 00:00:00"
 
-  /** q106 — CHANGE DATA FEED between two snapshot versions, gated
+  /** q106 — CHANGE DATA FEED between two table versions, gated
     * end-to-end: commit the per-user latest state at [[CdfCutoff]] as
     * version 0 and the full-log state as version 1 of a
-    * [[graft.sources.Snapshots]] table, then ask
-    * [[graft.sources.Snapshots.changesBetween]] what changed — Delta
-    * CDF's `table_changes(...)` re-expressed over immutable plain-
-    * parquet versions. Soft-deleted users (latest op = 'error', the
+    * [[graft.sources.DeltaLog]] table (two overwrite commits), then
+    * ask [[changesBetween]] what changed — Delta CDF's
+    * `table_changes(...)` re-expressed as a diff of the two versions'
+    * full states. Soft-deleted users (latest op = 'error', the
     * tombstone convention of this CDC substrate) are absent from a
-    * state snapshot, so users tombstoned between the versions surface
+    * state version, so users tombstoned between the versions surface
     * as `delete` rows, new users as `insert`, changed states as
     * `update_postimage` — all three paths live in the gate (sf0.01:
     * 22/23/98).
     *
     * Scale: each state build is the W1 window (one exchange on the
-    * key); the diff itself is [[graft.sources.Snapshots.changesBetween]]'s
-    * single null-safe full-outer join on the key — the same cost class
-    * as the MERGE that would produce v1, with no log replay. Fresh
-    * temp table per call (always cold, the q84/q101/q104 class). */
+    * key); the diff itself is [[changesBetween]]'s single null-safe
+    * full-outer join on the key — the same cost class as the MERGE
+    * that would produce v1, with no log replay. Fresh temp table per
+    * call (always cold, the q84/q101/q104 class). */
   def changeDataFeed(spark: SparkSession, dir: String): DataFrame = {
     val work = java.nio.file.Files.createTempDirectory("graft_q106").toString
     try {
@@ -308,13 +308,53 @@ object Cdc {
           Seq(col("ts").desc, col("event_id").desc))
           .filter(col("event_type") =!= "error") // tombstoned ⇒ absent
           .select("user_id", "event_id", "event_type", "value")
-      graft.sources.Snapshots.commit(
+      graft.sources.DeltaLog.commitOverwrite(
         state(e.filter(col("ts") < lit(CdfCutoff).cast("timestamp"))), table)
-      graft.sources.Snapshots.commit(state(e), table)
-      graft.sources.Snapshots.changesBetween(spark, table, 0, 1, Seq("user_id"))
+      graft.sources.DeltaLog.commitOverwrite(state(e), table)
+      changesBetween(spark, table, 0, 1, Seq("user_id"))
         .orderBy(col("user_id"))
         .localCheckpoint() // pin rows before the temp table is deleted
     } finally graft.util.Fs.deleteRecursively(new java.io.File(work))
+  }
+
+  /** What changed on `keys` from version `fromV` to `toV` of a Delta
+    * table, diffing the two versions' full states: one full-outer
+    * join on the key. Emits one row per changed key with
+    * `_change_type` ∈ {insert, update_postimage, delete};
+    * insert/update carry the post-image columns, delete the
+    * pre-image. Unchanged keys emit nothing (compared as null-safe
+    * structs over every non-key column).
+    *
+    * Scale: the join shuffles both versions on the key once —
+    * identical cost to the MERGE that produced the newer version;
+    * the log's per-commit feed (`DeltaLog.changesSince`) reads only
+    * the files the commits in between added or removed instead. */
+  private[graft] def changesBetween(spark: SparkSession, tableDir: String,
+      fromV: Long, toV: Long, keys: Seq[String]): DataFrame = {
+    val pre = graft.sources.DeltaLog.readVersion(spark, tableDir, fromV)
+    val post = graft.sources.DeltaLog.readVersion(spark, tableDir, toV)
+    val nonKey = post.columns.toSeq.filterNot(keys.contains)
+    // SCHEMA EVOLUTION: the change feed is served in the TO version's
+    // schema (Delta CDF's contract); a column added between the two
+    // versions reads as a typed null on the pre side, so "value
+    // appeared" surfaces as update_postimage, and delete pre-images
+    // carry null for columns the deleted row never had.
+    def padded(df: DataFrame, c: String) =
+      if (df.columns.contains(c)) col(c)
+      else lit(null).cast(post.schema(c).dataType).as(c)
+    val a = pre.select(
+      keys.map(col) :+ struct(nonKey.map(padded(pre, _)): _*).as("_pre"): _*)
+    val b = post.select(
+      keys.map(col) :+ struct(nonKey.map(col): _*).as("_post"): _*)
+    a.join(b, keys, "full_outer")
+      .withColumn("_change_type",
+        when(col("_pre").isNull, "insert")
+          .when(col("_post").isNull, "delete")
+          .when(not(col("_pre") <=> col("_post")), "update_postimage"))
+      .filter(col("_change_type").isNotNull)
+      .select(keys.map(col) ++ nonKey.map(c =>
+        when(col("_change_type") === "delete", col(s"_pre.$c"))
+          .otherwise(col(s"_post.$c")).as(c)) :+ col("_change_type"): _*)
   }
 
   val changeDataFeedSql: String =

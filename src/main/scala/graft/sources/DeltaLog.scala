@@ -21,10 +21,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
   * The reference pipeline is a *Delta* lakehouse (reference:
   * spark/batch_silver.py:152-164 writes silver as Delta;
   * spark/batch_gold.py:156-157 relies on its atomic overwrite).
-  * [[Snapshots]] reproduces those semantics Delta-free; this module
-  * closes the remaining *format* distance: tables whose commit history
-  * is spelled exactly as the open spec spells it — readable by any
-  * Delta client and produced/consumed here with no Delta jars.
+  * This module is the engine's one versioned table format — the
+  * pipeline's gold and fact tables, q106's state versions and the
+  * exactly-once bronze sink all commit here — with a commit history
+  * spelled exactly as the open spec spells it: readable by any Delta
+  * client and produced/consumed here with no Delta jars.
   *
   * Scope (documented, deliberate): JSON commits plus parquet
   * CHECKPOINTS ([[checkpoint]] writes the spec's one-row-per-action
@@ -1683,17 +1684,28 @@ object DeltaLog {
   private def statsJsonOf(s: Iceberg.FooterStats): String =
     statsJsonOf(s.numRecords, s.int64 ++ s.int32)
 
-  /** Dev seam: wall ms per phase of the LAST data batch a writer
-    * staged (`data_write_ms`, `footer_ms`, `sidecars_ms`) — commit
-    * attribution without a listener. Overwritten per batch. */
-  private[graft] val lastCommitPhases:
-      collection.concurrent.TrieMap[String, Long] =
-    collection.concurrent.TrieMap.empty
+  /** The calling thread's open [[recordingPhases]] scope, if any. */
+  private val phaseRecorder =
+    new ThreadLocal[collection.mutable.Map[String, Long]]
+
+  /** Run `body` and return the wall ms per phase of the data batches
+    * it staged on THIS thread (`data_write_ms`, `footer_ms`,
+    * `sidecars_ms`; a later batch's phase replaces an earlier one's)
+    * — commit attribution without a listener. Commits running on
+    * other threads, such as concurrent pipeline branches, record
+    * into their own scopes, never into this one. */
+  def recordingPhases[A](body: => A): Map[String, Long] = {
+    val outer = phaseRecorder.get
+    val phases = collection.mutable.LinkedHashMap.empty[String, Long]
+    phaseRecorder.set(phases)
+    try { body; phases.toMap } finally phaseRecorder.set(outer)
+  }
 
   private def phased[A](name: String)(body: => A): A = {
     val t0 = System.nanoTime()
     val r = body
-    lastCommitPhases.put(name, (System.nanoTime() - t0) / 1000000)
+    Option(phaseRecorder.get)
+      .foreach(_.put(name, (System.nanoTime() - t0) / 1000000))
     r
   }
 
@@ -1968,22 +1980,49 @@ object DeltaLog {
     }
   }
 
+  /** A blind write lands files under the table's recorded schema and
+    * writes no `metaData`, so the incoming columns must match it by
+    * name and type (nullability and field metadata aside; a mapped
+    * table compares its logical names). An extra column would be
+    * written and then never read; a retyped one would make every
+    * read of the version fail. Adding columns is [[evolveSchema]]'s
+    * job. */
+  private def requireTableSchema(incoming: StructType, st: State,
+                                 tableDir: String, op: String): Unit = {
+    def shape(dt: DataType): DataType = dt match {
+      case s: StructType =>
+        StructType(s.fields.map(f => StructField(f.name, shape(f.dataType))))
+      case a: org.apache.spark.sql.types.ArrayType =>
+        org.apache.spark.sql.types.ArrayType(shape(a.elementType))
+      case m: org.apache.spark.sql.types.MapType =>
+        org.apache.spark.sql.types.MapType(shape(m.keyType), shape(m.valueType))
+      case other => other
+    }
+    def columns(s: StructType): Map[String, DataType] =
+      s.fields.map(f => f.name -> shape(f.dataType)).toMap
+    val (have, want) = (columns(incoming), columns(st.schema))
+    if (have != want) {
+      def listed(cs: Iterable[String]) = cs.toSeq.sorted.mkString(", ")
+      throw new IllegalArgumentException(
+        s"$op: the incoming columns must cover $tableDir's schema " +
+          "exactly, by name and type (missing: " +
+          s"${listed(want.keySet -- have.keySet)}; extra: " +
+          s"${listed(have.keySet -- want.keySet)}; retyped: " +
+          s"${listed(want.keySet.filter(c => have.get(c).exists(_ != want(c))))}" +
+          ") — add columns with DeltaLog.evolveSchema before writing them")
+    }
+  }
+
   /** Mapped-table write adapter: when `tableDir`'s current state is
-    * column-mapped, require the incoming LOGICAL columns cover the
-    * table schema and spell the rows physically ([[physicalRows]]),
-    * so appends/overwrites/merges land files a foreign mapped reader
-    * resolves. Unmapped (or fresh) tables pass through. Mapped
-    * tables are unpartitioned by replay contract, so every caller is
-    * a `partCols.isEmpty` write branch. */
-  private def writeRows(df: DataFrame, tableDir: String,
-                        state: Option[State]): DataFrame =
+    * column-mapped, spell the incoming LOGICAL rows physically
+    * ([[physicalRows]]; [[requireTableSchema]] has matched them to
+    * the table's schema), so appends/overwrites land files a foreign
+    * mapped reader resolves. Unmapped (or fresh) tables pass through.
+    * Mapped tables are unpartitioned by replay contract, so every
+    * caller is a `partCols.isEmpty` write branch. */
+  private def writeRows(df: DataFrame, state: Option[State]): DataFrame =
     state match {
-      case Some(st) if st.columnMapping.nonEmpty =>
-        require(st.schema.fieldNames.forall(df.columns.contains),
-          s"mapped write to $tableDir: incoming columns " +
-            s"${df.columns.toSeq} must cover the table's logical " +
-            s"schema ${st.schema.fieldNames.toSeq}")
-        physicalRows(df, st)
+      case Some(st) if st.columnMapping.nonEmpty => physicalRows(df, st)
       case _ => df
     }
 
@@ -2010,12 +2049,15 @@ object DeltaLog {
       txn: Option[(String, Long)] = None): Option[Long] = {
     val st0 = requirePartitionSpec(tableDir, partCols, op)
     if (txn.exists(txnRecorded(tableDir, _))) return None
-    st0.foreach(enforceWriteInvariants(df, _))
+    st0.foreach { st =>
+      requireTableSchema(df.schema, st, tableDir, op)
+      enforceWriteInvariants(df, st)
+    }
     // data dir named by UUID, not by version: two racing writers must
     // not collide at the DATA write — only the log CAS decides order
     val sub = s"part-${java.util.UUID.randomUUID}"
     val adds = writeStaged(
-      if (partCols.isEmpty) writeRows(df, tableDir, st0) else df,
+      if (partCols.isEmpty) writeRows(df, st0) else df,
       tableDir, sub, partCols, st0)
     publishBlind(tableDir, df.schema, partCols, overwrite, txn, adds)(
       graft.util.Fs.deleteRecursively(new File(tableDir, sub)))

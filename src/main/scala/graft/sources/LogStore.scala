@@ -5,12 +5,12 @@ import java.util.concurrent.atomic.AtomicLong
 
 /** The COMMIT-POINT seam.
   *
-  * Every Delta / Iceberg / Snapshots commit in this engine ultimately
-  * rests on ONE primitive: *publish a fully-written immutable object
-  * at a versioned name iff that name is absent* (plus two advisory
-  * helpers: an empty claim marker and a replaceable pointer). All the
-  * protocol machinery above — retry loops, version pinning, conflict
-  * checks, replay — only ever consumes the boolean.
+  * Every Delta / Iceberg commit in this engine ultimately rests on
+  * ONE primitive: *publish a fully-written immutable object at a
+  * versioned name iff that name is absent* (plus one advisory
+  * helper: a replaceable pointer). All the protocol machinery above
+  * — retry loops, version pinning, conflict checks, replay — only
+  * ever consumes the boolean.
   *
   * Two implementations:
   *
@@ -37,15 +37,14 @@ import java.util.concurrent.atomic.AtomicLong
   * the engine actually routed through.
   *
   * SCOPE — control plane only, deliberately: the seam carries every
-  * COMMIT POINT (version claims, slot claims, publish markers,
-  * advisory pointers). The DATA plane — parquet part files, staging
-  * dirs — is written by Spark's own output committers and by
-  * UUID-named paths no reader resolves until a commit references
-  * them, so it needs no atomicity from the store at all (on a real
-  * object store it rides the S3A/magic committers, exactly as the
-  * reference's own jobs do). That split is what makes the real-S3
-  * swap one class: correctness concentrates in the four methods
-  * below.
+  * COMMIT POINT (version claims and advisory pointers). The DATA
+  * plane — parquet part files, staging dirs — is written by Spark's
+  * own output committers and by UUID-named paths no reader resolves
+  * until a commit references them, so it needs no atomicity from the
+  * store at all (on a real object store it rides the S3A/magic
+  * committers, exactly as the reference's own jobs do). That split
+  * is what makes the real-S3 swap one class: correctness
+  * concentrates in the two methods below.
   */
 trait LogStore {
   def name: String
@@ -57,16 +56,6 @@ trait LogStore {
     * caller's CAS-loss arm decides between retry and loud failure).
     * `tmp` is consumed either way. */
   def claimVersion(target: Path, tmp: Path): Boolean
-
-  /** Atomic create-if-absent of an empty version-slot DIRECTORY
-    * (Snapshots' claim). On an object store a zero-byte marker object
-    * plays this role; the local shim keeps a real directory because
-    * staged files land inside it. */
-  def claimSlot(dir: Path): Boolean
-
-  /** Atomic create-if-absent of an empty marker FILE (Snapshots'
-    * `_SUCCESS` publish). */
-  def claimMarker(file: Path): Boolean
 
   /** Replace-or-create an ADVISORY pointer (Iceberg's
     * `version-hint.text`, Delta's `_last_checkpoint`): readers
@@ -129,20 +118,6 @@ object PosixLogStore extends LogStore {
     } finally Files.deleteIfExists(tmp)
   }
 
-  def claimSlot(dir: Path): Boolean = {
-    claimsAttempted.incrementAndGet()
-    val won = dir.toFile.mkdir()
-    if (won) claimsWon.incrementAndGet()
-    won
-  }
-
-  def claimMarker(file: Path): Boolean = {
-    claimsAttempted.incrementAndGet()
-    val won = file.toFile.createNewFile()
-    if (won) claimsWon.incrementAndGet()
-    won
-  }
-
   def putPointer(target: Path, bytes: Array[Byte]): Unit = {
     val tmp = Files.createTempFile(target.getParent,
       "." + target.getFileName.toString + "-", ".tmp")
@@ -174,8 +149,9 @@ object PosixLogStore extends LogStore {
   *    version) and both-land is asserted.
   *
   * Swapping the shim for a real S3 client is one class: implement
-  * the four methods with `PutObject If-None-Match`, keep everything
-  * above the seam. */
+  * the two methods with `PutObject If-None-Match` (and a plain
+  * whole-object PUT for the pointer), keep everything above the
+  * seam. */
 object ConditionalPutStore extends LogStore {
   val name = "conditional-put"
 
@@ -201,30 +177,6 @@ object ConditionalPutStore extends LogStore {
         true
       }
     } finally Files.deleteIfExists(tmp)
-  }
-
-  def claimSlot(dir: Path): Boolean = {
-    claimsAttempted.incrementAndGet()
-    lockFor(dir).synchronized {
-      if (Files.exists(dir)) false
-      else {
-        Files.createDirectory(dir)
-        claimsWon.incrementAndGet()
-        true
-      }
-    }
-  }
-
-  def claimMarker(file: Path): Boolean = {
-    claimsAttempted.incrementAndGet()
-    lockFor(file).synchronized {
-      if (Files.exists(file)) false
-      else {
-        Files.createFile(file)
-        claimsWon.incrementAndGet()
-        true
-      }
-    }
   }
 
   def putPointer(target: Path, bytes: Array[Byte]): Unit =

@@ -112,13 +112,19 @@ object Bronze {
     q.awaitTermination()
   }
 
+  /** The `txn` appId [[ingestExactlyOnce]] commits under. Fixed, so
+    * a restarted query's batch ids meet the watermark its earlier
+    * runs recorded. */
+  private val ExactlyOnceAppId = "graft.bronze.events"
+
   /** [[ingest]] with transaction-log delivery: each micro-batch
-    * commits as one version of a [[graft.sources.Snapshots]] LOG
-    * table, keyed by the batch id — so a restart over the SAME
-    * checkpoint replays become no-ops instead of appended duplicates
-    * (Delta's `txnAppId`/`txnVersion` pattern). This closes the
-    * at-least-once gap the plain parquet-append sink carries (SURVEY
-    * T3: the batch W1 dedup is the backstop there).
+    * commits as one append to a [[graft.sources.DeltaLog]] table,
+    * carrying the protocol's `txn` action (a fixed appId, the batch
+    * id as its version) — so a restart over the SAME checkpoint
+    * replays become no-ops instead of appended duplicates (Delta's
+    * `txnAppId`/`txnVersion` pattern). This closes the at-least-once
+    * gap the plain parquet-append sink carries (SURVEY T3: the batch
+    * W1 dedup is the backstop there).
     *
     * DELIVERY CONTRACT — exactly-once holds iff batch ids stay
     * deterministic, which Structured Streaming guarantees only while
@@ -126,15 +132,16 @@ object Bronze {
     * identical (id → offset-range) batches, so a replayed id carries
     * identical content and skipping it is safe. If the checkpoint is
     * LOST, a fresh query re-batches the source from scratch with NO
-    * relation to the old ids — batch 0 may now span everything — and
-    * id-keyed skipping would silently drop data. A rebuilt checkpoint
-    * therefore REQUIRES a fresh tableDir (or wiping the old one);
-    * pairing a new checkpoint with an old log table is operator
-    * error, same as re-pointing a Delta `txnAppId` at a stale log.
-    * Partition columns stay available downstream via `readLog`. */
-  def ingestSnapshots(spark: SparkSession, srcDir: String, tableDir: String,
-                      checkpointDir: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+    * relation to the old ids — every id up to the recorded watermark
+    * is skipped whatever it now spans: a replay of the same input is
+    * a no-op, but input added since can be silently dropped. A
+    * rebuilt checkpoint therefore REQUIRES a fresh tableDir (or
+    * wiping the old one); pairing a new checkpoint with an old log
+    * table is operator error, same as re-pointing a Delta `txnAppId`
+    * at a stale log. The table reads back through `DeltaLog.read`. */
+  def ingestExactlyOnce(spark: SparkSession, srcDir: String, tableDir: String,
+                        checkpointDir: String,
+                        maxFilesPerTrigger: Option[Int] = None): Unit = {
     val reader = spark.readStream.schema(rawSchema(spark, srcDir))
     val stream = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
@@ -144,9 +151,10 @@ object Bronze {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {
-          graft.sources.Snapshots.commitIfAbsent(
+          graft.sources.DeltaLog.commitAppendIdempotent(
             envelope(fanOut(spark, batch), "events")
-              .sortWithinPartitions("_event_ts"), tableDir, id.toInt)
+              .sortWithinPartitions("_event_ts"),
+            tableDir, ExactlyOnceAppId, id)
           ()
         }
       }

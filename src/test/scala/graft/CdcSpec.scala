@@ -59,4 +59,43 @@ class CdcSpec extends SparkSuite {
       Seq(col("seq").desc, col("id").desc))
     assert(got.select("v").as[String].collect().toSeq == Seq("second"))
   }
+
+  private def table() =
+    java.nio.file.Files.createTempDirectory("cdcdiff").toString + "/t"
+
+  test("changesBetween classifies inserts, updates and deletes (CDF)") {
+    val t = table()
+    sources.DeltaLog.commitOverwrite(
+      Seq((1, "a", 10), (2, "b", 10), (4, "keep", 10)).toDF("k", "s", "x"), t)
+    sources.DeltaLog.commitOverwrite(
+      Seq((2, "b2", 11), (3, "c", 11), (4, "keep", 10)).toDF("k", "s", "x"), t)
+    val ch = Cdc.changesBetween(spark, t, 0, 1, Seq("k")).collect()
+      .map(r => r.getInt(0) -> (r.getString(1), r.getInt(2), r.getString(3)))
+      .toMap
+    assert(ch == Map(
+      1 -> (("a", 10, "delete")),          // pre-image on delete
+      2 -> (("b2", 11, "update_postimage")),
+      3 -> (("c", 11, "insert"))))         // unchanged key 4 absent
+  }
+
+  test("schema evolution: CDF serves the TO schema, padding pre with nulls") {
+    import org.apache.spark.sql.types._
+    val t = table()
+    // v0: (k, s); v1 evolves the schema to add x; v2 writes x
+    sources.DeltaLog.commitOverwrite(Seq((1, "a"), (2, "b")).toDF("k", "s"), t)
+    sources.DeltaLog.evolveSchema(t, StructType(Seq(
+      StructField("k", IntegerType), StructField("s", StringType),
+      StructField("x", IntegerType))))
+    sources.DeltaLog.commitOverwrite(
+      Seq((2, "b", 20), (3, "c", 30)).toDF("k", "s", "x"), t)
+    val ch = Cdc.changesBetween(spark, t, 0, 2, Seq("k"))
+    assert(ch.schema.fieldNames.toSeq == Seq("k", "s", "x", "_change_type"))
+    val m = ch.collect().map(r => r.getInt(0) ->
+      (r.getString(1), if (r.isNullAt(2)) None else Some(r.getInt(2)),
+        r.getString(3))).toMap
+    assert(m == Map(
+      1 -> (("a", None, "delete")),            // never had x: null pre-image
+      2 -> (("b", Some(20), "update_postimage")), // null -> 20 IS a change
+      3 -> (("c", Some(30), "insert"))))
+  }
 }

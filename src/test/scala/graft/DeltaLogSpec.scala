@@ -248,6 +248,80 @@ class DeltaLogSpec extends SparkSuite {
     }
   }
 
+  test("a readVersion plan built before a later overwrite still reads its version") {
+    val dir = Files.createTempDirectory("dlogpin").toString + "/t"
+    sources.DeltaLog.commitOverwrite(Seq((1L, "old")).toDF("k", "s"), dir)
+    val pinned = sources.DeltaLog.readVersion(spark, dir, 0)
+    sources.DeltaLog.commitOverwrite(Seq((1L, "new")).toDF("k", "s"), dir)
+    // the plan re-executes against version 0's immutable files
+    assert(pinned.collect().map(_.getString(1)).toSeq == Seq("old"))
+    assert(sources.DeltaLog.read(spark, dir)
+      .collect().map(_.getString(1)).toSeq == Seq("new"))
+  }
+
+  test("blind commits refuse a schema that differs from the table's") {
+    val dir = Files.createTempDirectory("dlogschema").toString + "/t"
+    sources.DeltaLog.commitOverwrite(
+      Seq((1, "a"), (2, "b")).toDF("k", "s"), dir)
+    def dataDirs = new java.io.File(dir).listFiles()
+      .count(_.getName.startsWith("part-"))
+    val dirs0 = dataDirs
+    def refused(write: => Long): String =
+      intercept[IllegalArgumentException](write).getMessage
+    // an extra column would be written and never read back
+    val wide = Seq((3, "c", 30)).toDF("k", "s", "x")
+    Seq(refused(sources.DeltaLog.commitOverwrite(wide, dir)),
+        refused(sources.DeltaLog.commitAppend(wide, dir))).foreach { m =>
+      assert(m.contains("extra: x") && m.contains("evolveSchema"), m)
+    }
+    // an int column overwritten as long would make the version unreadable
+    val retyped = Seq((3L, "c")).toDF("k", "s")
+    Seq(refused(sources.DeltaLog.commitOverwrite(retyped, dir)),
+        refused(sources.DeltaLog.commitAppend(retyped, dir))).foreach { m =>
+      assert(m.contains("retyped: k") && m.contains("evolveSchema"), m)
+    }
+    // refused before any data was written or any version published
+    assert(sources.DeltaLog.versions(dir) == Seq(0L))
+    assert(dataDirs == dirs0)
+    assert(sources.DeltaLog.read(spark, dir).count() == 2)
+    // nullability and column order do not count; evolveSchema opens x
+    sources.DeltaLog.commitAppend(
+      Seq(("c", Option(3))).toDF("s", "k"), dir)
+    import org.apache.spark.sql.types._
+    sources.DeltaLog.evolveSchema(dir, StructType(Seq(
+      StructField("k", IntegerType), StructField("s", StringType),
+      StructField("x", IntegerType))))
+    sources.DeltaLog.commitOverwrite(wide, dir)
+    assert(sources.DeltaLog.read(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq ==
+      Seq((3, "c", 30)))
+  }
+
+  test("recordingPhases holds its own thread's commit, not another thread's") {
+    val mine = Files.createTempDirectory("dlogphase").toString + "/t"
+    val other = Files.createTempDirectory("dlogphase").toString + "/t"
+    var otherPhases = Map.empty[String, Long]
+    val phases = sources.DeltaLog.recordingPhases {
+      // a commit on another thread, inside this scope, records into
+      // its own scope only
+      val t = new Thread(() => otherPhases =
+        sources.DeltaLog.recordingPhases(sources.DeltaLog.commitOverwrite(
+          Seq((1L, "o")).toDF("k", "s"), other)))
+      t.start(); t.join()
+      assert(otherPhases.keySet ==
+        Set("data_write_ms", "sidecars_ms", "footer_ms"))
+      assert(sources.DeltaLog.recordingPhases(()).isEmpty)
+      sources.DeltaLog.commitOverwrite(Seq((2L, "m")).toDF("k", "s"), mine)
+    }
+    assert(phases.keySet == Set("data_write_ms", "sidecars_ms", "footer_ms"))
+    // a scope whose body commits nothing on its thread records nothing
+    val unscoped = new Thread(() => sources.DeltaLog.commitOverwrite(
+      Seq((3L, "u")).toDF("k", "s"), other))
+    assert(sources.DeltaLog.recordingPhases {
+      unscoped.start(); unscoped.join()
+    }.isEmpty)
+  }
+
   test("checkpoint seeds replay: only the JSON tail is read, answers equal") {
     val dir = Files.createTempDirectory("dlogc").toString + "/t"
     (1 to 8).foreach { i =>

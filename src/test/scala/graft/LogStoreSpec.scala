@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{ConditionalPutStore, DeltaLog, LogStore,
-  PosixLogStore, Snapshots}
+  PosixLogStore}
 
 /** The commit-point seam: every CAS race shape the engine's protocol
   * rests on, green under BOTH stores — the POSIX hard-link CAS and
@@ -37,9 +37,6 @@ class LogStoreSpec extends SparkSuite {
         false
       } else won
     }
-    def claimSlot(d: java.nio.file.Path): Boolean = inner.claimSlot(d)
-    def claimMarker(f: java.nio.file.Path): Boolean =
-      inner.claimMarker(f)
     def putPointer(t: java.nio.file.Path, b: Array[Byte]): Unit =
       inner.putPointer(t, b)
   }
@@ -165,11 +162,6 @@ class LogStoreSpec extends SparkSuite {
       assert(!Files.exists(t2), s"[${store.name}] tmp consumed on loss")
       assert(new String(Files.readAllBytes(target), "UTF-8") == "winner",
         s"[${store.name}] the published object is the winner's, complete")
-      // slot + marker: create-if-absent, losing changes nothing
-      val slot = dir.resolve("v=0")
-      assert(store.claimSlot(slot) && !store.claimSlot(slot))
-      val marker = slot.resolve("_SUCCESS")
-      assert(store.claimMarker(marker) && !store.claimMarker(marker))
       // pointer: replaceable, readers see old-or-new never partial
       val hint = dir.resolve("version-hint.text")
       store.putPointer(hint, "1".getBytes("UTF-8"))
@@ -277,44 +269,10 @@ class LogStoreSpec extends SparkSuite {
     }
   }
 
-  test("Snapshots racing mergeCommits publish exactly one under both stores") {
-    stores.foreach { store =>
-      LogStore.withStore(store) {
-        val t = Files.createTempDirectory(s"snrace-${store.name}")
-          .toString + "/t"
-        Snapshots.mergeCommit(spark,
-          Seq((1, "a", 1L)).toDF("k", "s", "ver"), t, Seq("k"), "ver")
-        var innerV = -1
-        Snapshots.onMergeBeforeClaim = () => {
-          Snapshots.onMergeBeforeClaim = () => ()
-          innerV = Snapshots.mergeCommit(spark,
-            Seq((2, "winner", 1L)).toDF("k", "s", "ver"),
-            t, Seq("k"), "ver")
-        }
-        try {
-          intercept[java.util.ConcurrentModificationException] {
-            Snapshots.mergeCommit(spark,
-              Seq((1, "loser", 2L)).toDF("k", "s", "ver"),
-              t, Seq("k"), "ver")
-          }
-        } finally Snapshots.onMergeBeforeClaim = () => ()
-        assert(innerV == 1, s"[${store.name}] the planted racer wins v1")
-        assert(Snapshots.versions(t) == Seq(0, 1))
-        val leftovers = new java.io.File(t).listFiles()
-          .map(_.getName).toSet
-        assert(leftovers == Set("v=0", "v=1"),
-          s"[${store.name}] loser fully reclaimed, got $leftovers")
-        assert(Snapshots.read(spark, t).collect()
-          .map(r => r.getInt(0) -> r.getString(1)).toMap ==
-          Map(1 -> "a", 2 -> "winner"))
-      }
-    }
-  }
-
-  test("Delta stats commit + Snapshots torn-claim heal under conditional-put") {
+  test("Delta stats commit + idempotent replay under conditional-put") {
     LogStore.withStore(ConditionalPutStore) {
       val posixBefore = PosixLogStore.claimsAttempted.get
-      val t = Files.createTempDirectory("lssnap").toString + "/t"
+      val t = Files.createTempDirectory("lsstats").toString + "/t"
       // a stats + bloom Delta commit publishes through the store's
       // claim: the sidecar and add.stats are staged before the log
       // entry lands, exactly as under posix, and prune on read
@@ -332,21 +290,27 @@ class LogStoreSpec extends SparkSuite {
         .filter(col("k") === 42L).count() == 1)
       assert(DeltaLog.lastFilesScanned < 4)
       assert(DeltaLog.read(spark, t).count() == 100)
-      // exactly-once commitIfAbsent + torn-claim heal: claim the slot
-      // without completing it (a crashed writer), then the owning
-      // retry must rewrite and publish through the store
-      val t2 = Files.createTempDirectory("lssnap2").toString + "/t"
-      Files.createDirectories(Paths.get(t2))
-      assert(ConditionalPutStore.claimSlot(Paths.get(s"$t2/v=0")))
-      assert(Snapshots.commitIfAbsent(
-        Seq((1, "a")).toDF("k", "s"), t2, 0),
-        "the owning writer heals a torn claim")
-      assert(!Snapshots.commitIfAbsent(
-        Seq((1, "dup")).toDF("k", "s"), t2, 0),
+      // exactly-once append: a crashed writer's staged data dir (no
+      // log entry) stays invisible, the owning retry publishes
+      // through the store, and a replayed batch id is a no-op
+      val t2 = Files.createTempDirectory("lstxn").toString + "/t"
+      Files.createDirectories(Paths.get(s"$t2/part-crashed"))
+      Files.write(Paths.get(s"$t2/part-crashed/part-0.parquet"),
+        "garbage".getBytes("UTF-8"))
+      assert(DeltaLog.versions(t2).isEmpty)
+      val won = ConditionalPutStore.claimsWon.get
+      assert(DeltaLog.commitAppendIdempotent(
+        Seq((1, "a")).toDF("k", "s"), t2, "batch", 0L).contains(0L),
+        "the owning writer publishes its batch")
+      assert(ConditionalPutStore.claimsWon.get == won + 1)
+      assert(DeltaLog.commitAppendIdempotent(
+        Seq((1, "dup")).toDF("k", "s"), t2, "batch", 0L).isEmpty,
         "a replayed batch id is a no-op")
-      assert(Snapshots.read(spark, t2).count() == 1)
+      assert(DeltaLog.versions(t2) == Seq(0L))
+      assert(DeltaLog.read(spark, t2).collect().map(_.getString(1))
+        .sameElements(Array("a")))
       assert(PosixLogStore.claimsAttempted.get == posixBefore,
-        "no Delta or Snapshots claim may fall back to the posix primitives")
+        "no Delta claim may fall back to the posix primitives")
     }
   }
 

@@ -21,11 +21,11 @@ class PipelineSpec extends SparkSuite {
     tables.foreach { t =>
       assert(spark.read.parquet(s"$out/$t").count() > 0, s"$t is empty")
     }
-    // gold publishes as versioned snapshot tables
+    // gold publishes as Delta tables
     val goldTables = Seq("gold/orders_enriched", "gold/daily_sales_summary",
       "gold/customer_segments", "gold/product_performance")
     goldTables.foreach { t =>
-      assert(sources.Snapshots.read(spark, s"$out/$t").count() > 0,
+      assert(sources.DeltaLog.read(spark, s"$out/$t").count() > 0,
         s"$t is empty")
     }
 
@@ -113,7 +113,7 @@ class PipelineSpec extends SparkSuite {
 
     // referential sanity: every fact row's order exists in gold
     val fact = sources.DeltaLog.read(spark, factDir)
-    val gold = sources.Snapshots.read(spark, s"$out/gold/orders_enriched")
+    val gold = sources.DeltaLog.read(spark, s"$out/gold/orders_enriched")
     assert(fact.join(gold, fact("l_orderkey") === gold("o_orderkey"),
       "left_anti").count() == 0, "fact rows reference missing orders")
 
@@ -125,9 +125,9 @@ class PipelineSpec extends SparkSuite {
     assert(spark.read.parquet(s"$out/bronze/events").count() == bronzeRows,
       "pipeline rerun duplicated bronze rows")
     val goldDir = s"$out/gold/orders_enriched"
-    assert(sources.Snapshots.versions(goldDir) == Seq(0, 1))
-    val v0 = sources.Snapshots.readVersion(spark, goldDir, 0)
-    val v1 = sources.Snapshots.read(spark, goldDir)
+    assert(sources.DeltaLog.versions(goldDir) == Seq(0L, 1L))
+    val v0 = sources.DeltaLog.readVersion(spark, goldDir, 0)
+    val v1 = sources.DeltaLog.read(spark, goldDir)
     assert(v0.exceptAll(v1).isEmpty && v1.exceptAll(v0).isEmpty,
       "gold rerun changed content")
 

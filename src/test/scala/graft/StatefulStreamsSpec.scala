@@ -161,11 +161,11 @@ class StatefulStreamsSpec extends SparkSuite {
     val raw = rawLongEvents().limit(600)
     stage(raw.limit(300), s"$base/src/a.parquet")
     stage(raw, s"$base/src/b.parquet") // overlapping second file
-    graft.streaming.Bronze.ingestSnapshots(spark, s"$base/src",
+    graft.streaming.Bronze.ingestExactlyOnce(spark, s"$base/src",
       s"$base/table", s"$base/ckpt", maxFilesPerTrigger = Some(1))
-    val versions1 = graft.sources.Snapshots.versions(s"$base/table")
+    val versions1 = graft.sources.DeltaLog.versions(s"$base/table")
     assert(versions1.size >= 2, s"expected one version per file: $versions1")
-    val rows1 = graft.sources.Snapshots.readLog(spark, s"$base/table").count()
+    val rows1 = graft.sources.DeltaLog.read(spark, s"$base/table").count()
     assert(rows1 == 900) // at-least-once INPUT (300 + 600 overlapping rows)
     // checkpoint lost → the restarted query replays every batch; the
     // batch-id-keyed commits make each replay a no-op
@@ -173,11 +173,11 @@ class StatefulStreamsSpec extends SparkSuite {
       Option(f.listFiles()).foreach(_.foreach(deleteRec)); f.delete(); ()
     }
     deleteRec(new java.io.File(s"$base/ckpt"))
-    graft.streaming.Bronze.ingestSnapshots(spark, s"$base/src",
+    graft.streaming.Bronze.ingestExactlyOnce(spark, s"$base/src",
       s"$base/table", s"$base/ckpt", maxFilesPerTrigger = Some(1))
-    assert(graft.sources.Snapshots.versions(s"$base/table") == versions1,
+    assert(graft.sources.DeltaLog.versions(s"$base/table") == versions1,
       "replayed batches must not commit new versions")
-    assert(graft.sources.Snapshots.readLog(spark, s"$base/table").count()
+    assert(graft.sources.DeltaLog.read(spark, s"$base/table").count()
       == rows1, "replay duplicated rows")
   }
 
