@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{col, lit, month, pmod, year}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /** Iceberg partition TRANSFORMS (Iceberg spec §Partition Transforms) —
@@ -17,14 +11,12 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
   * predicate and prunes manifests, no derived column ever leaks into
   * the table schema.
   *
-  * Each transform exists twice, by design:
-  *  - a driver-side scalar ([[bucketLong]], [[monthOrdinal]], ...)
-  *    used when PRUNING manifest tuples against predicate values, and
-  *  - a Column expression ([[bucketCol]], [[monthCol]], ...) used when
-  *    WRITING, to derive the partition tuple per row inside codegen.
-  * Both sides share one implementation, so write-time assignment and
-  * read-time pruning can never disagree — the invariant hidden
-  * partitioning rests on.
+  * Each transform is one scalar ([[bucketLong]], [[monthOrdinal]],
+  * ...): the executor writers (`streaming.DeltaDataWriter`) derive
+  * each row's partition tuple with it, and the planner applies it to
+  * predicate values when PRUNING manifest tuples. One implementation
+  * on both sides means write-time assignment and read-time pruning
+  * can never disagree — the invariant hidden partitioning rests on.
   *
   * `bucket` is pinned to the spec's exact definition: murmur3_x86_32
   * (seed 0) over the value's 8-byte little-endian form, then
@@ -76,9 +68,7 @@ object IcebergTransforms {
     * (the spec's `v - (((v % w) + w) % w)` — correct for negatives). */
   def truncateLong(v: Long, w: Long): Long = v - (((v % w) + w) % w)
 
-  /** Iceberg `month` ordinal: months from 1970-01 (UTC calendar —
-    * sessions here pin spark.sql.session.timeZone=UTC, so the Column
-    * twin agrees). */
+  /** Iceberg `month` ordinal: months from 1970-01 (UTC calendar). */
   def monthOrdinal(year: Int, month: Int): Int = (year - 1970) * 12 + month - 1
 
   /** Iceberg `year` ordinal: years from 1970. */
@@ -100,8 +90,9 @@ object IcebergTransforms {
   def hourOrdinalOfMicros(us: Long): Int =
     Math.floorDiv(us, 3600L * 1000000L).toInt
 
-  /** Ordinal of an instant under a time transform — the prune-side
-    * twin of [[transformCol]] for day/month/year/hour. */
+  /** Ordinal of an instant under a time transform (day/month/year/
+    * hour) — what the executor writers key files on and what the
+    * pruner compares against. */
   def timeOrdinalOfMicros(transform: String, us: Long): Int =
     transform match {
       case "month" => monthOrdinalOfMicros(us)
@@ -112,59 +103,10 @@ object IcebergTransforms {
         s"'$other' is not a time transform")
     }
 
-  // ---------------------------------------------------------------
-  // Column twins (write-path derivation, inside codegen)
-  // ---------------------------------------------------------------
-
-  /** `bucket[n]` as a Column over a long source column. */
-  def bucketCol(n: Int, c: Column): Column =
-    Bridge.column(IcebergBucketLong(Bridge.expression(c.cast("long")), n))
-
-  /** `truncate[w]` as a Column over a long source column. */
-  def truncateCol(w: Long, c: Column): Column = {
-    val l = c.cast("long")
-    l - pmod(l, lit(w))
-  }
-
-  /** `month` as a Column over a timestamp/date source column. */
-  def monthCol(c: Column): Column =
-    (year(c) - lit(1970)) * lit(12) + month(c) - lit(1)
-
-  /** `year` as a Column over a timestamp/date source column. */
-  def yearCol(c: Column): Column = year(c) - lit(1970)
-
-  /** `day` as a Column: days from epoch (dates only here — the
-    * timestamp day transform needs the same UTC discipline). */
-  def dayCol(c: Column): Column =
-    org.apache.spark.sql.functions.datediff(
-      org.apache.spark.sql.functions.to_date(c),
-      org.apache.spark.sql.functions.to_date(lit("1970-01-01")))
-
-  /** `hour` as a Column: hours from epoch (UTC sessions — see
-    * [[monthCol]]). */
-  def hourCol(c: Column): Column =
-    org.apache.spark.sql.functions.floor(
-      org.apache.spark.sql.functions.unix_micros(c.cast("timestamp"))
-        / lit(3600L * 1000000L)).cast("int")
-
   /** The transform-string vocabulary, single source of truth —
     * consumers pattern-match these instead of re-declaring. */
   private[graft] val BucketRe = """bucket\[(\d+)\]""".r
   private[graft] val TruncateRe = """truncate\[(\d+)\]""".r
-
-  /** The derived Column for a spec transform string over source
-    * column `src` — the write path's single dispatch point. */
-  def transformCol(transform: String, src: String): Column = transform match {
-    case "identity"     => col(src)
-    case BucketRe(n)    => bucketCol(n.toInt, col(src))
-    case TruncateRe(w)  => truncateCol(w.toLong, col(src))
-    case "month"        => monthCol(col(src))
-    case "year"         => yearCol(col(src))
-    case "day"          => dayCol(col(src))
-    case "hour"         => hourCol(col(src))
-    case other => throw new IllegalArgumentException(
-      s"unsupported Iceberg partition transform '$other'")
-  }
 
   /** The partition tuple field's type for a transform over a source
     * of type `srcType`. */
@@ -176,7 +118,7 @@ object IcebergTransforms {
         require(srcType == LongType || srcType == IntegerType,
           s"truncate over $srcType not supported (long/int only)")
         // the spec defines truncate as TYPE-PRESERVING (int source →
-        // int tuple); the scalar math in [[truncateCol]] may widen to
+        // int tuple); the scalar math in [[truncateLong]] widens to
         // long internally, but the manifest's avro partition field
         // must carry the source type or external clients deriving the
         // tuple type from spec+schema mis-read the value
@@ -206,34 +148,4 @@ object IcebergTransforms {
     case BucketRe(_) | TruncateRe(_) => true
     case _ => false
   }
-}
-
-/** Native codegen'd `bucket[n]` over a long column (see
-  * [[IcebergTransforms]] for the spec contract). A UDF here would
-  * break whole-stage codegen in the write path's partitioning
-  * projection; this compiles to two multiply-rotate rounds inline. */
-case class IcebergBucketLong(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n > 0, s"bucket count must be positive, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a long argument, got " +
-        child.dataType.simpleString)
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "iceberg_bucket"
-
-  override protected def nullSafeEval(v: Any): Any =
-    IcebergTransforms.bucketLong(v.asInstanceOf[Long], n)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.IcebergTransforms.bucketLong($c, $n)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
 }

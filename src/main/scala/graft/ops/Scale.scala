@@ -56,13 +56,6 @@ object Scale {
         sum(col("_pcnt")).as("n_rows"))
   }
 
-  /** Top-level key-frequency probe: the cheap scan that decides
-    * whether a key needs the salted path (run it on a sample at
-    * 100 TB). */
-  def keyHistogram(df: DataFrame, key: String, topN: Int): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc).limit(topN)
-
   /** Bits of each dimension interleaved into the z-value. 16+16 fits
     * a positive int64 and covers 65k distinct values per dimension —
     * clamp/bucket wider domains before interleaving. */

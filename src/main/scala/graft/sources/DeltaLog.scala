@@ -1648,8 +1648,7 @@ object DeltaLog {
   /** Delta's per-file data-skipping stats: numRecords + min/max of
     * top-level integral columns — the format spells them as a JSON
     * STRING inside the add action. Footer-derived stats carry INT64
-    * and INT32 bounds ([[Iceberg.FooterStats]]); Iceberg manifests
-    * record only the INT64 half. */
+    * and INT32 bounds ([[Iceberg.FooterStats]]). */
   private def statsJsonOf(n: Long,
                           bounds: Map[String, (Long, Long)],
                           schema: StructType = null): String = {
@@ -3333,8 +3332,9 @@ object DeltaLog {
 
   /** Backfill bloom rows for LIVE files lacking them (files
     * committed before the property was set). Returns how many files
-    * were bloomed. Each file is sized by its own row count (from one
-    * distributed footer job); one scan of exactly those files per
+    * were bloomed. Each file is sized by its own row count — its
+    * add's `add.stats` numRecords, or one driver footer open for an
+    * add written without stats; one scan of exactly those files per
     * geometry. */
   def bloomBackfill(spark: SparkSession, tableDir: String): Int = {
     val vs = versions(tableDir)
@@ -3351,12 +3351,14 @@ object DeltaLog {
         .collect().map(_.getString(0)).toSet
     }
     val missing = st.files.filterNot(p => bloomed.contains(base(p)))
-      .map(resolve)
     // each file sized by its own row count; one sidecar part per
     // geometry (empty files hold no key to bloom)
-    Iceberg.footerStatsBatch(spark, missing).toSeq
-      .filter(_._2.numRecords > 0)
-      .groupBy(p => sidecarBloomBits(p._2.numRecords)).toSeq.sortBy(_._1)
+    missing.map { p =>
+      val abs = resolve(p)
+      abs -> st.adds(p).stats.flatMap(statsNumRecords)
+        .getOrElse(Iceberg.parquetFooter(abs).numRecords)
+    }.filter(_._2 > 0)
+      .groupBy(p => sidecarBloomBits(p._2)).toSeq.sortBy(_._1)
       .foreach { case (mBits, fs) =>
         writeBloomRows(spark, tableDir, fs.map(_._1).sorted, mBits, cols) }
     missing.size

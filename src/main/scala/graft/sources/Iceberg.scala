@@ -594,16 +594,6 @@ object Iceberg {
     Planned(data, posB.result(), eqB.result())
   }
 
-  /** Live data files only; refuses a snapshot that carries deletes —
-    * callers on this path would silently resurrect deleted rows. */
-  private def planFiles(tableDir: String, meta: ObjectNode,
-                        snapshotId: Long): Seq[PlannedFile] = {
-    val p = planFilesAll(tableDir, meta, snapshotId)
-    require(p.deleteFiles.isEmpty && p.eqDeletes.isEmpty,
-      "snapshot carries deletes — use the delete-aware read")
-    p.data
-  }
-
   /** One field of the default partition spec: the tuple field's
     * display name, its transform string, and the SOURCE column it
     * derives from (resolved through `source-id` against the schema —
@@ -724,8 +714,7 @@ object Iceberg {
   private def dataFilesCarryPartitionCols(path: String,
                                           partCols: Seq[String]): Boolean = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(stripFileUri(path)),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(stripFileUri(path)), footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val names = r.getFooter.getFileMetaData.getSchema.getFields
@@ -1338,63 +1327,28 @@ object Iceberg {
     * row groups) of its top-level integral columns, split by physical
     * type: `int64` covers INT64 (timestamps included, decimals
     * excluded), `int32` covers INT32 with no annotation or an integer
-    * one. Iceberg manifests record only `int64` (their bound encoding
-    * here is 8-byte little-endian, wrong for int columns); Delta's
-    * `add.stats` records both. */
+    * one. Read only for files no write task of this engine reported
+    * on: [[registerFiles]]' external files (their manifests record
+    * the `int64` half), Delta's migrated files and stat-less adds
+    * (both halves), and single delete files. */
   private[graft] case class FooterStats(numRecords: Long,
       int64: Map[String, (Long, Long)], int32: Map[String, (Long, Long)]) {
     def iceberg: (Long, Map[String, (Long, Long)]) = (numRecords, int64)
   }
 
-  /** Driver-side parquet footer read — metadata, never a scan. Kept
-    * for the O(1)-per-call sites (single delete files, external-file
-    * migration); a just-written BATCH goes through
-    * [[footerStatsBatch]] so the driver never serializes O(files) IO
-    * round-trips. */
-  private[graft] def parquetFooter(path: String): FooterStats = {
-    driverFooterOpens += 1
-    footerStatsOf(path)
-  }
-
-  /** Driver-side footer opens since session start — the spec seam
-    * proving commit paths never open footers on the driver: Delta
-    * commits take stats from their write tasks, Iceberg commits from
-    * the DISTRIBUTED job (executor tasks call [[footerStatsOf]]
-    * directly, so local-mode tasks never inflate the count), and a
-    * multi-file commit must leave it unchanged. */
-  @volatile private[graft] var driverFooterOpens: Long = 0L
-
-  /** Per-file footer stats for a just-written batch via ONE
-    * distributed job: executors open the footers in parallel
-    * (footer IO is O(metadata), never a data scan) and the driver
-    * collects exactly O(files) stats rows — at 100 TB a commit of a
-    * thousand part files pays one job instead of a thousand
-    * sequential driver round-trips. A single file skips the job
-    * (task-launch overhead exceeds one local footer open, and a
-    * 1-file commit's latency never grows with table size). Callers:
-    * the Iceberg commit paths and Delta's [[DeltaLog.bloomBackfill]]
-    * (files that already exist); Delta commits of just-written data
-    * take their stats from the write tasks instead. */
-  private[sources] def footerStatsBatch(spark: SparkSession,
-      paths: Seq[String]): Map[String, FooterStats] =
-    paths match {
-      case Seq() => Map.empty
-      case Seq(one) => Map(one -> parquetFooter(one))
-      case many => spark.sparkContext
-        .parallelize(many, math.min(many.size, 32))
-        .map(p => (p, footerStatsOf(p)))
-        .collect().toMap
-    }
-
   /** One Hadoop configuration per JVM for footer opens, read-only
     * after construction: a fresh one re-parses the default resources
-    * on first use — tens of ms of CPU per footer, paid once per file
-    * by a many-file commit's footer job. */
+    * on first use — tens of ms of CPU per footer. */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
-  private def footerStatsOf(path: String): FooterStats = {
+  /** Driver-side parquet footer read — metadata, never a scan — for
+    * the O(1)-per-call sites [[FooterStats]] names. Every commit of
+    * just-written data, Delta or Iceberg, takes its stats from its
+    * write tasks instead and opens no footer. */
+  private[graft] def parquetFooter(path: String): FooterStats = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    driverFooterOpens += 1
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(path), footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -1439,6 +1393,12 @@ object Iceberg {
       FooterStats(r.getRecordCount, int64.toMap, int32.toMap)
     } finally r.close()
   }
+
+  /** Driver-side footer opens since session start — the spec seam
+    * proving commit paths never open footers on the driver: Delta and
+    * Iceberg commits take their stats from their write tasks, so a
+    * commit must leave it unchanged. */
+  @volatile private[graft] var driverFooterOpens: Long = 0L
 
   private def longBoundBytes(v: Long): java.nio.ByteBuffer = {
     val b = java.nio.ByteBuffer.allocate(8)
@@ -1489,185 +1449,175 @@ object Iceberg {
     e
   }
 
+  /** The manifest entry (status ADDED) of one file a write task
+    * reported: its typed partition tuple under `tupleFields`, and the
+    * one manifest-bounds rule — the task's record count plus its
+    * bounds of `schema`'s long and int columns. The tasks also track
+    * short/byte columns and long-backed decimals (as UNSCALED longs),
+    * but this engine's manifest bound encoding is the 8-byte long
+    * form, so a decimal there would hand foreign readers spec-shaped
+    * bytes with the wrong meaning; those columns are omitted
+    * (superset: their files never prune on them). Every writer-fed
+    * manifest ([[commitDsv2]], [[commitReplaceDsv2]],
+    * [[commitMergeDsv2]]) builds its entries here. */
+  private def writtenEntry(tableDir: String, schema: StructType,
+      ids: Map[String, Int], entrySchema: Schema,
+      tupleFields: Seq[(String, String, String, DataType)])
+      : DeltaLog.Dsv2File => GenericRecord = {
+    val integral = schema.fields.collect {
+      case f if f.dataType == LongType || f.dataType == IntegerType =>
+        f.name
+    }.toSet
+    f => manifestEntry(s"$tableDir/${f.relPath}", 1, ids, entrySchema,
+      tupleFields.map { case (name, _, _, t) =>
+        name -> typedPartitionValue(
+          f.partitionValues.getOrElse(name, null), t) },
+      Some((f.numRecords, f.bounds.filter(b => integral(b._1)))))
+  }
+
+  /** The executor writers' file keys `(partCols, hiddenSpec)` for a
+    * write into `tableDir` that declares identity `partCols` or a
+    * `hiddenSpec` — the one place the identity file layout is
+    * decided. A table whose live files carry their identity partition
+    * columns (standard Iceberg: the foreign shape, and what
+    * [[rewriteDataFilesFullSchema]] produces through
+    * `forceStandardShape`) keeps that layout: its writers key files on
+    * an `identity` transform in the hidden spec, which projects
+    * nothing out of the files. Any other identity write projects its
+    * columns out hive-style (the tuple substitutes on read). Mixing
+    * the two would leave a table's files disagreeing on which columns
+    * exist physically. One footer of one live file decides
+    * ([[firstDataFilePath]]). Callers: the library [[commit]], the
+    * DSv2 write builder (batch and streaming) and the SQL
+    * copy-on-write rewrite. */
+  private[graft] def writerKeys(tableDir: String, partCols: Seq[String],
+      hiddenSpec: Seq[(String, String)],
+      forceStandardShape: Boolean = false)
+      : (Seq[String], Seq[(String, String)]) =
+    if (partCols.nonEmpty && (forceStandardShape ||
+        versions(tableDir).lastOption.exists(v => scala.util.Try(
+          firstDataFilePath(loadMetadata(tableDir, v)).exists(p =>
+            dataFilesCarryPartitionCols(p, partCols))).getOrElse(false))))
+      (Seq.empty, partCols.map(_ -> "identity") ++ hiddenSpec)
+    else (partCols, hiddenSpec)
+
+  /** Delete the data files a write task reported (an aborted or
+    * refused commit's; the table never referenced them). */
+  private[graft] def dropFiles(tableDir: String,
+      files: Seq[DeltaLog.Dsv2File]): Unit =
+    files.foreach(f =>
+      Files.deleteIfExists(Paths.get(s"$tableDir/${f.relPath}")): Unit)
+
+  /** `df` written under `tableDir/data/` by the executor writers the
+    * DSv2 connector runs ([[graft.streaming.StagedWrite]]: parquet
+    * field ids stamped, numRecords and bounds tracked per file, files
+    * keyed on `keys`/`hidden` from [[writerKeys]]) and handed to
+    * `publish`; the files are deleted if `publish` throws. An
+    * unpartitioned frame always lands at least one file. */
+  private def staged[A](df: DataFrame, tableDir: String,
+      keys: Seq[String], hidden: Seq[(String, String)])(
+      publish: Seq[DeltaLog.Dsv2File] => A): A = {
+    val files = graft.streaming.StagedWrite(df, tableDir, "data/", keys,
+      hiddenSpec = hidden,
+      physical = graft.streaming.IcebergDsv2Write.fieldIdSchema)
+    try publish(files)
+    catch { case e: Throwable => dropFiles(tableDir, files); throw e }
+  }
+
+  /** The library data commits (overwrite/append, identity, hidden,
+    * branch, rewrites): `df` through [[staged]], published by
+    * [[commitDsv2]]. */
   private def commit(df: DataFrame, tableDir: String,
                      overwrite: Boolean,
                      partCols: Seq[String] = Seq.empty,
                      hiddenSpec: Seq[(String, String)] = Seq.empty,
                      toBranch: Option[String] = None,
-                     summaryExtra: Map[String, String] = Map.empty,
-                     abortIf: () => Boolean = () => false,
                      forceStandardShape: Boolean = false): Long = {
-    import graft.functions.IcebergTransforms
-    require(partCols.isEmpty || hiddenSpec.isEmpty,
-      "a commit declares either identity partCols (hive-shape) or a " +
-        "hidden transform spec, not both")
-    partCols.foreach(c => require(df.columns.contains(c),
-      s"partition column $c not in commit schema"))
-    hiddenSpec.foreach { case (src, tr) =>
-      require(df.columns.contains(src),
-        s"hidden-partition source column $src not in commit schema")
-      require(tr != "identity",
-        "identity goes through partCols (hive-shape); hidden specs " +
-          "are for derived transforms")
-    }
-    // the declared tuple fields: (tuple field name, transform, source
-    // column, tuple type) — identity hive-shape fields keep the
-    // column's own name/type, hidden fields derive theirs
-    val tupleFields: Seq[(String, String, String, DataType)] =
-      partCols.map(c => (c, "identity", c, df.schema(c).dataType)) ++
-        hiddenSpec.map { case (src, tr) =>
-          val name = IcebergTransforms.tupleName(tr, src)
-          require(!df.columns.contains(name),
-            s"derived tuple name $name collides with a data column")
-          (name, tr, src,
-            IcebergTransforms.tupleType(tr, df.schema(src).dataType))
-        }
-    val declaredSpec = tupleFields.map {
-      case (name, tr, src, _) => SpecField(name, tr, src) }
-    Files.createDirectories(Paths.get(metaDir(tableDir)))
-    val vs = versions(tableDir)
-    val v = if (vs.isEmpty) 1 else vs.last + 1
-    val prevMeta = if (vs.isEmpty) None else Some(loadMetadata(tableDir, vs.last))
-    // the TABLE's schema (prev metadata) is authoritative once it
-    // exists: commits must match names+types, but nullability is not
-    // compared — Spark's parquet scans surface everything nullable,
-    // so a rewrite of a required column would otherwise self-reject
-    def erased(s: StructType) = StructType(s.fields.map(f =>
-      StructField(f.name, f.dataType, nullable = true)))
-    prevMeta.foreach { m =>
-      val prevSchema = schemaFromMetadata(m)
-      require(erased(prevSchema) == erased(df.schema),
-        s"schema mismatch: table has $prevSchema, commit has ${df.schema}")
-      require(partitionSpecOf(m) == declaredSpec,
-        s"partition spec mismatch: table has ${partitionSpecOf(m)}, " +
-          s"commit declares $declaredSpec")
-    }
-    val tableSchema = prevMeta.map(schemaFromMetadata).getOrElse(df.schema)
-    // STANDARD-SHAPE identity writes: once a table's live files carry
-    // their partition columns physically (standard Iceberg — the
-    // foreign-table shape, and what [[rewriteDataFilesFullSchema]]
-    // produces to unlock identity spec evolution), every later
-    // identity commit must keep that layout: mixing hive-stripped and
-    // column-carrying generations would leave the two disagreeing on
-    // which columns exist physically. Detected from the current
-    // snapshot; `forceStandardShape` is the rewrite's own entry.
-    val standardShape: Boolean = hiddenSpec.isEmpty &&
-      partCols.nonEmpty && (forceStandardShape ||
-        prevMeta.exists(m => scala.util.Try(
-          firstDataFilePath(m).exists(p =>
-            dataFilesCarryPartitionCols(p, partCols)))
-          .getOrElse(false)))
-    val snapshotId: Long = prevMeta.map(
-      _.get("snapshots").elements().asScala
-        .map(_.get("snapshot-id").asLong).maxOption.getOrElse(0L))
-      .getOrElse(0L) + 1L
-    // data files: plain write; hive-layout write (identity partCols —
-    // partition columns stripped, tuple substitutes on read); or
-    // HIDDEN-partition write — derived tuple columns computed per row
-    // inside codegen, partitionBy strips exactly those derived
-    // columns, so the data files keep the FULL table schema and the
-    // transform values exist only in the value dirs, decoded ONCE
-    // here into typed manifest tuples (files renamed to per-file
-    // UUIDs — the PartitionedScan basename contract)
-    val sub = s"data/part-${java.util.UUID.randomUUID}"
-    val tupleNames = tupleFields.map(_._1)
-    // the spec REQUIRES parquet field ids in data files — attach each
-    // column's id (the metadata schema's, stable across renames) so
-    // readers resolve by id, and any Iceberg client reads the files
-    df.sparkSession.conf.set(
-      "spark.sql.parquet.fieldId.write.enabled", "true")
-    val writeIds: Map[String, Long] = df.schema.fieldNames.zipWithIndex
-      .map { case (n, i) => n -> (i + 1L) }.toMap
-    val dfIds = df.select(df.schema.fieldNames.toSeq.map(n =>
-      col(n).as(n, new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", writeIds(n)).build())): _*)
-    val parts: Seq[(File, Seq[(String, Any)])] =
-      if (tupleFields.isEmpty) {
-        dfIds.write.parquet(s"$tableDir/$sub")
-        Option(new File(tableDir, sub).listFiles())
-          .getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .sortBy(_.getName).toSeq.map(f => (f, Seq.empty[(String, Any)]))
-      } else {
-        // standard shape stages ALIAS columns so partitionBy strips
-        // only the alias — the data files keep every real column,
-        // while the value dirs still carry the tuple to decode
-        val aliasOf: Map[String, String] =
-          if (standardShape) partCols.map(c => c -> s"__pt_$c").toMap
-          else Map.empty
-        val staged =
-          if (hiddenSpec.nonEmpty)
-            hiddenSpec.foldLeft(dfIds) { case (d, (src, tr)) =>
-              d.withColumn(IcebergTransforms.tupleName(tr, src),
-                IcebergTransforms.transformCol(tr, src))
-            }
-          else if (standardShape)
-            partCols.foldLeft(dfIds)((d, c) =>
-              d.withColumn(aliasOf(c), col(c)))
-          else dfIds
-        val stageNames = tupleNames.map(n => aliasOf.getOrElse(n, n))
-        staged.write.partitionBy(stageNames: _*)
-          .parquet(s"$tableDir/$sub")
-        def walk(f: File): Seq[File] =
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty)
-              .sortBy(_.getName).toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new File(tableDir, sub))
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map { f0 =>
-            val f = new File(f0.getParentFile,
-              s"part-${java.util.UUID.randomUUID}.parquet")
-            Files.move(f0.toPath, f.toPath)
-            val rel = Paths.get(tableDir, sub).toAbsolutePath
-              .relativize(f.toPath.toAbsolutePath).toString
-            // prepend one dummy segment: hivePartitionValues expects
-            // <stage>/<k=v dirs...>/<file>
-            val pv = PartitionedScan.hivePartitionValues(
-              s"stage/$rel", stageNames)
-            (f, tupleFields.map { case (name, _, _, t) =>
-              name -> typedPartitionValue(
-                pv(aliasOf.getOrElse(name, name)), t) })
-          }
-      }
-    // stats for every part file in ONE distributed footer job —
-    // the driver collects O(files) rows, never opens footers itself
-    val statsByPath = footerStatsBatch(df.sparkSession,
-      parts.map(_._1.getPath)).view.mapValues(_.iceberg).toMap
-    publishDataSnapshot(tableDir, df.schema, tupleFields, declaredSpec,
-      parts, statsByPath, overwrite, toBranch, summaryExtra, abortIf,
-      () => graft.util.Fs.deleteRecursively(new File(tableDir, sub)),
-      v, prevMeta, snapshotId)
+    (partCols ++ hiddenSpec.map(_._1)).foreach(c =>
+      require(df.columns.contains(c),
+        s"partition source column $c not in commit schema"))
+    val (keys, hidden) =
+      writerKeys(tableDir, partCols, hiddenSpec, forceStandardShape)
+    staged(df, tableDir, keys, hidden)(files =>
+      commitDsv2(tableDir, df.schema, keys, files, overwrite, hidden,
+        toBranch))
   }
 
-  /** The VERSION-DEPENDENT publish phase shared by [[commit]] (files
-    * just written from a DataFrame) and [[commitDsv2]] (files the
-    * DSv2 executors wrote, stats tracked while writing): write the
-    * new-files manifest once, then claim metadata versions until the
-    * CAS lands, re-deriving base metadata / version / snapshot id
-    * per attempt. `v0`/`prevMeta0`/`snapshotId0` are the caller's
-    * first-attempt view; the loop re-validates schema + spec against
-    * every racing winner. Returns the snapshot id (-1 when
-    * `abortIf` fired — idempotent replays walk away after
-    * `abortCleanup`). */
-  private def publishDataSnapshot(tableDir: String,
-      commitSchema: StructType,
-      tupleFields: Seq[(String, String, String, DataType)],
-      declaredSpec: Seq[SpecField],
-      parts: Seq[(File, Seq[(String, Any)])],
-      statsByPath: Map[String, (Long, Map[String, (Long, Long)])],
-      overwrite: Boolean, toBranch: Option[String],
-      summaryExtra: Map[String, String], abortIf: () => Boolean,
-      abortCleanup: () => Unit,
-      v0: Int, prevMeta0: Option[ObjectNode],
-      snapshotId0: Long): Long = {
+  /** The one publish of data files the executor writers landed: the
+    * library commits ([[commit]], [[commitAppendIdempotent]]),
+    * `df.write.format("graft-iceberg")` and the SQL catalog's native
+    * INSERT, the DSv2 streaming sink, and an insert-only MERGE. The
+    * writers attached parquet field ids and tracked numRecords and
+    * bounds while writing, so the manifest entries come from them
+    * ([[writtenEntry]]) with no footer pass. `partCols` declares an
+    * identity spec whose files project the columns out; `hiddenSpec`
+    * a derived-transform spec, or (from [[writerKeys]]) an identity
+    * spec whose files keep their columns. Either way the manifest
+    * records each file's typed tuple under the spec's field names
+    * (`<col>_bucket` and the like for derived transforms). Creates
+    * the table (spec 0, schema from the write) when no metadata
+    * exists.
+    *
+    * The new-files manifest is written once; then metadata versions
+    * are claimed until the CAS lands, re-deriving base metadata,
+    * version and snapshot id per attempt and re-validating schema and
+    * spec against every racing winner. `toBranch` commits to a branch
+    * ref (write-audit-publish). Returns the snapshot id, or -1 when
+    * `abortIf` fired after a lost CAS — an idempotent replay, whose
+    * files and manifest are then deleted. */
+  private[graft] def commitDsv2(tableDir: String,
+      logicalSchema: StructType, partCols: Seq[String],
+      files: Seq[DeltaLog.Dsv2File], overwrite: Boolean,
+      hiddenSpec: Seq[(String, String)] = Seq.empty,
+      toBranch: Option[String] = None,
+      summaryExtra: Map[String, String] = Map.empty,
+      abortIf: () => Boolean = () => false): Long = {
+    import graft.functions.IcebergTransforms
+    require(partCols.isEmpty || hiddenSpec.isEmpty,
+      "a commit declares identity partCols or a hidden spec, not both")
+    // the declared tuple fields: (tuple field name, transform, source
+    // column, tuple type) — identity fields keep the column's own
+    // name and type, derived fields take the transform's
+    val tupleFields: Seq[(String, String, String, DataType)] =
+      (partCols.map(_ -> "identity") ++ hiddenSpec).map {
+        case (src, tr) =>
+          val name = IcebergTransforms.tupleName(tr, src)
+          require(tr == "identity" ||
+              !logicalSchema.fieldNames.contains(name),
+            s"derived tuple name $name collides with a data column")
+          (name, tr, src,
+            IcebergTransforms.tupleType(tr, logicalSchema(src).dataType))
+      }
+    val declaredSpec = tupleFields.map {
+      case (name, tr, src, _) => SpecField(name, tr, src) }
     def erased(s: StructType) = StructType(s.fields.map(f =>
       StructField(f.name, f.dataType, nullable = true)))
-    val v = v0
-    val prevMeta = prevMeta0
-    val snapshotId = snapshotId0
-    val tableSchema =
-      prevMeta.map(schemaFromMetadata).getOrElse(commitSchema)
+    // (version to claim, base metadata, snapshot id) at the current
+    // head. The TABLE's schema is authoritative once it exists: a
+    // commit must match names+types, but nullability is not compared
+    // (Spark's parquet scans surface everything nullable, so a
+    // rewrite of a required column would otherwise self-reject). A
+    // racing winner must not have changed what this commit assumes
+    // either, so every attempt re-checks.
+    def head(): (Int, Option[ObjectNode], Long) = {
+      val vs = versions(tableDir)
+      val prev = vs.lastOption.map(loadMetadata(tableDir, _))
+      prev.foreach { m =>
+        val prevSchema = schemaFromMetadata(m)
+        require(erased(prevSchema) == erased(logicalSchema),
+          s"schema mismatch: table has $prevSchema, commit has " +
+            s"$logicalSchema")
+        require(partitionSpecOf(m) == declaredSpec,
+          s"partition spec mismatch: table has ${partitionSpecOf(m)}, " +
+            s"commit declares $declaredSpec")
+      }
+      val snapshotId = prev.map(_.get("snapshots").elements().asScala
+        .map(_.get("snapshot-id").asLong).maxOption.getOrElse(0L))
+        .getOrElse(0L) + 1L
+      (vs.lastOption.getOrElse(0) + 1, prev, snapshotId)
+    }
+    Files.createDirectories(Paths.get(metaDir(tableDir)))
+    var at = head()
     // one new manifest for the added files — UUID-named so two RACING
     // committers never collide at a file write; only the metadata
     // hard-link CAS decides commit order (the same rule as Delta's
@@ -1676,14 +1626,13 @@ object Iceberg {
     val commitUuid = java.util.UUID.randomUUID
     val manifestPath =
       s"${metaDir(tableDir)}/snap-$commitUuid-m0.avro"
-    val colIds = commitSchema.fields.zipWithIndex
+    val colIds = logicalSchema.fields.zipWithIndex
       .map { case (f, i) => f.name -> (i + 1) }.toMap
     val entrySchema = manifestEntrySchemaFor(
       tupleFields.map { case (name, _, _, t) => name -> t })
-    writeAvro(manifestPath, entrySchema,
-      parts.map { case (f, pv) =>
-        manifestEntry(f.getPath, 1, colIds, entrySchema, pv,
-          statsByPath.get(f.getPath)) })
+    writeAvro(manifestPath, entrySchema, files.sortBy(_.relPath).map(
+      writtenEntry(tableDir, logicalSchema, colIds, entrySchema,
+        tupleFields)))
     // Everything VERSION-DEPENDENT lives inside one publish attempt:
     // losing the metadata CAS means a racing writer owns vN, so the
     // loser re-derives base metadata / version / snapshot id against
@@ -1692,8 +1641,8 @@ object Iceberg {
     // it replaces. Each attempt writes its own manifest-list
     // (immutable once referenced); a loser's list file is an orphan,
     // exactly as Iceberg's own retries leave one.
-    def publishAttempt(v: Int, prevMeta: Option[ObjectNode],
-                       snapshotId: Long): Boolean = {
+    def publishAttempt(at: (Int, Option[ObjectNode], Long)): Boolean = {
+      val (v, prevMeta, snapshotId) = at
       // manifest list: append keeps the prior snapshot's manifests (its
       // files stay EXISTING); overwrite references only the new one
       // carried-forward manifests KEEP their original added_snapshot_id
@@ -1759,7 +1708,7 @@ object Iceberg {
         tableDir.getBytes("UTF-8")).toString)
       meta.put("location", tableDir)
       meta.put("last-updated-ms", 0L)
-      meta.put("last-column-id", commitSchema.fields.length)
+      meta.put("last-column-id", logicalSchema.fields.length)
       // carry the table's schema NODES verbatim once they exist — a
       // regenerated node would reset schema-id and drop the `schemas`
       // history an evolution recorded
@@ -1773,7 +1722,7 @@ object Iceberg {
           if (m.has("current-schema-id"))
             meta.put("current-schema-id", m.get("current-schema-id").asInt)
         case None =>
-          meta.set[ObjectNode]("schema", schemaToJson(tableSchema))
+          meta.set[ObjectNode]("schema", schemaToJson(logicalSchema))
       }
       // partition-specs carry VERBATIM once they exist (the schema
       // rule): a table evolved to a multi-spec history must keep
@@ -1879,11 +1828,8 @@ object Iceberg {
       }
       publishMetadataVersion(tableDir, v, meta)
     }
-    var curV = v
-    var curPrev = prevMeta
-    var curSnapshot = snapshotId
     var retries = 0
-    while (!publishAttempt(curV, curPrev, curSnapshot)) {
+    while (!publishAttempt(at)) {
       retries += 1
       // an idempotent streaming append re-checks its epoch here:
       // losing the CAS may mean a racing instance of the SAME app
@@ -1891,35 +1837,20 @@ object Iceberg {
       // data files and manifest and walks away
       if (abortIf()) {
         commitCasRetries.addAndGet(retries)
-        abortCleanup()
+        dropFiles(tableDir, files)
         new File(manifestPath).delete(): Unit
         return -1L
       }
       // lost the CAS: a racing writer committed vN first. The loop
       // makes progress by construction — every loss means a new
-      // committed version exists — and the winner must not have
-      // changed what this commit assumed (same schema, same spec:
-      // the contract a first attempt validates up front).
-      val vs2 = versions(tableDir)
-      curV = vs2.last + 1
-      val p = loadMetadata(tableDir, vs2.last)
-      val prevSchema = schemaFromMetadata(p)
-      require(erased(prevSchema) == erased(commitSchema),
-        s"schema changed under a racing commit: table has " +
-          s"$prevSchema, commit has ${commitSchema}")
-      require(partitionSpecOf(p) == declaredSpec,
-        "partition spec changed under a racing commit: table has " +
-          s"${partitionSpecOf(p)}, commit declares $declaredSpec")
-      curPrev = Some(p)
-      curSnapshot = p.get("snapshots").elements().asScala
-        .map(_.get("snapshot-id").asLong).maxOption.getOrElse(0L) + 1L
+      // committed version exists.
+      at = head()
     }
     if (retries > 0) commitCasRetries.addAndGet(retries)
-    curSnapshot
+    at._3
   }
 
-
-  /** CAS losses retried by [[commit]] since session start — the
+  /** CAS losses retried by [[commitDsv2]] since session start — the
     * race-spec seam proving the loser actually lost and recovered
     * (N racing appenders ⇒ at least N-1 retries). Atomic because the
     * race specs bump it from N concurrent committer threads. */
@@ -1931,7 +1862,7 @@ object Iceberg {
     * publisher's assembly and its hard-link CAS, the exact window a
     * racing writer exploits. The race specs install a hook that
     * plants a competing commit here, making loser behavior
-    * DETERMINISTIC: [[commit]] retries onto the next version,
+    * DETERMINISTIC: [[commitDsv2]] retries onto the next version,
     * version-PINNED ops ([[publishPinned]] callers) refuse loudly.
     * No-op in production. */
   @volatile private[graft] var commitClaimHook: (String, Int) => Unit =
@@ -2018,7 +1949,7 @@ object Iceberg {
     * (rollback, refs, schema evolution, row-level deletes): these
     * computed their next state against a specific base, so a lost
     * CAS cannot be blindly retried — fail loudly and let the caller
-    * recompute against the new head. Only [[commit]] retries,
+    * recompute against the new head. Only [[commitDsv2]] retries,
     * because an append/overwrite re-derives cleanly. */
   private def publishPinned(tableDir: String, v: Int,
                             meta: ObjectNode, op: String): Unit =
@@ -2157,20 +2088,14 @@ object Iceberg {
     * that wins first is seen on the loser's retry; the loser deletes
     * its orphan data files and manifest and walks away). Returns
     * Some(snapshotId) when this call committed, None when the epoch
-    * was already recorded. */
+    * was already recorded (checked before any data is written). */
   def commitAppendIdempotent(df: DataFrame, tableDir: String,
                              appId: String,
-                             epochId: Long): Option[Long] = {
-    def recorded: Boolean =
-      latestStreamingEpoch(tableDir, appId).exists(_ >= epochId)
-    if (recorded) return None
-    val sid = commit(df, tableDir, overwrite = false,
-      summaryExtra = Map(
-        "streaming-app-id" -> appId,
-        "streaming-epoch-id" -> epochId.toString),
-      abortIf = () => recorded)
-    if (sid < 0) None else Some(sid)
-  }
+                             epochId: Long): Option[Long] =
+    if (latestStreamingEpoch(tableDir, appId).exists(_ >= epochId)) None
+    else staged(df, tableDir, Seq.empty, Seq.empty)(files =>
+      commitDsv2Idempotent(tableDir, df.schema, Seq.empty, files, appId,
+        epochId))
 
   /** [[commitOverwrite]] for an IDENTITY-PARTITIONED table: the
     * metadata carries a partition spec (`transform: identity`,
@@ -2178,7 +2103,8 @@ object Iceberg {
     * typed partition tuple, and readers prune on the tuple via
     * [[readWhere]]. Data files land hive-style with the partition
     * columns stripped (the migrated-table shape the spec supports —
-    * the identity tuple substitutes on read); appends to the table
+    * the identity tuple substitutes on read), unless the table's
+    * files already carry them ([[writerKeys]]); appends to the table
     * must declare the same spec. */
   def commitOverwritePartitioned(df: DataFrame, tableDir: String,
                                  partCols: Seq[String]): Long = {
@@ -2238,36 +2164,12 @@ object Iceberg {
     commit(df, tableDir, overwrite = false, hiddenSpec = spec)
   }
 
-  /** Commit files a DSv2 WRITER already landed (the Iceberg half of
-    * `df.write.format("graft-iceberg")` / the SQL catalog's native
-    * INSERT): the executors wrote the parquet files — partition
-    * columns projected out hive-style, parquet field ids attached,
-    * numRecords + long bounds tracked while writing — and this
-    * publishes the manifest + metadata through the SAME
-    * [[publishDataSnapshot]] claim loop as every DataFrame commit.
-    * No footer pass: the writer-tracked stats become the manifest's
-    * record_count/value bounds directly. `hiddenSpec` writes land
-    * under a DERIVED-transform spec: the executor writers keyed the
-    * files on the transform tuple ([[graft.streaming]]'s writer
-    * derives it with the same [[graft.functions.IcebergTransforms]]
-    * scalars the pruner applies) and the manifest records the typed
-    * tuple under the spec's `<col>_bucket`-style names. Creates the
-    * table (spec 0, schema from the write) when no metadata
-    * exists. */
-  private[graft] def commitDsv2(tableDir: String,
-      logicalSchema: StructType, partCols: Seq[String],
-      files: Seq[DeltaLog.Dsv2File], overwrite: Boolean,
-      hiddenSpec: Seq[(String, String)] = Seq.empty): Long =
-    commitDsv2(tableDir, logicalSchema, partCols, files, overwrite,
-      summaryExtra = Map.empty, abortIf = () => false,
-      hiddenSpec = hiddenSpec)
-
   /** [[commitDsv2]] with the EXACTLY-ONCE epoch watermark — the
-    * native DSv2 STREAMING sink's commit: the snapshot summary
-    * carries (streaming-app-id, streaming-epoch-id) exactly as
-    * [[commitAppendIdempotent]] records them, a redelivered epoch is
-    * skipped up front and again inside the publish CAS loop (the
-    * loser deletes its orphan files and walks away). Returns
+    * native DSv2 STREAMING sink's commit and the library
+    * [[commitAppendIdempotent]]'s publish: the snapshot summary
+    * carries (streaming-app-id, streaming-epoch-id), and a redelivered
+    * epoch is skipped up front and again inside the publish CAS loop
+    * (the loser deletes its orphan files and walks away). Returns
     * Some(snapshotId) when this call committed. */
   private[graft] def commitDsv2Idempotent(tableDir: String,
       logicalSchema: StructType, partCols: Seq[String],
@@ -2275,87 +2177,15 @@ object Iceberg {
       hiddenSpec: Seq[(String, String)] = Seq.empty): Option[Long] = {
     def recorded: Boolean =
       latestStreamingEpoch(tableDir, appId).exists(_ >= epochId)
-    def dropFiles(): Unit = files.foreach(f =>
-      Files.deleteIfExists(Paths.get(s"$tableDir/${f.relPath}")): Unit)
     if (recorded) {
-      dropFiles()
-      return None
-    }
-    val sid = commitDsv2(tableDir, logicalSchema, partCols, files,
-      overwrite = false,
+      dropFiles(tableDir, files)
+      None
+    } else Some(commitDsv2(tableDir, logicalSchema, partCols, files,
+      overwrite = false, hiddenSpec,
       summaryExtra = Map(
         "streaming-app-id" -> appId,
         "streaming-epoch-id" -> epochId.toString),
-      abortIf = () => recorded, hiddenSpec = hiddenSpec)
-    if (sid < 0) { dropFiles(); None } else Some(sid)
-  }
-
-  private def commitDsv2(tableDir: String,
-      logicalSchema: StructType, partCols: Seq[String],
-      files: Seq[DeltaLog.Dsv2File], overwrite: Boolean,
-      summaryExtra: Map[String, String],
-      abortIf: () => Boolean,
-      hiddenSpec: Seq[(String, String)]): Long = {
-    import graft.functions.IcebergTransforms
-    def erased(s: StructType) = StructType(s.fields.map(f =>
-      StructField(f.name, f.dataType, nullable = true)))
-    require(partCols.isEmpty || hiddenSpec.isEmpty,
-      "a DSv2 commit declares identity partCols or a hidden spec, " +
-        "not both")
-    val tupleFields: Seq[(String, String, String, DataType)] =
-      if (hiddenSpec.nonEmpty)
-        hiddenSpec.map { case (src, tr) =>
-          (IcebergTransforms.tupleName(tr, src), tr, src,
-            IcebergTransforms.tupleType(tr, logicalSchema(src).dataType))
-        }
-      else partCols.map(c =>
-        (c, "identity", c, logicalSchema(c).dataType))
-    val declaredSpec = tupleFields.map {
-      case (name, tr, src, _) => SpecField(name, tr, src) }
-    Files.createDirectories(Paths.get(metaDir(tableDir)))
-    val vs = versions(tableDir)
-    val v = if (vs.isEmpty) 1 else vs.last + 1
-    val prevMeta =
-      if (vs.isEmpty) None else Some(loadMetadata(tableDir, vs.last))
-    prevMeta.foreach { m =>
-      val prevSchema = schemaFromMetadata(m)
-      require(erased(prevSchema) == erased(logicalSchema),
-        s"schema mismatch: table has $prevSchema, DSv2 commit has " +
-          s"$logicalSchema")
-      require(partitionSpecOf(m) == declaredSpec,
-        s"partition spec mismatch: table has ${partitionSpecOf(m)}, " +
-          s"DSv2 commit declares $declaredSpec")
-    }
-    val snapshotId: Long = prevMeta.map(
-      _.get("snapshots").elements().asScala
-        .map(_.get("snapshot-id").asLong).maxOption.getOrElse(0L))
-      .getOrElse(0L) + 1L
-    val parts: Seq[(File, Seq[(String, Any)])] =
-      files.sortBy(_.relPath).map { f =>
-        (new File(s"$tableDir/${f.relPath}"),
-          tupleFields.map { case (name, _, _, t) =>
-            name -> typedPartitionValue(
-              f.partitionValues.getOrElse(name, null), t)
-          })
-      }
-    // manifest value bounds stay long/int-typed: the writer tracks
-    // decimal bounds as UNSCALED longs, but this engine's manifest
-    // bound encoding is the 8-byte long form — recording a decimal
-    // there would hand foreign readers spec-shaped bytes with the
-    // wrong meaning, so decimal columns are omitted (superset)
-    val integral: Set[String] = logicalSchema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType => f.name
-    }.toSet
-    val statsByPath: Map[String, (Long, Map[String, (Long, Long)])] =
-      files.map(f =>
-        s"$tableDir/${f.relPath}" ->
-          (f.numRecords,
-            f.bounds.filter(b => integral.contains(b._1)))).toMap
-    publishDataSnapshot(tableDir, logicalSchema, tupleFields,
-      declaredSpec, parts, statsByPath, overwrite, toBranch = None,
-      summaryExtra, abortIf,
-      abortCleanup = () => (), v, prevMeta, snapshotId)
+      abortIf = () => recorded)).filter(_ >= 0)
   }
 
   /** Repoint every ABSOLUTE path a STAGED table's metadata recorded
@@ -2524,15 +2354,8 @@ object Iceberg {
         s"${metaDir(tableDir)}/snap-$snapshotId-${
           java.util.UUID.randomUUID}-m0.avro"
       minted += newManifest
-      writeAvro(newManifest, entrySchema,
-        files.sortBy(_.relPath).map { f =>
-          manifestEntry(s"$tableDir/${f.relPath}", 1, colIds,
-            entrySchema,
-            tupleFields.map { case (name, _, _, t) =>
-              name -> typedPartitionValue(
-                f.partitionValues.getOrElse(name, null), t) },
-            Some((f.numRecords, f.bounds)))
-        })
+      writeAvro(newManifest, entrySchema, files.sortBy(_.relPath).map(
+        writtenEntry(tableDir, schema, colIds, entrySchema, tupleFields)))
       val curSnap = meta.get("snapshots").elements().asScala
         .find(_.get("snapshot-id").asLong == curId).get
       val fv = meta.get("format-version").asInt
@@ -3330,9 +3153,7 @@ object Iceberg {
       ids: Map[String, Int], partCols: Seq[String],
       filesCarryPartCols: Boolean, files: Seq[BatchFilePlan],
       posDeleteFiles: Seq[String], eqDeletes: Seq[BatchEqDelete],
-      tableDir: String = "") {
-    def hasEqDeletes: Boolean = eqDeletes.nonEmpty
-  }
+      tableDir: String = "")
 
   private[graft] def batchPlan(tableDir: String,
                                snapshotId: Long): BatchPlanned = {
@@ -3895,10 +3716,6 @@ object Iceberg {
             IcebergTransforms.tupleType(tr, schema(src).dataType))
       }
     val ids = fieldIds(meta)
-    val integral: Set[String] = schema.fields.collect {
-      case f if f.dataType == LongType ||
-        f.dataType == IntegerType => f.name
-    }.toSet
     val dataManifests: Seq[(String, Long)] =
       if (newFiles.isEmpty) Seq.empty
       else {
@@ -3906,14 +3723,8 @@ object Iceberg {
           tupleFields.map(t => (t._1, t._4)))
         val mp = s"${metaDir(tableDir)}/snap-${
           java.util.UUID.randomUUID}-m0.avro"
-        writeAvro(mp, entrySchema, newFiles.map { f =>
-          manifestEntry(s"$tableDir/${f.relPath}", 1, ids, entrySchema,
-            tupleFields.map { case (name, _, _, t) =>
-              name -> typedPartitionValue(
-                f.partitionValues.getOrElse(name, null), t) },
-            Some((f.numRecords,
-              f.bounds.filter(b => integral(b._1)))))
-        })
+        writeAvro(mp, entrySchema, newFiles.map(
+          writtenEntry(tableDir, schema, ids, entrySchema, tupleFields)))
         Seq((mp, new File(mp).length()))
       }
     // the position-delete parquet: (file_path, pos) sorted, the
@@ -4372,8 +4183,8 @@ object Iceberg {
     * This is the gate that unlocks IDENTITY partition-spec evolution
     * ([[evolvePartitionSpec]]): once files carry every column, a new
     * spec generation cannot disagree with the old one about which
-    * columns exist physically, and all LATER identity commits keep
-    * the standard shape automatically ([[commit]]'s detection).
+    * columns exist physically, and all LATER identity writes keep
+    * the standard shape automatically ([[writerKeys]]' detection).
     * One distributed pass, clustered by the current spec; returns
     * the new snapshot id. */
   def rewriteDataFilesFullSchema(spark: SparkSession,

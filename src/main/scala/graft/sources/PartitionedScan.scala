@@ -11,16 +11,14 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Iceberg manifest `partition` tuples) rather than in the data files.
   *
   * ONE scan of every surviving file + a broadcast join against the
-  * metadata's (file → values) map, keyed on the file basename — both
-  * writers rename partitioned part files to per-file UUIDs at commit
-  * time precisely to make basenames unique (a single job writing
-  * several hive partitions reuses one task basename across value
-  * dirs); an external table with that collision is rejected loudly,
-  * never mis-joined. Partition columns are restored as typed casts
-  * FROM THE METADATA, the formats' source of truth — file paths are
-  * opaque. A per-partition-tuple union of scans would build thousands
-  * of plans at real partition counts; this stays one scan + one
-  * broadcast hash join at any count.
+  * metadata's (file → values) map, keyed on the file basename — the
+  * executor writers of both formats name every file by its own UUID,
+  * so basenames are unique; an external table with a collision is
+  * rejected loudly, never mis-joined. Partition columns are restored
+  * as typed casts FROM THE METADATA, the formats' source of truth —
+  * file paths are opaque. A per-partition-tuple union of scans would
+  * build thousands of plans at real partition counts; this stays one
+  * scan + one broadcast hash join at any count.
   */
 private[sources] object PartitionedScan {
 
@@ -91,19 +89,4 @@ private[sources] object PartitionedScan {
       }
       sb.toString
     }
-
-  /** Decode the hive value directories of `rel` (a relative path like
-    * `sub/k1=v1/k2=v2/part-….parquet`) into a partition-values map;
-    * `partCols` is the declared spec, required to match exactly. */
-  def hivePartitionValues(rel: String,
-                          partCols: Seq[String]): Map[String, String] = {
-    val pv = rel.split('/').drop(1).dropRight(1).map { seg =>
-      val eq = seg.indexOf('=')
-      require(eq > 0, s"non-hive segment '$seg' in partitioned write $rel")
-      seg.substring(0, eq) -> hiveUnescape(seg.substring(eq + 1))
-    }.toMap
-    require(pv.keySet == partCols.toSet,
-      s"partition dirs $pv of $rel do not match declared $partCols")
-    pv
-  }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetOutputWriter, ParquetWriteSupport}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   IntegerType, LongType, ShortType, StringType, StructField, StructType,
-  TimestampType}
+  TimestampNTZType, TimestampType}
 
 import graft.sources.DeltaLog
 
@@ -241,22 +241,29 @@ private[streaming] class DeltaBatchWrite(tableDir: String,
     }
 }
 
-/** The library Delta writers' data job ([[DeltaLog]]'s
+/** The library writers' data job — [[DeltaLog]]'s
   * `commitOverwrite`/`commitAppend*`/partitioned/mapped writers and
-  * the compactions): `df` is written by the stats- and
-  * bloom-tracking [[DeltaDataWriter]]s under `tableDir/relPrefix` as
-  * ONE append command over the caller's plan (so an `Observation` on
-  * `df` completes and query listeners see the job), and the tasks'
-  * files come back to the caller instead of being committed here —
-  * the caller owns the log claim. An unpartitioned batch always
-  * lands at least one file. */
+  * the compactions, and every library Iceberg data commit
+  * ([[graft.sources.Iceberg]]'s `commit*`, `rewriteDataFiles*`):
+  * `df` is written by the stats- and bloom-tracking
+  * [[DeltaDataWriter]]s under `tableDir/relPrefix` as ONE append
+  * command over the caller's plan (so an `Observation` on `df`
+  * completes and query listeners see the job), and the tasks' files
+  * come back to the caller instead of being committed here — the
+  * caller owns the log or metadata claim. Files are keyed on
+  * `partCols` or `hiddenSpec` (the writer's two layouts); `physical`
+  * maps the frame's schema to the files' (Iceberg stamps parquet
+  * field ids). An unpartitioned batch always lands at least one
+  * file. */
 private[graft] object StagedWrite {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table,
     TableCapability}
 
   def apply(df: DataFrame, tableDir: String, relPrefix: String,
-      partCols: Seq[String], bloomCols: Seq[String])
+      partCols: Seq[String], bloomCols: Seq[String] = Seq.empty,
+      hiddenSpec: Seq[(String, String)] = Seq.empty,
+      physical: StructType => StructType = identity)
       : Seq[DeltaLog.Dsv2File] = {
     @volatile var written: Seq[DeltaLog.Dsv2File] = null
     val table = new Table with SupportsWrite {
@@ -275,8 +282,9 @@ private[graft] object StagedWrite {
             override def createBatchWriterFactory(
                 pinfo: PhysicalWriteInfo): DataWriterFactory =
               new DeltaWriterFactory(tableDir, info.schema().json,
-                info.schema().json, partCols, relPrefix,
-                bloomCols = bloomCols, keepEmpty = partCols.isEmpty)
+                physical(info.schema()).json, partCols, relPrefix,
+                hiddenSpec, bloomCols,
+                keepEmpty = partCols.isEmpty && hiddenSpec.isEmpty)
             override def commit(
                 messages: Array[WriterCommitMessage]): Unit =
               written = messages.toSeq
@@ -335,7 +343,11 @@ private[streaming] class DeltaWriterFactory(tableDir: String,
   * so assignment and pruning can never disagree), the data files
   * keep the FULL schema (nothing projected out — the spec's
   * contract), and the commit message's partitionValues carry the
-  * tuple under Iceberg's `<col>_bucket`-style names. */
+  * tuple under Iceberg's `<col>_bucket`-style names. An `identity`
+  * transform keys on the column's own value (spelled as `partCols`
+  * spells it) under the column's name — an identity-partitioned
+  * Iceberg table whose files keep their columns
+  * ([[graft.sources.Iceberg.writerKeys]]). */
 private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
     physical: StructType, partCols: Seq[String],
     relPrefix: String = "",
@@ -457,6 +469,7 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
     def nullable(f: InternalRow => String): InternalRow => String =
       row => if (row.isNullAt(idx)) null else f(row)
     transform match {
+      case "identity" => row => pvString(row, idx, dt)
       case BucketRe(n) =>
         val b = n.toInt
         nullable(row => bucketLong(longVal(row), b).toString)
@@ -477,7 +490,9 @@ private[streaming] class DeltaDataWriter(tableDir: String, schema: StructType,
           case _ => throw new IllegalArgumentException(
             "hour transform needs a timestamp source")
         }
-        case TimestampType =>
+        // TIMESTAMP_NTZ micros spell the wall clock as if UTC, so
+        // its UTC ordinal is its wall-clock ordinal
+        case TimestampType | TimestampNTZType =>
           nullable(row =>
             timeOrdinalOfMicros(tr, row.getLong(idx)).toString)
         case other => throw new IllegalArgumentException(

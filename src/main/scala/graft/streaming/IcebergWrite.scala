@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory,
   LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write,
   WriteBuilder, WriterCommitMessage}
@@ -18,21 +16,24 @@ import graft.sources.{DeltaLog, Iceberg}
   * Iceberg-specific twists: files land under `data/` and every
   * column carries its `parquet.field.id` (position + 1 — the spec
   * REQUIRES ids in data files so any client resolves columns across
-  * renames). Identity partition columns are projected out of the
-  * files hive-style and recorded as typed manifest tuples — exactly
-  * the layout [[Iceberg.commit]]'s DataFrame path writes. The driver
-  * then publishes through [[Iceberg.commitDsv2]]: writer-tracked
-  * numRecords + long bounds become the manifest's record_count and
-  * value bounds (no post-write footer pass), and the metadata claim
-  * rides the same CAS loop as every library commit.
+  * renames). This is the one Iceberg data-write path: the library
+  * commits ([[Iceberg]]'s `commit*`, through [[StagedWrite]]) and
+  * the SQL copy-on-write rewrite run the same writers. The file
+  * layout comes from [[Iceberg.writerKeys]], decided once per table:
+  * identity partition columns are projected out of the files
+  * hive-style, unless the table's files already carry them (standard
+  * shape), and either way the manifest records typed tuples. The
+  * driver then publishes through [[Iceberg.commitDsv2]]:
+  * writer-tracked numRecords and long/int bounds become the
+  * manifest's record_count and value bounds (no post-write footer
+  * pass), and the metadata claim rides the same CAS loop as every
+  * library commit.
   *
   * HIDDEN transform specs (bucket/truncate/day/month/year/hour) are
   * native too: the executor writers key files on the DERIVED tuple
   * ([[graft.functions.IcebergTransforms]] scalars — the same
   * implementation the manifest pruner applies), data files keep the
-  * full schema, and the manifest records typed transform tuples —
-  * `df.write` / SQL INSERT INTO a bucket-partitioned table needs no
-  * DataFrame-path bridge. */
+  * full schema, and the manifest records typed transform tuples. */
 private[streaming] class IcebergDsv2WriteBuilder(tableDir: String,
     info: LogicalWriteInfo, declaredPartCols: Seq[String],
     declaredHidden: Seq[(String, String)] = Seq.empty)
@@ -45,13 +46,15 @@ private[streaming] class IcebergDsv2WriteBuilder(tableDir: String,
     this
   }
 
-  /** Resolve (identity partCols, hidden spec) against the table's
-    * CURRENT default spec — the write inherits it whole: identity
-    * specs project their columns out hive-style, HIDDEN transform
-    * specs (bucket/truncate/day/month/year/hour) key the executor
-    * writers on the derived tuple with the data files keeping the
-    * full schema. `partitionBy(...)` may only re-declare an identity
-    * spec (Spark's writer API has no transform spelling). */
+  /** Resolve the writers' file keys (identity partCols, hidden spec)
+    * against the table's CURRENT default spec — the write inherits
+    * it whole, laid out by [[Iceberg.writerKeys]]: identity specs
+    * project their columns out hive-style unless the table's files
+    * carry them, HIDDEN transform specs
+    * (bucket/truncate/day/month/year/hour) key the executor writers
+    * on the derived tuple with the data files keeping the full
+    * schema. `partitionBy(...)` may only re-declare an identity spec
+    * (Spark's writer API has no transform spelling). */
   private def resolvedSpec(
       schema: StructType): (Seq[String], Seq[(String, String)]) = {
     val (partCols, hidden) =
@@ -84,7 +87,7 @@ private[streaming] class IcebergDsv2WriteBuilder(tableDir: String,
     require(missing.isEmpty,
       s"graft-iceberg write: partition source columns " +
         s"${missing.mkString(", ")} not in the written columns")
-    (partCols, hidden)
+    Iceberg.writerKeys(tableDir, partCols, hidden)
   }
 
   override def build(): Write = new Write {
@@ -139,15 +142,13 @@ private[streaming] class IcebergStreamingWrite(tableDir: String,
 
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit =
-    messages.toSeq.filter(_ != null).foreach {
-      case Dsv2CommitMsg(files) => files.foreach(f =>
-        Files.deleteIfExists(
-          Paths.get(s"$tableDir/${f.relPath}")): Unit)
+    messages.toSeq.foreach {
+      case Dsv2CommitMsg(files) => Iceberg.dropFiles(tableDir, files)
       case _ => ()
     }
 }
 
-private[streaming] object IcebergDsv2Write {
+private[graft] object IcebergDsv2Write {
   /** The PHYSICAL write schema: every top-level column stamped with
     * its spec field id (position + 1, the id assignment every
     * metadata writer in this engine uses), so the executor writers
@@ -179,38 +180,36 @@ private[streaming] class IcebergBatchWrite(tableDir: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.toSeq.filter(_ != null).foreach {
-      case Dsv2CommitMsg(files) => files.foreach(f =>
-        Files.deleteIfExists(
-          Paths.get(s"$tableDir/${f.relPath}")): Unit)
+    messages.toSeq.foreach {
+      case Dsv2CommitMsg(files) => Iceberg.dropFiles(tableDir, files)
       case _ => ()
     }
 }
 
 /** The Iceberg COW replace write — [[ReplaceFilesBatchWrite]]'s
-  * twin: same executor writers, commit swaps the rewrite group for
-  * the new files through [[Iceberg.commitReplaceDsv2]]'s
+  * twin: same executor writers (file keys from
+  * [[Iceberg.writerKeys]]), commit swaps the rewrite group for the
+  * new files through [[Iceberg.commitReplaceDsv2]]'s
   * conflict-proving overwrite snapshot. */
 private[streaming] class IcebergReplaceBatchWrite(
     op: IcebergRowLevelOperation, tableDir: String,
-    logicalSchema: StructType, partCols: Seq[String])
+    logicalSchema: StructType, partCols: Seq[String],
+    hiddenSpec: Seq[(String, String)])
   extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
     new DeltaWriterFactory(tableDir, logicalSchema.json,
       IcebergDsv2Write.fieldIdSchema(logicalSchema).json, partCols,
-      relPrefix = "data/")
+      relPrefix = "data/", hiddenSpec = hiddenSpec)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     op.commitReplace(messages.toSeq
       .flatMap(_.asInstanceOf[Dsv2CommitMsg].files))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.toSeq.filter(_ != null).foreach {
-      case Dsv2CommitMsg(files) => files.foreach(f =>
-        Files.deleteIfExists(
-          Paths.get(s"$tableDir/${f.relPath}")): Unit)
+    messages.toSeq.foreach {
+      case Dsv2CommitMsg(files) => Iceberg.dropFiles(tableDir, files)
       case _ => ()
     }
 }

@@ -1581,11 +1581,13 @@ private[streaming] class IcebergSqlTable(sqlName: String, dir: String,
     // rewrites. The table's own `write.<command>.mode` property is
     // honored when set (real Iceberg's knob: 'copy-on-write' keeps
     // the group-based rewrite); unset defaults to merge-on-read —
-    // this engine's 100 TB default. Foreign standard-layout identity
-    // tables (data files CARRY partition columns; this engine's
-    // writers hive-strip, one table keeps one layout) stay
-    // copy-on-write regardless. Translatable DELETEs keep the
-    // SupportsDeleteV2 metadata/MoR path, which never reaches here.
+    // this engine's 100 TB default. Standard-layout identity tables
+    // (data files CARRY their partition columns: foreign tables and
+    // rewriteDataFilesFullSchema's output) stay copy-on-write
+    // regardless; its rewrite keeps that layout, because every
+    // writer takes its file layout from Iceberg.writerKeys.
+    // Translatable DELETEs keep the SupportsDeleteV2 metadata/MoR
+    // path, which never reaches here.
     () => {
       val cmdName =
         info.command.toString.toLowerCase(java.util.Locale.ROOT)
@@ -1607,8 +1609,9 @@ private[streaming] class IcebergSqlTable(sqlName: String, dir: String,
   * current snapshot and plans the rewrite group (manifest-bounds +
   * identity-partition pruning from the pushed command condition,
   * runtime `_file` group filtering), the write reuses the Iceberg
-  * DSv2 executor writers (field ids, hive-stripped partition
-  * columns, tracked stats), and the commit publishes ONE
+  * DSv2 executor writers (field ids, the table's identity layout
+  * from [[Iceberg.writerKeys]], tracked stats), and the commit
+  * publishes ONE
   * operation=overwrite snapshot swapping the group for the new
   * files ([[Iceberg.commitReplaceDsv2]]) under the append-only
   * conflict-proving retry discipline. */
@@ -1649,10 +1652,11 @@ private[streaming] class IcebergRowLevelOperation(dir: String,
       info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
     override def build(): Write = new Write {
       override def toBatch: BatchWrite = {
-        val partCols = Iceberg.currentSpecFields(dir)
-          .filter(_._2 == "identity").map(_._1)
+        val (partCols, hidden) = Iceberg.writerKeys(dir,
+          Iceberg.currentSpecFields(dir).filter(_._2 == "identity")
+            .map(_._1), Seq.empty)
         new IcebergReplaceBatchWrite(IcebergRowLevelOperation.this,
-          dir, info.schema(), partCols)
+          dir, info.schema(), partCols, hidden)
       }
     }
   }

@@ -832,6 +832,23 @@ class DeltaLogSpec extends SparkSuite {
       .filter(col("k") === 27L).count() == 0)
   }
 
+  test("bloomBackfill sizes files from add.stats; only a stat-less add opens its footer") {
+    val dir = Files.createTempDirectory("dlbackfill").toString
+    val a = stagePart(dir, "a.parquet", Seq((1L, "one"), (2L, "two")))
+    val b = stagePart(dir, "b.parquet", Seq((3L, "three")))
+    writeLog(dir, 0, protocol, metaData(),
+      s"""{"add":{"path":"$a","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}}""",
+      s"""{"add":{"path":"$b","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"stats":"{\\"numRecords\\":1}"}}""")
+    sources.DeltaLog.setTableProperties(dir,
+      Map(sources.DeltaLog.BloomColsProp -> "k"))
+    val opens = sources.Iceberg.driverFooterOpens
+    assert(sources.DeltaLog.bloomBackfill(spark, dir) == 2)
+    assert(sources.Iceberg.driverFooterOpens == opens + 1,
+      "only the add without stats may open its footer")
+    assert(sources.DeltaLog.bloomManifest(spark, dir).get
+      .select("file").distinct().count() == 2)
+  }
+
   test("bloom probe tolerates duplicated sidecar rows (compact crash window)") {
     // bloomCompact is stage-then-swap: a crash between the new part
     // landing and the old parts' delete leaves every live row
@@ -1496,7 +1513,7 @@ class DeltaLogSpec extends SparkSuite {
     }
   }
 
-  test("commit stats ride the distributed footer job, driver opens none") {
+  test("commit stats come from the write tasks, driver opens none") {
     val dir = Files.createTempDirectory("dlogsj").toString + "/t"
     val df = (1L to 64L).map(i => (i, s"s$i")).toDF("k", "s")
       .repartitionByRange(8, col("k"))
@@ -3183,13 +3200,13 @@ class DeltaLogSpec extends SparkSuite {
     assert(sources.DeltaLog.read(spark, dir).count() == 7)
   }
 
-  test("add.stats record INT32 bounds and prune on them; Iceberg keeps INT64 only") {
+  test("add.stats record INT32 bounds and prune on them; Iceberg bounds long and int") {
     // an INT column's footer bounds are INT32 statistics: Delta's
     // add.stats record them (min/max as JSON numbers) so readWhereStats
     // prunes on int keys; a DATE (INT32 + DATE annotation) is not an
-    // integer and records none. Iceberg's manifest bound encoding here
-    // is the 8-byte long form, so the SAME frame committed as Iceberg
-    // must carry no INT32 bounds at all.
+    // integer and records none. The SAME frame committed as Iceberg
+    // follows the manifests' one bounds rule: the write tasks' long
+    // and int bounds, no date.
     val base = Files.createTempDirectory("dlint32").toString
     val df = (1 to 100).map(i => (i, i * 3L, java.sql.Date.valueOf(
         java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong))))
@@ -3216,9 +3233,9 @@ class DeltaLogSpec extends SparkSuite {
     assert(files.length == 4)
     files.foreach { r =>
       val mins = r.getAs[scala.collection.Map[String, Long]]("min_values")
-      assert(mins.contains("l") && !mins.contains("i") &&
+      assert(mins.contains("l") && mins.contains("i") &&
         !mins.contains("d"),
-        s"Iceberg manifest bounds must stay INT64-only, got ${mins.keySet}")
+        s"Iceberg manifest bounds must be long and int, got ${mins.keySet}")
     }
   }
 

@@ -286,23 +286,78 @@ class IcebergSpec extends SparkSuite {
         "should prune b and keep boundless c (superset contract)")
   }
 
-  test("manifest stats ride the distributed footer job, driver opens none") {
-    import spark.implicits._
+  test("an Iceberg commit is one data job; the driver opens no footer") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.concat
     val dir = Files.createTempDirectory("icesj").toString + "/t"
-    val df = (1L to 64L).map(i => (i, s"s$i")).toDF("k", "s")
-      .repartitionByRange(8, org.apache.spark.sql.functions.col("k"))
-    val before = sources.Iceberg.driverFooterOpens
-    sources.Iceberg.commitOverwrite(df, dir)
-    assert(sources.Iceberg.driverFooterOpens == before,
-      "a multi-file Iceberg commit must not open parquet footers on " +
-        "the driver — manifest bounds come from ONE distributed job")
-    // the distributed bounds are REAL: a low range prunes most files
+    // eight range partitions, no shuffle: the commit's own data job
+    // is the only job it may run
+    val df = spark.range(0, 64, 1, 8)
+      .select((col("id") + 1).as("k"), concat(lit("s"), col("id")).as("s"))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString("; "))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.ListenerSync.drain(spark.sparkContext)
+      jobs.clear()
+      val opens = sources.Iceberg.driverFooterOpens
+      sources.Iceberg.commitOverwrite(df, dir)
+      org.apache.spark.ListenerSync.drain(spark.sparkContext)
+      val seen = jobs.asScala.toSeq
+      assert(seen.size == 1, s"${seen.size} jobs: $seen")
+      assert(!seen.exists(_.contains("Iceberg.scala")),
+        s"a footer-stats job ran: $seen")
+      assert(sources.Iceberg.driverFooterOpens == opens,
+        "the driver opened parquet footers")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the task-side bounds are REAL: a low range prunes most files
     val got = sources.Iceberg.readPrunedRange(spark, dir,
       Seq(("k", 1L, 8L)))
     assert(got.collect().map(_.getLong(0)).sorted.toSeq == (1L to 8L))
     assert(sources.Iceberg.lastFilesPlanned < 8,
       s"planned ${sources.Iceberg.lastFilesPlanned} of 8 — the " +
-        "distributed bounds must prune")
+        "task-side bounds must prune")
+  }
+
+  test("manifest stats from the write tasks equal the footers, per file") {
+    import org.apache.spark.sql.functions.{expr, when}
+    // three files; a long key, an int with nulls, a decimal (omitted
+    // from manifests: the 8-byte bound form would misspell it) and
+    // a string partition column
+    val df = spark.range(0, 3000, 1, 3)
+      .select((col("id") * 7919L % 100003L).as("k"),
+        when(col("id") % 10 === 0, lit(null))
+          .otherwise((col("id") % 1000 - 500).cast("int")).as("i"),
+        expr("CAST((id - 1500) * 1.25 AS DECIMAL(18,2))").as("d"),
+        (col("id") % 2).cast("string").as("p"))
+    val work = Files.createTempDirectory("icestats").toString
+    def statsAreFooters(t: String): Unit = {
+      val plan = sources.Iceberg.batchPlan(t,
+        sources.Iceberg.mainSnapshotId(t))
+      assert(plan.files.size >= 3, s"$t: ${plan.files.size} files")
+      plan.files.foreach { f =>
+        val foot = sources.Iceberg.parquetFooter(f.path)
+        assert(f.records.contains(foot.numRecords), s"${f.path}: records")
+        assert(f.bounds.filter(_._1 == "k") == foot.int64,
+          s"${f.path}: long bounds ${f.bounds} vs footer ${foot.int64}")
+        assert(f.bounds.filter(_._1 == "i") == foot.int32,
+          s"${f.path}: int bounds ${f.bounds} vs footer ${foot.int32}")
+        assert(f.bounds.keySet.subsetOf(Set("k", "i")),
+          s"${f.path}: ${f.bounds}")
+      }
+    }
+    sources.Iceberg.commitOverwrite(df, s"$work/plain")
+    statsAreFooters(s"$work/plain")
+    sources.Iceberg.commitOverwritePartitioned(df, s"$work/identity",
+      Seq("p"))
+    statsAreFooters(s"$work/identity")
+    sources.Iceberg.commitOverwriteHidden(df, s"$work/hidden",
+      Seq("k" -> "bucket[4]"))
+    statsAreFooters(s"$work/hidden")
   }
 
   test("q151 gate shape: range-clustered layout prunes most files") {
@@ -742,15 +797,6 @@ class IcebergSpec extends SparkSuite {
     // negative values flow through the same LE-bytes path
     assert(IcebergTransforms.bucketLong(-34L, 16) ==
       (IcebergTransforms.murmur3Long(-34L) & Int.MaxValue) % 16)
-    // the Column twin (write path, codegen) agrees with the scalar
-    // (prune path) on a value sweep — the invariant hidden
-    // partitioning rests on
-    import spark.implicits._
-    val vals = (-1000L to 1000L by 7).toSeq
-    val viaCol = vals.toDF("v")
-      .select(IcebergTransforms.bucketCol(32, col("v")))
-      .collect().map(_.getInt(0)).toSeq
-    assert(viaCol == vals.map(v => IcebergTransforms.bucketLong(v, 32)))
     // truncate floors toward negative infinity, per spec
     assert(IcebergTransforms.truncateLong(17L, 10L) == 10L)
     assert(IcebergTransforms.truncateLong(-3L, 10L) == -10L)
@@ -1747,6 +1793,34 @@ class IcebergSpec extends SparkSuite {
     assert(planned.getOrElse(0, -1) == total.getOrElse(0, 0),
       s"the old generation keeps all its files (superset): " +
         s"$planned vs $total")
+  }
+
+  /** Every live data file of `t` carries `s`, the library read and
+    * the connector read agree, and no row reads `s` NULL. */
+  private def keepsStandardShape(t: String, rows: Long): Unit = {
+    sources.Iceberg.batchPlan(t, sources.Iceberg.mainSnapshotId(t))
+      .files.foreach(f => assert(
+        spark.read.parquet(f.path).columns.contains("s"),
+        s"${f.path} dropped the partition column s"))
+    val lib = sources.Iceberg.read(spark, t)
+    val conn = spark.read.format("graft-iceberg").option("path", t).load()
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.select("k", "s").collect().map(_.toString).sorted.toSeq
+    assert(sorted(lib) == sorted(conn))
+    assert(lib.count() == rows)
+    assert(lib.filter(col("s").isNull).count() == 0)
+  }
+
+  test("a DSv2 append after rewriteDataFilesFullSchema keeps the columns") {
+    val t = Files.createTempDirectory("icestdapp").toString + "/t"
+    val df = (1L to 28L).map(k => (k, if (k % 2 == 0) "e" else "o"))
+      .toDF("k", "s")
+    sources.Iceberg.commitOverwritePartitioned(
+      df.filter(col("k") <= 20), t, Seq("s"))
+    sources.Iceberg.rewriteDataFilesFullSchema(spark, t)
+    df.filter(col("k") > 20)
+      .write.format("graft-iceberg").mode("append").save(t)
+    keepsStandardShape(t, 28)
   }
 
   test("foreign multi-spec metadata: unknown default spec stays readable") {

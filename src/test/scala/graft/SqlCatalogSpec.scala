@@ -974,6 +974,26 @@ class SqlCatalogSpec extends SparkSuite {
     assert(Iceberg.read(spark, t).count() === 1)
   }
 
+  test("iceberg COW UPDATE on a standard-shape identity table keeps its columns") {
+    sql("""CREATE TABLE gice.db.istd (k BIGINT, s STRING, v BIGINT)
+          |PARTITIONED BY (s)""".stripMargin)
+    sql("INSERT INTO gice.db.istd " +
+      "SELECT id, IF(id % 2 = 0, 'e', 'o'), id FROM range(10)")
+    val dir = tdir(s"$wh/_ice/db/istd")
+    Iceberg.rewriteDataFilesFullSchema(spark, dir)
+    sql("UPDATE gice.db.istd SET v = v + 100 WHERE k = 3")
+    Iceberg.batchPlan(dir, Iceberg.mainSnapshotId(dir)).files.foreach(f =>
+      assert(spark.read.parquet(f.path).columns.contains("s"),
+        s"${f.path} dropped the partition column s"))
+    val lib = rows(Iceberg.read(spark, dir).select("k", "s", "v"))
+    assert(lib === rows(spark.read.format("graft-iceberg")
+      .option("path", dir).load().select("k", "s", "v")))
+    assert(lib === (0 until 10).map(k =>
+      s"[$k,${if (k % 2 == 0) "e" else "o"},${if (k == 3) 103 else k}]")
+      .sorted)
+    assert(Iceberg.read(spark, dir).filter("s IS NULL").count() === 0)
+  }
+
   // round 17: UPDATE defaults to merge-on-read, so this pair now
   // pins the POSITION-DELTA commit's conflict proving (the r16
   // valueRanges=Map.empty gap closed): a racing append whose file
